@@ -31,10 +31,13 @@ from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
 from hdinsight_pyspark_cntk_integration_spark.functions.vector import cosine_similarity
 from hdinsight_pyspark_cntk_integration_spark.operators import (
     dedup as dd,
+    graph as gr,
+    mining as mn,
     pipeline as pl,
     relational as rel,
     scoring as sc,
     similarity as sim,
+    sketch as sk,
     stats as st,
     text as tx,
 )
@@ -91,6 +94,13 @@ def _stub_weights_sql() -> list[str]:
         )
         rows.append(f"CAST([{vals}] AS DOUBLE[])")
     return rows
+
+
+def _mix(c: F.Column) -> F.Column:
+    """The engine-wide Knuth-mix fixture mixer: deterministic,
+    SQL-replayable pseudo-randomness ((c mod p) * 2654435761 mod p,
+    p = 1_000_003)."""
+    return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
 
 # --------------------------------------------------------------------------
@@ -685,11 +695,6 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact-duplicate rate — the summary table a dataset release
     ships with. One partial-agg groupBy; fingerprints computed inline
     (count_distinct shuffles one md5 per row at most)."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
-        fingerprint_md5,
-        token_count,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     n_docs = F.count(F.lit(1))
     n_uniq = F.count_distinct(fingerprint_md5("text"))
@@ -761,8 +766,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than 2 MADs from their priority's median — exact interpolating
     percentiles both engines share, deterministic fp64 deviations.
     Two partial-group aggregates + two broadcast joins."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     sub = orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
     return st.mad_outliers(sub, "o_orderpriority", "o_totalprice", k=2.0)
@@ -859,8 +862,6 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers, paired with exact counts and the one-sided bound check
     (est >= exact always). The Knuth affine bucket family keeps the
     whole estimator in SQL-reproducible integer arithmetic."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import sketch as sk
-
     orders = load_table(spark, sf_dir, "orders")
     sketch = sk.cms_build(orders, "o_custkey", depth=4, width=512)
     probes = orders.select("o_custkey").filter(F.col("o_custkey") % 40 == 1).distinct()
@@ -891,8 +892,6 @@ def q_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree cut misses; converges in 2 rounds on this fixture (pinned in
     pytest). Oracle unrolls 4 peeling rounds as CTEs — extra rounds are
     no-ops past the fixpoint, so the unroll is exact."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -948,8 +947,6 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs co-purchased in the same order, Apriori-pruned before the pair
     self-join, with support/confidence/lift in exact integer micro-units.
     Items = p_brand (bounded domain), baskets = orders."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     baskets = li.join(part, li["l_partkey"] == part["p_partkey"]).select(
@@ -963,8 +960,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     recency/frequency/monetary NTILE quartiles with customer-key
     tie-breaks — deterministic, partitioned windows (never a global
     sort), money in integer cents."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     joined = orders.join(cust, orders["o_custkey"] == cust["c_custkey"]).select(
@@ -978,8 +973,6 @@ def q_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier nation, the minimal supplier set covering 80% of lineitem
     revenue — per-group windowed cumsum over the per-supplier rollup,
     integer cents throughout."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier")
     rev = li.join(sup, li["l_suppkey"] == sup["s_suppkey"]).select(
@@ -998,8 +991,6 @@ def q_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantified bound — the same bounded-assertion pattern as
     q_hll_distinct_bounded. k=512 ⇒ sketches are exact below 512
     distinct users per type and ~4.4%-error estimates above."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import sketch as sk
-
     ev = load_table(spark, sf_dir, "events")
     sketches = sk.kmv_sketch_by_group(ev, "event_type", "user_id", k=512)
     est = sk.kmv_intersect_estimate(sketches, k=512)
@@ -1072,8 +1063,6 @@ def q_communities_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the rounds as ROW_NUMBER-argmax CTEs (the sixth
     oracle-green iterative algorithm beside pagerank/bfs/components/
     triangles/k-core)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -1096,8 +1085,6 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed (lang, source) cell with exact counts and the micro-nat
     PMI — one domain-bounded partial-agg shuffle, marginals as windows
     over the cells, ln on pure count ratios in a fixed order."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
     return st.mutual_information(docs, "lang", "source")
 
@@ -1112,8 +1099,6 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the same sorted-array middle-element expression (never DuckDB's
     native median, whose interpolation order could differ in the last
     ulp)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     monthly = (
@@ -1149,8 +1134,6 @@ def q_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     priorities, no RNG state, top-k through the two-stage bounded_topk.
     The oracle reproduces the identical priorities (same md5 chain) and
     the identical (priority DESC, id) ranking."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     docs = load_table(spark, sf_dir, "documents")
     weighted = docs.select(
         "lang", "doc_id", (F.lit(1) + F.pmod(F.col("n_chars"), F.lit(7))).alias("w")
@@ -1164,8 +1147,6 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from each user's first view. Per-step reach counts plus integer-
     micro conversion ratios; per-user state is one timestamp per step,
     counts union lazily into a single action."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     ev = load_table(spark, sf_dir, "events")
     return mn.funnel_steps(
         ev, ["view", "click", "purchase"], horizon_seconds=30 * 86400
@@ -1195,8 +1176,6 @@ def q_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals scaled within each order priority — the outlier-immune twin
     of z-scoring; exact interpolating percentiles both engines share,
     IQR=0 groups dropped by the same guard as mad_outliers."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     out = st.robust_scaler(
         orders.select("o_orderpriority", "o_orderkey", "o_totalprice"),
@@ -1211,8 +1190,6 @@ def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = (σ−μ)/(σ+μ) over inter-arrival gaps — the bot/scraper signal a
     raw event count can't see. Gaps in exact integer µs, Σg telescopes
     into a long, Σg² in DECIMAL(38,0), IEEE-exact sqrt, micro floor."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     return st.burstiness(ev, "user_id", "ts")
 
@@ -1222,8 +1199,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     markov_transitions): consecutive event-type pairs per user with
     P(dst|src) in integer micro-units; (ts, state) ordering makes the
     successor choice a total order, so counts are engine-reproducible."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     ev = load_table(spark, sf_dir, "events")
     return mn.markov_transitions(ev, "user_id", "event_type", "ts")
 
@@ -1290,8 +1265,6 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostic. All moments exact DECIMAL(38,0) integers via the
     expanded mean-centered sums; the ACF is ONE double division,
     micro-floored, so the oracle's HUGEINT replication hash-matches."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.autocorrelation(pts, "nation", "t", "v", max_lag=6)
 
@@ -1301,8 +1274,6 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal_decompose) of monthly nation revenue: which calendar months
     run above trend, per nation. Trend numerator and detrended values
     stay exact integers; one window pass + one groupBy."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.seasonal_decompose(pts, "nation", "t", "v", period=12)
 
@@ -1314,8 +1285,6 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding. Integer cents + DECIMAL sums; one domain-bounded groupBy
     broadcast back inside target_encode. The customer join carries no
     broadcast hint — customer is SF-scaled, AQE picks the strategy."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     rows = orders.join(
@@ -1333,8 +1302,6 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     credit-scoring-standard categorical strength measure. One
     domain-bounded cell aggregate, totals as windows over cells, ln
     quantized per the engine float discipline."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "is_fulfilled", F.col("o_orderstatus") == F.lit("F")
     )
@@ -1347,8 +1314,6 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized companion to adamic_adar: what FRACTION of two nations'
     combined strong-partner circles overlaps. All-integer: counts and
     one floor-division, no float anywhere."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.jaccard_neighbors(_strong_trade_edges(spark, sf_dir))
 
 
@@ -1362,8 +1327,6 @@ def q_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/profile_hub_cap.py) while the Jaccard denominator keeps TRUE
     degrees; the oracle applies the identical deg <= 12 apex filter, so
     the lossy cut is deterministic and provable, not approximate."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.jaccard_neighbors(_strong_trade_edges(spark, sf_dir), max_degree=12)
 
 
@@ -1377,8 +1340,6 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     an absolute cut does. Per-neighbor terms are micro-quantized at
     birth so AA is a pure integer sum — the pagerank_integer
     determinism discipline applied to a score."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.adamic_adar(_strong_trade_edges(spark, sf_dir))
 
 
@@ -1419,8 +1380,6 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantized at birth, integer-summed — disconnected-safe
     centrality the oracle replicates by unrolling the three BFS rounds
     as min-hop CTEs."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.harmonic_centrality(_strong_trade_edges(spark, sf_dir), max_hops=3)
 
 
@@ -1432,8 +1391,6 @@ def q_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replicates with a recursive CTE computing the SAME
     fixed-order expressions (including deriving 1−β by subtraction,
     exactly as the operator does)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.holt_linear(pts, "nation", "t", "v", alpha=0.5, beta=0.2)
 
@@ -1490,8 +1447,6 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     do URGENT and LOW priority orders differ in mean value? Moments in
     DECIMAL(38,0) from integer cents, t and Welch-Satterthwaite df as
     one fixed-order fp64 chain each, micro-floored."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.welch_ttest(
         orders, "o_orderpriority", "o_totalprice", "1-URGENT", "5-LOW"
@@ -1514,8 +1469,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     channels under first/last/linear simultaneously — one reverse
     running-min window assigns each touch its next conversion, linear
     credit quantized floor(1e6/n) per touch then integer-summed."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     ev = load_table(spark, sf_dir, "events")
     return mn.attribution(
         ev,
@@ -1572,8 +1525,6 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_depth=2 synchronous lift rounds — the eighth oracle-provable
     iterative algorithm (oracle: recursive descendant closure + one
     GROUP BY)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -1621,8 +1572,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-order-month cohorts, cumulative revenue by months-since-
     cohort, integer micro-dollars per head via DECIMAL division — the
     money twin of cohort_retention."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     orders = load_table(spark, sf_dir, "orders")
     return mn.cohort_ltv(orders)
 
@@ -1634,8 +1583,6 @@ def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition (each group's (Σx)²/(nQ) ∈ [0,1], pico-quantized
     at birth, integer-summed) keeps the statistic exact AND
     overflow-free at any corpus size."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.anova_f(orders, "o_orderpriority", "o_totalprice")
 
@@ -1646,8 +1593,6 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically with monthly order count? The series is the
     (segment, month) AGGREGATE — pair enumeration is segments ×
     months², never raw rows²; C/D/tie counts are exact integers."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     series = (
@@ -1674,8 +1619,6 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.stats.rolling_corr): the time-localized co-movement
     monitor. Window sums run over the (flag, month) aggregate in
     DECIMAL; one fp64 chain per emitted row; partial windows drop."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     series = li.groupBy(
         F.col("l_returnflag").alias("flag"),
@@ -1695,8 +1638,6 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of its nation's discounted lineitem revenue — share²
     pico-quantized at birth then integer-summed, window over the
     (nation, supplier) aggregate only."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     li = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     joined = li.join(
@@ -1718,8 +1659,6 @@ def q_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     month count is calendar-bounded, hence scale-free). The NINTH
     oracle-provable iterative algorithm: the oracle closes paths of
     <= 3 edges recursively and takes the min."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -1749,8 +1688,6 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean inter-order gap silently drops). The product telescopes
     through micro-nat quantization, so the curve hash-matches the
     windowed oracle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     return st.kaplan_meier(
         _repurchase_subjects(spark, sf_dir), "segment", "dur", "ev"
     )
@@ -1772,8 +1709,6 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutover as the event — did BUILDING's mean order value move more
     than everyone else's across it? Twelve DECIMAL cell moments in one
     scan; DiD/SE/t are one fp64 chain each."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     rows = orders.join(
@@ -1791,8 +1726,6 @@ def q_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand price~size OLS (operators.stats.grouped_ols): one
     regression per brand from five DECIMAL moments — slope, intercept,
     R² each one fp64 chain, no group ever collected."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     part = load_table(spark, sf_dir, "part")
     return st.grouped_ols(part, "p_brand", "p_size", "p_retailprice")
 
@@ -1802,8 +1735,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.stats.mann_kendall): is monthly revenue trending, and
     with what Z? Pair counting over the (priority, month) AGGREGATE;
     S and tie-corrected 18·Var are exact integers."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     series = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -1902,8 +1833,6 @@ def q_auc_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent-order customers above the rest? U-statistic over the
     distinct-score aggregate with average-rank ties — the rank-only
     eval; calibration_balance is the value-based complement."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     return st.auc(_urgent_labelled_customers(spark, sf_dir), "v", "y")
 
 
@@ -1913,8 +1842,6 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "score" for the urgent-order label, 10 equal-width bins, mean
     predicted vs observed positive rate — score micro-quantized AT
     BIRTH, every aggregate an integer."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     mm = pop.groupBy().agg(
         F.min("v").alias("__mn"), F.max("v").alias("__mx")
@@ -1934,8 +1861,6 @@ def q_cuped_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariate = pre-cutover spend — the variance-reduced experiment
     readout. Per-event cents quantization keeps per-user sums exact
     before the moment pass."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     arm = F.when(
         pl.hash_bucket(F.col("user_id"), "knuth") % 2 == 0, "A"
@@ -1959,8 +1884,6 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one HOF — the oracle carries the 12-slot seasonal LIST through a
     recursive CTE. Smoothing params 0.5/0.25/0.25 are exact binary
     fractions, so 1−x literals are bit-identical in both engines."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     series = (
@@ -1989,8 +1912,6 @@ def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     wilson_ci): share of events with value > 100, with the CI that
     stays inside [0,1] at the extremes — exact integer counts, one
     fp64 chain for the bounds."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     flagged = ev.select(
         F.col("event_type"), (F.col("value") > 100.0).alias("hit")
@@ -2031,8 +1952,6 @@ def q_survival_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     survival_summary) over the time-to-repurchase curve — the two
     numbers the kaplan_meier curve is read for; the RMST integral is
     pure integer products over the (group, t) aggregate."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     return st.survival_summary(
         _repurchase_subjects(spark, sf_dir), "segment", "dur", "ev"
     )
@@ -2042,8 +1961,6 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson matrix over four lineitem measures in ONE scan
     (operators.stats.corr_matrix): 14 DECIMAL moments, six pair rows,
     each r one fp64 chain — the feature-redundancy screen."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     return st.corr_matrix(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -2055,8 +1972,6 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     cramers_v): the [0,1] association strength the chi_square cell
     table doesn't aggregate — per-cell (O−E)²/E micro-quantized at
     birth, integer-summed, one final sqrt."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.hour("ts").cast("int").alias("hour_bucket")
     )
@@ -2069,8 +1984,6 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bfs_supply_chain convention): do high-degree suppliers supply
     high-degree parts? Exact integer degrees, DECIMAL moments, one
     fp64 r."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     # -suppkey - 1 keeps suppliers STRICTLY negative: the fixture has
     # suppkey 0 AND partkey 0, and a bare -suppkey would alias them
@@ -2087,8 +2000,6 @@ def q_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.stats.levene_bf on l_extendedprice): ANOVA on absolute
     deviations from each group's exact interpolating median — the
     spread check run before trusting pooled-variance comparisons."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     return st.levene_bf(li, "l_returnflag", "l_extendedprice")
 
@@ -2098,8 +2009,6 @@ def q_robust_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust_means): the mean trio for positive quantities, AM >= GM >=
     HM by construction — GM through micro-nat ln sums, HM through
     exact pico reciprocals, every cross-row reduction an integer."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.robust_means(orders, "o_orderpriority", "o_totalprice")
 
@@ -2110,8 +2019,6 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "which return-flag population drifted" in one pass — both
     one-sided CDF gaps per value point, windows over the bounded
     value-domain aggregate only."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     return st.ks_drift(li, "l_returnflag", "l_quantity")
 
@@ -2633,7 +2540,6 @@ def q_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt((n * syy - sy * sy) / (n * (n - F.lit(1.0)))).alias("stddev_price"),
         ((n * szz - sz * sz) / (n * (n - F.lit(1.0)))).alias("var_discount"),
     )
-
 
 
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3781,10 +3687,10 @@ def q_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-hour windows every 30 minutes, so each event lands in exactly two
     windows — the oracle unnests both half-hour-aligned window starts
     covering each timestamp."""
-    from hdinsight_pyspark_cntk_integration_spark import streaming as st
+    from hdinsight_pyspark_cntk_integration_spark import streaming
 
     ev = load_table(spark, sf_dir, "events")
-    return st.sliding_counts(ev, window_len="1 hour", slide="30 minutes")
+    return streaming.sliding_counts(ev, window_len="1 hour", slide="30 minutes")
 
 
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3854,8 +3760,6 @@ def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_intersect_all", F.lit(0)).alias("n_intersect_all"),
         )
     )
-
-
 
 
 # --------------------------------------------------------------------------
@@ -3948,21 +3852,6 @@ def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.length("token") > 0)
     )
-
-
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd k-means over embeddings (operators.similarity.kmeans_lloyd,
-    k=8, 3 sweeps, deterministic smallest-id init): cluster sizes +
-    inertia. PRODUCTION PATH, registry-demoted round 14 (VERDICT r13
-    #3): centroid means are float sums in partition order, so boundary
-    assignments aren't bit-stable; the oracle-green gate form is
-    kmeans_provable (micro-quantized integer Lloyd), and this float
-    path stays pinned by the numpy-parity pytest + the registry-demoted
-    smoke pin in tests/test_similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.kmeans_summary(emb, k=8, iters=3)
-
-
 
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4078,8 +3967,6 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative fixpoint hash-matches the oracle's unrolled CTEs — an
     oracle-GREEN iterative algorithm (connected components and k-means
     are rows-only; this one is provable)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -4105,8 +3992,6 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed triangle counting (operators.graph.triangle_count)
     over the strong nation trade graph (directed pairs with >= 100
@@ -4114,8 +3999,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps wedge fan-out at O(sqrt m) per node, so the wedge join never
     pays hub-degree-squared. The count is orientation-invariant — the
     oracle's id-ordered brute-force 3-way join must agree exactly."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -4141,8 +4024,6 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rel.histogram_fixed(orders, "o_totalprice", 0.0, 600000.0, 12)
 
 
-
-
 def q_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regular-grid linear interpolation per user over the events stream
     (relational.interpolate_linear) — resample_ffill's continuous-measure
@@ -4150,26 +4031,6 @@ def q_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim by the oracle."""
     ev = load_table(spark, sf_dir, "events")
     return rel.interpolate_linear(ev, ts_col="ts", key_col="user_id", value_col="value")
-
-
-def q_interpolate_at(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cogrouped-pandas interpolated point lookup (relational.
-    interpolate_at): each event's value re-estimated 30 minutes later
-    from the surrounding observations via per-key vectorized np.interp.
-    PRODUCTION PATH, registry-demoted round 14 (VERDICT r13 #3):
-    np.interp's slope evaluation order is numpy's, not reproducible as
-    an identical SQL operation tree; the oracle-green gate form is
-    interpolate_provable (integer segment arithmetic), and this pandas
-    path stays pinned by the grid-agreement pytest + the
-    registry-demoted smoke pin in tests/test_relational.py."""
-    ev = load_table(spark, sf_dir, "events")
-    queries = ev.select(
-        "user_id", (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("qts")
-    )
-    return rel.interpolate_at(
-        ev, queries, key_col="user_id", obs_ts_col="ts",
-        value_col="value", query_ts_col="qts",
-    )
 
 
 def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4189,8 +4050,6 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fk = pl.fk_violations(orders, customer, "o_custkey", "c_custkey")
     return report.unionByName(fk)
-
-
 
 
 def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4213,15 +4072,11 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.build_inverted_index(docs, min_df=2)
 
 
-
-
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention triangle over events (relational.
     cohort_retention) — exact integer periods + exact distinct users."""
     ev = load_table(spark, sf_dir, "events")
     return rel.cohort_retention(ev, ts_col="ts", key_col="user_id")
-
-
 
 
 def q_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4243,8 +4098,6 @@ def q_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overflow_mul"
         ),
     )
-
-
 
 
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4290,8 +4143,6 @@ def q_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("lang_param"),
         F.url_encode(F.concat(F.col("source"), F.lit(" "), F.col("lang"))).alias("encoded"),
     )
-
-
 
 
 def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4468,8 +4319,6 @@ def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-error boolean — share of values ≤ estimate within ±0.02 of the
     target q — computed from integer-exact counts. The shuffle moves
     centroids (KB per group), never values."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import sketch as sk
-
     ev = load_table(spark, sf_dir, "events")
     est = sk.tdigest_quantiles(ev, "event_type", "value", [0.5, 0.9], delta=200)
     ranks = (
@@ -4555,10 +4404,10 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-gap islands: a gap of exactly 30 min starts a new session
     (session end = last event + gap, end-exclusive). The islands twin
     q_sessionize covers the hand-rolled form; this gates the built-in."""
-    from hdinsight_pyspark_cntk_integration_spark import streaming as st
+    from hdinsight_pyspark_cntk_integration_spark import streaming
 
     ev = load_table(spark, sf_dir, "events")
-    return st.session_counts(ev, gap="30 minutes").select(
+    return streaming.session_counts(ev, gap="30 minutes").select(
         "session_start", "session_end", "user_id", F.col("n").cast("long").alias("n")
     )
 
@@ -4604,8 +4453,6 @@ def q_bfs_supply_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer frontier expansion with min-hop merge — oracle unrolls
     the rounds as CTEs and hash-matches exactly (the third oracle-green
     ITERATIVE algorithm after integer PageRank and transitive dedup)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     li = load_table(spark, sf_dir, "lineitem")
     # -suppkey - 1 keeps suppliers STRICTLY negative (the fixture has
     # suppkey 0 and partkey 0; a bare -suppkey aliases them into one
@@ -4724,8 +4571,6 @@ def q_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact offset-explode twin (7× multiplication of the per-day
     DISTINCT pairs, exact and oracle-matched) and a 3σ bound boolean on
     the sketch estimate (lgConfigK=12 ⇒ 5% ≈ 3σ)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import sketch as sk
-
     ev = load_table(spark, sf_dir, "events")
     est = sk.hll_sliding_distinct(ev, "ts", "user_id", window_days=7)
     du = ev.select(F.to_date("ts").alias("day"), "user_id").distinct()
@@ -5157,8 +5002,6 @@ def q_rank_sum_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact average-rank ties (half-integers: every term and partial sum
     is exact in fp64, so the float reduction is order-independent and
     hash-gate-safe)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     return st.mann_whitney_u(ev, "event_type", "value", "click", "error")
 
@@ -5168,8 +5011,6 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributions (operators.stats.ks_statistic) — the drift detector;
     empirical CDFs as running integer counts over the pooled
     distinct-value aggregate, max over deterministic per-value fp64."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     return st.ks_statistic(ev, "event_type", "value", "click", "purchase")
 
@@ -5180,8 +5021,6 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINTs from per-group distinct-value aggregates (no global
     row sort), five DECIMAL moments, one fp64 ratio — the
     rank-correlation twin of the Pearson corr_stats gate."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     return st.spearman_corr(li, "l_returnflag", "l_quantity", "l_extendedprice")
 
@@ -5228,8 +5067,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure BIGINT, sidestepping the engine-specific float-window
     accumulation order (Spark serial vs DuckDB segment trees) — which
     is exactly why the oracle hash-matches."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     return st.cusum_changepoint(
         ev, key_col="user_id", order_cols=["ts", "event_id"],
@@ -5328,8 +5165,6 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the magnitude companion to the welch_ttest gate (same two groups,
     same moment discipline: integer cents, DECIMAL sums, one fp64
     tree)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.cohens_d(orders, "o_orderpriority", "o_totalprice", "1-URGENT", "5-LOW")
 
@@ -5339,8 +5174,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity (operators.stats.weighted_median): the price at which half
     the QUANTITY trades — all-integer (cross-multiplied cumulative
     weights over the bounded (group, value) cell aggregate)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
@@ -5355,8 +5188,6 @@ def q_jackknife_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean, and by how much — the grouped-data influence diagnostic.
     One aggregate pass; the only window runs over the 25-row nation
     aggregate."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     cust = load_table(spark, sf_dir, "customer")
     return st.jackknife_means(cust, "c_nationkey", "c_acctbal").withColumnRenamed(
         "c_nationkey", "nation"
@@ -5369,8 +5200,6 @@ def q_bootstrap_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     2012): per-resample multiplicities from the engine's Knuth mixer —
     no RNG, so Spark and the oracle agree bit-for-bit. The explode is
     collapsed by map-side partial agg before the 64-row shuffle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.poisson_bootstrap_mean(orders, "o_orderkey", "o_totalprice", 64)
 
@@ -5387,8 +5216,6 @@ def q_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 at sf0.01.) Spend aggregates to exact cents BEFORE the operator;
     the operator's own cents quantization (×100) is undone by passing
     dollars back."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     spend = (
@@ -5415,8 +5242,6 @@ def q_lorenz_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary-magnitude buckets + local ranks + a <=130-row offset prefix
     sum (the epoch_shuffle idiom), NTILE replicated arithmetically from
     (rank, N) so the oracle's plain windowed NTILE matches exactly."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.lorenz_points(orders, "o_custkey", "o_totalprice", buckets=10)
 
@@ -5429,8 +5254,6 @@ def q_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     reinforcement. Exact integers (normalization skipped — rankings
     unchanged, scores become path counts the oracle unrolls as two CTE
     pairs)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.hits_scores(_strong_trade_edges(spark, sf_dir), iters=2)
 
 
@@ -5463,8 +5286,7 @@ def q_grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_GROUPING_SETS_SQL)
 
 
-
-def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_k_truss_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-truss of the strong nation trade graph (operators.graph.
     k_truss — the eleventh oracle-provable iterative algorithm): the
     maximal subgraph where every edge sits in >= 2 triangles, deletion
@@ -5472,18 +5294,14 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint needs — extra rounds are no-ops on a fixpoint, so the
     unroll depth only needs to be an upper bound (asserted by the
     operator's own convergence error at 20)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     und = _strong_trade_edges(spark, sf_dir)
     return gr.k_truss(und, k=4)
 
 
-def q_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_reciprocity_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed reciprocity of the strong nation trade graph
     (operators.graph.reciprocity): does A strongly supplying B imply
     the reverse? All-integer counts + one micro floor-division."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
-
     return gr.reciprocity(_strong_trade_edges(spark, sf_dir))
 
 
@@ -5493,8 +5311,6 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics from the (group, value) CELL aggregate + one
     group-partitioned cumsum — no row sort, no sketch error; ppm
     thresholds keep ⌈q·n⌉ in exact integer math on both engines."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.exact_group_quantiles(
         orders, "o_orderpriority", "o_totalprice"
@@ -5508,8 +5324,6 @@ def q_mase_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     month? All-integer cents; one lag window builds the forecast
     column over the bounded monthly aggregate, the operator adds the
     seasonal-naive denominator."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     w = Window.partitionBy("nation").orderBy("t")
     series = pts.select(
@@ -5528,8 +5342,6 @@ def q_twa_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     state mean for irregular samples — burst-sampling a flat value
     must not move it. Integer cents × integer microseconds in DECIMAL,
     one floor-division."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     return st.time_weighted_average(ev, "user_id", "ts", "value")
 
@@ -5549,15 +5361,12 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pl.negative_sampling(pos, part.select(F.col("p_partkey").alias("item")), k=2)
 
 
-
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bin Population Stability Index of order values, pre-1998
     reference vs 1998+ current (operators.stats.
     population_stability_index): exact reference-decile bins (no
     sketch), +1 smoothing, one fp64 term per bin micro-floored — the
     drift dashboard row the ks_drift statistic summarizes."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     flagged = orders.select(
         (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")).alias("is_ref"),
@@ -5571,8 +5380,6 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed_mean): drop exactly floor(0.1·n) rows per end via the
     cell-aggregate rank-interval overlap — integer-exact, tie-exact,
     no row sort; the robust-location companion to exact_quantiles."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     return st.trimmed_mean(
         orders, "o_orderpriority", "o_totalprice", trim_ppm=100_000
@@ -5585,11 +5392,8 @@ def q_vector_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-zero counts in one scan with JVM higher-order predicates — the
     vector-table gate a similarity pipeline runs before trusting
     cosine math."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     emb = load_table(spark, sf_dir, "embeddings")
     return st.vector_dq(emb, "vec_id", "embedding", expected_dim=64)
-
 
 
 def q_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5599,13 +5403,10 @@ def q_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     a labeled training set passes before the labels are trusted. The
     gate slice keeps the all-pairs frame oracle-checkable; the scale
     path feeds LSH/IVF candidates to the same vote."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import similarity as sim
-
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
     return sim.knn_label_disagreement(
         emb, "vec_id", "embedding", "label", k=5
     )
-
 
 
 def q_minhash_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5628,7 +5429,6 @@ def q_minhash_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.jaccard_pairs(
         docs, cands, threshold=0.5, hash_family="md5", shingles=sh
     )
-
 
 
 def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5711,8 +5511,8 @@ def q_kmeans_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-PROVABLE Lloyd k-means (operators.similarity.
     kmeans_quantized, k=4, 2 rounds, micro-quantized integers,
     truncating-DIV centroid updates): the 12th oracle-provable
-    iterative algorithm; the production float path (kmeans_clusters)
-    stays rows-only with its numpy-parity pytest. Constant slice
+    iterative algorithm; the production float path (similarity.
+    kmeans_summary) is pinned by its numpy-parity pytest. Constant slice
     vec_id < 400 keeps the unrolled oracle cheap at every SF."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
     return sim.kmeans_quantized(emb, k=4, iters=2)
@@ -5735,8 +5535,8 @@ def q_interpolate_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolate_segments): per-user 'view' value series interpolated at
     'click' timestamps — micro-quantized values at birth, integer
     segment arithmetic, truncating DIV (verified identical Spark<->
-    DuckDB including negatives). The rows-only production twin is
-    interpolate_at (cogrouped-pandas np.interp)."""
+    DuckDB including negatives). The production twin is relational.
+    interpolate_at (cogrouped-pandas np.interp), pinned by pytest."""
     ev = load_table(spark, sf_dir, "events")
     obs = ev.filter(F.col("event_type") == "view")
     qs = ev.filter(F.col("event_type") == "click")
@@ -5804,10 +5604,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     copies = docs.select((F.col("doc_id") + F.lit(500000)).alias("doc_id"), "text")
     both = docs.unionByName(copies)
-    score = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(1_000_003)) * F.lit(2654435761),
-        F.lit(1_000_003),
-    ).cast("long")
+    score = _mix(F.col("doc_id")).cast("long")
     return dd.exact_dedup_keep_best(both.withColumn("score", score), "score")
 
 
@@ -5839,8 +5636,6 @@ def q_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact falling-factorial combinatorics — the k! cancels — so every
     cell is an integer; output is the bounded (n, c) profile, two
     partial-agg shuffles total."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     samples = li.select(
         F.col("l_orderkey").alias("problem_id"),
@@ -5855,8 +5650,6 @@ def q_pass_at_k_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval dashboard reads. The summed estimator mass is an exact
     integer; the Wilson bounds are one fixed fp64 tree over it
     (wilson_ci discipline), micro-floored, oracle-replayed."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     samples = li.select(
         F.col("l_orderkey").alias("problem_id"),
@@ -5872,16 +5665,11 @@ def q_self_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     'sampling fidelity' else a mixed alternative — the eval a pipeline
     runs over k chain-of-thought samples per question. Struct-min
     argmax, no window; single corpus row of exact integers."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-    gold = F.pmod(mix(F.col("user_id")), F.lit(7))
-    s = mix(F.col("event_id"))
-    alt = F.pmod(mix(F.col("event_id") + F.lit(13)), F.lit(7))
+    gold = F.pmod(_mix(F.col("user_id")), F.lit(7))
+    s = _mix(F.col("event_id"))
+    alt = F.pmod(_mix(F.col("event_id") + F.lit(13)), F.lit(7))
     samples = ev.select(
         F.col("user_id").alias("problem_id"),
         F.when(F.pmod(s, F.lit(3)) < 2, gold).otherwise(alt).cast("long").alias(
@@ -5899,20 +5687,15 @@ def q_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4+r)/10, so rater 0 is noise and rater 4 is strong) — accuracy
     weighting should separate them where majority vote can't. Output
     is the per-rater accuracy report, all exact integers."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
     rated = docs.select(
         F.col("doc_id").alias("item_id"),
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
     )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
+    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
+    s = _mix(F.col("item_id") * 5 + F.col("rater"))
+    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
     rated = rated.select(
         "item_id",
         "rater",
@@ -5968,16 +5751,11 @@ def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document (Knuth-mixed ~60% accuracy each, independent
     errors); only the discordant cells drive the continuity-corrected
     statistic. One boolean-projection reduce, zero joins."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     scored = docs.select(
-        (F.pmod(mix(F.col("doc_id")), F.lit(5)) < 3).alias("correct_a"),
-        (F.pmod(mix(F.col("doc_id") + 29), F.lit(5)) < 3).alias("correct_b"),
+        (F.pmod(_mix(F.col("doc_id")), F.lit(5)) < 3).alias("correct_a"),
+        (F.pmod(_mix(F.col("doc_id") + 29), F.lit(5)) < 3).alias("correct_b"),
     )
     return st.mcnemar_test(scored)
 
@@ -5998,8 +5776,6 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from the 50-value distinct-quantity aggregate — one
     partial-agg shuffle + a domain-bounded prefix sum, never n_a·n_b
     pairs. Exact integer cells; truncating signed micro ratio."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
     return st.cliffs_delta(li, "l_returnflag", "l_quantity", "R", "N")
 
@@ -6022,14 +5798,11 @@ def _synthetic_ranking(spark: SparkSession, sf_dir: str, with_rel: bool):
     exact ranking."""
     ev = load_table(spark, sf_dir, "events")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     users = ev.select("user_id").distinct()
     cand = users.select(
         "user_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("d")
     )
-    s = mix(F.col("user_id") * 16 + F.col("d"))
+    s = _mix(F.col("user_id") * 16 + F.col("d"))
     w = Window.partitionBy("user_id").orderBy(F.desc("s"), F.asc("d"))
     base = cand.select(
         F.col("user_id").alias("query_id"),
@@ -6037,7 +5810,7 @@ def _synthetic_ranking(spark: SparkSession, sf_dir: str, with_rel: bool):
         s.alias("s"),
         *(
             [
-                F.pmod(mix(F.col("user_id") * 16 + F.col("d") + 3), F.lit(4))
+                F.pmod(_mix(F.col("user_id") * 16 + F.col("d") + 3), F.lit(4))
                 .cast("long")
                 .alias("rel")
             ]
@@ -6061,13 +5834,10 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter before the co-keyed gold join; one corpus row, all
     integers."""
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     users, ranked = _synthetic_ranking(spark, sf_dir, with_rel=False)
     gold = users.select(
         F.col("user_id").alias("query_id"),
-        F.pmod(mix(F.col("user_id") + 7), F.lit(10)).cast("long").alias("doc_id"),
+        F.pmod(_mix(F.col("user_id") + 7), F.lit(10)).cast("long").alias("doc_id"),
     )
     return sim.retrieval_metrics(ranked, gold, k=5)
 
@@ -6098,16 +5868,11 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     coin), the pairwise-comparison fit an RLHF/eval pipeline runs.
     Matches collapse once to the bounded pair table; every MM round is
     integer-exact and SQL-unrolled."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
     i = F.pmod(F.col("l_suppkey"), F.lit(20))
     j = F.pmod(F.col("l_partkey"), F.lit(20))
-    win = F.pmod(mix(F.col("l_orderkey") * 8 + F.col("l_linenumber")), F.lit(2)) == 0
+    win = F.pmod(_mix(F.col("l_orderkey") * 8 + F.col("l_linenumber")), F.lit(2)) == 0
     m = li.filter(i != j).select(
         F.when(win, i).otherwise(j).cast("long").alias("winner"),
         F.when(win, j).otherwise(i).cast("long").alias("loser"),
@@ -6121,20 +5886,15 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Knuth-mixed doc property with 1/4 per-rater disagreement noise —
     the redundant-judgment QA gate a labeling pipeline runs. Exact
     integer numerator/denominator + truncated kappa_micro."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
     rated = docs.select(
         F.col("doc_id").alias("item_id"),
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
     )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
+    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
+    s = _mix(F.col("item_id") * 5 + F.col("rater"))
+    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
     rated = rated.select(
         "item_id",
         F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
@@ -6157,12 +5917,6 @@ def q_bleu_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = F.filter(toks, lambda t, i: F.pmod(i + 1, F.lit(4)) != 0)
     gens = docs.select("doc_id", F.array_join(kept, " ").alias("text"))
     return tx.bleu_clipped_precision(docs, gens, n_max=2)
-
-
-def _mix(c):
-    """The engine-wide Knuth-mix fixture mixer (see fleiss/dawid/ndcg
-    fixtures): deterministic, SQL-replayable pseudo-randomness."""
-    return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
 
 def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6254,9 +6008,8 @@ def q_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("item_id"),
         _mix(F.col("doc_id") * 17 + F.col("judge") * 29).alias("__s"),
     )
-    from pyspark.sql import Window as _W
 
-    w = _W.partitionBy("judge").orderBy(F.col("__s"), F.col("item_id"))
+    w = Window.partitionBy("judge").orderBy(F.col("__s"), F.col("item_id"))
     ranked = scored.select(
         "judge", "item_id", F.row_number().over(w).cast("long").alias("rank")
     )
@@ -6474,8 +6227,6 @@ def q_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     default m/u priors,
     Python-embedded integer micro-nat weights (the ndcg discount
     discipline). Output is the 2^2-bounded pattern table."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         F.col("c_nationkey").alias("blk_nation"),
@@ -6500,8 +6251,6 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare fields and embedded micro-nat weights as the blocked gate.
     Candidates = n·window by construction — the plan explodes each
     record into 3 (block, rn+offset) probe keys, never block² pairs."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         F.col("c_nationkey").alias("blk_nation"),
@@ -6540,12 +6289,7 @@ def q_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py); the step-up comparison is exact integer
     arithmetic. In production the p-column comes from upstream per-slice
     tests (welch_ttest / mantel_haenszel / ks_drift outputs)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    mix = F.pmod(
-        F.pmod(F.col("id"), F.lit(1_000_003)) * F.lit(2654435761),
-        F.lit(1_000_003),
-    )
+    mix = _mix(F.col("id"))
     hyp = spark.range(0, 200).select(
         F.col("id").alias("hyp_id"),
         F.when(
@@ -6565,20 +6309,15 @@ def q_icc_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagreement noise) — single-rating reliability, the continuous
     complement to the kappa family. Exact-integer rationals end to
     end; one truncating micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
     rated = docs.select(
         F.col("doc_id").alias("item_id"),
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
     )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
+    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
+    s = _mix(F.col("item_id") * 5 + F.col("rater"))
+    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
     rated = rated.select(
         "item_id",
         F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
@@ -6595,8 +6334,6 @@ def q_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance score vs urgent-order label, 10 bins). Per-bin
     |pos·1e6 − Σscore_micro| is an exact integer, so ECE is integer
     arithmetic end to end with ONE truncating DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     mm = pop.groupBy().agg(F.min("v").alias("__mn"), F.max("v").alias("__mx"))
     scored = pop.join(F.broadcast(mm)).select(
@@ -6618,8 +6355,6 @@ def q_mcc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent order") — the imbalance-robust single-number confusion
     summary next to accuracy/auc_balance. Exact BIGINT cells; one
     sqrt of an exact integer, floored to micro."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     frame = pop.select("y", (F.col("v") > 5000.0).alias("yhat"))
     return st.mcc_binary(frame, "y", "yhat")
@@ -6632,8 +6367,6 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion runs as cumsum − running-min — two prefix windows per
     user partition, exact BIGINT throughout; the temporal drift alarm
     next to the batch two-sample tests (ks_drift/psi_drift)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -6657,8 +6390,6 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentration measure next to gini/hhi/lorenz: per-row
     (x/mean)·ln(x/mean) terms floored to micro at birth (ln-micro
     discipline), exact BIGINT sums, bounded group domain."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.col("o_orderpriority").alias("prio"),
@@ -6735,8 +6466,6 @@ def q_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run over the 25-row nation aggregate (bounded domain,
     allowlisted); depth weights are Python-embedded double literals
     shared with the oracle (ndcg discount-table discipline)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import similarity as sim
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     rev = (
@@ -6774,8 +6503,6 @@ def q_cem_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to diff_in_diff/cuped for observational slices. Outcomes in
     exact cents; per-stratum and final truncating DIVs mirrored by the
     oracle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import mining as mn
-
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
@@ -6816,8 +6543,6 @@ def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-VALUE aggregate (doubled-integer ranks, no global row
     sort; the window is value-domain-bounded, allowlisted like
     auc_balance/rank_sum_test); one sqrt at the end."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     cnt = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
@@ -6836,8 +6561,6 @@ def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties-ignoring ordinal association right for coarse scales (tau-a
     would drown in the ties). Cells bounded 5x10; the pair pass is a
     cell-table self-join, never a row join."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.substring("o_orderpriority", 1, 1).cast("long").alias("prio_rank"),
@@ -6855,8 +6578,6 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean) next to cusum_drift's fixed-target form. delta = 50 cents,
     lambda = 1e4 cents, both in micro-cents; per-row running-mean DIV
     truncation mirrored by the oracle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -6880,8 +6601,6 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     location next to trimmed_mean/robust_means (winsorizing keeps n,
     so downstream variance math stays honest). Type-1 quantile bounds
     from the per-group distinct-value aggregate; exact integer mean."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.col("o_orderpriority").alias("prio"),
@@ -6900,8 +6619,6 @@ def q_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUE aggregate (value-domain window, allowlisted) — no global row
     sort. Tie-blocks land in the bucket of their cumulative END
     (documented convention; cum_n makes tie spill visible)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     frame = pop.select(
         F.floor(F.col("v") * 100).cast("long").alias("score_cents"),
@@ -6936,20 +6653,15 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     subjects, raters as battery items, ratings as scores) — the
     scale-level internal-consistency companion to item_analysis and
     icc_oneway. Exact integer rationals, one truncating micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
 
     rated = docs.select(
         F.col("doc_id").alias("subject"),
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("item_id"),
     )
-    base = F.pmod(mix(F.col("subject")), F.lit(4))
-    s = mix(F.col("subject") * 5 + F.col("item_id"))
-    alt = F.pmod(mix(F.col("subject") * 5 + F.col("item_id") + 101), F.lit(4))
+    base = F.pmod(_mix(F.col("subject")), F.lit(4))
+    s = _mix(F.col("subject") * 5 + F.col("item_id"))
+    alt = F.pmod(_mix(F.col("subject") * 5 + F.col("item_id") + 101), F.lit(4))
     rated = rated.select(
         "subject",
         "item_id",
@@ -6966,8 +6678,6 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame as kaplan_meier — the additive-hazard estimator sibling on
     the shared risk-set aggregate. Per-time d*1e6 DIV n increments,
     exact integer cumulative window."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     out = st.nelson_aalen(
         _repurchase_subjects(spark, sf_dir), "segment", "dur", "ev"
     )
@@ -7013,8 +6723,6 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative counts x segment gaps in DECIMAL, ONE final micro DIV;
     the value-domain window is the rank_sum_test class
     (allowlisted)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7029,8 +6737,6 @@ def q_roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to 100 levels at birth — the calibration_bins discipline
     capping curve cardinality) — the curve behind auc_balance's
     scalar. Exact counts, truncating micro rates."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     # Optimization r14: the old form derived the labelled population
     # TWICE — once for the min/max normalizer (a second customer +
     # orders scan feeding a BroadcastNestedLoopJoin) and once for the
@@ -7075,8 +6781,6 @@ def q_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance score for the urgent-order label — the imbalance-honest
     ranking scalar next to auc_balance/gains_table, block-at-end tie
     convention documented and oracle-mirrored."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     frame = pop.select(
         F.floor(F.col("v") * 100).cast("long").alias("score_cents"),
@@ -7093,8 +6797,6 @@ def q_benford_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     alarm). Digits from the decimal string (no float log10 at power
     boundaries); expected probabilities are Python-embedded double
     literals shared with the oracle (ndcg discipline)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents")
@@ -7109,8 +6811,6 @@ def q_cusum_two_sided(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped walks run as cumsum − clamped-running-min prefix windows
     in ONE window pass per user partition, exact BIGINT; alarm side
     reported at the first breaching step."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -7133,8 +6833,6 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     miscalibration feeds into; computed via the minimax identity over
     the ~100-level score domain (bounded segments, never row pairs;
     windows over the level aggregate — allowlisted)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pop = _urgent_labelled_customers(spark, sf_dir)
     mm = pop.groupBy().agg(F.min("v").alias("__mn"), F.max("v").alias("__mx"))
     scored = pop.join(F.broadcast(mm)).select(
@@ -7154,8 +6852,6 @@ def q_diebold_mariano(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute cents error? Per-target losses from windows over the
     bounded (nation, month) aggregate; DM from exact integer sums,
     one sqrt."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     monthly = (
@@ -7198,8 +6894,6 @@ def q_log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     The inferential closer of the KM / Nelson-Aalen family; per-time E
     and V terms floored to micro at birth, windows over the pooled
     time domain (allowlisted)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     subj = _repurchase_subjects(spark, sf_dir).filter(
         F.col("segment").isin(["BUILDING", "MACHINERY"])
     )
@@ -7212,8 +6906,6 @@ def q_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     to urgent orders at different rates? The per-slice battery member
     whose p-values feed benjamini_hochberg; exact counts, one fixed
     double z floored to micro."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     urgent = (
@@ -7239,14 +6931,9 @@ def q_post_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuped_ab gets from a covariate, from a stratum instead. Matched
     strata only (cem_att convention); exact integer arithmetic with
     per-stratum truncating DIVs."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     arm = F.when(
-        F.pmod(
-            F.pmod(F.col("c_custkey"), F.lit(1_000_003)) * F.lit(2654435761),
-            F.lit(1_000_003),
-        ) % 2 == 0,
+        _mix(F.col("c_custkey")) % 2 == 0,
         "A",
     ).otherwise("B")
     frame = customer.select(
@@ -7323,8 +7010,6 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     of o_orderpriority, an ordered 1..5 exposure)? The 2xk trend
     screen chi_square's order-blind association can't express; exact
     DECIMAL moments, one fp64 z floored to micro."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long").alias("dose"),
@@ -7351,8 +7036,6 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift family with ks (sup), wasserstein (L1 transport), tv
     (mass), hellinger, jsd. Fully exact: integer cumulative counts
     over the value domain, one truncating micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7369,8 +7052,6 @@ def q_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIRECTIONAL scalar: how much of the language distribution does
     knowing the source remove? ln-micro terms floored at birth, exact
     BIGINT sums, one clamped truncating DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents")
     return st.theil_u(docs, "lang", "source")
 
@@ -7402,8 +7083,6 @@ def q_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability-mass drift scalar completing the exact drift trio with
     ks_drift (sup) and wasserstein_drift (transport). Fully exact:
     one truncating DIV, no float, no window."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7417,8 +7096,6 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     between BUILDING and MACHINERY balance-cent distributions — the
     smooth, metrizable drift member next to tv/wasserstein/jsd;
     per-value sqrt terms micro-floored at birth."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7505,8 +7182,6 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     (blocked): does ANY segment's balance distribution sit shifted?
     Doubled-rank integers over the distinct-value aggregate, never a
     row sort; exact tie correction."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7523,8 +7198,6 @@ def q_ad_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tv/hellinger = mass): each CDF-gap term is divided by B(N-B), so
     tail drift a uniform integral dilutes gets amplified. Same shape
     as cvm_drift: value-domain cumsums, per-block micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7542,8 +7215,6 @@ def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust one-cut location screen next to kruskal_wallis's full-rank
     H — grand median read off the value-domain cumsum, then a k×2
     chi-square with exact integer numerators."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         "o_orderpriority",
@@ -7559,8 +7230,6 @@ def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     The continuous-response k-group companion to cochran_armitage's
     binary trend — pairwise dominance counts off the (group x value)
     grid, |V|·k² work, never an all-row pair join."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long").alias("dose"),
@@ -7576,8 +7245,6 @@ def q_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewed label distributions (compare the two gates' values on
     identical data). Items with a single rating excluded from both
     terms (documented); micro-truncation at birth, exact sums."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     raters = spark.range(5).select(F.col("id").alias("rater"))
     rated = docs.crossJoin(raters).filter(
@@ -7605,8 +7272,6 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     innovations are uncorrelated; -> 0 flags persistent momentum the
     forecasting operators (holt_linear) should model. Fully integer
     via the multiply-through trick; one series-keyed shuffle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.durbin_watson(pts, "nation", "t", "v")
 
@@ -7617,8 +7282,6 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     autocorrelation structure present", the whiteness screen composed
     from the exact ACF operator (autocorrelation gate): per-lag
     truncating micro DIV over the integer acf_micro, exact sums."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.ljung_box(pts, "nation", "t", "v", max_lag=6)
 
@@ -7629,8 +7292,6 @@ def q_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     an outlier under normality? ONE aggregate — the extreme deviation
     is provably at the min or max, so no join-back; exact integer
     moments, one fp64 sqrt micro-floored."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
@@ -7645,8 +7306,6 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair's disagreement is itself a tail-weight diagnostic). Every
     cross-group sum integer (micro/pico floored at birth), one fp64
     closing expression."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7678,8 +7337,6 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     the normal-theory members (grubbs_test, bartlett_test) — on this
     uniform-ish column the kurtosis term alone should reject hard.
     Four exact DECIMAL power sums, one deterministic fp64 close."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
@@ -7694,8 +7351,6 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-sensitive randomness screen beside durbin_watson's
     parametric lag-1 — exact integer signs via the multiply-through
     trick, one series-keyed shuffle."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     pts = _monthly_nation_revenue(spark, sf_dir)
     return st.runs_test(pts, "nation", "t", "v")
 
@@ -7707,8 +7362,6 @@ def q_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart to friedman_test (omnibus) and jonckheere_terpstra
     (unblocked) — block-partitioned doubled ranks, one exact
     aggregate, no global window."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     cells = orders.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
@@ -7749,8 +7402,6 @@ def q_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is itself a heteroscedasticity signal): stochastic-dominance
     effect p_hat plus the BM W and Welch-type df, all from the two
     doubled-midrank systems over the distinct-value aggregate."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     frame = ev.select(
         "event_type",
@@ -7766,8 +7417,6 @@ def q_bayes_ab_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     under Beta(1,1) priors — the no-approximation decision scalar
     beside two_proportion_z. Both engines run the identical Stirling
     lnGamma text; terms pico-floored at birth, exact integer sum."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     frame = ev.select(
         F.pmod(_mix(F.col("user_id")), F.lit(2)).alias("arm"),
@@ -7784,8 +7433,6 @@ def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mantel_haenszel. Hypergeometric masses through the portable
     Stirling lnGamma text; support-spine capped with the
     NULL-not-truncate guard."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         (F.col("o_orderstatus") == "F").alias("is_final"),
@@ -7801,8 +7448,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the true corpus given two partial scans and their overlap"
     estimator, chao1_vocab's two-sample sibling. One aggregate; the
     estimate should bracket the actual documents rowcount."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents").select(
         (F.pmod(_mix(F.col("doc_id")), F.lit(10)) < 3).alias("s1"),
         (F.pmod(_mix(F.col("doc_id") * 13 + 7), F.lit(10)) < 3).alias("s2"),
@@ -7837,8 +7482,6 @@ def q_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer pooled variance so every cross-group float
     reduction is birth-floored, then the single Sp2 rescale undone in
     the closing expression."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7855,8 +7498,6 @@ def q_poisson_two_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fisher_exact. Binomial masses through the portable Stirling
     lnGamma text; support spine capped with the NULL-not-truncate
     guard."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     ev = load_table(spark, sf_dir, "events")
     frame = ev.select(
         F.pmod(_mix(F.col("user_id")), F.lit(2)).alias("slice"),
@@ -7872,8 +7513,6 @@ def q_pot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     share) the body statistics discard — is the spend tail heavy
     (xi > 0) or exponential-ish? One filtered aggregate, exact
     integer excess moments, two fp64 closes."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     frame = orders.select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
@@ -7889,12 +7528,7 @@ def q_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reject a SUBSET of BH's set on identical input (the
     power-for-safety trade made visible). Exact integer step-up in
     DECIMAL; c(m) from truncating pico reciprocals."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    mix = F.pmod(
-        F.pmod(F.col("id"), F.lit(1_000_003)) * F.lit(2654435761),
-        F.lit(1_000_003),
-    )
+    mix = _mix(F.col("id"))
     hyp = spark.range(0, 200).select(
         F.col("id").alias("hyp_id"),
         F.when(
@@ -7914,8 +7548,6 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     trending AFTER the annual cycle is blocked out (Jan only compares
     with Jan)? Per-season S and tie-corrected variances sum; pair
     join keyed (priority, season)."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     orders = load_table(spark, sf_dir, "orders")
     series = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -7934,8 +7566,6 @@ def q_dunn_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame): WHICH segment pairs differ, from the same pooled doubled
     ranks the omnibus H used. k² pair rows over the k-row per-group
     rank table; feed benjamini_hochberg for multiplicity."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     customer = load_table(spark, sf_dir, "customer")
     frame = customer.select(
         "c_mktsegment",
@@ -7950,12 +7580,7 @@ def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the multiple-testing trio with all three directly
     comparable on identical input (Holm's FWER set ⊆ BY ⊆ BH).
     Exact integer step-down; stop rank = MIN failing rank."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    mix = F.pmod(
-        F.pmod(F.col("id"), F.lit(1_000_003)) * F.lit(2654435761),
-        F.lit(1_000_003),
-    )
+    mix = _mix(F.col("id"))
     hyp = spark.range(0, 200).select(
         F.col("id").alias("hyp_id"),
         F.when(
@@ -7975,8 +7600,6 @@ def q_icc_twoway(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY document (no participation coin), so rater bias is a
     separable column effect. All-integer mean-square identity, one
     truncating micro DIV, no float anywhere."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     raters = spark.range(5).select(F.col("id").alias("rater"))
     rated = docs.crossJoin(raters)
@@ -8013,465 +7636,21 @@ def q_dp_above_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Full registry, gate window first.
 
-    The catalog below is ONE dict literal in registry (insertion)
-    order; the returned dict is reordered so the committed
-    ``_GATE_WINDOW`` occupies the first 50 slots (the driver truncates
-    there). Rotating the gate is now a list edit, not a 300-entry
-    dict shuffle, and registry integrity (no duplicate keys, window
-    is a subset) is asserted here and source-checked by
-    tests/test_registry.py.
+    Defining ``q_<name>`` at module level is the only registration
+    step: the catalog is every module-level ``q_*`` function in
+    definition order, keyed by ``<name>``. The returned dict is
+    reordered so the committed ``_GATE_WINDOW`` occupies the first 50
+    slots (the driver truncates there); rotating the gate is a list
+    edit.
     """
-    catalog = {
-        "ngram_novelty": q_ngram_novelty,
-        "compression_ratio": q_compression_ratio,
-        "hierarchy_rollup": q_hierarchy_rollup,
-        "cohort_ltv": q_cohort_ltv,
-        "anova_f": q_anova_f,
-        "kendall_tau": q_kendall_tau,
-        "rolling_corr": q_rolling_corr,
-        "hhi_concentration": q_hhi_concentration,
-        "sssp_trade": q_sssp_trade,
-        "kaplan_meier": q_kaplan_meier,
-        "containment_docs": q_containment_docs,
-        "diff_in_diff": q_diff_in_diff,
-        "grouped_ols": q_grouped_ols,
-        "mann_kendall": q_mann_kendall,
-        "oov_rate": q_oov_rate,
-        "recursive_cte_sql": q_recursive_cte_sql,
-        "dup_cluster_sizes": q_dup_cluster_sizes,
-        "auc_balance": q_auc_balance,
-        "calibration_bins": q_calibration_bins,
-        "cuped_spend": q_cuped_spend,
-        "holt_winters": q_holt_winters,
-        "wilson_ci": q_wilson_ci,
-        "survival_summary": q_survival_summary,
-        "corr_matrix": q_corr_matrix,
-        "cramers_v": q_cramers_v,
-        "assortativity": q_assortativity,
-        "levene_bf": q_levene_bf,
-        "ks_drift": q_ks_drift,
-        "jaccard_neighbors": q_jaccard_neighbors,
-        "robust_means": q_robust_means,
-        "bigram_logprob": q_bigram_logprob,
-        "near_dup_against": q_near_dup_against,
-        "bm25_search": q_bm25_search,
-        "unigram_logprob": q_unigram_logprob,
-        "temperature_mixture": q_temperature_mixture,
-        "key_skew_profile": q_key_skew_profile,
-        "hll_distinct_bounded": q_hll_distinct_bounded,
-        "posexplode_tokens": q_posexplode_tokens,
-        "pagerank_nations": q_pagerank_nations,
-        "price_histogram": q_price_histogram,
-        "interpolate_linear": q_interpolate_linear,
-        "dq_checks": q_dq_checks,
-        "edit_distance_pairs": q_edit_distance_pairs,
-        "inverted_index": q_inverted_index,
-        "cohort_retention": q_cohort_retention,
-        "try_arithmetic": q_try_arithmetic,
-        "xml_roundtrip": q_xml_roundtrip,
-        "url_functions": q_url_functions,
-        # --- full registry continues (covered by tools/check_parity.py).
-        # --- Next 49 entries = the committed ROUND-10 gate window. ---
-        "corpus_divergence": q_corpus_divergence,
-        "corr_stats": q_corr_stats,
-        "correlated_avg_qty": q_correlated_avg_qty,
-        "intersect": q_intersect,
-        "unpivot": q_unpivot,
-        "map_functions": q_map_functions,
-        "array_functions": q_array_functions,
-        "regexp_functions": q_regexp_functions,
-        "rank_functions": q_rank_functions,
-        "first_last_value": q_first_last_value,
-        "datetime_functions": q_datetime_functions,
-        "order_count_distribution": q_order_count_distribution,
-        "disjunctive_filter": q_disjunctive_filter,
-        "parts_supplier_count": q_parts_supplier_count,
-        "high_balance_light_buyers": q_high_balance_light_buyers,
-        "nation_value_share": q_nation_value_share,
-        "nation_trade_pairs": q_nation_trade_pairs,
-        "mode_per_group": q_mode_per_group,
-        "ngram_jaccard_adjacent": q_ngram_jaccard_adjacent,
-        "near_dup_cosine_exact": q_near_dup_cosine_exact,
-        "near_dup_cosine_lsh": q_near_dup_cosine_lsh,
-        "media_metadata": q_media_metadata,
-        "multimodal_decode": q_multimodal_decode,
-        "simple_filter_agg": q_simple_filter_agg,
-        "string_functions": q_string_functions,
-        "math_functions": q_math_functions,
-        "bitwise_agg": q_bitwise_agg,
-        "sentence_split": q_sentence_split,
-        "higher_order_fns": q_higher_order_fns,
-        "ivf_topk": q_ivf_topk,
-        "returned_item_revenue": q_returned_item_revenue,
-        "market_share": q_market_share,
-        "range_frame_window": q_range_frame_window,
-        "struct_functions": q_struct_functions,
-        "date_format": q_date_format,
-        "salted_join": q_salted_join,
-        "approx_percentile": q_approx_percentile,
-        "map_explode": q_map_explode,
-        "arrays_zip": q_arrays_zip,
-        "encoding_functions": q_encoding_functions,
-        "top_supplier": q_top_supplier,
-        "dedup_transitive": q_dedup_transitive,
-        "limit_offset": q_limit_offset,
-        "big_orders": q_big_orders,
-        "zorder_key": q_zorder_key,
-        "sample_per_group": q_sample_per_group,
-        "weighted_sample": q_weighted_sample,
-        "data_card": q_data_card,
-        "pca_top_component": q_pca_top_component,
-        # new in round 9 (VERDICT r8 #4 capped-gate twin): takes the one
-        # free round-10 window slot — see ROTATION.md
-        "jaccard_capped": q_jaccard_capped,
-        # new in round 9, scheduled for the round-11 gate window (the
-        # round-10 window is fully committed to the never-gated backlog
-        # — ROTATION.md); all oracle-paired and parity-mirrored now
-        "cohens_d": q_cohens_d,
-        "weighted_median": q_weighted_median,
-        "jackknife_nations": q_jackknife_nations,
-        "bootstrap_mean": q_bootstrap_mean,
-        "control_chart": q_control_chart,
-        "lorenz_customers": q_lorenz_customers,
-        "hits_trade": q_hits_trade,
-        "grouping_sets_sql": q_grouping_sets_sql,
-        "k_truss_trade": q_k_truss,
-        "reciprocity_trade": q_reciprocity,
-        "exact_quantiles": q_exact_quantiles,
-        "mase_monthly": q_mase_monthly,
-        "twa_value": q_twa_value,
-        "negative_samples": q_negative_samples,
-        "psi_drift": q_psi_drift,
-        "trimmed_mean": q_trimmed_mean,
-        "vector_dq": q_vector_dq,
-        "knn_label_noise": q_knn_label_noise,
-        "minhash_provable": q_minhash_provable,
-        # --- previously gated queries (r1-r8 artifacts) ---
-        "pricing_summary": q_pricing_summary,
-        "mutual_information": q_mutual_information,
-        "theil_sen": q_theil_sen,
-        "weighted_reservoir": q_weighted_reservoir,
-        "funnel_steps": q_funnel_steps,
-        "zipf_slope": q_zipf_slope,
-        "pmi_cooccur": q_pmi_cooccur,
-        "robust_scaler": q_robust_scaler,
-        "burstiness": q_burstiness,
-        "markov_transitions": q_markov_transitions,
-        "script_histogram": q_script_histogram,
-        "kneser_ney": q_kneser_ney,
-        "textrank_keywords": q_textrank_keywords,
-        "autocorrelation": q_autocorrelation,
-        "seasonal_decompose": q_seasonal_decompose,
-        "target_encode": q_target_encode,
-        "woe_iv": q_woe_iv,
-        "adamic_adar": q_adamic_adar,
-        "dictionary_tag": q_dictionary_tag,
-        "harmonic_centrality": q_harmonic_centrality,
-        "holt_linear": q_holt_linear,
-        "heaps_law": q_heaps_law,
-        "simpson_diversity": q_simpson_diversity,
-        "sparse_cosine": q_sparse_cosine,
-        "welch_ttest": q_welch_ttest,
-        "readability": q_readability,
-        "attribution": q_attribution,
-        "canonical_docs": q_canonical_docs,
-        "assoc_rules": q_assoc_rules,
-        "rfm_segments": q_rfm_segments,
-        "pareto_revenue": q_pareto_revenue,
-        "kmv_intersect": q_kmv_intersect,
-        "sentence_dedup": q_sentence_dedup,
-        "dsir_weights": q_dsir_weights,
-        "random_projection": q_random_projection,
-        "communities_trade": q_communities_trade,
-        "kcore_trade": q_kcore_trade,
-        "hard_negatives": q_hard_negatives,
-        "near_dup_against_exact": q_near_dup_against_exact,
-        "ewma": q_ewma,
-        "benford_digits": q_benford_digits,
-        "chi_square": q_chi_square,
-        "yoy_growth": q_yoy_growth,
-        "run_lengths": q_run_lengths,
-        "bigram_condprob": q_bigram_condprob,
-        "tdigest_quantiles": q_tdigest_quantiles,
-        "event_paths": q_event_paths,
-        "session_window_native": q_session_window_native,
-        "rolling_anomaly": q_rolling_anomaly,
-        "dedup_window": q_dedup_window,
-        "accuracy": q_accuracy,
-        "score_confusion": q_score_confusion,
-        "similarity_topk": q_similarity_topk,
-        "embedding_dedup": q_embedding_dedup,
-        "top_revenue_orders": q_top_revenue_orders,
-        "region_revenue": q_region_revenue,
-        "dim_join": q_dim_join,
-        "confusion_pivot": q_confusion_pivot,
-        "window_topn": q_window_topn,
-        "anti_join": q_anti_join,
-        "rollup": q_rollup,
-        "json_extract": q_json_extract,
-        "asof_join": q_asof_join,
-        "dedup_exact": q_dedup_exact,
-        "token_stats": q_token_stats,
-        "score_accuracy": q_score_accuracy,
-        "skyline_parts": q_skyline_parts,
-        "outlier_zscore": q_outlier_zscore,
-        "upsert_aggregate": q_upsert_aggregate,
-        "bfs_supply_chain": q_bfs_supply_chain,
-        "pq_ann": q_pq_ann,
-        "sliding_distinct": q_sliding_distinct,
-        "ivfpq_ann": q_ivfpq_ann,
-        "phash_near_dup": q_phash_near_dup,
-        "interval_overlap": q_interval_overlap,
-        "hybrid_rrf": q_hybrid_rrf,
-        "cms_counts": q_cms_counts,
-        "rank_sum_test": q_rank_sum_test,
-        "ks_test": q_ks_test,
-        "spearman": q_spearman,
-        "ols_regression": q_ols_regression,
-        "cusum_changepoint": q_cusum_changepoint,
-        "ab_test_lift": q_ab_test_lift,
-        "set_similarity": q_set_similarity,
-        "bpe_vocab": q_bpe_vocab,
-        "repeated_passages_maximal": q_repeated_passages_maximal,
-        "strip_boilerplate": q_strip_boilerplate,
-        "heavy_users": q_heavy_users,
-        "triangle_count": q_triangle_count,
-        "quantile_transform": q_quantile_transform,
-        "winsorize": q_winsorize,
-        "auto_histogram": q_auto_histogram,
-        "modern_sql_sugar": q_modern_sql_sugar,
-        "gopher_rules": q_gopher_rules,
-        "contamination_overlap": q_contamination_overlap,
-        "ngram_diversity": q_ngram_diversity,
-        "mad_outliers": q_mad_outliers,
-        "perplexity_buckets": q_perplexity_buckets,
-        "url_dedup": q_url_dedup,
-        "asof_nearest": q_asof_nearest,
-        "balanced_buckets": q_balanced_buckets,
-        "feature_hashing": q_feature_hashing,
-        "differential_join": q_differential_join,
-        "gini": q_gini,
-        "token_entropy": q_token_entropy,
-        "null_safe_join": q_null_safe_join,
-        "collation_group": q_collation_group,
-        "sql_scripting": q_sql_scripting,
-        "running_distinct": q_running_distinct,
-        "table_diff": q_table_diff,
-        "arrow_udf": q_arrow_udf,
-        "aes_roundtrip": q_aes_roundtrip,
-        "boolean_aggs": q_boolean_aggs,
-        "minhash_near_dup": q_minhash_near_dup,
-        "simhash": q_simhash,
-        "decontaminate_bloom": q_decontaminate_bloom,
-        "asof_tolerance": q_asof_tolerance,
-        "repeated_passages": q_repeated_passages,
-        "shard_manifest": q_shard_manifest,
-        "point_in_time": q_point_in_time,
-        "variant_extract": q_variant_extract,
-        "manifest_diff": q_manifest_diff,
-        "hash_split": q_hash_split,
-        "mixture_sample": q_mixture_sample,
-        "pack_chunks": q_pack_chunks,
-        "pack_chunks_global": q_pack_chunks_global,
-        "bpe_token_count": q_bpe_token_count,
-        "waiting_suppliers": q_waiting_suppliers,
-        "decontaminate": q_decontaminate,
-        "rolling_fingerprint": q_rolling_fingerprint,
-        "repetition_stats": q_repetition_stats,
-        "nation_profit": q_nation_profit,
-        "vocab": q_vocab,
-        "tokenize_ids": q_tokenize_ids,
-        "lang_id": q_lang_id,
-        "min_cost_supplier": q_min_cost_supplier,
-        "priority_ship_lag": q_priority_ship_lag,
-        "excess_suppliers": q_excess_suppliers,
-        "pii_redact": q_pii_redact,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "stratified_split": q_stratified_split,
-        "chunk_overlap": q_chunk_overlap,
-        "quantize_embeddings": q_quantize_embeddings,
-        "adaptive_quality": q_adaptive_quality,
-        "apply_changes": q_apply_changes,
-        "quantized_rerank": q_quantized_rerank,
-        "epoch_shuffle": q_epoch_shuffle,
-        "resample_ffill": q_resample_ffill,
-        "profile_table": q_profile_table,
-        "sliding_hourly": q_sliding_hourly,
-        "scd2_history": q_scd2_history,
-        "group_percentiles": q_group_percentiles,
-        "dedup_incremental": q_dedup_incremental,
-        "set_ops_all": q_set_ops_all,
-        "moving_avg": q_moving_avg,
-        "sessionize": q_sessionize,
-        "dedup_keep_first_rows": q_dedup_keep_first_rows,
-        "having_big_orders": q_having_big_orders,
-        "promo_revenue_share": q_promo_revenue_share,
-        "exists_late_ship": q_exists_late_ship,
-        "percentiles": q_percentiles,
-        "string_agg": q_string_agg,
-        "embedding_centroids": q_embedding_centroids,
-        "l2_normalize": q_l2_normalize,
-        "bigram_histogram": q_bigram_histogram,
-        "funnel_conversion": q_funnel_conversion,
-        "sql_yearly_revenue": q_sql_yearly_revenue,
-        "merge_join": q_merge_join,
-        "union_accounts": q_union_accounts,
-        "null_handling": q_null_handling,
-        "approx_distinct": q_approx_distinct,
-        "running_total": q_running_total,
-        "lag_lead": q_lag_lead,
-        "fingerprints": q_fingerprints,
-        "token_histogram": q_token_histogram,
-        "quality_filter": q_quality_filter,
-        "embedding_pair_cosine": q_embedding_pair_cosine,
-        "cube": q_cube,
-        "scalar_functions": q_scalar_functions,
-        "range_join": q_range_join,
-        "distinct_labels": q_distinct_labels,
-        "semi_join": q_semi_join,
-        "tumbling_hourly": q_tumbling_hourly,
-        "set_ops": q_set_ops,
-        # round-10 additions (scheduled for the r11 gate window)
-        "span_corruption": q_span_corruption,
-        "nearest_centroid": q_nearest_centroid,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "mmr_rerank": q_mmr_rerank,
-        "simhash_provable": q_simhash_provable,
-        "kmeans_provable": q_kmeans_provable,
-        "pca_provable": q_pca_provable,
-        # round-11 additions (gate window: round 12 per ROTATION.md)
-        "interpolate_provable": q_interpolate_provable,
-        "pack_bestfit": q_pack_bestfit,
-        "contamination_lm": q_contamination_lm,
-        "quality_calibration": q_quality_calibration,
-        "curriculum_schedule": q_curriculum_schedule,
-        "dedup_keep_best": q_dedup_keep_best,
-        "packing_efficiency": q_packing_efficiency,
-        "rouge_overlap": q_rouge_overlap,
-        "pass_at_k": q_pass_at_k,
-        "self_consistency": q_self_consistency,
-        "bleu_clipped": q_bleu_clipped,
-        "fleiss_kappa": q_fleiss_kappa,
-        "kcenter_select": q_kcenter_select,
-        "bradley_terry": q_bradley_terry,
-        "cliffs_delta": q_cliffs_delta,
-        "good_turing": q_good_turing,
-        "retrieval_mrr": q_retrieval_mrr,
-        "ndcg_eval": q_ndcg_eval,
-        "mcnemar_test": q_mcnemar_test,
-        "chao1_vocab": q_chao1_vocab,
-        "k_anonymity": q_k_anonymity,
-        "ablation_arms": q_ablation_arms,
-        "fim_split": q_fim_split,
-        "dawid_skene": q_dawid_skene,
-        "lsh_plan": q_lsh_plan,
-        # round-12 additions
-        "krippendorff_alpha": q_krippendorff_alpha,
-        "cochran_q": q_cochran_q,
-        "kendall_w": q_kendall_w,
-        "wilcoxon_signed": q_wilcoxon_signed,
-        "friedman_test": q_friedman_test,
-        "item_analysis": q_item_analysis,
-        "l_diversity": q_l_diversity,
-        "mixture_reweight": q_mixture_reweight,
-        "span_f1": q_span_f1,
-        # round-12 batch 2 (gated round 13 — the window was full; see
-        # ROTATION.md overflow policy)
-        "weighted_kappa": q_weighted_kappa,
-        "mantel_haenszel": q_mantel_haenszel,
-        "conformal_calibration": q_conformal_calibration,
-        "pinball_loss": q_pinball_loss,
-        "brier_decomposition": q_brier_decomposition,
-        "sprt_eval": q_sprt_eval,
-        "fellegi_sunter": q_fellegi_sunter,
-        "wordpiece_vocab": q_wordpiece_vocab,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "t_closeness": q_t_closeness,
-        # round-13 additions
-        "benjamini_hochberg": q_benjamini_hochberg,
-        "icc_oneway": q_icc_oneway,
-        "ece_calibration": q_ece_calibration,
-        "mcc_score": q_mcc_score,
-        "cusum_drift": q_cusum_drift,
-        "theil_index": q_theil_index,
-        "g_test_keywords": q_g_test_keywords,
-        "log_odds_dirichlet": q_log_odds_dirichlet,
-        "yules_k": q_yules_k,
-        "rbo_overlap": q_rbo_overlap,
-        "cem_att": q_cem_att,
-        "neyman_allocation": q_neyman_allocation,
-        "spearman_rho": q_spearman_rho,
-        "gk_gamma": q_gk_gamma,
-        "page_hinkley": q_page_hinkley,
-        "winsorized_mean": q_winsorized_mean,
-        "gains_table": q_gains_table,
-        "jsd_divergence": q_jsd_divergence,
-        "cronbach_alpha": q_cronbach_alpha,
-        "nelson_aalen": q_nelson_aalen,
-        "dp_noisy_counts": q_dp_noisy_counts,
-        "feature_hashing_signed": q_feature_hashing_signed,
-        "wasserstein_drift": q_wasserstein_drift,
-        "roc_points": q_roc_points,
-        "average_precision": q_average_precision,
-        "benford_chi2": q_benford_chi2,
-        "isotonic_calibration": q_isotonic_calibration,
-        "diebold_mariano": q_diebold_mariano,
-        "log_rank_test": q_log_rank_test,
-        "two_proportion_z": q_two_proportion_z,
-        "post_stratified": q_post_stratified,
-        "embedding_contamination": q_embedding_contamination,
-        "dp_noisy_sum": q_dp_noisy_sum,
-        "tv_drift": q_tv_drift,
-        "hellinger_drift": q_hellinger_drift,
-        # round-14 additions (gate as round-15 overflow per the
-        # re-gate floor policy, ROTATION.md)
-        "krippendorff_ordinal": q_krippendorff_ordinal,
-        "pass_at_k_ci": q_pass_at_k_ci,
-        "cusum_two_sided": q_cusum_two_sided,
-        "dp_noisy_mean": q_dp_noisy_mean,
-        "cvm_drift": q_cvm_drift,
-        "theil_u": q_theil_u,
-        "krippendorff_interval": q_krippendorff_interval,
-        "cochran_armitage": q_cochran_armitage,
-        "lexical_diversity": q_lexical_diversity,
-        "kruskal_wallis": q_kruskal_wallis,
-        "ad_drift": q_ad_drift,
-        "mood_median": q_mood_median,
-        "jonckheere_terpstra": q_jonckheere_terpstra,
-        "gwet_ac1": q_gwet_ac1,
-        "durbin_watson": q_durbin_watson,
-        "ljung_box": q_ljung_box,
-        "grubbs_test": q_grubbs_test,
-        "bartlett_test": q_bartlett_test,
-        "chrf_score": q_chrf_score,
-        "jarque_bera": q_jarque_bera,
-        "runs_test": q_runs_test,
-        "page_trend_test": q_page_trend_test,
-        "dp_exponential_quantile": q_dp_exponential_quantile,
-        "brunner_munzel": q_brunner_munzel,
-        "bayes_ab_prob": q_bayes_ab_prob,
-        "fisher_exact": q_fisher_exact,
-        "capture_recapture": q_capture_recapture,
-        "hilbert_key": q_hilbert_key,
-        "welch_anova": q_welch_anova,
-        "poisson_two_rate": q_poisson_two_rate,
-        "pot_tail": q_pot_tail,
-        "benjamini_yekutieli": q_benjamini_yekutieli,
-        "seasonal_mann_kendall": q_seasonal_mann_kendall,
-        "dunn_test": q_dunn_test,
-        "holm_bonferroni": q_holm_bonferroni,
-        "icc_twoway": q_icc_twoway,
-        "dp_above_threshold": q_dp_above_threshold,
-    }
+    catalog = {name[2:]: fn for name, fn in globals().items() if name.startswith("q_")}
     missing = [n for n in _GATE_WINDOW if n not in catalog]
     assert not missing, f"gate window names not in catalog: {missing}"
     assert len(_GATE_WINDOW) == len(set(_GATE_WINDOW)) == 50, (
         "gate window must be exactly 50 unique names"
     )
     ordered = {n: catalog[n] for n in _GATE_WINDOW}
-    for name, fn in catalog.items():
-        if name not in ordered:
-            ordered[name] = fn
+    ordered.update(catalog)  # the rest in definition order
     return ordered
 
 

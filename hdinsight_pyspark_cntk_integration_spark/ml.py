@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import CountVectorizer, MinHashLSH
-from pyspark.ml.functions import array_to_vector, vector_to_array
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -148,8 +148,3 @@ def ml_minhash_candidates(
         .filter(F.col("id_a") < F.col("id_b"))
     )
 
-
-def vector_col_to_array(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
-    """ml Vector → array<double> (for handing MLlib output back to the
-    engine's array-native operators)."""
-    return df.withColumn(out_col, vector_to_array(F.col(vec_col)))

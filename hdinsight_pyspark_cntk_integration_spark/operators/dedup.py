@@ -176,19 +176,6 @@ def minhash_cols(hashes: Column, num_hashes: int = 128) -> list[Column]:
     return [F.array_min(F.transform(hashes, affine(j))) for j in range(num_hashes)]
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as array<bigint>, length ``num_hashes``. All
-    codegen'd JVM expressions — no Python worker in the loop."""
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-
-    def affine(j: int):
-        a = F.lit((j * 2 + 1) * _A_MULT % _P)
-        b = F.lit((j + 1) * _B_MULT % _P)
-        return lambda h: F.pmod(a * h + b, F.lit(_P))
-
-    return F.array(*[F.array_min(F.transform(base, affine(j))) for j in range(num_hashes)])
-
-
 def hashed_shingle_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1012,7 +999,6 @@ def repeated_passages_maximal(
     text_col: str = "text",
     ns: tuple[int, ...] = (8, 16, 32),
     min_docs: int = 2,
-    via_hash: bool | None = None,
     adaptive: bool = False,
     max_level: int = 4096,
 ) -> DataFrame:
@@ -1035,15 +1021,14 @@ def repeated_passages_maximal(
     still suppressed — the sweep reports containment-maximal passages,
     not occurrence-disjoint ones.
 
-    Scale shape (default): ONE corpus scan tokenizes each document once
+    Scale shape: ONE corpus scan tokenizes each document once
     and emits (n_words, passage) tags for every level, ONE partial-agg
     groupBy on the tagged passage serves all levels, the min_docs-cut
     survivor set is materialized (localCheckpoint — bounded by the
     corpus's boilerplate volume), then per adjacent pair ONE left-anti
     join whose build side is the n-grams of the UPPER level's survivors
     — at 100 TB the suppression sets broadcast. No all-pairs path, no
-    window, no substring scan. ``via_hash=True`` opts into the
-    per-level hash-keyed exchange (see ``repeated_passages``).
+    window, no substring scan.
 
     Returns (passage, n_words, n_docs, n_occurrences, first_doc_id) —
     ``n_words`` is the sweep level, NOT len(split(passage)) in the
@@ -1068,137 +1053,122 @@ def repeated_passages_maximal(
     levels = sorted(set(ns))
     if not levels:
         raise ValueError("ns must be non-empty")
-    if via_hash:
-        # Hash-keyed per-level path (narrow exchange, doubled scans) —
-        # opt-in for network-bound clusters; see repeated_passages.
-        survivors = {
-            n: repeated_passages(
-                df, id_col=id_col, text_col=text_col, n=n,
-                min_docs=min_docs, via_hash=True,
+    # Two-pass hash-prefilter plan (optimization r14, guide §2.3/§8
+    # "shuffle keys and metadata instead of payloads"): the old
+    # single fused scan built the PASSAGE STRING for every gram of
+    # every level (an n-token byte concatenation per gram) and
+    # shuffled those strings (~50-200 B each) through the exchange
+    # — measured 73.8 MB of shuffle and the operator's dominant
+    # CPU at sf0.1. Now:
+    #   pass 0  tokenize ONCE into a materialized (id, tokens)
+    #           table — the regexp split is the most expensive
+    #           per-byte step and the old adaptive path re-ran it
+    #           up to 4 more times (length filter, frontier, ext);
+    #   pass 1  per level, hash the token SLICE directly
+    #           (xxhash64 over array<string> — no string is ever
+    #           built) and run the min_docs cut on 8-byte keys;
+    #   pass 2  rebuild slices from the token table, broadcast-
+    #           semi-join on the survivor hash set, and only THEN
+    #           materialize passage strings — for survivors only —
+    #           recounting EXACTLY on the string key.
+    # Hash collisions can only ADD pass-2 candidates (a true
+    # survivor's (level, hash) group count >= its own doc count, so
+    # no false negatives); the exact recount and min_docs re-cut in
+    # pass 2 make the result bit-identical to the string-key plan.
+    # Optimization r15: _spread before the tokenize checkpoint (see
+    # repeated_passages) — the tokenize and BOTH gram explodes run
+    # at the checkpoint's width, and a single-file scan serialized
+    # them on one core (stage profile at sf0.1: 1.9 s + 3.6 s CPU
+    # in two 1-task stages). No-op on wide scans.
+    src, _ = _spread(df)
+    toks = src.select(
+        F.col(id_col),
+        F.split(normalized_text(text_col), r"\s+").alias("__toks"),
+    ).localCheckpoint(eager=True)
+
+    def level_structs(tcol: Column, value_builder) -> Column:
+        # NB: closure factory, not a default-arg lambda — pyspark
+        # dispatches HOF lambdas on arity, so `lambda i, n=n:` would
+        # be called as (element, index) with the level bound to the
+        # array index.
+        def builder(n: int):
+            return lambda i: F.struct(
+                F.lit(n).alias("n_words"),
+                value_builder(tcol, i, n),
             )
-            for n in levels
-        }
-        surv = None
+
+        parts = []
         for n in levels:
-            lvl = survivors[n].withColumn("n_words", F.lit(n))
-            surv = lvl if surv is None else surv.unionByName(lvl)
-    else:
-        # Two-pass hash-prefilter plan (optimization r14, guide §2.3/§8
-        # "shuffle keys and metadata instead of payloads"): the old
-        # single fused scan built the PASSAGE STRING for every gram of
-        # every level (an n-token byte concatenation per gram) and
-        # shuffled those strings (~50-200 B each) through the exchange
-        # — measured 73.8 MB of shuffle and the operator's dominant
-        # CPU at sf0.1. Now:
-        #   pass 0  tokenize ONCE into a materialized (id, tokens)
-        #           table — the regexp split is the most expensive
-        #           per-byte step and the old adaptive path re-ran it
-        #           up to 4 more times (length filter, frontier, ext);
-        #   pass 1  per level, hash the token SLICE directly
-        #           (xxhash64 over array<string> — no string is ever
-        #           built) and run the min_docs cut on 8-byte keys;
-        #   pass 2  rebuild slices from the token table, broadcast-
-        #           semi-join on the survivor hash set, and only THEN
-        #           materialize passage strings — for survivors only —
-        #           recounting EXACTLY on the string key.
-        # Hash collisions can only ADD pass-2 candidates (a true
-        # survivor's (level, hash) group count >= its own doc count, so
-        # no false negatives); the exact recount and min_docs re-cut in
-        # pass 2 make the result bit-identical to the string-key plan.
-        # Optimization r15: _spread before the tokenize checkpoint (see
-        # repeated_passages) — the tokenize and BOTH gram explodes run
-        # at the checkpoint's width, and a single-file scan serialized
-        # them on one core (stage profile at sf0.1: 1.9 s + 3.6 s CPU
-        # in two 1-task stages). No-op on wide scans.
-        src, _ = _spread(df)
-        toks = src.select(
-            F.col(id_col),
-            F.split(normalized_text(text_col), r"\s+").alias("__toks"),
-        ).localCheckpoint(eager=True)
+            idx = F.sequence(
+                F.lit(0), F.greatest(F.size(tcol) - F.lit(n), F.lit(0))
+            )
+            parts.append(F.transform(idx, builder(n)))
+        return F.concat(*parts)
 
-        def level_structs(tcol: Column, value_builder) -> Column:
-            # NB: closure factory, not a default-arg lambda — pyspark
-            # dispatches HOF lambdas on arity, so `lambda i, n=n:` would
-            # be called as (element, index) with the level bound to the
-            # array index.
-            def builder(n: int):
-                return lambda i: F.struct(
-                    F.lit(n).alias("n_words"),
-                    value_builder(tcol, i, n),
-                )
-
-            parts = []
-            for n in levels:
-                idx = F.sequence(
-                    F.lit(0), F.greatest(F.size(tcol) - F.lit(n), F.lit(0))
-                )
-                parts.append(F.transform(idx, builder(n)))
-            return F.concat(*parts)
-
-        hgrams = toks.select(
+    hgrams = toks.select(
+        F.col(id_col),
+        F.explode(
+            level_structs(
+                F.col("__toks"),
+                lambda t, i, n: F.xxhash64(F.slice(t, i + 1, n)).alias(
+                    "__ph"
+                ),
+            )
+        ).alias("g"),
+    ).select(
+        id_col,
+        F.col("g.n_words").alias("n_words"),
+        F.col("g.__ph").alias("__ph"),
+    )
+    # Consumed exactly once as the pass-2 broadcast build side —
+    # left lazy (optimization r14 batch 3): pass 1 runs inside the
+    # one job as the BroadcastExchange build, not a separate
+    # blocking checkpoint job.
+    hsurv = (
+        hgrams.groupBy("n_words", "__ph", F.col(id_col))
+        .agg(F.count(F.lit(1)).alias("__occ"))
+        .groupBy("n_words", "__ph")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .filter(F.col("n_docs") >= min_docs)
+        .select("n_words", "__ph")
+    )
+    grams = (
+        toks.select(
             F.col(id_col),
             F.explode(
                 level_structs(
                     F.col("__toks"),
-                    lambda t, i, n: F.xxhash64(F.slice(t, i + 1, n)).alias(
-                        "__ph"
-                    ),
+                    lambda t, i, n: F.slice(t, i + 1, n).alias("__arr"),
                 )
             ).alias("g"),
-        ).select(
+        )
+        .select(
             id_col,
             F.col("g.n_words").alias("n_words"),
-            F.col("g.__ph").alias("__ph"),
+            F.xxhash64(F.col("g.__arr")).alias("__ph"),
+            F.col("g.__arr").alias("__arr"),
         )
-        # Consumed exactly once as the pass-2 broadcast build side —
-        # left lazy (optimization r14 batch 3): pass 1 runs inside the
-        # one job as the BroadcastExchange build, not a separate
-        # blocking checkpoint job.
-        hsurv = (
-            hgrams.groupBy("n_words", "__ph", F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("__occ"))
-            .groupBy("n_words", "__ph")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") >= min_docs)
-            .select("n_words", "__ph")
+        .join(F.broadcast(hsurv), ["n_words", "__ph"], "left_semi")
+        .select(
+            id_col,
+            "n_words",
+            F.array_join(F.col("__arr"), " ").alias("passage"),
         )
-        grams = (
-            toks.select(
-                F.col(id_col),
-                F.explode(
-                    level_structs(
-                        F.col("__toks"),
-                        lambda t, i, n: F.slice(t, i + 1, n).alias("__arr"),
-                    )
-                ).alias("g"),
-            )
-            .select(
-                id_col,
-                F.col("g.n_words").alias("n_words"),
-                F.xxhash64(F.col("g.__arr")).alias("__ph"),
-                F.col("g.__arr").alias("__arr"),
-            )
-            .join(F.broadcast(hsurv), ["n_words", "__ph"], "left_semi")
-            .select(
-                id_col,
-                "n_words",
-                F.array_join(F.col("__arr"), " ").alias("passage"),
-            )
+    )
+    # Two-stage aggregate (optimization r14): see repeated_passages —
+    # avoids the Expand that doubles the gram stream.
+    surv = (
+        grams.filter(F.length("passage") > 0)
+        .groupBy("n_words", "passage", F.col(id_col))
+        .agg(F.count(F.lit(1)).alias("__occ"))
+        .groupBy("n_words", "passage")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("__occ").alias("n_occurrences"),
+            F.min(id_col).alias("first_doc_id"),
         )
-        # Two-stage aggregate (optimization r14): see repeated_passages —
-        # avoids the Expand that doubles the gram stream.
-        surv = (
-            grams.filter(F.length("passage") > 0)
-            .groupBy("n_words", "passage", F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("__occ"))
-            .groupBy("n_words", "passage")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("__occ").alias("n_occurrences"),
-                F.min(id_col).alias("first_doc_id"),
-            )
-            .filter(F.col("n_docs") >= min_docs)
-        )
+        .filter(F.col("n_docs") >= min_docs)
+    )
     # The survivor set (min_docs-cut, orders of magnitude smaller than
     # the gram stream) is referenced once per level as output and once
     # per adjacent pair as suppression build side — materialize it so
@@ -1213,19 +1183,11 @@ def repeated_passages_maximal(
         # emitted gram has exactly L words — no whole-short-doc
         # emissions), one partial-agg groupBy, bounded localCheckpoint.
         # Optimization r14: the rounds run off the materialized token
-        # table (the via_hash path, which has none, builds it here
-        # once) — the old form re-ran the regexp split per round for
+        # table — the old form re-ran the regexp split per round for
         # the length filter, the frontier explode AND the extension
         # explode; and the frontier semi-join now matches on slice
         # HASHES (no string build — collisions only widen the
         # frontier, which the exact extension recount absorbs).
-        if via_hash:
-            src, _ = _spread(df)
-            toks = src.select(
-                F.col(id_col),
-                F.split(normalized_text(text_col), r"\s+").alias("__toks"),
-            ).localCheckpoint(eager=True)
-
         def slice_grams(n: int, as_hash: bool) -> Column:
             t = F.col("__toks")
             idx = F.sequence(

@@ -19,10 +19,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-
-
 def count_shuffles(df: DataFrame) -> int:
     """Number of Exchange (shuffle) operators in the physical plan.
     AQE may later coalesce them, but the count is the design property.

@@ -14,6 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """min(16g, 60% of physical RAM), in MiB, so the default heap fits
+    the host. 16g where ``os.sysconf`` can't report physical memory."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, int(phys * 0.6) >> 20)}m"
+
+
 # Defaults chosen for the local[32]/128GiB test harness but expressed as
 # ratios that hold on a real cluster: shuffle partitions ~= 2-4x cores is
 # a starting point; AQE coalesces the excess at runtime, so oversizing is
@@ -25,9 +36,11 @@ _DEFAULTS = {
     # bench run died in notEnoughMemoryToBuildAndBroadcastTableError;
     # SCALING.md finding #3). Only effective when this process launches
     # the JVM (local mode — exactly where it's needed); on a real
-    # cluster the externally configured session wins. Override via
-    # extra_conf or SPARK_GRAFT_DRIVER_MEM.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # cluster the externally configured session wins. Capped by host
+    # RAM (_default_driver_memory). Override via extra_conf or
+    # SPARK_GRAFT_DRIVER_MEM.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or _default_driver_memory(),
     # Runtime re-planning: coalesce small shuffle partitions, split skewed
     # ones, convert to broadcast joins when runtime stats allow.
     "spark.sql.adaptive.enabled": "true",

@@ -5,6 +5,8 @@ relational path."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as e
 from hdinsight_pyspark_cntk_integration_spark import plans as P
 from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
@@ -184,6 +186,8 @@ def test_tfidf_single_explode_bounded_shuffles(spark, sf_dir):
     # runtime: the two Generate branches must collapse into one
     # executed exchange via AQE exchange reuse (collect() executes
     # THIS df's QueryExecution, so its final adaptive plan is readable)
+    if spark.conf.get("spark.sql.adaptive.enabled", "false").lower() != "true":
+        pytest.skip("exchange reuse across the Generate branches needs AQE")
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed

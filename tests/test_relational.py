@@ -832,12 +832,19 @@ def test_interpolate_segments_duplicate_ts_takes_max(spark):
 
 
 def test_interpolate_at_production_wrapper_smoke(spark, sf_dir):
-    """interpolate_at was registry-demoted round 14 (the oracle-green
-    gate form is interpolate_provable); this pin keeps the production
-    cogrouped-pandas wrapper exercised end-to-end at fixture scale."""
-    import __spark_entry__ as entry
-
-    df = entry.q_interpolate_at(spark, sf_dir)
+    """The production cogrouped-pandas interpolated point lookup end-to-
+    end at fixture scale: each event's value re-estimated 30 minutes
+    later. np.interp's slope evaluation order is not reproducible as a
+    SQL operation tree, so it is not a registry query; the oracle-green
+    gate form is interpolate_provable (integer segment arithmetic)."""
+    ev = load_table(spark, sf_dir, "events")
+    queries = ev.select(
+        "user_id", (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("qts")
+    )
+    df = rel.interpolate_at(
+        ev, queries, key_col="user_id", obs_ts_col="ts",
+        value_col="value", query_ts_col="qts",
+    )
     rows = df.limit(50).collect()
     assert len(rows) > 0
     assert {"user_id", "qts", "value"} <= set(df.columns)

@@ -774,13 +774,12 @@ def test_ndcg_all_zero_rel_query_dropped(spark):
     assert r["mean_ndcg_micro"] == 1_000_000
 
 
-def test_kmeans_clusters_production_wrapper_smoke(spark, sf_dir):
-    """kmeans_clusters was registry-demoted round 14 (the oracle-green
-    gate form is kmeans_provable); this pin keeps the production float
-    Lloyd wrapper exercised end-to-end at fixture scale."""
-    import __spark_entry__ as entry
-
-    df = entry.q_kmeans_clusters(spark, sf_dir)
+def test_kmeans_clusters_production_wrapper_smoke(emb):
+    """The production float Lloyd path (k=8, 3 sweeps) end-to-end at
+    fixture scale. Its centroid means are float sums in partition
+    order, so it is not a registry query; the oracle-green gate form is
+    kmeans_provable (micro-quantized integer Lloyd)."""
+    df = sim.kmeans_summary(emb, k=8, iters=3)
     rows = df.collect()
     assert 0 < len(rows) <= 8
     assert sum(r["n"] for r in rows) > 0

@@ -28,7 +28,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from hdinsight_pyspark_cntk_integration_spark import get_spark
 from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
@@ -275,19 +276,10 @@ def _stage_totals(spark) -> tuple[int, int]:
 
 def run(base: str, fixture: str, factor: int, out_json: str,
         target_set: str = "dedup", only: str | None = None) -> None:
-    # Cluster-realistic heap: the engine's local sessions never set
-    # spark.driver.memory, so local mode runs on the 1g JVM default —
-    # fine at sf0.1, but the 10x corpus OOMs the gram explode there
-    # (measured: repeated_passages_maximal, 32 tasks, Java heap space).
-    # A production executor gets 8-32g for its handful of task slots;
-    # give the one local JVM the equivalent so the rehearsal measures
-    # the ALGORITHM's scaling, not an artificial 1g ceiling.
-    spark = get_spark(
-        app_name="scale-rehearsal",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        },
-    )
+    # get_spark's host-sized driver heap (not the 1g JVM default, which
+    # OOMs the 10x corpus's gram explode) lets the rehearsal measure
+    # the ALGORITHM's scaling, not an artificial heap ceiling.
+    spark = get_spark(app_name="scale-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -354,7 +346,7 @@ def run(base: str, fixture: str, factor: int, out_json: str,
 
 if __name__ == "__main__":
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    fixture = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/fixtures/x10"
+    fixture = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "fixtures", "x10")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     out_json = sys.argv[4] if len(sys.argv) > 4 else "SCALING_DATA.json"
     target_set = sys.argv[5] if len(sys.argv) > 5 else "dedup"
