@@ -65,6 +65,14 @@ def _dec_sum(col: F.Column, scale: int = 4) -> F.Column:
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
+def _sql_dec_sum(x: str, scale: int) -> str:
+    """_dec_sum as DuckDB SQL. DuckDB's direct DECIMAL(38,x)->DOUBLE
+    cast is off by 1 ulp on 13+ digit values (surfaced by the sf0.1
+    scale smoke); the string roundtrip is correctly rounded and
+    matches Spark's BigDecimal cast."""
+    return f"CAST(CAST(SUM(CAST({x} AS DECIMAL(18,{scale}))) AS VARCHAR) AS DOUBLE)"
+
+
 def _revenue() -> F.Column:
     """SUM(dec(l_extendedprice) * dec(1 - l_discount)) as double — exact."""
     return F.sum(
@@ -74,11 +82,9 @@ def _revenue() -> F.Column:
 
 
 _SQL_REVENUE = (
-    # DuckDB's direct DECIMAL(38,x)->DOUBLE cast is off by 1 ulp on 13+
-    # digit values (surfaced by the sf0.1 scale smoke); the string
-    # roundtrip is correctly rounded and matches Spark's BigDecimal cast.
-    # STRING (not VARCHAR) because this fragment also runs as Spark SQL
-    # in q_sql_yearly_revenue; both engines accept STRING.
+    # _revenue with _sql_dec_sum's string roundtrip. STRING (not
+    # VARCHAR) because this fragment also runs as Spark SQL in
+    # q_sql_yearly_revenue; both engines accept STRING.
     "CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))"
     " * CAST(1.0 - l_discount AS DECIMAL(18,4))) AS STRING) AS DOUBLE)"
 )
@@ -96,11 +102,21 @@ def _stub_weights_sql() -> list[str]:
     return rows
 
 
+# Knuth multiplicative mix modulo a prime: _mix and _mix_sql below.
+_MIX_P = 1_000_003
+_MIX_A = 2654435761
+
+
 def _mix(c: F.Column) -> F.Column:
     """The engine-wide Knuth-mix fixture mixer: deterministic,
-    SQL-replayable pseudo-randomness ((c mod p) * 2654435761 mod p,
-    p = 1_000_003)."""
-    return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
+    SQL-replayable pseudo-randomness ((c mod p) * a mod p)."""
+    return F.pmod(F.pmod(c, F.lit(_MIX_P)) * F.lit(_MIX_A), F.lit(_MIX_P))
+
+
+def _mix_sql(x: str) -> str:
+    """_mix as SQL over the expression ``x`` (non-negative inputs, where
+    % equals pmod)."""
+    return f"(({x} % {_MIX_P}) * {_MIX_A}) % {_MIX_P}"
 
 
 # --------------------------------------------------------------------------
@@ -343,6 +359,14 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     view by the same user at-or-before its timestamp. Single-shuffle
     union+last-value implementation (operators.relational.asof_join) —
     no range-join explosion."""
+    joined = _purchase_view_asof(spark, sf_dir)
+    return joined.filter(F.col("view_event_id").isNotNull())
+
+
+def _purchase_view_asof(spark: SparkSession, sf_dir: str, **opts) -> DataFrame:
+    """Each purchase event as-of joined (operators.relational.asof_join,
+    ``opts`` pass direction/tolerance) to the same user's views, one
+    view row per (user, ts) keeping the max event_id."""
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -352,15 +376,15 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.col("ts").alias("view_ts"))
         .agg(F.max("event_id").alias("view_event_id"))
     )
-    joined = rel.asof_join(
+    return rel.asof_join(
         purchases,
         views,
         keys=["user_id"],
         left_ts="ts",
         right_ts="view_ts",
         right_value_cols=["view_event_id", "view_ts"],
+        **opts,
     )
-    return joined.filter(F.col("view_event_id").isNotNull())
 
 
 def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,24 +393,8 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEXT view by the same user, nulled when it is more than two hours
     later — pandas merge_asof semantics, one shuffle, no range-join
     explosion. Every purchase row is preserved."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", F.col("ts").alias("view_ts"))
-        .agg(F.max("event_id").alias("view_event_id"))
-    )
-    joined = rel.asof_join(
-        purchases,
-        views,
-        keys=["user_id"],
-        left_ts="ts",
-        right_ts="view_ts",
-        right_value_cols=["view_event_id", "view_ts"],
-        direction="forward",
-        tolerance_seconds=7200,
+    joined = _purchase_view_asof(
+        spark, sf_dir, direction="forward", tolerance_seconds=7200
     )
     return joined.select(
         "event_id",
@@ -892,19 +900,7 @@ def q_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree cut misses; converges in 2 rounds on this fixture (pinned in
     pytest). Oracle unrolls 4 peeling rounds as CTEs — extra rounds are
     no-ops past the fixpoint, so the unroll is exact."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("wt"))
-        .filter(F.col("wt") >= 160)
-        .select("src", "dst")
-    )
+    edges = _trade_edges_at_least(spark, sf_dir, 160)
     return gr.k_core(edges, k=5)
 
 
@@ -1063,19 +1059,7 @@ def q_communities_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the rounds as ROW_NUMBER-argmax CTEs (the sixth
     oracle-green iterative algorithm beside pagerank/bfs/components/
     triangles/k-core)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("wt"))
-        .filter(F.col("wt") >= 120)
-        .select("src", "dst")
-    )
+    edges = _trade_edges_at_least(spark, sf_dir, 120)
     return gr.label_propagation(edges, rounds=2)
 
 
@@ -1099,25 +1083,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the same sorted-array middle-element expression (never DuckDB's
     native median, whose interpolation order could differ in the last
     ulp)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    monthly = (
-        orders.join(
-            cust.select("c_custkey", "c_nationkey"),
-            orders["o_custkey"] == F.col("c_custkey"),
-        )
-        .groupBy(
-            F.col("c_nationkey").alias("nation"),
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
-            .cast("long")
-            .alias("x"),
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("y")
-        )
-    )
+    monthly = _monthly_nation_revenue(spark, sf_dir, t="x", v="y")
     fit = st.theil_sen(monthly, "nation", "x", "y", max_points=256)
     return fit.select(
         "nation", "n_points", "n_pairs",
@@ -1233,11 +1199,13 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.textrank_keywords(docs, window=2, min_cooccur=3, iters=3, top_k=20)
 
 
-def _monthly_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _monthly_nation_revenue(
+    spark: SparkSession, sf_dir: str, t: str = "t", v: str = "v"
+) -> DataFrame:
     """Monthly customer-nation revenue points (nation, t, v): t = months
     since year 0, v = exact integer cents — the bounded pre-aggregated
-    series the time-series operators' contracts demand (same rollup the
-    theil_sen gate uses)."""
+    series the time-series operators' contracts demand (theil_sen names
+    the columns x, y)."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -1249,12 +1217,12 @@ def _monthly_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nation"),
             (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
             .cast("long")
-            .alias("t"),
+            .alias(t),
         )
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
-            .alias("v")
+            .alias(v)
         )
     )
 
@@ -1343,21 +1311,48 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gr.adamic_adar(_strong_trade_edges(spark, sf_dir))
 
 
+def _trade_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem ⋈ orders ⋈ customer ⋈ supplier: every lineitem with its
+    supplier nation (s_nationkey) and customer nation (c_nationkey) —
+    the rows every nation trade graph is rolled up from."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    return (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .join(customer, orders["o_custkey"] == customer["c_custkey"])
+        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
+    )
+
+
+def _nation_trade_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed nation trade graph (src = supplier nation, dst =
+    customer nation, wt = lineitem count)."""
+    return (
+        _trade_lines(spark, sf_dir)
+        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+        .agg(F.count(F.lit(1)).alias("wt"))
+    )
+
+
+def _trade_edges_at_least(spark: SparkSession, sf_dir: str, min_wt: int) -> DataFrame:
+    """The (src, dst) nation trade pairs with at least ``min_wt``
+    lineitems — an absolute weight cut."""
+    return (
+        _nation_trade_weights(spark, sf_dir)
+        .filter(F.col("wt") >= min_wt)
+        .select("src", "dst")
+    )
+
+
 def _strong_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-free strong nation trade graph: directed (supplier nation →
     customer nation) pairs whose weight is >= 1.1× the mean pair weight,
     compared as exact cross-multiplied integers — keeps meaningful
     structure at every SF where an absolute cut completes the graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
     weighted = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("long").alias("wt"))
+        _nation_trade_weights(spark, sf_dir)
         # referenced twice (totals + edge filter): materialize the
         # bounded 625-row rollup so the 4-table join runs once
         .localCheckpoint(eager=True)
@@ -1480,6 +1475,18 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _same_lang_adjacent_pairs(docs: DataFrame) -> DataFrame:
+    """Deterministic duplicate-pair graph: (id_a, id_b = id_a + 1) for
+    adjacent doc ids in the same language, which form real chains."""
+    a = docs.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("la"))
+    b = docs.select(
+        (F.col("doc_id") - 1).alias("id_a"),
+        F.col("doc_id").alias("id_b"),
+        F.col("lang").alias("lb"),
+    )
+    return a.join(b, "id_a").filter(F.col("la") == F.col("lb")).select("id_a", "id_b")
+
+
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster canonicalization (operators.dedup.
     canonical_docs): transitive closure over the deterministic
@@ -1488,13 +1495,7 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id tie-break; singletons self-canonical. The keep/drop decision
     layer over connected components, all-integer."""
     docs = load_table(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("la"))
-    b = docs.select(
-        (F.col("doc_id") - 1).alias("id_a"),
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lb"),
-    )
-    pairs = a.join(b, "id_a").filter(F.col("la") == F.col("lb")).select("id_a", "id_b")
+    pairs = _same_lang_adjacent_pairs(docs)
     return dd.canonical_docs(docs, pairs)
 
 
@@ -1659,14 +1660,8 @@ def q_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     month count is calendar-bounded, hence scale-free). The NINTH
     oracle-provable iterative algorithm: the oracle closes paths of
     <= 3 edges recursively and takes the min."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
     edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
+        _trade_lines(spark, sf_dir)
         .groupBy(
             F.col("s_nationkey").cast("long").alias("src"),
             F.col("c_nationkey").cast("long").alias("dst"),
@@ -1730,13 +1725,11 @@ def q_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.grouped_ols(part, "p_brand", "p_size", "p_retailprice")
 
 
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall monotone-trend test per order priority
-    (operators.stats.mann_kendall): is monthly revenue trending, and
-    with what Z? Pair counting over the (priority, month) AGGREGATE;
-    S and tie-corrected 18·Var are exact integers."""
+def _monthly_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Monthly revenue series per order priority (priority, m = months
+    since year 0, rev = exact integer cents)."""
     orders = load_table(spark, sf_dir, "orders")
-    series = orders.groupBy(
+    return orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
         .cast("long").alias("m"),
@@ -1744,6 +1737,14 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long").alias("rev")
     )
+
+
+def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall monotone-trend test per order priority
+    (operators.stats.mann_kendall): is monthly revenue trending, and
+    with what Z? Pair counting over the (priority, month) AGGREGATE;
+    S and tie-corrected 18·Var are exact integers."""
+    series = _monthly_priority_revenue(spark, sf_dir)
     return st.mann_kendall(series, "priority", "m", "rev")
 
 
@@ -2117,19 +2118,25 @@ def q_embedding_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's centerpiece, end to end (M1+M2+R7): batch model
-    scoring via mapInPandas (model loaded once per task, Arrow-batched
-    matrix inference) then the distributed confusion-count query
-    (reference README.md:162-184, 249)."""
+def _scored_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table scored by the linear stub model
+    (operators.scoring.score): label + predicted_label per row."""
     emb = load_table(spark, sf_dir, "embeddings")
-    scored = sc.score(
+    return sc.score(
         emb,
         sc.make_linear_stub_loader(_EMB_DIM, _N_CLASSES),
         input_col="embedding",
         pass_through=["label"],
         repartition="auto",
     )
+
+
+def q_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's centerpiece, end to end (M1+M2+R7): batch model
+    scoring via mapInPandas (model loaded once per task, Arrow-batched
+    matrix inference) then the distributed confusion-count query
+    (reference README.md:162-184, 249)."""
+    scored = _scored_embeddings(spark, sf_dir)
     return (
         scored.groupBy("label", "predicted_label")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -2139,14 +2146,7 @@ def q_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_score_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scoring accuracy in the reference's exact shape (README.md:204-211):
     correct/total/percent over the scored frame."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    scored = sc.score(
-        emb,
-        sc.make_linear_stub_loader(_EMB_DIM, _N_CLASSES),
-        input_col="embedding",
-        pass_through=["label"],
-        repartition="auto",
-    )
+    scored = _scored_embeddings(spark, sf_dir)
     return rel.accuracy(scored, "label", "predicted_label")
 
 
@@ -3126,6 +3126,28 @@ def q_higher_order_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top10_recall_ok(
+    emb: DataFrame, queries: DataFrame, approx: DataFrame, min_hits: int
+) -> DataFrame:
+    """Per query: does the approximate top-10 ``approx`` share at least
+    ``min_hits`` vec_ids with the exact cosine top-10 (recall_ok)?"""
+    exact = sim.cosine_topk(emb, queries, k=10)
+    hits = (
+        approx.select("query_id", "vec_id")
+        .join(exact.select("query_id", "vec_id"), ["query_id", "vec_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    return (
+        queries.select("query_id")
+        .join(hits, "query_id", "left")
+        .select(
+            "query_id",
+            (F.coalesce(F.col("n_hits"), F.lit(0)) >= min_hits).alias("recall_ok"),
+        )
+    )
+
+
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors, checked by per-query recall
     against the oracle-green exact twin (q_similarity_topk): deterministic
@@ -3140,21 +3162,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = sim.self_queries(emb, [0, 1, 2])
     centroids = sim.grid_centroids(emb, num=8)
     approx = sim.ivf_topk(emb, queries, centroids, k=10, nprobe=4)
-    exact = sim.cosine_topk(emb, queries, k=10)
-    hits = (
-        approx.select("query_id", "vec_id")
-        .join(exact.select("query_id", "vec_id"), ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        queries.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) >= 3).alias("recall_ok"),
-        )
-    )
+    return _top10_recall_ok(emb, queries, approx, min_hits=3)
 
 
 def q_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3377,13 +3385,7 @@ def q_dedup_transitive(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator that makes near-dedup transitively correct (A~B~C collapses
     to one cluster even when A~C was never a candidate pair)."""
     docs = load_table(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("la"))
-    b = docs.select(
-        (F.col("doc_id") - 1).alias("id_a"),
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lb"),
-    )
-    pairs = a.join(b, "id_a").filter(F.col("la") == F.col("lb")).select("id_a", "id_b")
+    pairs = _same_lang_adjacent_pairs(docs)
     return dd.connected_components(pairs)
 
 
@@ -3634,21 +3636,7 @@ def q_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = sim.self_queries(emb, [0, 1, 2])
     approx = sim.quantized_rerank_topk(emb, queries, k=10, overfetch=4)
-    exact = sim.cosine_topk(emb, queries, k=10)
-    hits = (
-        approx.select("query_id", "vec_id")
-        .join(exact.select("query_id", "vec_id"), ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        queries.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) >= 8).alias("recall_ok"),
-        )
-    )
+    return _top10_recall_ok(emb, queries, approx, min_hits=8)
 
 
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3880,8 +3868,11 @@ def q_wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pl.bpe_merge_table(spark, merges)
 
 
-def _bpe_vocab_oracle(num_merges: int) -> str:
-    """Generate the unrolled-round DuckDB oracle for q_bpe_vocab."""
+def _merge_vocab_oracle(num_merges: int, round_ctes: Callable[[int], str]) -> str:
+    """Unrolled-round DuckDB oracle shared by the merge-table trainers:
+    w0 holds each distinct corpus word as space-padded symbols; round k
+    adds ``round_ctes(k)`` (ending in b{k}, the chosen pair) and w{k},
+    the words with that pair merged; one SELECT per round."""
     parts = [
         r"""WITH w0 AS MATERIALIZED (
   SELECT ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS w,
@@ -3895,12 +3886,8 @@ def _bpe_vocab_oracle(num_merges: int) -> str:
     ]
     for k in range(1, num_merges + 1):
         parts.append(
-            f""", p{k} AS MATERIALIZED (
-  SELECT pr['a'] AS a, pr['b'] AS b, SUM(cnt) AS c FROM (
-    SELECT cnt, unnest(list_transform(range(len(l) - 1), i -> {{'a': l[i+1], 'b': l[i+2]}})) AS pr
-    FROM (SELECT string_split(trim(w), '  ') AS l, cnt FROM w{k - 1}) WHERE len(l) >= 2
-  ) GROUP BY a, b
-), b{k} AS (SELECT a, b FROM p{k} ORDER BY c DESC, a, b LIMIT 1
+            round_ctes(k)
+            + f"""
 ), w{k} AS MATERIALIZED (
   SELECT replace(w, ' ' || (SELECT a FROM b{k}) || '  ' || (SELECT b FROM b{k}) || ' ',
                  ' ' || (SELECT a FROM b{k}) || (SELECT b FROM b{k}) || ' ') AS w, cnt
@@ -3912,52 +3899,49 @@ def _bpe_vocab_oracle(num_merges: int) -> str:
         for k in range(1, num_merges + 1)
     ]
     return "".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
+
+
+def _merge_pairs_cte(k: int, having: str = "") -> str:
+    """Round k's adjacent-symbol pair counts p{k} over w{k-1}."""
+    return f""", p{k} AS MATERIALIZED (
+  SELECT pr['a'] AS a, pr['b'] AS b, SUM(cnt) AS c FROM (
+    SELECT cnt, unnest(list_transform(range(len(l) - 1), i -> {{'a': l[i+1], 'b': l[i+2]}})) AS pr
+    FROM (SELECT string_split(trim(w), '  ') AS l, cnt FROM w{k - 1}) WHERE len(l) >= 2
+  ) GROUP BY a, b{having}"""
+
+
+def _bpe_vocab_oracle(num_merges: int) -> str:
+    """Generate the unrolled-round DuckDB oracle for q_bpe_vocab: the
+    most frequent pair wins each round."""
+    return _merge_vocab_oracle(
+        num_merges,
+        lambda k: _merge_pairs_cte(k)
+        + f"""
+), b{k} AS (SELECT a, b FROM p{k} ORDER BY c DESC, a, b LIMIT 1""",
+    )
 
 
 def _wordpiece_vocab_oracle(num_merges: int, min_pair_count: int) -> str:
     """Unrolled-round DuckDB oracle for q_wordpiece_vocab: the
     _bpe_vocab_oracle round shape plus a per-round symbol-count CTE
     and the likelihood-score argmax (HUGEINT // = Spark DECIMAL DIV)."""
-    parts = [
-        r"""WITH w0 AS MATERIALIZED (
-  SELECT ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS w,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM (
-    SELECT unnest(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')) AS word
-    FROM documents WHERE text IS NOT NULL
-  ) WHERE length(word) > 0
-  GROUP BY word
-)"""
-    ]
-    for k in range(1, num_merges + 1):
-        parts.append(
-            f""", s{k} AS MATERIALIZED (
+    return _merge_vocab_oracle(
+        num_merges,
+        lambda k: f""", s{k} AS MATERIALIZED (
   SELECT s, SUM(cnt) AS sc FROM (
     SELECT unnest(string_split(trim(w), '  ')) AS s, cnt FROM w{k - 1}
   ) GROUP BY s
-), p{k} AS MATERIALIZED (
-  SELECT pr['a'] AS a, pr['b'] AS b, SUM(cnt) AS c FROM (
-    SELECT cnt, unnest(list_transform(range(len(l) - 1), i -> {{'a': l[i+1], 'b': l[i+2]}})) AS pr
-    FROM (SELECT string_split(trim(w), '  ') AS l, cnt FROM w{k - 1}) WHERE len(l) >= 2
-  ) GROUP BY a, b HAVING SUM(cnt) >= {min_pair_count}
+)"""
+        + _merge_pairs_cte(k, f" HAVING SUM(cnt) >= {min_pair_count}")
+        + f"""
 ), b{k} AS (
   SELECT p.a, p.b FROM p{k} p
   JOIN s{k} sa ON sa.s = p.a
   JOIN s{k} sb ON sb.s = p.b
   ORDER BY (CAST(p.c AS HUGEINT) * 1000000000000
             // (CAST(sa.sc AS HUGEINT) * sb.sc)) DESC, p.c DESC, p.a, p.b
-  LIMIT 1
-), w{k} AS MATERIALIZED (
-  SELECT replace(w, ' ' || (SELECT a FROM b{k}) || '  ' || (SELECT b FROM b{k}) || ' ',
-                 ' ' || (SELECT a FROM b{k}) || (SELECT b FROM b{k}) || ' ') AS w, cnt
-  FROM w{k - 1}
-)"""
-        )
-    selects = [
-        f"SELECT CAST({k} AS INTEGER) AS merge_rank, a AS lhs, b AS rhs, a || b AS merged FROM b{k}"
-        for k in range(1, num_merges + 1)
-    ]
-    return "".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
+  LIMIT 1""",
+    )
 
 
 def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3967,19 +3951,10 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative fixpoint hash-matches the oracle's unrolled CTEs — an
     oracle-GREEN iterative algorithm (connected components and k-means
     are rows-only; this one is provable)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("weight"))
+        _nation_trade_weights(spark, sf_dir)
+        .withColumnRenamed("wt", "weight")
         # materialize the derived edge list once: without this, every
         # PageRank sweep's lineage replays the 4-way fact join (measured
         # 25 s -> ~3 s at sf0.01). localCheckpoint, not cache: it
@@ -3999,19 +3974,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps wedge fan-out at O(sqrt m) per node, so the wedge join never
     pays hub-degree-squared. The count is orientation-invariant — the
     oracle's id-ordered brute-force 3-way join must agree exactly."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("wt"))
-        .filter(F.col("wt") >= 100)
-        .select("src", "dst")
-    )
+    edges = _trade_edges_at_least(spark, sf_dir, 100)
     return gr.triangle_count(edges)
 
 
@@ -5118,6 +5081,19 @@ def q_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Runs unchanged on both engines: the query and its own oracle.
+_MODERN_SQL_SUGAR = """
+    SELECT l_returnflag,
+           l_linestatus,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS revenue,
+           revenue / COUNT(*) AS avg_revenue,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM lineitem
+    GROUP BY ALL
+"""
+
+
 def q_modern_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modern SQL surface sugar in one query: GROUP BY ALL (grouping
     keys inferred from the non-aggregate select list) and LATERAL
@@ -5125,18 +5101,7 @@ def q_modern_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     `margin` built from `revenue` without a subquery). Both supported
     by Spark 3.4+/4 and DuckDB with identical semantics."""
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               l_linestatus,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                 AS revenue,
-               revenue / COUNT(*) AS avg_revenue,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM lineitem
-        GROUP BY ALL
-        """
-    )
+    return spark.sql(_MODERN_SQL_SUGAR)
 
 
 # --------------------------------------------------------------------------
@@ -5680,13 +5645,14 @@ def q_self_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.self_consistency(samples)
 
 
-def q_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-EM Dawid-Skene consensus labeling (operators.stats.
-    dawid_skene_hard, 2 rounds): the fleiss_kappa rating fixture with
-    RATER-DEPENDENT quality (rater r is right with probability
-    (4+r)/10, so rater 0 is noise and rater 4 is strong) — accuracy
-    weighting should separate them where majority vote can't. Output
-    is the per-rater accuracy report, all exact integers."""
+def _kappa_ratings(
+    spark: SparkSession, sf_dir: str, agrees: Callable[[F.Column], F.Column]
+) -> DataFrame:
+    """The doc × rater labeling fixture (item_id, rater 0..4, label):
+    every document rated by 5 synthetic raters. A rater gives the
+    Knuth-mixed doc category (0..3) where ``agrees(s)`` holds for its
+    per-(doc, rater) mix ``s``, and a rater-specific alternative
+    otherwise."""
     docs = load_table(spark, sf_dir, "documents")
 
     rated = docs.select(
@@ -5696,13 +5662,22 @@ def q_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = F.pmod(_mix(F.col("item_id")), F.lit(4))
     s = _mix(F.col("item_id") * 5 + F.col("rater"))
     alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
+    return rated.select(
         "item_id",
         "rater",
-        F.when(F.pmod(s, F.lit(10)) < F.col("rater") + 4, base)
-        .otherwise(alt)
-        .cast("long")
-        .alias("label"),
+        F.when(agrees(s), base).otherwise(alt).cast("long").alias("label"),
+    )
+
+
+def q_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-EM Dawid-Skene consensus labeling (operators.stats.
+    dawid_skene_hard, 2 rounds): the fleiss_kappa rating fixture with
+    RATER-DEPENDENT quality (rater r is right with probability
+    (4+r)/10, so rater 0 is noise and rater 4 is strong) — accuracy
+    weighting should separate them where majority vote can't. Output
+    is the per-rater accuracy report, all exact integers."""
+    rated = _kappa_ratings(
+        spark, sf_dir, lambda s: F.pmod(s, F.lit(10)) < F.col("rater") + 4
     )
     return st.dawid_skene_hard(rated, iters=2)
 
@@ -5886,20 +5861,8 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Knuth-mixed doc property with 1/4 per-rater disagreement noise —
     the redundant-judgment QA gate a labeling pipeline runs. Exact
     integer numerator/denominator + truncated kappa_micro."""
-    docs = load_table(spark, sf_dir, "documents")
-
-    rated = docs.select(
-        F.col("doc_id").alias("item_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
-    )
-    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
-    s = _mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        "item_id",
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "category"
-        ),
+    rated = _kappa_ratings(spark, sf_dir, lambda s: F.pmod(s, F.lit(4)) < 3).select(
+        "item_id", F.col("label").alias("category")
     )
     return st.fleiss_kappa(rated)
 
@@ -5919,6 +5882,37 @@ def q_bleu_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.bleu_clipped_precision(docs, gens, n_max=2)
 
 
+def _krippendorff_ratings(
+    spark: SparkSession, sf_dir: str, likert: bool = True, ragged: bool = True
+) -> DataFrame:
+    """Synthetic ratings (item_id, rater, label) of every document by 5
+    raters: the Knuth-mixed doc category with 1/4 per-rater
+    disagreement noise, on a 1..5 ordered scale (``likert``) or as 4
+    nominal categories 0..3. ``ragged`` drops (doc, rater) pairs by a
+    Knuth-mixed participation coin, so items carry unequal numbers of
+    ratings."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    raters = spark.range(5).select(F.col("id").alias("rater"))
+    rated = docs.crossJoin(raters)
+    if ragged:
+        rated = rated.filter(
+            F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
+            < 6 + F.pmod(F.col("rater"), F.lit(3))
+        )
+    n_cat = 5 if likert else 4
+    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
+    base = F.pmod(_mix(F.col("doc_id")), F.lit(n_cat))
+    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(n_cat))
+    label = F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt)
+    if likert:
+        label = F.lit(1) + label
+    return rated.select(
+        F.col("doc_id").alias("item_id"),
+        F.col("rater"),
+        label.cast("long").alias("label"),
+    )
+
+
 def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha over RAGGED synthetic ratings (operators.
     stats.krippendorff_alpha — the missing-data agreement statistic
@@ -5927,23 +5921,7 @@ def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry 0..5 ratings and the single-rating exclusion is exercised),
     labels from the fleiss fixture scheme. Per-item micro truncation +
     one final DIV, replayed exactly by the oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
-    )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(4))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "label"
-        ),
-    )
-    return st.krippendorff_alpha(rated)
+    return st.krippendorff_alpha(_krippendorff_ratings(spark, sf_dir, likert=False))
 
 
 def q_krippendorff_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5954,23 +5932,7 @@ def q_krippendorff_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin distance, integer-exact; the nominal form can't tell them
     apart). Per-item micro truncation + one final DIV, replayed
     exactly by the oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
-    )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("label"),
-    )
-    return st.krippendorff_ordinal(rated)
+    return st.krippendorff_ordinal(_krippendorff_ratings(spark, sf_dir))
 
 
 def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6279,6 +6241,22 @@ def q_span_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.span_f1(docs, preds)
 
 
+def _planted_hypotheses(spark: SparkSession) -> DataFrame:
+    """The 200-hypothesis battery (hyp_id, p_micro): Knuth-mix-uniform
+    micro p-values in [1, 1e6], every 5th drawn from [1, 20000] — the
+    planted true effects."""
+    mix = _mix(F.col("id"))
+    return spark.range(0, 200).select(
+        F.col("id").alias("hyp_id"),
+        F.when(
+            F.pmod(F.col("id"), F.lit(5)) == 0, F.pmod(mix, F.lit(20_000)) + 1
+        )
+        .otherwise(F.pmod(mix, F.lit(1_000_000)) + 1)
+        .cast("long")
+        .alias("p_micro"),
+    )
+
+
 def q_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg FDR step-up (operators.stats.
     benjamini_hochberg) over a BOUNDED battery of 200 synthetic
@@ -6289,16 +6267,7 @@ def q_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py); the step-up comparison is exact integer
     arithmetic. In production the p-column comes from upstream per-slice
     tests (welch_ttest / mantel_haenszel / ks_drift outputs)."""
-    mix = _mix(F.col("id"))
-    hyp = spark.range(0, 200).select(
-        F.col("id").alias("hyp_id"),
-        F.when(
-            F.pmod(F.col("id"), F.lit(5)) == 0, F.pmod(mix, F.lit(20_000)) + 1
-        )
-        .otherwise(F.pmod(mix, F.lit(1_000_000)) + 1)
-        .cast("long")
-        .alias("p_micro"),
-    )
+    hyp = _planted_hypotheses(spark)
     return st.benjamini_hochberg(hyp, "hyp_id", "p_micro", alpha_micro=50_000)
 
 
@@ -6309,20 +6278,8 @@ def q_icc_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagreement noise) — single-rating reliability, the continuous
     complement to the kappa family. Exact-integer rationals end to
     end; one truncating micro DIV."""
-    docs = load_table(spark, sf_dir, "documents")
-
-    rated = docs.select(
-        F.col("doc_id").alias("item_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
-    )
-    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
-    s = _mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        "item_id",
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "rating"
-        ),
+    rated = _kappa_ratings(spark, sf_dir, lambda s: F.pmod(s, F.lit(4)) < 3).select(
+        "item_id", F.col("label").alias("rating")
     )
     return st.icc_oneway(rated, "item_id", "rating")
 
@@ -6360,6 +6317,19 @@ def q_mcc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.mcc_binary(frame, "y", "yhat")
 
 
+def _purchase_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchase events as (user_id, event_id, cents = floor(value·100))
+    streams."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    return ev.select(
+        F.col("user_id"),
+        F.col("event_id"),
+        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+    )
+
+
 def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided CUSUM change detection (operators.stats.cusum_detect)
     per user over purchase-event cent streams ordered by event id:
@@ -6367,14 +6337,7 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion runs as cumsum − running-min — two prefix windows per
     user partition, exact BIGINT throughout; the temporal drift alarm
     next to the batch two-sample tests (ks_drift/psi_drift)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    series = ev.select(
-        F.col("user_id"),
-        F.col("event_id"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
-    )
+    series = _purchase_cents(spark, sf_dir)
     out = st.cusum_detect(
         series, "user_id", "event_id", "cents",
         target=5000, slack=500, threshold=50_000,
@@ -6525,11 +6488,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance (cents) — the variance-minimizing upgrade over the
     proportional split stratified_split uses. Per-stratum sigma floored
     to micro at birth; allocation weights exact integers."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        F.col("c_nationkey").alias("nation"),
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, F.col("c_nationkey").alias("nation"))
     out = pl.neyman_allocation(frame, "nation", "cents", n_total=1000)
     return out.select(
         F.col("stratum").alias("nation"), "n_rows", "sigma_micro", "alloc"
@@ -6715,6 +6674,16 @@ def q_feature_hashing_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.feature_hashing(docs, "doc_id", "text", dim=32, hash_family="md5")
 
 
+def _acctbal_cents(spark: SparkSession, sf_dir: str, *keys: str | F.Column) -> DataFrame:
+    """Customer account balances as exact integer cents (floored),
+    beside the grouping ``keys``: the frame the two-sample, k-sample
+    and private-release gates share."""
+    customer = load_table(spark, sf_dir, "customer")
+    return customer.select(
+        *keys, F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
+    )
+
+
 def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-Wasserstein distance (operators.stats.wasserstein_1d) between
     BUILDING and MACHINERY customers' balance-cent distributions — the
@@ -6723,11 +6692,7 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative counts x segment gaps in DECIMAL, ONE final micro DIV;
     the value-domain window is the rank_sum_test class
     (allowlisted)."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.wasserstein_1d(frame, "c_mktsegment", "cents", "BUILDING", "MACHINERY")
 
 
@@ -6811,14 +6776,7 @@ def q_cusum_two_sided(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped walks run as cumsum − clamped-running-min prefix windows
     in ONE window pass per user partition, exact BIGINT; alarm side
     reported at the first breaching step."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    series = ev.select(
-        F.col("user_id"),
-        F.col("event_id"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
-    )
+    series = _purchase_cents(spark, sf_dir)
     out = st.cusum_two_sided(
         series, "user_id", "event_id", "cents",
         target=5000, slack=500, threshold=25_000,
@@ -6968,11 +6926,7 @@ def q_dp_noisy_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     to $5,000 (C = 500000 cents) before summation so sensitivity is
     exactly C; epsilon = ln 3. Completes the DP release pair with
     dp_noisy_counts; md5 noise family for bit-for-bit oracle replay."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_nationkey",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_nationkey")
     return pl.dp_noisy_sum(
         frame, "c_nationkey", "cents", clip=500_000,
         epsilon_micro=1_098_612, seed=11, hash_family="md5",
@@ -6985,23 +6939,7 @@ def q_krippendorff_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinal gate — squared-difference distance, the numeric-scale
     member completing the alpha family. All-integer coincidence
     algebra, one micro truncation per item + one final DIV."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
-    )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("label"),
-    )
-    return st.krippendorff_interval(rated)
+    return st.krippendorff_interval(_krippendorff_ratings(spark, sf_dir))
 
 
 def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7036,11 +6974,7 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift family with ks (sup), wasserstein (L1 transport), tv
     (mass), hellinger, jsd. Fully exact: integer cumulative counts
     over the value domain, one truncating micro DIV."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.cvm_distance(
         frame, "c_mktsegment", "cents", "BUILDING", "MACHINERY"
     )
@@ -7065,11 +6999,7 @@ def q_dp_noisy_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise draws (disjoint seed tags) for bit-for-bit oracle replay;
     the released mean is one double division of the two released
     integers."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_nationkey",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_nationkey")
     return pl.dp_noisy_mean(
         frame, "c_nationkey", "cents", clip=500_000,
         epsilon_micro=1_386_294, sum_share_micro=600_000,
@@ -7083,11 +7013,7 @@ def q_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability-mass drift scalar completing the exact drift trio with
     ks_drift (sup) and wasserstein_drift (transport). Fully exact:
     one truncating DIV, no float, no window."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.tv_distance(frame, "c_mktsegment", "cents", "BUILDING", "MACHINERY")
 
 
@@ -7096,11 +7022,7 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     between BUILDING and MACHINERY balance-cent distributions — the
     smooth, metrizable drift member next to tv/wasserstein/jsd;
     per-value sqrt terms micro-floored at birth."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.hellinger_distance(
         frame, "c_mktsegment", "cents", "BUILDING", "MACHINERY"
     )
@@ -7182,11 +7104,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     (blocked): does ANY segment's balance distribution sit shifted?
     Doubled-rank integers over the distinct-value aggregate, never a
     row sort; exact tie correction."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.kruskal_wallis(frame, "c_mktsegment", "cents")
 
 
@@ -7198,11 +7116,7 @@ def q_ad_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tv/hellinger = mass): each CDF-gap term is divided by B(N-B), so
     tail drift a uniform integral dilutes gets amplified. Same shape
     as cvm_drift: value-domain cumsums, per-block micro DIV."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.ad_distance(
         frame, "c_mktsegment", "cents", "BUILDING", "MACHINERY"
     )
@@ -7292,10 +7206,7 @@ def q_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     an outlier under normality? ONE aggregate — the extreme deviation
     is provably at the min or max, so no join-back; exact integer
     moments, one fp64 sqrt micro-floored."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
-    )
+    frame = _acctbal_cents(spark, sf_dir)
     return st.grubbs_test(frame, "cents")
 
 
@@ -7306,11 +7217,7 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair's disagreement is itself a tail-weight diagnostic). Every
     cross-group sum integer (micro/pico floored at birth), one fp64
     closing expression."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.bartlett_test(frame, "c_mktsegment", "cents")
 
 
@@ -7337,10 +7244,7 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     the normal-theory members (grubbs_test, bartlett_test) — on this
     uniform-ish column the kurtosis term alone should reject hard.
     Four exact DECIMAL power sums, one deterministic fp64 close."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
-    )
+    frame = _acctbal_cents(spark, sf_dir)
     return st.jarque_bera(frame, "cents")
 
 
@@ -7385,10 +7289,7 @@ def q_dp_exponential_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-domain aggregate is that choice. Seeded hash noise replayed
     bit-for-bit by the oracle; the operator docstring carries the
     production secret-seed requirement."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents")
-    )
+    frame = _acctbal_cents(spark, sf_dir)
     return pl.dp_exponential_quantile(
         frame, "cents", q_micro=500_000, epsilon_micro=2_000_000,
         seed=11, hash_family="md5",
@@ -7482,11 +7383,7 @@ def q_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer pooled variance so every cross-group float
     reduction is birth-floored, then the single Sp2 rescale undone in
     the closing expression."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.welch_anova(frame, "c_mktsegment", "cents")
 
 
@@ -7528,16 +7425,7 @@ def q_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reject a SUBSET of BH's set on identical input (the
     power-for-safety trade made visible). Exact integer step-up in
     DECIMAL; c(m) from truncating pico reciprocals."""
-    mix = _mix(F.col("id"))
-    hyp = spark.range(0, 200).select(
-        F.col("id").alias("hyp_id"),
-        F.when(
-            F.pmod(F.col("id"), F.lit(5)) == 0, F.pmod(mix, F.lit(20_000)) + 1
-        )
-        .otherwise(F.pmod(mix, F.lit(1_000_000)) + 1)
-        .cast("long")
-        .alias("p_micro"),
-    )
+    hyp = _planted_hypotheses(spark)
     return st.benjamini_yekutieli(hyp, "hyp_id", "p_micro", alpha_micro=50_000)
 
 
@@ -7548,15 +7436,7 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     trending AFTER the annual cycle is blocked out (Jan only compares
     with Jan)? Per-season S and tie-corrected variances sum; pair
     join keyed (priority, season)."""
-    orders = load_table(spark, sf_dir, "orders")
-    series = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
-        .cast("long").alias("m"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long").alias("rev")
-    )
+    series = _monthly_priority_revenue(spark, sf_dir)
     return st.seasonal_mann_kendall(series, "priority", "m", "rev", period=12)
 
 
@@ -7566,11 +7446,7 @@ def q_dunn_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame): WHICH segment pairs differ, from the same pooled doubled
     ranks the omnibus H used. k² pair rows over the k-row per-group
     rank table; feed benjamini_hochberg for multiplicity."""
-    customer = load_table(spark, sf_dir, "customer")
-    frame = customer.select(
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
+    frame = _acctbal_cents(spark, sf_dir, "c_mktsegment")
     return st.dunn_test(frame, "c_mktsegment", "cents")
 
 
@@ -7580,16 +7456,7 @@ def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the multiple-testing trio with all three directly
     comparable on identical input (Holm's FWER set ⊆ BY ⊆ BH).
     Exact integer step-down; stop rank = MIN failing rank."""
-    mix = _mix(F.col("id"))
-    hyp = spark.range(0, 200).select(
-        F.col("id").alias("hyp_id"),
-        F.when(
-            F.pmod(F.col("id"), F.lit(5)) == 0, F.pmod(mix, F.lit(20_000)) + 1
-        )
-        .otherwise(F.pmod(mix, F.lit(1_000_000)) + 1)
-        .cast("long")
-        .alias("p_micro"),
-    )
+    hyp = _planted_hypotheses(spark)
     return st.holm_bonferroni(hyp, "hyp_id", "p_micro", alpha_micro=50_000)
 
 
@@ -7600,20 +7467,8 @@ def q_icc_twoway(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY document (no participation coin), so rater bias is a
     separable column effect. All-integer mean-square identity, one
     truncating micro DIV, no float anywhere."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters)
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("rating"),
-    )
-    return st.icc_twoway(rated)
+    rated = _krippendorff_ratings(spark, sf_dir, ragged=False)
+    return st.icc_twoway(rated.withColumnRenamed("label", "rating"))
 
 
 def q_dp_above_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7677,6 +7532,144 @@ _N_TOKENS = (
     r"ELSE len(string_split_regex(trim(text), '\s+')) END"
 )
 
+# pack_chunks CTEs: per-doc token counts t and their running total c
+# (cum) per shard in doc_id order.
+_PACK_CUM = f"""t AS (
+      SELECT doc_id, doc_id % 8 AS shard,
+        CAST({_N_TOKENS} AS BIGINT) AS n_tokens
+      FROM documents
+    ), c AS (
+      SELECT doc_id, shard, n_tokens,
+        CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS cum
+      FROM t
+    )"""
+
+# CTE sh(doc_id, s): each document's distinct normalized word trigrams.
+_DOC_TRIGRAMS = f"""sh AS (
+      SELECT doc_id,
+        list_distinct(list_transform(
+          generate_series(1, greatest(len(string_split({_NORM_TEXT}, ' ')) - 2, 1)),
+          i -> array_to_string(string_split({_NORM_TEXT}, ' ')[i:i+2], ' ')
+        )) AS s
+      FROM documents
+    )"""
+
+# CTE s(query_id, vec_id, score): cosine of every other embedding to
+# each of the self-queries 0, 1, 2.
+_QUERY_COSINES = """q AS (
+      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+      FROM embeddings WHERE vec_id IN (0, 1, 2)
+    ), e AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
+    ), s AS (
+      SELECT q.query_id, e.vec_id,
+        list_dot_product(e.ev, q.qv)
+          / (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(q.qv, q.qv)))
+        AS score
+      FROM e CROSS JOIN q
+      WHERE e.vec_id != q.query_id
+    )"""
+
+# Every lineitem with its supplier nation (s.s_nationkey) and customer
+# nation (c.c_nationkey): the rows nation trade graphs roll up.
+_TRADE_LINES = """FROM lineitem l
+      JOIN orders o ON l.l_orderkey = o.o_orderkey
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN supplier s ON l.l_suppkey = s.s_suppkey"""
+
+# The scale-free strong nation trade graph (_strong_trade_edges):
+# j = directed pair weights, m = their total and pair count.
+_STRONG_TRADE_JM = f"""j AS MATERIALIZED (
+      SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+        CAST(COUNT(*) AS BIGINT) AS wt
+      {_TRADE_LINES}
+      GROUP BY 1, 2
+    ),
+    m AS MATERIALIZED (
+      SELECT CAST(SUM(wt) AS BIGINT) AS tot,
+        CAST(COUNT(*) AS BIGINT) AS np
+      FROM j
+    )"""
+
+
+def _strong_trade_sql(edges: str = "e") -> str:
+    """_STRONG_TRADE_JM plus the CTE ``edges``(a, b): the undirected
+    strong edges, a < b, self-loops dropped."""
+    return f"""{_STRONG_TRADE_JM},
+    {edges} AS MATERIALIZED (
+      SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM j CROSS JOIN m
+      WHERE wt * np * 10 >= 11 * tot AND src <> dst
+    )"""
+
+
+def _sym_trade_edges_sql(min_wt: int) -> str:
+    """_trade_edges_at_least(min_wt) as SQL: after j(src, dst, wt), the
+    pair weights, CTE e0(s, d) holds both directions of every pair
+    with at least ``min_wt`` lineitems, self-loops dropped."""
+    return f"""j AS (
+              SELECT s.s_nationkey AS src, c.c_nationkey AS dst, COUNT(*) AS wt
+              {_TRADE_LINES}
+              GROUP BY 1, 2
+            ), e0 AS MATERIALIZED (
+              SELECT DISTINCT src AS s, dst AS d FROM (
+                SELECT src, dst FROM j WHERE wt >= {min_wt}
+                UNION ALL
+                SELECT dst, src FROM j WHERE wt >= {min_wt}
+              ) WHERE src <> dst
+            )"""
+
+
+# CTE obs: each user's events by hour slot (oslot); rn = 1 is the
+# slot's last observation (latest second, then largest value).
+_HOURLY_OBS = """obs AS (
+      SELECT user_id,
+        (epoch_ns(ts) // 1000000000) // 3600 AS oslot,
+        value,
+        row_number() OVER (
+          PARTITION BY user_id, (epoch_ns(ts) // 1000000000) // 3600
+          ORDER BY epoch_ns(ts) // 1000000000 DESC, value DESC
+        ) AS rn
+      FROM events
+    )"""
+
+# Recursive CTEs (after WITH RECURSIVE) over the same-language
+# adjacent-id duplicate pairs p: reach(n, r) holds every node n with
+# each node r reachable from it.
+_ADJACENT_DUP_REACH = """p AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM documents a
+      JOIN documents b ON b.doc_id = a.doc_id + 1 AND b.lang = a.lang
+    ), sym AS (
+      SELECT id_a AS s, id_b AS d FROM p
+      UNION ALL SELECT id_b, id_a FROM p
+    ), reach(n, r) AS (
+      SELECT s, s FROM sym
+      UNION
+      SELECT sym.s, reach.r FROM sym JOIN reach ON sym.d = reach.n
+    )"""
+
+# CTE t(doc_id, l): each document's normalized text split on
+# whitespace.
+_DOC_TOKENS = f"""t AS (
+      SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
+      FROM documents
+    )"""
+
+# _DOC_TOKENS plus tk(doc_id, token, p): the non-empty tokens with
+# their 1-based position p in the document.
+_DOC_TOKEN_POS = f"""{_DOC_TOKENS},
+    tok AS (
+      SELECT doc_id, unnest(l) AS token,
+        generate_subscripts(l, 1) AS pos
+      FROM t
+    ),
+    tk AS (
+      SELECT doc_id, token,
+        ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS p
+      FROM tok WHERE length(token) > 0
+    )"""
+
 
 def _lang_scores_sql() -> str:
     stop = {
@@ -7716,7 +7709,9 @@ def _lang_scores_sql() -> str:
     """
 
 
-def _score_confusion_sql() -> str:
+def _scored_pred_sql() -> str:
+    """CTE prefix ending in pred(label, predicted_label): the embeddings
+    scored by the linear stub model, argmax class per row."""
     weights = ",\n        ".join(_stub_weights_sql())
     return f"""
     WITH w AS (SELECT [
@@ -7732,27 +7727,18 @@ def _score_confusion_sql() -> str:
         CAST(list_position(scores, list_max(scores)) - 1 AS BIGINT) AS predicted_label
       FROM scored
     )
+    """
+
+
+def _score_confusion_sql() -> str:
+    return _scored_pred_sql() + """
     SELECT label, predicted_label, CAST(COUNT(*) AS BIGINT) AS n
     FROM pred GROUP BY label, predicted_label
     """
 
 
 def _score_accuracy_sql() -> str:
-    weights = ",\n        ".join(_stub_weights_sql())
-    return f"""
-    WITH w AS (SELECT [
-        {weights}
-    ] AS wm),
-    scored AS (
-      SELECT label,
-        list_transform(w.wm, wr -> list_dot_product(CAST(e.embedding AS DOUBLE[]), wr)) AS scores
-      FROM embeddings e, w
-    ),
-    pred AS (
-      SELECT label,
-        CAST(list_position(scores, list_max(scores)) - 1 AS BIGINT) AS predicted_label
-      FROM scored
-    )
+    return _scored_pred_sql() + """
     SELECT
       CAST(SUM(CASE WHEN label = predicted_label THEN 1 ELSE 0 END) AS BIGINT) AS num_correct,
       CAST(COUNT(*) AS BIGINT) AS num_total,
@@ -7785,13 +7771,395 @@ def _ewma_oracle_sql(alpha: float = 0.5, depth: int = 8) -> str:
     """
 
 
+def _pagerank_rounds_sql(iters: int) -> str:
+    """Unrolled integer PageRank sweeps (operators.graph.pagerank_integer,
+    damping 0.85 in micro units) over CTEs edges(src, dst, w),
+    nodes(node) and outw(src, out_w): r0 starts every node at 1e6, the
+    final ranks are r{iters}."""
+    parts = ["r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes)"]
+    for k in range(1, iters + 1):
+        parts.append(
+            f"""c{k} AS (
+          SELECT e.dst AS node,
+            CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
+          FROM edges e
+          JOIN outw o ON e.src = o.src
+          JOIN r{k - 1} r ON r.node = e.src
+          GROUP BY e.dst
+        ),
+        r{k} AS (
+          SELECT n.node,
+            CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
+                 AS BIGINT) AS r
+          FROM nodes n LEFT JOIN c{k} c ON n.node = c.node
+        )"""
+        )
+    return ",\n        ".join(parts)
+
+
+def _doc_bigrams_sql(src: str) -> str:
+    """Rows (doc_id, w1, w2): every adjacent pair of non-empty
+    normalized tokens of each (doc_id, text) row of ``src``."""
+    return f"""SELECT doc_id, w1, w2 FROM (
+            SELECT doc_id,
+              unnest(list_transform(generate_series(1, len(t) - 1),
+                i -> struct_pack(w1 := t[i], w2 := t[i + 1])),
+                recursive := true)
+            FROM (
+              SELECT doc_id,
+                string_split({_NORM_TEXT}, ' ') AS t
+              FROM {src}
+            )
+          ) WHERE w1 <> '' AND w2 <> ''"""
+
+
+# CTE freq(tok, r): corpus frequency r of every word trigram type.
+_TRIGRAM_FREQ = f"""lists AS (
+      SELECT doc_id,
+        string_split({_NORM_TEXT}, ' ') AS l
+      FROM documents
+    ),
+    toks AS (
+      SELECT unnest(list_transform(
+        generate_series(1, greatest(len(l) - 2, 1)),
+        i -> array_to_string(l[i:i+2], ' '))) AS tok
+      FROM lists
+    ),
+    freq AS (
+      SELECT tok, CAST(COUNT(*) AS BIGINT) AS r
+      FROM toks WHERE length(tok) > 0 GROUP BY 1
+    )"""
+
+
+def _krippendorff_ratings_sql(likert: bool = True) -> str:
+    """_krippendorff_ratings (ragged) as CTE rated(it, r, l), then
+    nuc(it, l, c): each item's count of ratings per label."""
+    n_cat = 5 if likert else 4
+    shift = "1 + " if likert else ""
+    return f"""rated AS MATERIALIZED (
+          SELECT d.doc_id AS it, r.rater AS r,
+            {shift}CASE WHEN {_mix_sql("(d.doc_id * 5 + r.rater)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % {n_cat}
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.rater + 101)")}) % {n_cat}
+            END AS l
+          FROM documents d
+          CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
+          WHERE ({_mix_sql("(d.doc_id * 11 + r.rater * 3)")}) % 10 < 6 + (r.rater % 3)
+        ),
+        nuc AS (SELECT it, l, CAST(COUNT(*) AS BIGINT) AS c
+                FROM rated GROUP BY 1, 2)"""
+
+
+# The 1..5 Likert ratings of the items rated at least twice (multi)
+# and each label's count cj over them (cat).
+_LIKERT_CATS = f"""{_krippendorff_ratings_sql()},
+        per AS MATERIALIZED (
+          SELECT it, CAST(SUM(c) AS BIGINT) AS m
+          FROM nuc GROUP BY 1 HAVING SUM(c) >= 2
+        ),
+        multi AS (SELECT nuc.* FROM nuc JOIN per ON nuc.it = per.it),
+        cat AS (SELECT l, CAST(SUM(c) AS BIGINT) AS cj FROM multi GROUP BY 1)"""
+# Krippendorff's alpha from _LIKERT_CATS plus the CTEs ip(it, pd),
+# each item's pairwise distance sum, de(de_num), the expected
+# disagreement numerator, and ctot(n), the pairable ratings.
+_LIKERT_ALPHA = """obs AS (
+          SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
+            SUM(COALESCE(pd, 0) * 1000000 // (m - 1)) AS do_scaled
+          FROM per LEFT JOIN ip USING (it)
+        )
+        SELECT n_items, n AS n_ratings,
+          CAST((do_scaled * (n - 1)) // NULLIF(de_num, 0) AS BIGINT)
+            AS disagreement_micro,
+          CAST(1000000 - (do_scaled * (n - 1)) // NULLIF(de_num, 0)
+            AS BIGINT) AS alpha_micro
+        FROM obs CROSS JOIN ctot CROSS JOIN de"""
+
+
+# _planted_hypotheses as CTE hyp, then ranked: each hypothesis' rank
+# by ascending p-value (hyp_id breaks ties) and the battery size m.
+_RANKED_HYPOTHESES = f"""hyp AS (
+      SELECT t.id AS hyp_id,
+        CAST(CASE WHEN t.id % 5 = 0
+          THEN ({_mix_sql("t.id")}) % 20000 + 1
+          ELSE ({_mix_sql("t.id")}) % 1000000 + 1
+        END AS BIGINT) AS p_micro
+      FROM (SELECT unnest(range(0, 200)) AS id) t
+    ),
+    ranked AS (
+      SELECT hyp_id, p_micro,
+        CAST(ROW_NUMBER() OVER (ORDER BY p_micro, hyp_id) AS BIGINT)
+          AS rank,
+        CAST(COUNT(*) OVER () AS BIGINT) AS m
+      FROM hyp
+    )"""
+
+
+def _cusum_walk_sql(sums: str) -> str:
+    """_purchase_cents as CTE series, then walk: per user, the running
+    ``sums`` (window w, in event_id order) and the 1-based step."""
+    return f"""series AS (
+          SELECT user_id, event_id,
+            CAST(FLOOR(value * 100) AS BIGINT) AS cents
+          FROM events WHERE event_type = 'purchase'
+        ),
+        walk AS (
+          SELECT user_id,
+            {sums},
+            CAST(ROW_NUMBER() OVER
+              (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS step
+          FROM series
+          WINDOW w AS (PARTITION BY user_id ORDER BY event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        )"""
+
+
+def _segment_cents_sql(cte: str, pair: bool = True) -> str:
+    """_acctbal_cents(spark, sf_dir, "c_mktsegment") as CTE ``cte``(g, v):
+    the BUILDING and MACHINERY segments (``pair``) or every segment."""
+    where = (
+        "c_mktsegment IN ('BUILDING', 'MACHINERY')"
+        if pair
+        else "c_mktsegment IS NOT NULL AND c_acctbal IS NOT NULL"
+    )
+    return f"""{cte} AS (
+          SELECT c_mktsegment AS g,
+            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
+          FROM customer
+          WHERE {where}
+        )"""
+
+
+def _segment_value_counts_sql(cte: str = "base", a: str = "ca", b: str = "cb") -> str:
+    """_segment_cents_sql(cte), then vc: per cents value v, its count
+    on the BUILDING side (``a``) and the MACHINERY side (``b``)."""
+    return f"""{_segment_cents_sql(cte)},
+        vc AS (
+          SELECT v,
+            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
+              AS {a},
+            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
+              AS {b}
+          FROM {cte} GROUP BY 1
+        )"""
+
+
+def _segment_rank_sums_sql(rank_cols: str) -> str:
+    """Every segment's cents (_segment_cents_sql("sub", pair=False)),
+    tied values pooled: tv(v, t) counts each value, ranks(rank_cols,
+    r2) gives its doubled midrank and per_g(g, n_g, r2_g) each
+    segment's size and doubled rank sum."""
+    return f"""{_segment_cents_sql("sub", pair=False)},
+        gv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS n_gv
+               FROM sub GROUP BY 1, 2),
+        tv AS (SELECT v, CAST(SUM(n_gv) AS BIGINT) AS t FROM gv GROUP BY 1),
+        ranks AS (
+          SELECT {rank_cols},
+            CAST(2 * COALESCE(SUM(t) OVER (ORDER BY v
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+              + t + 1 AS BIGINT) AS r2
+          FROM tv
+        ),
+        per_g AS (
+          SELECT gv.g, CAST(SUM(n_gv) AS BIGINT) AS n_g,
+            CAST(SUM(n_gv * r2) AS BIGINT) AS r2_g
+          FROM gv JOIN ranks USING (v) GROUP BY 1
+        )"""
+
+
+def _kcore_rounds_sql(k: int, rounds: int) -> str:
+    """Unrolled k-core peeling (graph.k_core) from the symmetric edges
+    e0(s, d): round r keeps as e{r} the edges of e{r-1} whose ends both
+    have degree >= k there. Extra rounds past the fixpoint are no-ops."""
+    return ",\n            ".join(
+        f"""d{r} AS MATERIALIZED (
+              SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e{r - 1} GROUP BY s
+            ), k{r} AS MATERIALIZED (
+              SELECT s AS node FROM d{r} WHERE deg >= {k}
+            ), e{r} AS MATERIALIZED (
+              SELECT e.s, e.d FROM e{r - 1} e
+              JOIN k{r} a ON e.s = a.node
+              JOIN k{r} b ON e.d = b.node
+            )"""
+        for r in range(1, rounds + 1)
+    )
+
+
+def _bfs_rounds_sql(max_hops: int) -> str:
+    """Unrolled bounded-hop BFS (graph.bfs_hops) over the edges e(s, d)
+    from the seed r0(node, hop 0): f{k} is the hop-k frontier and
+    r{k}(node, hop) every node reached within k hops, at its min hop."""
+    return ", ".join(
+        f"""f{k} AS (
+              SELECT e.d AS node, CAST({k} AS INTEGER) AS hop
+              FROM r{k - 1} JOIN e ON e.s = r{k - 1}.node WHERE r{k - 1}.hop = {k - 1}
+            ), r{k} AS (
+              SELECT node, MIN(hop) AS hop FROM (
+                SELECT * FROM r{k - 1} UNION ALL SELECT * FROM f{k}
+              ) GROUP BY node
+            )"""
+        for k in range(1, max_hops + 1)
+    )
+
+
+def _funnel_oracle_sql(steps: list[str], horizon_seconds: int) -> str:
+    """Oracle for mining.funnel_steps: s{k}(u, t1, tp) holds the users
+    who reached step k, with their first step-1 time t1 and the earliest
+    step-k time tp after step k - 1, within the horizon from t1."""
+    reach = [
+        f"""s1 AS (
+              SELECT user_id AS u, MIN(ts) AS t1 FROM events
+              WHERE event_type = '{steps[0]}' GROUP BY 1
+            )"""
+    ]
+    counts = [
+        f"SELECT CAST(1 AS BIGINT) AS step_index, '{steps[0]}' AS step,"
+        " CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_users"
+    ]
+    for k in range(2, len(steps) + 1):
+        prev_t = "t1" if k == 2 else "tp"
+        reach.append(
+            f"""s{k} AS (
+              SELECT e.user_id AS u, s{k - 1}.t1, MIN(e.ts) AS tp
+              FROM events e JOIN s{k - 1} ON e.user_id = s{k - 1}.u
+              WHERE e.event_type = '{steps[k - 1]}' AND e.ts > s{k - 1}.{prev_t}
+                AND e.ts <= s{k - 1}.t1 + INTERVAL {horizon_seconds} SECOND
+              GROUP BY 1, 2
+            )"""
+        )
+        counts.append(
+            f"SELECT {k}, '{steps[k - 1]}', CAST((SELECT COUNT(*) FROM s{k}) AS BIGINT)"
+        )
+    reach_ctes = ",\n            ".join(reach)
+    count_rows = "\n              UNION ALL\n              ".join(counts)
+    return f"""
+            WITH {reach_ctes},
+            c AS (
+              {count_rows}
+            ),
+            r AS (
+              SELECT step_index, step, n_users,
+                FIRST_VALUE(n_users) OVER (ORDER BY step_index) AS n1,
+                COALESCE(LAG(n_users) OVER (ORDER BY step_index), n_users) AS np
+              FROM c
+            )
+            SELECT step_index, step, n_users,
+              CAST(1000000 * n_users // n1 AS BIGINT) AS conv_from_first_micro,
+              CAST(1000000 * n_users // nullif(np, 0) AS BIGINT)
+                AS conv_from_prev_micro
+            FROM r WHERE n1 > 0
+        """
+
+
+def _contamination_hits_sql(eval_every: int) -> str:
+    """Exact contamination scan: per document, its distinct word
+    trigrams found in the eval split (every ``eval_every``-th doc_id)."""
+    return f"""
+            WITH {_DOC_TRIGRAMS},
+            ev AS (
+              SELECT DISTINCT unnest(s) AS ngram FROM sh WHERE doc_id % {eval_every} = 0
+            ),
+            tr AS (SELECT doc_id, unnest(s) AS ngram FROM sh)
+            SELECT t.doc_id, CAST(COUNT(DISTINCT t.ngram) AS BIGINT) AS n_hits
+            FROM tr t JOIN ev e ON t.ngram = e.ngram
+            WHERE length(t.ngram) > 0
+            GROUP BY t.doc_id
+        """
+
+
+def _minhash_mins_sql(n_hashes: int) -> str:
+    """The signature columns m0..m{n_hashes - 1}: MIN over a document's
+    shingle hashes hv of each affine transform, generated from the
+    engine's own constants (operators.dedup._P/_A_MULT/_B_MULT) so the
+    SQL stays in lock-step with dedup.minhash_lsh_candidates by
+    construction instead of by hand-copied literals."""
+    p, a, b = dd._P, dd._A_MULT, dd._B_MULT
+    return ",\n            ".join(
+        f"MIN(({(2 * j + 1) * a % p} * hv + {(j + 1) * b % p}) % {p}) AS m{j}"
+        for j in range(n_hashes)
+    )
+
+
+def _minhash_bands_sql(n_bands: int, key: str) -> str:
+    """One (key, band, bh) row per band of 4 signature columns: bh is
+    the raw min-value tuple as a string (the md5-family band key)."""
+    return "\n          UNION ALL ".join(
+        "SELECT {k}, {b} AS band, {bh} AS bh FROM sig".format(
+            k=key,
+            b=b,
+            bh=" || ',' || ".join(
+                f"CAST(m{j} AS VARCHAR)" for j in range(b * 4, b * 4 + 4)
+            ),
+        )
+        for b in range(n_bands)
+    )
+
+
+def _minhash_near_dup_sql(n_hashes: int, docs_where: str = "") -> str:
+    """The FULL MinHash-LSH near-dup pipeline replayed in DuckDB SQL:
+    md5-prefix word-trigram hashes, ``n_hashes`` affine transforms,
+    raw min-tuple band keys of 4 rows, then a posting-join
+    exact-Jaccard verify at >= 0.5 (list_intersect at a small slice
+    would be fine, but the posting join is the scale-honest form)."""
+    return f"""
+        WITH d AS (
+          SELECT doc_id,
+            string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+          FROM documents{docs_where}
+        ),
+        sh AS MATERIALIZED (
+          SELECT doc_id, UNNEST(list_distinct(list_transform(
+            generate_series(1, greatest(len(toks) - 2, 1)),
+            i -> array_to_string(toks[i:i+2], ' ')))) AS shingle
+          FROM d
+        ),
+        h AS MATERIALIZED (
+          SELECT DISTINCT doc_id,
+            CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)
+              % {dd._P} AS hv
+          FROM sh
+        ),
+        sig AS MATERIALIZED (
+          SELECT doc_id,
+            {_minhash_mins_sql(n_hashes)}
+          FROM h GROUP BY doc_id
+        ),
+        bandkeys AS MATERIALIZED (
+          {_minhash_bands_sql(n_hashes // 4, "doc_id")}
+        ),
+        cand AS MATERIALIZED (
+          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+          FROM bandkeys a
+          JOIN bandkeys b ON b.band = a.band AND b.bh = a.bh
+            AND a.doc_id < b.doc_id
+        ),
+        cnt AS MATERIALIZED (
+          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nh FROM h GROUP BY 1
+        ),
+        common AS (
+          SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS nc
+          FROM cand c
+          JOIN h x ON x.doc_id = c.id_a
+          JOIN h y ON y.doc_id = c.id_b AND y.hv = x.hv
+          GROUP BY 1, 2
+        )
+        SELECT cm.id_a, cm.id_b,
+          CAST(cm.nc AS DOUBLE)
+            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) AS jaccard
+        FROM common cm
+        JOIN cnt na ON na.doc_id = cm.id_a
+        JOIN cnt nb ON nb.doc_id = cm.id_b
+        WHERE CAST(cm.nc AS DOUBLE)
+            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) >= 0.5
+    """
+
+
 def oracle_sql() -> dict[str, str]:
     ev_ts = "make_timestamp(epoch_ns(ts)//1000)"
     oracles = {
         "pricing_summary": f"""
             SELECT l_returnflag, l_linestatus,
               SUM(l_quantity) AS sum_qty,
-              CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
+              {_sql_dec_sum("l_extendedprice", 4)} AS sum_base_price,
               {_SQL_REVENUE} AS sum_disc_price,
               SUM(l_quantity) / COUNT(*) AS avg_qty,
               CAST(COUNT(*) AS BIGINT) AS count_order
@@ -7830,10 +8198,10 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem
         """,
         "distinct_labels": "SELECT DISTINCT l_returnflag FROM lineitem ORDER BY l_returnflag",
-        "dim_join": """
+        "dim_join": f"""
             SELECT r_name,
               CAST(COUNT(*) AS BIGINT) AS n_customers,
-              CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_acctbal
+              {_sql_dec_sum("c_acctbal", 2)} AS sum_acctbal
             FROM customer
             JOIN nation ON c_nationkey = n_nationkey
             JOIN region ON n_regionkey = r_regionkey
@@ -7899,7 +8267,7 @@ def oracle_sql() -> dict[str, str]:
         "tumbling_hourly": f"""
             SELECT date_trunc('hour', {ev_ts}) AS hour_start, event_type,
               CAST(COUNT(*) AS BIGINT) AS n,
-              CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_value
+              {_sql_dec_sum("value", 6)} AS sum_value
             FROM events
             GROUP BY 1, 2
         """,
@@ -7951,9 +8319,9 @@ def oracle_sql() -> dict[str, str]:
         "hash_split": f"""
             SELECT doc_id,
               CASE
-                WHEN ((doc_id % 1000003) * 2654435761) % 1000003 < {_split_bound(0.8)}
+                WHEN {_mix_sql("doc_id")} < {_split_bound(0.8)}
                   THEN 'train'
-                WHEN ((doc_id % 1000003) * 2654435761) % 1000003 < {_split_bound(0.8 + 0.1)}
+                WHEN {_mix_sql("doc_id")} < {_split_bound(0.8 + 0.1)}
                   THEN 'val'
                 ELSE 'test'
               END AS split
@@ -7962,7 +8330,7 @@ def oracle_sql() -> dict[str, str]:
         "mixture_sample": f"""
             WITH h AS (
               SELECT doc_id, source,
-                ((doc_id % 1000003) * 2654435761) % 1000003 AS b
+                {_mix_sql("doc_id")} AS b
               FROM documents
             )
             SELECT doc_id, source FROM h
@@ -7973,15 +8341,7 @@ def oracle_sql() -> dict[str, str]:
               ELSE {_split_bound(0.05)} END
         """,
         "pack_chunks": f"""
-            WITH t AS (
-              SELECT doc_id, doc_id % 8 AS shard,
-                CAST({_N_TOKENS} AS BIGINT) AS n_tokens
-              FROM documents
-            ), c AS (
-              SELECT doc_id, shard, n_tokens,
-                CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS cum
-              FROM t
-            )
+            WITH {_PACK_CUM}
             SELECT doc_id, shard,
               CAST(FLOOR((cum - n_tokens) / 512.0) AS BIGINT) AS first_block,
               CASE WHEN n_tokens = 0
@@ -8064,9 +8424,9 @@ def oracle_sql() -> dict[str, str]:
             JOIN customer ON o_custkey = c_custkey
         """,
         "zorder_key": _zorder_oracle_sql(),
-        "weighted_sample": """
+        "weighted_sample": f"""
             SELECT doc_id, lang FROM documents
-            WHERE ((doc_id % 1000003) * 2654435761) % 1000003
+            WHERE {_mix_sql("doc_id")}
                   < floor(least(1.0, n_chars / 400.0) * 1000003)
         """,
         "data_card": f"""
@@ -8117,12 +8477,12 @@ def oracle_sql() -> dict[str, str]:
                    COALESCE(i.ids_str, '') AS ids_str
             FROM documents d LEFT JOIN ids i USING (doc_id)
         """,
-        "sample_per_group": """
+        "sample_per_group": f"""
             SELECT doc_id, lang FROM (
               SELECT doc_id, lang,
                 row_number() OVER (
                   PARTITION BY lang
-                  ORDER BY ((doc_id % 1000003) * 2654435761) % 1000003, doc_id
+                  ORDER BY {_mix_sql("doc_id")}, doc_id
                 ) AS rk
               FROM documents
             ) WHERE rk <= 10
@@ -8175,15 +8535,8 @@ def oracle_sql() -> dict[str, str]:
                 AND (n_stop >= 2)) AS keep
             FROM c
         """,
-        "contamination_overlap": r"""
-            WITH sh AS (
-              SELECT doc_id,
-                list_distinct(list_transform(
-                  generate_series(1, greatest(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) - 2, 1)),
-                  i -> array_to_string(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')[i:i+2], ' ')
-                )) AS s
-              FROM documents
-            ),
+        "contamination_overlap": rf"""
+            WITH {_DOC_TRIGRAMS},
             ev AS (
               SELECT DISTINCT unnest(s) AS ngram FROM sh WHERE doc_id % 41 = 0
             ),
@@ -8336,75 +8689,15 @@ def oracle_sql() -> dict[str, str]:
               e.est >= x.exact AS bound_ok
             FROM est e JOIN exact x USING (o_custkey)
         """,
-        "hard_negatives": """
-            WITH q AS (
-              SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-              FROM embeddings WHERE vec_id IN (0, 1, 2)
-            ), e AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
-            ), s AS (
-              SELECT q.query_id, e.vec_id,
-                list_dot_product(e.ev, q.qv)
-                  / (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(q.qv, q.qv)))
-                AS score
-              FROM e CROSS JOIN q
-              WHERE e.vec_id != q.query_id
-            )
+        "hard_negatives": f"""
+            WITH {_QUERY_COSINES}
             SELECT query_id, vec_id, score FROM s
             WHERE score >= 0.30 AND score < 0.45
             QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) <= 5
         """,
-        "kcore_trade": """
-            WITH j AS (
-              SELECT s.s_nationkey AS src, c.c_nationkey AS dst, COUNT(*) AS wt
-              FROM lineitem l
-              JOIN orders o ON l.l_orderkey = o.o_orderkey
-              JOIN customer c ON o.o_custkey = c.c_custkey
-              JOIN supplier s ON l.l_suppkey = s.s_suppkey
-              GROUP BY 1, 2
-            ), e0 AS MATERIALIZED (
-              SELECT DISTINCT src AS s, dst AS d FROM (
-                SELECT src, dst FROM j WHERE wt >= 160
-                UNION ALL
-                SELECT dst, src FROM j WHERE wt >= 160
-              ) WHERE src <> dst
-            ),
-            d1 AS MATERIALIZED (
-              SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY s
-            ), k1 AS MATERIALIZED (
-              SELECT s AS node FROM d1 WHERE deg >= 5
-            ), e1 AS MATERIALIZED (
-              SELECT e.s, e.d FROM e0 e
-              JOIN k1 a ON e.s = a.node
-              JOIN k1 b ON e.d = b.node
-            ),
-            d2 AS MATERIALIZED (
-              SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e1 GROUP BY s
-            ), k2 AS MATERIALIZED (
-              SELECT s AS node FROM d2 WHERE deg >= 5
-            ), e2 AS MATERIALIZED (
-              SELECT e.s, e.d FROM e1 e
-              JOIN k2 a ON e.s = a.node
-              JOIN k2 b ON e.d = b.node
-            ),
-            d3 AS MATERIALIZED (
-              SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e2 GROUP BY s
-            ), k3 AS MATERIALIZED (
-              SELECT s AS node FROM d3 WHERE deg >= 5
-            ), e3 AS MATERIALIZED (
-              SELECT e.s, e.d FROM e2 e
-              JOIN k3 a ON e.s = a.node
-              JOIN k3 b ON e.d = b.node
-            ),
-            d4 AS MATERIALIZED (
-              SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e3 GROUP BY s
-            ), k4 AS MATERIALIZED (
-              SELECT s AS node FROM d4 WHERE deg >= 5
-            ), e4 AS MATERIALIZED (
-              SELECT e.s, e.d FROM e3 e
-              JOIN k4 a ON e.s = a.node
-              JOIN k4 b ON e.d = b.node
-            )
+        "kcore_trade": f"""
+            WITH {_sym_trade_edges_sql(160)},
+            {_kcore_rounds_sql(5, 4)}
             SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS degree
             FROM e4 GROUP BY s
         """,
@@ -8611,21 +8904,8 @@ def oracle_sql() -> dict[str, str]:
             FROM ex e JOIN w ON e.i = w.i
             GROUP BY 1, 2
         """,
-        "communities_trade": """
-            WITH j AS (
-              SELECT s.s_nationkey AS src, c.c_nationkey AS dst, COUNT(*) AS wt
-              FROM lineitem l
-              JOIN orders o ON l.l_orderkey = o.o_orderkey
-              JOIN customer c ON o.o_custkey = c.c_custkey
-              JOIN supplier s ON l.l_suppkey = s.s_suppkey
-              GROUP BY 1, 2
-            ), e0 AS MATERIALIZED (
-              SELECT DISTINCT src AS s, dst AS d FROM (
-                SELECT src, dst FROM j WHERE wt >= 120
-                UNION ALL
-                SELECT dst, src FROM j WHERE wt >= 120
-              ) WHERE src <> dst
-            ),
+        "communities_trade": f"""
+            WITH {_sym_trade_edges_sql(120)},
             l0 AS MATERIALIZED (
               SELECT DISTINCT s AS node, s AS label FROM e0
             ),
@@ -8650,44 +8930,10 @@ def oracle_sql() -> dict[str, str]:
               FROM n2
             ) WHERE rn = 1
         """,
-        "decontaminate": r"""
-            WITH sh AS (
-              SELECT doc_id,
-                list_distinct(list_transform(
-                  generate_series(1, greatest(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) - 2, 1)),
-                  i -> array_to_string(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')[i:i+2], ' ')
-                )) AS s
-              FROM documents
-            ),
-            ev AS (
-              SELECT DISTINCT unnest(s) AS ngram FROM sh WHERE doc_id % 50 = 0
-            ),
-            tr AS (SELECT doc_id, unnest(s) AS ngram FROM sh)
-            SELECT t.doc_id, CAST(COUNT(DISTINCT t.ngram) AS BIGINT) AS n_hits
-            FROM tr t JOIN ev e ON t.ngram = e.ngram
-            WHERE length(t.ngram) > 0
-            GROUP BY t.doc_id
-        """,
+        "decontaminate": _contamination_hits_sql(50),
         # The bloom prefilter is exact end-to-end (false positives die in
         # the verify join), so the oracle is the plain contamination scan.
-        "decontaminate_bloom": r"""
-            WITH sh AS (
-              SELECT doc_id,
-                list_distinct(list_transform(
-                  generate_series(1, greatest(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) - 2, 1)),
-                  i -> array_to_string(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')[i:i+2], ' ')
-                )) AS s
-              FROM documents
-            ),
-            ev AS (
-              SELECT DISTINCT unnest(s) AS ngram FROM sh WHERE doc_id % 37 = 0
-            ),
-            tr AS (SELECT doc_id, unnest(s) AS ngram FROM sh)
-            SELECT t.doc_id, CAST(COUNT(DISTINCT t.ngram) AS BIGINT) AS n_hits
-            FROM tr t JOIN ev e ON t.ngram = e.ngram
-            WHERE length(t.ngram) > 0
-            GROUP BY t.doc_id
-        """,
+        "decontaminate_bloom": _contamination_hits_sql(37),
         "asof_tolerance": """
             WITH p AS (
               SELECT event_id, user_id, ts FROM events
@@ -8709,10 +8955,10 @@ def oracle_sql() -> dict[str, str]:
               ORDER BY view_ts LIMIT 1
             ) n ON true
         """,
-        "manifest_diff": r"""
+        "manifest_diff": rf"""
             WITH nt AS (
               SELECT doc_id,
-                ((doc_id % 1000003) * 2654435761) % 1000003 AS idh,
+                {_mix_sql("doc_id")} AS idh,
                 CASE WHEN length(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) = 0 THEN 0
                   ELSE len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+'))
                 END AS ntok
@@ -8814,7 +9060,7 @@ def oracle_sql() -> dict[str, str]:
               CAST(surprisal_micro AS DOUBLE) / 1000000.0 / CAST(n_tokens AS DOUBLE) AS mean_nll
             FROM agg
         """,
-        "temperature_mixture": """
+        "temperature_mixture": f"""
             WITH c AS (
               SELECT lang, CAST(COUNT(*) AS BIGINT) AS n,
                 CAST(FLOOR(POW(CAST(COUNT(*) AS DOUBLE), 0.5) * 1000000.0) AS BIGINT) AS w
@@ -8824,7 +9070,7 @@ def oracle_sql() -> dict[str, str]:
             kept AS (
               SELECT d.doc_id, d.lang
               FROM documents d JOIN c USING (lang), tw
-              WHERE CAST(((d.doc_id % 1000003) * 2654435761) % 1000003 AS HUGEINT)
+              WHERE CAST({_mix_sql("d.doc_id")} AS HUGEINT)
                     * CAST(c.n AS HUGEINT) * CAST(tw.t AS HUGEINT)
                   < CAST(200 AS HUGEINT) * CAST(c.w AS HUGEINT) * CAST(1000003 AS HUGEINT)
             )
@@ -8868,7 +9114,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id, pos, token FROM u WHERE length(token) > 0
         """,
-        "pagerank_nations": """
+        "pagerank_nations": f"""
             WITH edges AS (
               SELECT s_nationkey AS src, c_nationkey AS dst,
                 CAST(COUNT(*) AS BIGINT) AS w
@@ -8882,49 +9128,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT src AS node FROM edges UNION SELECT dst FROM edges
             ),
             outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS out_w FROM edges GROUP BY src),
-            r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
-            c1 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r0 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r1 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c1 c ON n.node = c.node
-            ),
-            c2 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r1 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r2 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c2 c ON n.node = c.node
-            ),
-            c3 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r2 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r3 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c3 c ON n.node = c.node
-            )
+            {_pagerank_rounds_sql(3)}
             SELECT n_name, r AS rank_micro
             FROM r3 JOIN nation ON node = n_nationkey
         """,
@@ -8937,17 +9141,8 @@ def oracle_sql() -> dict[str, str]:
               MAX(CAST(o_totalprice AS DOUBLE)) AS max_v
             FROM orders GROUP BY bucket
         """,
-        "interpolate_linear": """
-            WITH obs AS (
-              SELECT user_id,
-                (epoch_ns(ts) // 1000000000) // 3600 AS oslot,
-                value,
-                row_number() OVER (
-                  PARTITION BY user_id, (epoch_ns(ts) // 1000000000) // 3600
-                  ORDER BY epoch_ns(ts) // 1000000000 DESC, value DESC
-                ) AS rn
-              FROM events
-            ), d AS (
+        "interpolate_linear": f"""
+            WITH {_HOURLY_OBS}, d AS (
               SELECT user_id, oslot, value,
                 lead(oslot) OVER (PARTITION BY user_id ORDER BY oslot) AS nxt,
                 lead(value) OVER (PARTITION BY user_id ORDER BY oslot) AS nxt_v
@@ -9120,12 +9315,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "bpe_vocab": _bpe_vocab_oracle(16),
         "wordpiece_vocab": _wordpiece_vocab_oracle(12, 2),
-        "triangle_count": r"""
+        "triangle_count": rf"""
             WITH w AS (
               SELECT s.s_nationkey AS src, c.c_nationkey AS dst, COUNT(*) AS wt
-              FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-              JOIN customer c ON o.o_custkey = c.c_custkey
-              JOIN supplier s ON l.l_suppkey = s.s_suppkey
+              {_TRADE_LINES}
               GROUP BY src, dst
             ),
             e AS (
@@ -9308,10 +9501,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT passage, CAST(64 AS INTEGER) AS n_words, n_docs, n_occurrences, first_doc_id
               FROM s64
         """,
-        "shard_manifest": r"""
+        "shard_manifest": rf"""
             WITH a AS (
               SELECT doc_id,
-                ((doc_id % 1000003) * 2654435761) % 1000003 AS idh,
+                {_mix_sql("doc_id")} AS idh,
                 CASE WHEN length(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) = 0 THEN 0
                   ELSE len(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+'))
                 END AS nt
@@ -9327,15 +9520,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY shard
         """,
         "pack_chunks_global": f"""
-            WITH t AS (
-              SELECT doc_id, doc_id % 8 AS shard,
-                CAST({_N_TOKENS} AS BIGINT) AS n_tokens
-              FROM documents
-            ), c AS (
-              SELECT doc_id, shard, n_tokens,
-                CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS cum
-              FROM t
-            ), local AS (
+            WITH {_PACK_CUM}, local AS (
               SELECT doc_id, shard,
                 CAST(FLOOR((cum - n_tokens) / 512.0) AS BIGINT) AS first_block,
                 CASE WHEN n_tokens = 0
@@ -9413,20 +9598,8 @@ def oracle_sql() -> dict[str, str]:
             FROM base WHERE nt >= 5 AND pr <= 0.3
             GROUP BY lang
         """,
-        "similarity_topk": """
-            WITH q AS (
-              SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-              FROM embeddings WHERE vec_id IN (0, 1, 2)
-            ), e AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
-            ), s AS (
-              SELECT q.query_id, e.vec_id,
-                list_dot_product(e.ev, q.qv)
-                  / (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(q.qv, q.qv)))
-                AS score
-              FROM e CROSS JOIN q
-              WHERE e.vec_id != q.query_id
-            )
+        "similarity_topk": f"""
+            WITH {_QUERY_COSINES}
             SELECT query_id, vec_id, score FROM s
             QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) <= 10
         """,
@@ -9617,12 +9790,12 @@ def oracle_sql() -> dict[str, str]:
               COALESCE(NULLIF(l_discount, 0.0), -1.0) AS discount_or_neg1
             FROM lineitem
         """,
-        "correlated_avg_qty": """
+        "correlated_avg_qty": f"""
             WITH a AS (
               SELECT l_partkey AS pk, SUM(l_quantity)/COUNT(*) AS avg_qty
               FROM lineitem GROUP BY l_partkey
             )
-            SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) / 7.0 AS avg_yearly
+            SELECT {_sql_dec_sum("l_extendedprice", 4)} / 7.0 AS avg_yearly
             FROM lineitem
             JOIN part ON p_partkey = l_partkey
             JOIN a ON pk = l_partkey
@@ -9720,28 +9893,28 @@ def oracle_sql() -> dict[str, str]:
             WHERE p_brand <> 'Brand#11' AND p_size IN (1,5,9,13,17,21,25,29)
             GROUP BY p_brand, p_type, p_size
         """,
-        "high_balance_light_buyers": """
+        "high_balance_light_buyers": f"""
             WITH avg_bal AS (
-              SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS ab
+              SELECT {_sql_dec_sum("c_acctbal", 2)} / COUNT(*) AS ab
               FROM customer WHERE c_acctbal > 0
             ), oc AS (
               SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY o_custkey
             )
             SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-              CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_bal
+              {_sql_dec_sum("c_acctbal", 2)} AS sum_bal
             FROM customer, avg_bal
             JOIN oc ON o_custkey = c_custkey
             WHERE c_acctbal > ab AND n_orders < 8
             GROUP BY c_nationkey
         """,
-        "nation_value_share": """
+        "nation_value_share": f"""
             WITH t AS (
-              SELECT CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total_bal
+              SELECT {_sql_dec_sum("s_acctbal", 2)} AS total_bal
               FROM supplier
             )
             SELECT n_name, value FROM (
               SELECT s_nationkey,
-                CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS value
+                {_sql_dec_sum("s_acctbal", 2)} AS value
               FROM supplier GROUP BY s_nationkey
             ), t
             JOIN nation ON s_nationkey = n_nationkey
@@ -9811,7 +9984,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT vec_id AS query_id, TRUE AS recall_ok
             FROM embeddings WHERE vec_id IN (0, 1, 2)
         """,
-        "corr_stats": """
+        "corr_stats": f"""
             -- decimal sums go DECIMAL -> VARCHAR -> DOUBLE: DuckDB's direct
             -- int128 decimal->double cast is not correctly rounded (1 ulp off
             -- on ~13-digit values), while its string parse and Spark's
@@ -9819,9 +9992,9 @@ def oracle_sql() -> dict[str, str]:
             WITH m AS (
               SELECT l_returnflag,
                 CAST(COUNT(*) AS DOUBLE) AS n,
-                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sx,
-                CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sy,
-                CAST(CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sz,
+                {_sql_dec_sum("l_quantity", 2)} AS sx,
+                {_sql_dec_sum("l_extendedprice", 2)} AS sy,
+                {_sql_dec_sum("l_discount", 2)} AS sz,
                 CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
                     * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS VARCHAR) AS DOUBLE) AS sxy,
                 CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
@@ -10026,19 +10199,8 @@ def oracle_sql() -> dict[str, str]:
             FROM rev JOIN supplier ON l_suppkey = s_suppkey
             WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
         """,
-        "dedup_transitive": """
-            WITH RECURSIVE p AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM documents a
-              JOIN documents b ON b.doc_id = a.doc_id + 1 AND b.lang = a.lang
-            ), sym AS (
-              SELECT id_a AS s, id_b AS d FROM p
-              UNION ALL SELECT id_b, id_a FROM p
-            ), reach(n, r) AS (
-              SELECT s, s FROM sym
-              UNION
-              SELECT sym.s, reach.r FROM sym JOIN reach ON sym.d = reach.n
-            )
+        "dedup_transitive": f"""
+            WITH RECURSIVE {_ADJACENT_DUP_REACH}
             SELECT n AS node, MIN(r) AS component FROM reach GROUP BY n
         """,
         "limit_offset": """
@@ -10046,7 +10208,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 10 OFFSET 5
         """,
-        "min_cost_supplier": """
+        "min_cost_supplier": f"""
             WITH eu AS (
               SELECT s_suppkey, s_name, s_acctbal, n_name
               FROM supplier
@@ -10055,8 +10217,8 @@ def oracle_sql() -> dict[str, str]:
               WHERE r_name = 'EUROPE'
             ), eucost AS (
               SELECT l_partkey, s_name, s_acctbal, n_name,
-                CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                  / CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
+                {_sql_dec_sum("l_extendedprice", 2)}
+                  / {_sql_dec_sum("l_quantity", 2)}
                   AS unit_cost
               FROM lineitem
               JOIN eu ON l_suppkey = s_suppkey
@@ -10139,10 +10301,10 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id, token, tf, df_docs, rank FROM s WHERE rank <= 3
         """,
-        "stratified_split": """
+        "stratified_split": f"""
             WITH s AS (
               SELECT doc_id, lang || '/' || source AS stratum,
-                ((doc_id % 1000003) * 2654435761) % 1000003 AS h
+                {_mix_sql("doc_id")} AS h
               FROM documents
             ), r AS (
               SELECT doc_id, stratum,
@@ -10248,17 +10410,8 @@ def oracle_sql() -> dict[str, str]:
               row_number() OVER (ORDER BY sort_key, doc_id) AS pos
             FROM h
         """,
-        "resample_ffill": """
-            WITH obs AS (
-              SELECT user_id,
-                (epoch_ns(ts) // 1000000000) // 3600 AS oslot,
-                value,
-                row_number() OVER (
-                  PARTITION BY user_id, (epoch_ns(ts) // 1000000000) // 3600
-                  ORDER BY epoch_ns(ts) // 1000000000 DESC, value DESC
-                ) AS rn
-              FROM events
-            ), d AS (
+        "resample_ffill": f"""
+            WITH {_HOURLY_OBS}, d AS (
               SELECT user_id, oslot, value,
                 lead(oslot) OVER (PARTITION BY user_id ORDER BY oslot) AS nxt
               FROM obs WHERE rn = 1
@@ -10577,7 +10730,7 @@ def oracle_sql() -> dict[str, str]:
                    make_timestamp(bucket) AS window_start
             FROM r WHERE rn = 1
         """,
-        "bfs_supply_chain": """
+        "bfs_supply_chain": f"""
             WITH e0 AS (
               SELECT DISTINCT CAST(l_partkey AS BIGINT) AS s,
                               CAST(-l_suppkey AS BIGINT) - 1 AS d
@@ -10586,28 +10739,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT s, d FROM e0 UNION SELECT d AS s, s AS d FROM e0
             ), r0 AS (
               SELECT CAST(-2 AS BIGINT) AS node, CAST(0 AS INTEGER) AS hop
-            ), f1 AS (
-              SELECT e.d AS node, CAST(1 AS INTEGER) AS hop
-              FROM r0 JOIN e ON e.s = r0.node WHERE r0.hop = 0
-            ), r1 AS (
-              SELECT node, MIN(hop) AS hop FROM (
-                SELECT * FROM r0 UNION ALL SELECT * FROM f1
-              ) GROUP BY node
-            ), f2 AS (
-              SELECT e.d AS node, CAST(2 AS INTEGER) AS hop
-              FROM r1 JOIN e ON e.s = r1.node WHERE r1.hop = 1
-            ), r2 AS (
-              SELECT node, MIN(hop) AS hop FROM (
-                SELECT * FROM r1 UNION ALL SELECT * FROM f2
-              ) GROUP BY node
-            ), f3 AS (
-              SELECT e.d AS node, CAST(3 AS INTEGER) AS hop
-              FROM r2 JOIN e ON e.s = r2.node WHERE r2.hop = 2
-            ), r3 AS (
-              SELECT node, MIN(hop) AS hop FROM (
-                SELECT * FROM r2 UNION ALL SELECT * FROM f3
-              ) GROUP BY node
-            )
+            ), {_bfs_rounds_sql(3)}
             SELECT hop, CAST(COUNT(*) AS BIGINT) AS n_nodes,
                    CAST(SUM(node) AS BIGINT) AS node_checksum
             FROM r3 GROUP BY hop
@@ -11055,10 +11187,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT user_id, event_id AS changepoint_id, cusum
             FROM r WHERE rn = 1
         """,
-        "ab_test_lift": """
+        "ab_test_lift": f"""
             WITH u AS (
               SELECT user_id,
-                CASE WHEN ((user_id % 1000003) * 2654435761) % 1000003 % 2 = 0
+                CASE WHEN {_mix_sql("user_id")} % 2 = 0
                      THEN 'A' ELSE 'B' END AS arm,
                 MAX(CASE WHEN event_type = 'purchase' AND value > 200.0 THEN 1 ELSE 0 END) AS purchased
               FROM events GROUP BY 1, 2
@@ -11088,16 +11220,7 @@ def oracle_sql() -> dict[str, str]:
                 ) AS z_stat
             FROM w
         """,
-        "modern_sql_sugar": """
-            SELECT l_returnflag,
-                   l_linestatus,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                     AS revenue,
-                   revenue / COUNT(*) AS avg_revenue,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM lineitem
-            GROUP BY ALL
-        """,
+        "modern_sql_sugar": _MODERN_SQL_SUGAR,
         "mutual_information": """
             WITH cells AS (
               SELECT lang AS x, source AS y, CAST(COUNT(*) AS BIGINT) AS n_xy
@@ -11196,45 +11319,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT lang, doc_id, weight, priority, rank FROM r WHERE rank <= 5
         """,
-        "funnel_steps": """
-            WITH s1 AS (
-              SELECT user_id AS u, MIN(ts) AS t1 FROM events
-              WHERE event_type = 'view' GROUP BY 1
-            ),
-            s2 AS (
-              SELECT e.user_id AS u, s1.t1, MIN(e.ts) AS tp
-              FROM events e JOIN s1 ON e.user_id = s1.u
-              WHERE e.event_type = 'click' AND e.ts > s1.t1
-                AND e.ts <= s1.t1 + INTERVAL 2592000 SECOND
-              GROUP BY 1, 2
-            ),
-            s3 AS (
-              SELECT e.user_id AS u, s2.t1, MIN(e.ts) AS tp
-              FROM events e JOIN s2 ON e.user_id = s2.u
-              WHERE e.event_type = 'purchase' AND e.ts > s2.tp
-                AND e.ts <= s2.t1 + INTERVAL 2592000 SECOND
-              GROUP BY 1, 2
-            ),
-            c AS (
-              SELECT CAST(1 AS BIGINT) AS step_index, 'view' AS step,
-                CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_users
-              UNION ALL
-              SELECT 2, 'click', CAST((SELECT COUNT(*) FROM s2) AS BIGINT)
-              UNION ALL
-              SELECT 3, 'purchase', CAST((SELECT COUNT(*) FROM s3) AS BIGINT)
-            ),
-            r AS (
-              SELECT step_index, step, n_users,
-                FIRST_VALUE(n_users) OVER (ORDER BY step_index) AS n1,
-                COALESCE(LAG(n_users) OVER (ORDER BY step_index), n_users) AS np
-              FROM c
-            )
-            SELECT step_index, step, n_users,
-              CAST(1000000 * n_users // n1 AS BIGINT) AS conv_from_first_micro,
-              CAST(1000000 * n_users // nullif(np, 0) AS BIGINT)
-                AS conv_from_prev_micro
-            FROM r WHERE n1 > 0
-        """,
+        "funnel_steps": _funnel_oracle_sql(["view", "click", "purchase"], 30 * 86400),
         "zipf_slope": f"""
             WITH tok AS (
               SELECT lang,
@@ -11282,21 +11367,7 @@ def oracle_sql() -> dict[str, str]:
             FROM s2
         """,
         "pmi_cooccur": f"""
-            WITH t AS (
-              SELECT doc_id,
-                string_split_regex({_NORM_TEXT}, '\\s+') AS l
-              FROM documents
-            ),
-            tok AS (
-              SELECT doc_id, unnest(l) AS token,
-                generate_subscripts(l, 1) AS pos
-              FROM t
-            ),
-            tk AS (
-              SELECT doc_id, token,
-                ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS p
-              FROM tok WHERE length(token) > 0
-            ),
+            WITH {_DOC_TOKEN_POS},
             pairs AS (
               SELECT a.token AS a, b.token AS b
               FROM tk a JOIN tk b
@@ -11414,20 +11485,7 @@ def oracle_sql() -> dict[str, str]:
             FROM c
         """,
         "kneser_ney": f"""
-            WITH t AS (
-              SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-              FROM documents
-            ),
-            tok AS (
-              SELECT doc_id, unnest(l) AS token,
-                generate_subscripts(l, 1) AS pos
-              FROM t
-            ),
-            tk AS (
-              SELECT doc_id, token,
-                ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS p
-              FROM tok WHERE length(token) > 0
-            ),
+            WITH {_DOC_TOKEN_POS},
             bg AS (
               SELECT a.token AS w1, b.token AS w2,
                 CAST(COUNT(*) AS BIGINT) AS c12
@@ -11452,20 +11510,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE c12 >= 3
         """,
         "textrank_keywords": f"""
-            WITH t AS (
-              SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-              FROM documents
-            ),
-            tok AS (
-              SELECT doc_id, unnest(l) AS token,
-                generate_subscripts(l, 1) AS pos
-              FROM t
-            ),
-            tk AS (
-              SELECT doc_id, token,
-                ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS p
-              FROM tok WHERE length(token) > 0
-            ),
+            WITH {_DOC_TOKEN_POS},
             pr AS (
               SELECT a.token AS a, b.token AS b, CAST(COUNT(*) AS BIGINT) AS n
               FROM tk a JOIN tk b
@@ -11483,49 +11528,7 @@ def oracle_sql() -> dict[str, str]:
             outw AS (
               SELECT src, CAST(SUM(w) AS BIGINT) AS out_w FROM edges GROUP BY src
             ),
-            r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
-            c1 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r0 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r1 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c1 c ON n.node = c.node
-            ),
-            c2 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r1 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r2 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c2 c ON n.node = c.node
-            ),
-            c3 AS (
-              SELECT e.dst AS node,
-                CAST(SUM((CAST(r.r AS HUGEINT) * e.w) // o.out_w) AS BIGINT) AS s
-              FROM edges e
-              JOIN outw o ON e.src = o.src
-              JOIN r2 r ON r.node = e.src
-              GROUP BY e.dst
-            ),
-            r3 AS (
-              SELECT n.node,
-                CAST(150000 + (CAST(850000 AS HUGEINT) * COALESCE(c.s, 0)) // 1000000
-                     AS BIGINT) AS r
-              FROM nodes n LEFT JOIN c3 c ON n.node = c.node
-            )
+            {_pagerank_rounds_sql(3)}
             SELECT node AS token, r AS rank_micro
             FROM r3 ORDER BY r DESC, node LIMIT 20
         """,
@@ -11552,8 +11555,9 @@ def oracle_sql() -> dict[str, str]:
         f" p{l} AS p, t{l} AS tt, h{l} AS h, m{l} AS m FROM g"
         for l in _acf_lags
     )
-    oracles["autocorrelation"] = f"""
-        WITH pts AS ({_MONTHLY_PTS}),
+    # CTEs ending in scored(nation, lag, n, n_used, num, den): the lag-1..6
+    # autocorrelation numerator and denominator per nation series.
+    _ACF_SCORED = f"""pts AS ({_MONTHLY_PTS}),
         lagged AS (
           SELECT nation, v, {_acf_lagcols}
           FROM pts WINDOW w AS (PARTITION BY nation ORDER BY t)
@@ -11573,7 +11577,9 @@ def oracle_sql() -> dict[str, str]:
               + CAST(m AS HUGEINT) * s * s AS num,
             CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * q - s * s) AS den
           FROM stacked
-        )
+        )"""
+    oracles["autocorrelation"] = f"""
+        WITH {_ACF_SCORED}
         SELECT nation, lag, n, n_used,
           CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1000000.0)
                AS BIGINT) AS acf_micro
@@ -11660,26 +11666,8 @@ def oracle_sql() -> dict[str, str]:
             * 1000000.0) AS BIGINT) AS iv_micro
         FROM t WHERE n_pos > 0 AND n_neg > 0
     """
-    oracles["adamic_adar"] = """
-        WITH j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
-        e AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM j CROSS JOIN m
-          WHERE wt * np * 10 >= 11 * tot AND src <> dst
-        ),
+    oracles["adamic_adar"] = f"""
+        WITH {_strong_trade_sql()},
         adj AS MATERIALIZED (
           SELECT a AS z, b AS x FROM e UNION ALL SELECT b AS z, a AS x FROM e
         ),
@@ -11701,29 +11689,8 @@ def oracle_sql() -> dict[str, str]:
         SELECT p.a, p.b, p.n_common, p.aa_micro
         FROM pairs p ANTI JOIN e ON p.a = e.a AND p.b = e.b
     """
-    _STRONG_TRADE_E = """
-        j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
-        e AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM j CROSS JOIN m
-          WHERE wt * np * 10 >= 11 * tot AND src <> dst
-        )
-    """
     oracles["harmonic_centrality"] = f"""
-        WITH {_STRONG_TRADE_E},
+        WITH {_strong_trade_sql()} ,
         und AS MATERIALIZED (
           SELECT a AS s, b AS d FROM e UNION ALL SELECT b AS s, a AS d FROM e
         ),
@@ -11794,10 +11761,7 @@ def oracle_sql() -> dict[str, str]:
         FROM st JOIN nn ON st.nation = nn.nation AND st.i = nn.n
     """
     oracles["heaps_law"] = f"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-          FROM documents
-        ),
+        WITH {_DOC_TOKENS},
         tk AS (SELECT doc_id, unnest(l) AS token FROM t),
         tkf AS MATERIALIZED (
           SELECT doc_id, token FROM tk WHERE length(token) > 0
@@ -11888,10 +11852,7 @@ def oracle_sql() -> dict[str, str]:
         FROM a
     """
     oracles["sparse_cosine"] = f"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-          FROM documents
-        ),
+        WITH {_DOC_TOKENS},
         tk AS (SELECT doc_id, unnest(l) AS token FROM t),
         tkf AS (SELECT doc_id, token FROM tk WHERE length(token) > 0),
         tf AS (
@@ -11930,8 +11891,9 @@ def oracle_sql() -> dict[str, str]:
         SELECT doc_a, doc_b, dot, cos_micro
         FROM scored WHERE cos_micro >= 500000
     """
-    oracles["welch_ttest"] = """
-        WITH s AS (
+    # Order-value cents of 1-URGENT (a) vs 5-LOW (b) orders: CTE f holds
+    # each side's count, exact sum and sum of squares as doubles.
+    _URGENT_LOW_MOMENTS = """s AS (
           SELECT (o_orderpriority = '1-URGENT') AS is_a,
             CAST(round(o_totalprice * 100) AS BIGINT) AS c
           FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
@@ -11952,7 +11914,9 @@ def oracle_sql() -> dict[str, str]:
             CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
             CAST(qa AS DOUBLE) AS qad, CAST(qb AS DOUBLE) AS qbd
           FROM m WHERE n_a >= 2 AND n_b >= 2
-        ),
+        )"""
+    oracles["welch_ttest"] = f"""
+        WITH {_URGENT_LOW_MOMENTS},
         g AS (
           SELECT n_a, n_b, na, nb,
             sad / na AS ma, sbd / nb AS mb,
@@ -11971,10 +11935,7 @@ def oracle_sql() -> dict[str, str]:
         FROM g
     """
     oracles["readability"] = f"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-          FROM documents
-        ),
+        WITH {_DOC_TOKENS},
         tk AS (SELECT doc_id, unnest(l) AS w FROM t),
         tkf AS (SELECT doc_id, w FROM tk WHERE length(w) > 0),
         wc AS (
@@ -12052,19 +12013,8 @@ def oracle_sql() -> dict[str, str]:
         FULL OUTER JOIN firsts f ON l.channel = f.channel
         FULL OUTER JOIN lasts la ON l.channel = la.channel
     """
-    oracles["canonical_docs"] = """
-        WITH RECURSIVE p AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM documents a
-          JOIN documents b ON b.doc_id = a.doc_id + 1 AND b.lang = a.lang
-        ), sym AS (
-          SELECT id_a AS s, id_b AS d FROM p
-          UNION ALL SELECT id_b, id_a FROM p
-        ), reach(n, r) AS (
-          SELECT s, s FROM sym
-          UNION
-          SELECT sym.s, reach.r FROM sym JOIN reach ON sym.d = reach.n
-        ), comp AS (
+    oracles["canonical_docs"] = f"""
+        WITH RECURSIVE {_ADJACENT_DUP_REACH}, comp AS (
           SELECT n AS node, MIN(r) AS component FROM reach GROUP BY n
         ),
         lab AS (
@@ -12087,19 +12037,7 @@ def oracle_sql() -> dict[str, str]:
         FROM lab JOIN reps ON lab.cmp = reps.cmp
     """
     oracles["ngram_novelty"] = f"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-          FROM documents
-        ),
-        tok AS (
-          SELECT doc_id, unnest(l) AS token, generate_subscripts(l, 1) AS pos
-          FROM t
-        ),
-        tk AS (
-          SELECT doc_id, token,
-            ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS p
-          FROM tok WHERE length(token) > 0
-        ),
+        WITH {_DOC_TOKEN_POS},
         grams AS MATERIALIZED (
           SELECT DISTINCT a.doc_id,
             a.token || ' ' || b.token || ' ' || c.token AS g
@@ -12191,13 +12129,9 @@ def oracle_sql() -> dict[str, str]:
             AS ltv_micro
         FROM curve c JOIN sizes s ON c.cohort_month = s.cohort_month
     """
-    oracles["anova_f"] = """
-        WITH r AS (
-          SELECT o_orderpriority AS g,
-            CAST(round(o_totalprice * 100) AS BIGINT) AS c
-          FROM orders WHERE o_orderpriority IS NOT NULL
-        ),
-        grand AS MATERIALIZED (
+    # One-way ANOVA over CTE r(g, c): F and eta² in micro, the
+    # between-group sum of squares in pico (stats.anova_f's algebra).
+    _ANOVA_OF_R = """grand AS MATERIALIZED (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
             SUM(CAST(c AS HUGEINT)) AS s,
             SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS q
@@ -12235,7 +12169,14 @@ def oracle_sql() -> dict[str, str]:
           CAST(floor(
             CAST(a - b2 AS DOUBLE) / (1000000000000.0 - CAST(b2 AS DOUBLE))
             * 1000000.0) AS BIGINT) AS eta2_micro
-        FROM fin
+        FROM fin"""
+    oracles["anova_f"] = f"""
+        WITH r AS (
+          SELECT o_orderpriority AS g,
+            CAST(round(o_totalprice * 100) AS BIGINT) AS c
+          FROM orders WHERE o_orderpriority IS NOT NULL
+        ),
+        {_ANOVA_OF_R}
     """
     oracles["kendall_tau"] = """
         WITH ser AS MATERIALIZED (
@@ -12356,16 +12297,13 @@ def oracle_sql() -> dict[str, str]:
         FROM wt WHERE t > 0
         GROUP BY 1
     """
-    oracles["sssp_trade"] = """
+    oracles["sssp_trade"] = f"""
         WITH RECURSIVE e AS MATERIALIZED (
           SELECT CAST(s.s_nationkey AS BIGINT) AS src,
             CAST(c.c_nationkey AS BIGINT) AS dst,
             CAST(100 - COUNT(DISTINCT
               year(l.l_shipdate) * 12 + month(l.l_shipdate)) AS BIGINT) AS w
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
+          {_TRADE_LINES}
           GROUP BY 1, 2
         ),
         paths(node, d, depth) AS (
@@ -12378,8 +12316,10 @@ def oracle_sql() -> dict[str, str]:
         SELECT node, CAST(MIN(d) AS BIGINT) AS dist
         FROM paths GROUP BY 1
     """
-    oracles["kaplan_meier"] = """
-        WITH h AS (SELECT MAX(o_orderdate) AS hz FROM orders),
+    # Time to repurchase per order (_repurchase_subjects): CTE per_t
+    # holds, per segment and duration t in days, the d events and the
+    # c censored last orders.
+    _REPURCHASE_PER_T = """h AS (SELECT MAX(o_orderdate) AS hz FROM orders),
         base AS (
           SELECT c.c_mktsegment AS segment, o.o_orderdate,
             LEAD(o.o_orderdate) OVER (
@@ -12399,7 +12339,9 @@ def oracle_sql() -> dict[str, str]:
             CAST(SUM(CASE WHEN e THEN 1 ELSE 0 END) AS BIGINT) AS d,
             CAST(SUM(CASE WHEN e THEN 0 ELSE 1 END) AS BIGINT) AS c
           FROM r GROUP BY 1, 2
-        ),
+        )"""
+    # _REPURCHASE_PER_T plus staged: each row's number at risk n.
+    _REPURCHASE_AT_RISK = f"""{_REPURCHASE_PER_T},
         staged AS (
           SELECT segment, t, d, c,
             CAST(SUM(d + c) OVER (PARTITION BY segment)
@@ -12408,7 +12350,9 @@ def oracle_sql() -> dict[str, str]:
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
               AS BIGINT) AS n
           FROM per_t
-        ),
+        )"""
+    oracles["kaplan_meier"] = f"""
+        WITH {_REPURCHASE_AT_RISK},
         lf AS (
           SELECT segment, t, d, c, n,
             CAST(CASE WHEN d < n THEN floor(
@@ -12457,7 +12401,20 @@ def oracle_sql() -> dict[str, str]:
         FROM pairs JOIN sh sa ON sa.doc_id = id_a
         WHERE inter * 5 >= 3 * len(sa.s)
     """
-    oracles["diff_in_diff"] = """
+    # diff_in_diff's estimate and its squared standard error: the four
+    # cells' sample variances of the mean, summed.
+    _did_est = """(CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE)
+             - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE))
+            - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE)
+               - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE))"""
+    _did_var = "\n            + ".join(
+        f"""((CAST(q_{g} AS DOUBLE)
+              - CAST(s_{g} AS DOUBLE) * CAST(s_{g} AS DOUBLE)
+                / CAST(n_{g} AS DOUBLE))
+             / (CAST(n_{g} AS DOUBLE) - 1.0)) / CAST(n_{g} AS DOUBLE)"""
+        for g in ("t_post", "t_pre", "c_post", "c_pre")
+    )
+    oracles["diff_in_diff"] = f"""
         WITH r AS (
           SELECT (c.c_mktsegment = 'BUILDING') AS tr,
             (o.o_orderdate >= DATE '1998-07-01') AS po,
@@ -12493,51 +12450,15 @@ def oracle_sql() -> dict[str, str]:
         )
         SELECT n_t_pre, n_t_post, n_c_pre, n_c_post,
           CAST(floor((
-            (CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE)
-             - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE))
-            - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE)
-               - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE))
+            {_did_est}
           ) * 10000.0) AS BIGINT) AS did_micro,
           CAST(floor(sqrt(
-            ((CAST(q_t_post AS DOUBLE)
-              - CAST(s_t_post AS DOUBLE) * CAST(s_t_post AS DOUBLE)
-                / CAST(n_t_post AS DOUBLE))
-             / (CAST(n_t_post AS DOUBLE) - 1.0)) / CAST(n_t_post AS DOUBLE)
-            + ((CAST(q_t_pre AS DOUBLE)
-              - CAST(s_t_pre AS DOUBLE) * CAST(s_t_pre AS DOUBLE)
-                / CAST(n_t_pre AS DOUBLE))
-             / (CAST(n_t_pre AS DOUBLE) - 1.0)) / CAST(n_t_pre AS DOUBLE)
-            + ((CAST(q_c_post AS DOUBLE)
-              - CAST(s_c_post AS DOUBLE) * CAST(s_c_post AS DOUBLE)
-                / CAST(n_c_post AS DOUBLE))
-             / (CAST(n_c_post AS DOUBLE) - 1.0)) / CAST(n_c_post AS DOUBLE)
-            + ((CAST(q_c_pre AS DOUBLE)
-              - CAST(s_c_pre AS DOUBLE) * CAST(s_c_pre AS DOUBLE)
-                / CAST(n_c_pre AS DOUBLE))
-             / (CAST(n_c_pre AS DOUBLE) - 1.0)) / CAST(n_c_pre AS DOUBLE)
+            {_did_var}
           ) * 10000.0) AS BIGINT) AS se_micro,
           CAST(floor((
-            (CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE)
-             - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE))
-            - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE)
-               - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE))
+            {_did_est}
           ) / sqrt(
-            ((CAST(q_t_post AS DOUBLE)
-              - CAST(s_t_post AS DOUBLE) * CAST(s_t_post AS DOUBLE)
-                / CAST(n_t_post AS DOUBLE))
-             / (CAST(n_t_post AS DOUBLE) - 1.0)) / CAST(n_t_post AS DOUBLE)
-            + ((CAST(q_t_pre AS DOUBLE)
-              - CAST(s_t_pre AS DOUBLE) * CAST(s_t_pre AS DOUBLE)
-                / CAST(n_t_pre AS DOUBLE))
-             / (CAST(n_t_pre AS DOUBLE) - 1.0)) / CAST(n_t_pre AS DOUBLE)
-            + ((CAST(q_c_post AS DOUBLE)
-              - CAST(s_c_post AS DOUBLE) * CAST(s_c_post AS DOUBLE)
-                / CAST(n_c_post AS DOUBLE))
-             / (CAST(n_c_post AS DOUBLE) - 1.0)) / CAST(n_c_post AS DOUBLE)
-            + ((CAST(q_c_pre AS DOUBLE)
-              - CAST(s_c_pre AS DOUBLE) * CAST(s_c_pre AS DOUBLE)
-                / CAST(n_c_pre AS DOUBLE))
-             / (CAST(n_c_pre AS DOUBLE) - 1.0)) / CAST(n_c_pre AS DOUBLE)
+            {_did_var}
           ) * 1000000.0) AS BIGINT) AS t_micro
         FROM m
         WHERE n_t_pre >= 2 AND n_t_post >= 2 AND n_c_pre >= 2
@@ -12578,15 +12499,17 @@ def oracle_sql() -> dict[str, str]:
             AS r2_micro
         FROM f WHERE n >= 2 AND vx > 0 AND vy > 0
     """
-    oracles["mann_kendall"] = """
-        WITH ser AS MATERIALIZED (
+    # _monthly_priority_revenue as CTE ser(priority, m, rev).
+    _PRIORITY_SER = """ser AS MATERIALIZED (
           SELECT o_orderpriority AS priority,
             CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
                  AS BIGINT) AS m,
             CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                  AS BIGINT) AS rev
           FROM orders GROUP BY 1, 2
-        ),
+        )"""
+    oracles["mann_kendall"] = f"""
+        WITH {_PRIORITY_SER},
         s AS (
           SELECT a.priority,
             CAST(SUM(sign(b.rev - a.rev)) AS BIGINT) AS s_stat
@@ -12710,10 +12633,10 @@ def oracle_sql() -> dict[str, str]:
             * 1000000.0) AS BIGINT) AS frac_pos_micro
         FROM binned GROUP BY 1
     """
-    oracles["cuped_spend"] = """
+    oracles["cuped_spend"] = f"""
         WITH units AS MATERIALIZED (
           SELECT user_id,
-            CASE WHEN ((user_id % 1000003) * 2654435761) % 1000003 % 2 = 0
+            CASE WHEN {_mix_sql("user_id")} % 2 = 0
                  THEN 'A' ELSE 'B' END AS arm,
             CAST(SUM(CASE WHEN event_type = 'purchase'
                   AND ts >= TIMESTAMP '2024-01-16 00:00:00'
@@ -12865,37 +12788,8 @@ def oracle_sql() -> dict[str, str]:
             AS BIGINT) AS forecast_micro
         FROM st JOIN arrs ON st.nation = arrs.nation AND st.i = arrs.n
     """
-    oracles["survival_summary"] = """
-        WITH h AS (SELECT MAX(o_orderdate) AS hz FROM orders),
-        base AS (
-          SELECT c.c_mktsegment AS segment, o.o_orderdate,
-            LEAD(o.o_orderdate) OVER (
-              PARTITION BY o.o_custkey
-              ORDER BY o.o_orderdate, o.o_orderkey) AS nxt
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        ),
-        r AS (
-          SELECT segment,
-            CAST(datediff('day', o_orderdate,
-              COALESCE(nxt, (SELECT hz FROM h))) AS BIGINT) AS t,
-            (nxt IS NOT NULL) AS e
-          FROM base
-        ),
-        per_t AS (
-          SELECT segment, t,
-            CAST(SUM(CASE WHEN e THEN 1 ELSE 0 END) AS BIGINT) AS d,
-            CAST(SUM(CASE WHEN e THEN 0 ELSE 1 END) AS BIGINT) AS c
-          FROM r GROUP BY 1, 2
-        ),
-        staged AS (
-          SELECT segment, t, d, c,
-            CAST(SUM(d + c) OVER (PARTITION BY segment)
-              - COALESCE(SUM(d + c) OVER (
-                  PARTITION BY segment ORDER BY t
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS n
-          FROM per_t
-        ),
+    oracles["survival_summary"] = f"""
+        WITH {_REPURCHASE_AT_RISK},
         lf AS (
           SELECT segment, t,
             CAST(CASE WHEN d < n THEN floor(
@@ -13070,7 +12964,7 @@ def oracle_sql() -> dict[str, str]:
           AND CAST(np AS DOUBLE) * CAST(syy AS DOUBLE)
               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
     """
-    oracles["levene_bf"] = """
+    oracles["levene_bf"] = f"""
         WITH r0 AS (
           SELECT l_returnflag AS g,
             CAST(round(l_extendedprice * 100) AS BIGINT) AS c0
@@ -13084,66 +12978,10 @@ def oracle_sql() -> dict[str, str]:
             CAST(round(abs(CAST(c0 AS DOUBLE) - m) * 100) AS BIGINT) AS c
           FROM r0 JOIN med USING (g)
         ),
-        grand AS MATERIALIZED (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(c AS HUGEINT)) AS s,
-            SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS q
-          FROM r
-        ),
-        pg AS (
-          SELECT g, CAST(COUNT(*) AS BIGINT) AS ng,
-            SUM(CAST(c AS HUGEINT)) AS sg
-          FROM r GROUP BY 1
-        ),
-        agg AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS k,
-            CAST(SUM(CAST(floor(
-              CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)
-              / (CAST(ng AS DOUBLE) * CAST(q AS DOUBLE))
-              * 1000000000000.0) AS BIGINT)) AS BIGINT) AS a
-          FROM pg CROSS JOIN grand
-        ),
-        fin AS (
-          SELECT agg.k, grand.n, grand.s, grand.q, agg.a,
-            CAST(floor(
-              CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-              / (CAST(n AS DOUBLE) * CAST(q AS DOUBLE))
-              * 1000000000000.0) AS BIGINT) AS b2
-          FROM agg CROSS JOIN grand
-          WHERE agg.k >= 2 AND grand.n > agg.k AND grand.q > 0
-        )
-        SELECT k AS n_groups, n AS n_rows,
-          CAST(a - b2 AS BIGINT) AS ssb_pico,
-          CAST(floor(
-            (CAST(a - b2 AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0))
-            / ((1000000000000.0 - CAST(a AS DOUBLE))
-               / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-            * 1000000.0) AS BIGINT) AS f_micro,
-          CAST(floor(
-            CAST(a - b2 AS DOUBLE) / (1000000000000.0 - CAST(b2 AS DOUBLE))
-            * 1000000.0) AS BIGINT) AS eta2_micro
-        FROM fin
+        {_ANOVA_OF_R}
     """
-    oracles["jaccard_neighbors"] = """
-        WITH j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
-        e AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM j CROSS JOIN m
-          WHERE wt * np * 10 >= 11 * tot AND src <> dst
-        ),
+    oracles["jaccard_neighbors"] = f"""
+        WITH {_strong_trade_sql()},
         adj AS MATERIALIZED (
           SELECT a AS z, b AS x FROM e UNION ALL SELECT b AS z, a AS x FROM e
         ),
@@ -13178,29 +13016,8 @@ def oracle_sql() -> dict[str, str]:
     oracles["jaccard_capped"] = oracles["jaccard_neighbors"].replace(
         "deg.dg >= 2", "deg.dg >= 2 AND deg.dg <= 12"
     )
-    oracles["cohens_d"] = """
-        WITH s AS (
-          SELECT (o_orderpriority = '1-URGENT') AS is_a,
-            CAST(round(o_totalprice * 100) AS BIGINT) AS c
-          FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-        ),
-        m AS (
-          SELECT
-            CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-            CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-            SUM(CASE WHEN is_a THEN CAST(c AS HUGEINT) END) AS sa,
-            SUM(CASE WHEN NOT is_a THEN CAST(c AS HUGEINT) END) AS sb,
-            SUM(CASE WHEN is_a THEN CAST(c AS HUGEINT) * CAST(c AS HUGEINT) END) AS qa,
-            SUM(CASE WHEN NOT is_a THEN CAST(c AS HUGEINT) * CAST(c AS HUGEINT) END) AS qb
-          FROM s
-        ),
-        f AS (
-          SELECT n_a, n_b,
-            CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-            CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
-            CAST(qa AS DOUBLE) AS qad, CAST(qb AS DOUBLE) AS qbd
-          FROM m WHERE n_a >= 2 AND n_b >= 2
-        ),
+    oracles["cohens_d"] = f"""
+        WITH {_URGENT_LOW_MOMENTS},
         g AS (
           SELECT n_a, n_b,
             sad / na - sbd / nb AS diff,
@@ -13256,7 +13073,7 @@ def oracle_sql() -> dict[str, str]:
                * 10000.0) AS BIGINT) AS delta_micro
         FROM t WHERE nn > n
     """
-    oracles["bootstrap_mean"] = """
+    oracles["bootstrap_mean"] = f"""
         WITH r AS (
           SELECT o_orderkey AS id,
             CAST(round(o_totalprice * 100) AS BIGINT) AS c
@@ -13268,7 +13085,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         u AS (
           SELECT resample, c,
-            (((id * 64 + resample) % 1000003) * 2654435761) % 1000003 AS uu
+            {_mix_sql("(id * 64 + resample)")} AS uu
           FROM x
         ),
         mm AS (
@@ -13339,21 +13156,8 @@ def oracle_sql() -> dict[str, str]:
           CAST((cum * 1000000) // alltot AS BIGINT) AS cum_share_micro
         FROM c
     """
-    oracles["hits_trade"] = """
-        WITH j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
+    oracles["hits_trade"] = f"""
+        WITH {_STRONG_TRADE_JM},
         e AS MATERIALIZED (
           SELECT DISTINCT CAST(src AS BIGINT) AS s, CAST(dst AS BIGINT) AS d
           FROM j CROSS JOIN m
@@ -13392,26 +13196,8 @@ def oracle_sql() -> dict[str, str]:
     # MATERIALIZED: each references its predecessor three times, and
     # inlining would re-expand the base rollup 3^rounds times.
     _truss_rounds = 6
-    _truss_cte = ["""
-        WITH j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
-        e0 AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM j CROSS JOIN m
-          WHERE wt * np * 10 >= 11 * tot AND src <> dst
-        )"""]
+    _truss_cte = [f"""
+        WITH {_strong_trade_sql("e0")}"""]
     for _i in range(_truss_rounds):
         _truss_cte.append(f""",
         tri{_i} AS MATERIALIZED (
@@ -13438,21 +13224,8 @@ def oracle_sql() -> dict[str, str]:
         JOIN sup{_truss_rounds - 1} s ON s.a = e.a AND s.b = e.b
     """)
     oracles["k_truss_trade"] = "".join(_truss_cte)
-    oracles["reciprocity_trade"] = """
-        WITH j AS MATERIALIZED (
-          SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-            CAST(COUNT(*) AS BIGINT) AS wt
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          GROUP BY 1, 2
-        ),
-        m AS MATERIALIZED (
-          SELECT CAST(SUM(wt) AS BIGINT) AS tot,
-            CAST(COUNT(*) AS BIGINT) AS np
-          FROM j
-        ),
+    oracles["reciprocity_trade"] = f"""
+        WITH {_STRONG_TRADE_JM},
         e AS MATERIALIZED (
           SELECT DISTINCT CAST(src AS BIGINT) AS s, CAST(dst AS BIGINT) AS d
           FROM j CROSS JOIN m
@@ -13639,171 +13412,18 @@ def oracle_sql() -> dict[str, str]:
                AS BIGINT) AS tmean_micro
         FROM agg WHERE n_kept > 0
     """
-    # minhash_provable: the FULL MinHash-LSH pipeline replayed in SQL —
-    # md5-prefix shingle hashes, the same 16 affine transforms, raw
-    # min-tuple band keys, then a posting-join exact-Jaccard verify
-    # (list_intersect at this slice size would be fine, but the posting
-    # join is the scale-honest form).
-    oracles["minhash_provable"] = """
-        WITH d AS (
-          SELECT doc_id,
-            string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-          FROM documents WHERE doc_id < 1500
-        ),
-        sh AS MATERIALIZED (
-          SELECT doc_id, UNNEST(list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 1)),
-            i -> array_to_string(toks[i:i+2], ' ')))) AS shingle
-          FROM d
-        ),
-        h AS MATERIALIZED (
-          SELECT DISTINCT doc_id,
-            CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)
-              % 2147483647 AS hv
-          FROM sh
-        ),
-        sig AS MATERIALIZED (
-          SELECT doc_id,
-            MIN((506952114 * hv + 40503) % 2147483647) AS m0,
-            MIN((1520856342 * hv + 81006) % 2147483647) AS m1,
-            MIN((387276923 * hv + 121509) % 2147483647) AS m2,
-            MIN((1401181151 * hv + 162012) % 2147483647) AS m3,
-            MIN((267601732 * hv + 202515) % 2147483647) AS m4,
-            MIN((1281505960 * hv + 243018) % 2147483647) AS m5,
-            MIN((147926541 * hv + 283521) % 2147483647) AS m6,
-            MIN((1161830769 * hv + 324024) % 2147483647) AS m7,
-            MIN((28251350 * hv + 364527) % 2147483647) AS m8,
-            MIN((1042155578 * hv + 405030) % 2147483647) AS m9,
-            MIN((2056059806 * hv + 445533) % 2147483647) AS m10,
-            MIN((922480387 * hv + 486036) % 2147483647) AS m11,
-            MIN((1936384615 * hv + 526539) % 2147483647) AS m12,
-            MIN((802805196 * hv + 567042) % 2147483647) AS m13,
-            MIN((1816709424 * hv + 607545) % 2147483647) AS m14,
-            MIN((683130005 * hv + 648048) % 2147483647) AS m15
-          FROM h GROUP BY doc_id
-        ),
-        bandkeys AS MATERIALIZED (
-          SELECT doc_id, 0 AS band, CAST(m0 AS VARCHAR) || ',' || CAST(m1 AS VARCHAR) || ',' || CAST(m2 AS VARCHAR) || ',' || CAST(m3 AS VARCHAR) AS bh FROM sig
-          UNION ALL SELECT doc_id, 1 AS band, CAST(m4 AS VARCHAR) || ',' || CAST(m5 AS VARCHAR) || ',' || CAST(m6 AS VARCHAR) || ',' || CAST(m7 AS VARCHAR) AS bh FROM sig
-          UNION ALL SELECT doc_id, 2 AS band, CAST(m8 AS VARCHAR) || ',' || CAST(m9 AS VARCHAR) || ',' || CAST(m10 AS VARCHAR) || ',' || CAST(m11 AS VARCHAR) AS bh FROM sig
-          UNION ALL SELECT doc_id, 3 AS band, CAST(m12 AS VARCHAR) || ',' || CAST(m13 AS VARCHAR) || ',' || CAST(m14 AS VARCHAR) || ',' || CAST(m15 AS VARCHAR) AS bh FROM sig
-        ),
-        cand AS MATERIALIZED (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bandkeys a
-          JOIN bandkeys b ON b.band = a.band AND b.bh = a.bh
-            AND a.doc_id < b.doc_id
-        ),
-        cnt AS MATERIALIZED (
-          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nh FROM h GROUP BY 1
-        ),
-        common AS (
-          SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS nc
-          FROM cand c
-          JOIN h x ON x.doc_id = c.id_a
-          JOIN h y ON y.doc_id = c.id_b AND y.hv = x.hv
-          GROUP BY 1, 2
-        )
-        SELECT cm.id_a, cm.id_b,
-          CAST(cm.nc AS DOUBLE)
-            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) AS jaccard
-        FROM common cm
-        JOIN cnt na ON na.doc_id = cm.id_a
-        JOIN cnt nb ON nb.doc_id = cm.id_b
-        WHERE CAST(cm.nc AS DOUBLE)
-            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) >= 0.5
-    """
+    # minhash_provable: the FULL MinHash-LSH pipeline replayed in SQL
+    # with 16 affine transforms over the first 1500 documents.
+    oracles["minhash_provable"] = _minhash_near_dup_sql(16, " WHERE doc_id < 1500")
     # minhash_near_dup (VERDICT r11 order #3): the same md5-family
     # replay as minhash_provable, but UNBOUNDED scope and the gate's
-    # 32-hash/8-band configuration. Generated from the engine's own
-    # affine constants (operators.dedup._P/_A_MULT/_B_MULT) so the SQL
-    # stays in lock-step with minhash_cols by construction instead of
-    # by hand-copied literals.
-    _mh_P, _mh_A, _mh_B = dd._P, dd._A_MULT, dd._B_MULT
-    _mh_mins = ",\n            ".join(
-        f"MIN(({(2 * j + 1) * _mh_A % _mh_P} * hv + {(j + 1) * _mh_B % _mh_P})"
-        f" % {_mh_P}) AS m{j}"
-        for j in range(32)
-    )
-    _mh_bands = "\n          UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS bh FROM sig".format(
-            b=b,
-            key=" || ',' || ".join(
-                f"CAST(m{j} AS VARCHAR)" for j in range(b * 4, b * 4 + 4)
-            ),
-        )
-        for b in range(8)
-    )
-    oracles["minhash_near_dup"] = f"""
-        WITH d AS (
-          SELECT doc_id,
-            string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-          FROM documents
-        ),
-        sh AS MATERIALIZED (
-          SELECT doc_id, UNNEST(list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 1)),
-            i -> array_to_string(toks[i:i+2], ' ')))) AS shingle
-          FROM d
-        ),
-        h AS MATERIALIZED (
-          SELECT DISTINCT doc_id,
-            CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)
-              % {_mh_P} AS hv
-          FROM sh
-        ),
-        sig AS MATERIALIZED (
-          SELECT doc_id,
-            {_mh_mins}
-          FROM h GROUP BY doc_id
-        ),
-        bandkeys AS MATERIALIZED (
-          {_mh_bands}
-        ),
-        cand AS MATERIALIZED (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bandkeys a
-          JOIN bandkeys b ON b.band = a.band AND b.bh = a.bh
-            AND a.doc_id < b.doc_id
-        ),
-        cnt AS MATERIALIZED (
-          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nh FROM h GROUP BY 1
-        ),
-        common AS (
-          SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS nc
-          FROM cand c
-          JOIN h x ON x.doc_id = c.id_a
-          JOIN h y ON y.doc_id = c.id_b AND y.hv = x.hv
-          GROUP BY 1, 2
-        )
-        SELECT cm.id_a, cm.id_b,
-          CAST(cm.nc AS DOUBLE)
-            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) AS jaccard
-        FROM common cm
-        JOIN cnt na ON na.doc_id = cm.id_a
-        JOIN cnt nb ON nb.doc_id = cm.id_b
-        WHERE CAST(cm.nc AS DOUBLE)
-            / CAST(na.nh + nb.nh - cm.nc AS DOUBLE) >= 0.5
-    """
+    # 32-hash/8-band configuration.
+    oracles["minhash_near_dup"] = _minhash_near_dup_sql(32)
     # near_dup_against (round 12): the md5-family cross-corpus replay —
     # parity-tagged union (new = odd tid, base = even), the same 16
     # affine transforms as minhash_provable, raw min-tuple band keys,
     # CROSS-parity collisions only, posting-join exact-Jaccard verify.
     # Generated from the engine's own constants like minhash_near_dup.
-    _nda_mins = ",\n            ".join(
-        f"MIN(({(2 * j + 1) * _mh_A % _mh_P} * hv + {(j + 1) * _mh_B % _mh_P})"
-        f" % {_mh_P}) AS m{j}"
-        for j in range(16)
-    )
-    _nda_bands = "\n          UNION ALL ".join(
-        "SELECT tid, {b} AS band, {key} AS bh FROM sig".format(
-            b=b,
-            key=" || ',' || ".join(
-                f"CAST(m{j} AS VARCHAR)" for j in range(b * 4, b * 4 + 4)
-            ),
-        )
-        for b in range(4)
-    )
     oracles["near_dup_against"] = f"""
         WITH d AS (
           SELECT doc_id * 2 + CASE WHEN doc_id >= 400 THEN 1 ELSE 0 END
@@ -13820,16 +13440,16 @@ def oracle_sql() -> dict[str, str]:
         h AS MATERIALIZED (
           SELECT DISTINCT tid,
             CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)
-              % {_mh_P} AS hv
+              % {dd._P} AS hv
           FROM sh
         ),
         sig AS MATERIALIZED (
           SELECT tid,
-            {_nda_mins}
+            {_minhash_mins_sql(16)}
           FROM h GROUP BY tid
         ),
         bandkeys AS MATERIALIZED (
-          {_nda_bands}
+          {_minhash_bands_sql(4, "tid")}
         ),
         cand AS MATERIALIZED (
           SELECT DISTINCT
@@ -14063,10 +13683,7 @@ def oracle_sql() -> dict[str, str]:
     """
     _tag_values = ", ".join(f"('{k}', {v})" for k, v in sorted(_TAG_TERMS.items()))
     oracles["dictionary_tag"] = f"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex({_NORM_TEXT}, '\\s+') AS l
-          FROM documents
-        ),
+        WITH {_DOC_TOKENS},
         tk AS (
           SELECT doc_id, unnest(l) AS token FROM t
         ),
@@ -14531,7 +14148,7 @@ def oracle_sql() -> dict[str, str]:
     """
     # contamination_lm: eval bigrams priced under the train-slice
     # add-one bigram LM; one unified ln covers seen/unseen.
-    oracles["contamination_lm"] = r"""
+    oracles["contamination_lm"] = rf"""
         WITH tr AS MATERIALIZED (
           SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0
         ),
@@ -14539,17 +14156,7 @@ def oracle_sql() -> dict[str, str]:
           SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
         ),
         tp AS MATERIALIZED (
-          SELECT doc_id, w1, w2 FROM (
-            SELECT doc_id,
-              unnest(list_transform(generate_series(1, len(t) - 1),
-                i -> struct_pack(w1 := t[i], w2 := t[i + 1])),
-                recursive := true)
-            FROM (
-              SELECT doc_id,
-                string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS t
-              FROM tr
-            )
-          ) WHERE w1 <> '' AND w2 <> ''
+          {_doc_bigrams_sql("tr")}
         ),
         corpus AS MATERIALIZED (
           SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM tp GROUP BY 1, 2
@@ -14563,17 +14170,7 @@ def oracle_sql() -> dict[str, str]:
           )
         ),
         ep AS (
-          SELECT doc_id, w1, w2 FROM (
-            SELECT doc_id,
-              unnest(list_transform(generate_series(1, len(t) - 1),
-                i -> struct_pack(w1 := t[i], w2 := t[i + 1])),
-                recursive := true)
-            FROM (
-              SELECT doc_id,
-                string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS t
-              FROM ev
-            )
-          ) WHERE w1 <> '' AND w2 <> ''
+          {_doc_bigrams_sql("ev")}
         ),
         etf AS MATERIALIZED (
           SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
@@ -14672,7 +14269,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         scored AS (
           SELECT doc_id,
-            CAST(((doc_id % 1000003) * 2654435761) % 1000003 AS BIGINT)
+            CAST({_mix_sql("doc_id")} AS BIGINT)
               AS score,
             md5({_NORM_TEXT}) AS fingerprint
           FROM all_docs
@@ -14757,34 +14354,39 @@ def oracle_sql() -> dict[str, str]:
     # pass_at_k: unbiased pass@3 over (order -> line items); the k!
     # cancels, so the estimator is a ratio of falling factorials —
     # numerator crosses zero exactly when n-c < 3. All-integer.
-    oracles["pass_at_k"] = """
-        WITH per AS (
+    # pass@k fixture: per(l_orderkey, n_samples, n_correct) counts an
+    # order's lineitems and its returned ones; _PASS_AT_3 is the
+    # unbiased pass@3 estimate in micro.
+    _PASS_PER = """per AS (
           SELECT l_orderkey,
             CAST(COUNT(*) AS BIGINT) AS n_samples,
             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
                  AS BIGINT) AS n_correct
           FROM lineitem GROUP BY 1
-        )
-        SELECT n_samples, n_correct,
-          CAST(COUNT(*) AS BIGINT) AS n_problems,
-          CAST(1000000 - (CAST(1000000 AS HUGEINT)
+        )"""
+    _PASS_AT_3 = """CAST(1000000 - (CAST(1000000 AS HUGEINT)
               * (n_samples - n_correct)
               * (n_samples - n_correct - 1)
               * (n_samples - n_correct - 2))
             // (CAST(n_samples AS HUGEINT)
-              * (n_samples - 1) * (n_samples - 2)) AS BIGINT)
+              * (n_samples - 1) * (n_samples - 2)) AS BIGINT)"""
+    oracles["pass_at_k"] = f"""
+        WITH {_PASS_PER}
+        SELECT n_samples, n_correct,
+          CAST(COUNT(*) AS BIGINT) AS n_problems,
+          {_PASS_AT_3}
             AS pass_at_k_micro
         FROM per WHERE n_samples >= 3 GROUP BY 1, 2
     """
     # self_consistency: majority-vote accuracy; the struct-min argmax
     # is replayed as arg_min over the encoded key -votes*8 + answer
     # (answers live in [0,7), so the encoding is order-isomorphic).
-    oracles["self_consistency"] = """
+    oracles["self_consistency"] = f"""
         WITH base AS (
           SELECT user_id AS problem_id,
-            (((user_id % 1000003) * 2654435761) % 1000003) % 7 AS gold,
-            (((event_id % 1000003) * 2654435761) % 1000003) AS s,
-            ((((event_id + 13) % 1000003) * 2654435761) % 1000003) % 7 AS alt
+            ({_mix_sql("user_id")}) % 7 AS gold,
+            ({_mix_sql("event_id")}) AS s,
+            ({_mix_sql("(event_id + 13)")}) % 7 AS alt
           FROM events
         ),
         samp AS (
@@ -14884,14 +14486,12 @@ def oracle_sql() -> dict[str, str]:
     # synthetic raters per document; kappa as an exact integer
     # num/den pair plus truncated micro ratio (HUGEINT // truncates
     # toward zero, matching Spark's DECIMAL DIV).
-    oracles["fleiss_kappa"] = """
+    oracles["fleiss_kappa"] = f"""
         WITH rated AS (
           SELECT d.doc_id AS item_id, r.rater,
-            CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003) * 2654435761)
-                     % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003) * 2654435761)
-                   % 1000003) % 4
+            CASE WHEN {_mix_sql("(d.doc_id * 5 + r.rater)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % 4
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.rater + 101)")}) % 4
             END AS category
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
@@ -14990,8 +14590,7 @@ def oracle_sql() -> dict[str, str]:
     oracles["bradley_terry"] = f"""
         WITH src AS MATERIALIZED (
           SELECT l_suppkey % 20 AS i, l_partkey % 20 AS j,
-            ((((l_orderkey * 8 + l_linenumber) % 1000003) * 2654435761)
-             % 1000003) % 2 = 0 AS win
+            ({_mix_sql("(l_orderkey * 8 + l_linenumber)")}) % 2 = 0 AS win
           FROM lineitem WHERE l_suppkey % 20 <> l_partkey % 20
         ),
         m AS MATERIALIZED (
@@ -15061,22 +14660,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # good_turing: count-of-counts + Turing discounts; N_{r+1} by
     # self-join on r+1 (frequency gaps make lead() wrong).
-    oracles["good_turing"] = r"""
-        WITH lists AS (
-          SELECT doc_id,
-            string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS l
-          FROM documents
-        ),
-        toks AS (
-          SELECT unnest(list_transform(
-            generate_series(1, greatest(len(l) - 2, 1)),
-            i -> array_to_string(l[i:i+2], ' '))) AS tok
-          FROM lists
-        ),
-        freq AS (
-          SELECT tok, CAST(COUNT(*) AS BIGINT) AS r
-          FROM toks WHERE length(tok) > 0 GROUP BY 1
-        ),
+    oracles["good_turing"] = rf"""
+        WITH {_TRIGRAM_FREQ},
         cc AS (
           SELECT r, CAST(COUNT(*) AS BIGINT) AS n_r
           FROM freq WHERE r <= 11 GROUP BY 1
@@ -15091,14 +14676,13 @@ def oracle_sql() -> dict[str, str]:
     # retrieval_mrr / ndcg_eval: the shared deterministic ranking
     # fixture — every events user queries 10 candidate docs with
     # Knuth-mixed scores (and graded relevance for NDCG).
-    _rank_fixture = """
+    _rank_fixture = f"""
         users AS (SELECT DISTINCT user_id FROM events),
         cand AS (
           SELECT user_id, d.d,
-            ((((user_id * 16 + d.d) % 1000003) * 2654435761) % 1000003)
+            ({_mix_sql("(user_id * 16 + d.d)")})
               AS s,
-            ((((user_id * 16 + d.d + 3) % 1000003) * 2654435761)
-              % 1000003) % 4 AS rel
+            ({_mix_sql("(user_id * 16 + d.d + 3)")}) % 4 AS rel
           FROM users CROSS JOIN (SELECT unnest(range(0, 10)) AS d) d
         ),
         ranked AS (
@@ -15111,7 +14695,7 @@ def oracle_sql() -> dict[str, str]:
         WITH {_rank_fixture},
         gold AS (
           SELECT user_id AS query_id,
-            CAST(((((user_id + 7) % 1000003) * 2654435761) % 1000003)
+            CAST(({_mix_sql("(user_id + 7)")})
                  % 10 AS BIGINT) AS doc_id
           FROM users
         ),
@@ -15187,12 +14771,12 @@ def oracle_sql() -> dict[str, str]:
     """
     # mcnemar_test: continuity-corrected paired comparison of two
     # deterministic synthetic classifiers; discordant cells only.
-    oracles["mcnemar_test"] = """
+    oracles["mcnemar_test"] = f"""
         WITH scored AS (
           SELECT
-            (((doc_id % 1000003) * 2654435761) % 1000003) % 5 < 3
+            ({_mix_sql("doc_id")}) % 5 < 3
               AS a,
-            ((((doc_id + 29) % 1000003) * 2654435761) % 1000003) % 5 < 3
+            ({_mix_sql("(doc_id + 29)")}) % 5 < 3
               AS b
           FROM documents
         ),
@@ -15217,22 +14801,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # chao1_vocab: bias-corrected Chao1 richness over word trigram
     # types (same gram construction as good_turing).
-    oracles["chao1_vocab"] = r"""
-        WITH lists AS (
-          SELECT doc_id,
-            string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS l
-          FROM documents
-        ),
-        toks AS (
-          SELECT unnest(list_transform(
-            generate_series(1, greatest(len(l) - 2, 1)),
-            i -> array_to_string(l[i:i+2], ' '))) AS tok
-          FROM lists
-        ),
-        freq AS (
-          SELECT tok, CAST(COUNT(*) AS BIGINT) AS r
-          FROM toks WHERE length(tok) > 0 GROUP BY 1
-        )
+    oracles["chao1_vocab"] = rf"""
+        WITH {_TRIGRAM_FREQ}
         SELECT CAST(COUNT(*) AS BIGINT) AS s_obs,
           CAST(SUM(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
           CAST(SUM(CASE WHEN r = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
@@ -15263,10 +14833,10 @@ def oracle_sql() -> dict[str, str]:
     """
     # ablation_arms: bit i of the Knuth bucket selects arm i; the
     # co-keyed self-join yields the 8x8 overlap matrix.
-    oracles["ablation_arms"] = """
+    oracles["ablation_arms"] = f"""
         WITH m AS (
           SELECT doc_id,
-            ((doc_id % 1000003) * 2654435761) % 1000003 AS mm
+            {_mix_sql("doc_id")} AS mm
           FROM documents
         ),
         ex AS (
@@ -15282,14 +14852,12 @@ def oracle_sql() -> dict[str, str]:
     # dawid_skene: hard-EM consensus labeling, 2 unrolled rounds; the
     # struct-min argmaxes replay as arg_min over -w*8 + label (labels
     # in [0,8), order-isomorphic).
-    oracles["dawid_skene"] = """
+    oracles["dawid_skene"] = f"""
         WITH rated AS MATERIALIZED (
           SELECT d.doc_id AS it, r.rater AS r,
-            CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003) * 2654435761)
-                     % 1000003 % 10 < r.rater + 4
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003)
-                   * 2654435761) % 1000003) % 4
+            CASE WHEN {_mix_sql("(d.doc_id * 5 + r.rater)")} % 10 < r.rater + 4
+              THEN ({_mix_sql("d.doc_id")}) % 4
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.rater + 101)")}) % 4
             END AS l
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
@@ -15354,18 +14922,17 @@ def oracle_sql() -> dict[str, str]:
     )
     # fim_split: PSM reorder at two Knuth-mixed character offsets;
     # pure 1-based substr arithmetic, identical clamps in both engines.
-    oracles["fim_split"] = """
+    oracles["fim_split"] = f"""
         WITH cuts AS (
           SELECT doc_id, text,
             CAST(length(text) AS BIGINT) AS n_chars,
-            CAST(1 + (((doc_id % 1000003) * 2654435761) % 1000003)
+            CAST(1 + ({_mix_sql("doc_id")})
                  % greatest(length(text) - 1, 1) AS BIGINT) AS a
           FROM documents
         ),
         spans AS (
           SELECT doc_id, text, n_chars, a,
-            CAST(a + 1 + ((((doc_id + 31) % 1000003) * 2654435761)
-                 % 1000003) % greatest(n_chars - a, 1) AS BIGINT) AS b
+            CAST(a + 1 + ({_mix_sql("(doc_id + 31)")}) % greatest(n_chars - a, 1) AS BIGINT) AS b
           FROM cuts
         )
         SELECT doc_id, n_chars, a AS cut_a, b AS cut_b,
@@ -15381,22 +14948,8 @@ def oracle_sql() -> dict[str, str]:
     # krippendorff_alpha: ragged-participation raters; per-item micro
     # truncation then one final DIV, exactly the operator's two
     # truncation points (HUGEINT // truncates toward zero = DECIMAL DIV).
-    oracles["krippendorff_alpha"] = """
-        WITH rated AS MATERIALIZED (
-          SELECT d.doc_id AS it, r.rater AS r,
-            CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003) * 2654435761)
-                     % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003)
-                   * 2654435761) % 1000003) % 4
-            END AS l
-          FROM documents d
-          CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
-          WHERE ((((d.doc_id * 11 + r.rater * 3) % 1000003) * 2654435761)
-                 % 1000003) % 10 < 6 + (r.rater % 3)
-        ),
-        nuc AS (SELECT it, l, CAST(COUNT(*) AS BIGINT) AS c
-                FROM rated GROUP BY 1, 2),
+    oracles["krippendorff_alpha"] = f"""
+        WITH {_krippendorff_ratings_sql(likert=False)},
         per AS MATERIALIZED (
           SELECT it, CAST(SUM(c) AS BIGINT) AS m,
             CAST(SUM(c * c) AS BIGINT) AS s2
@@ -15421,11 +14974,10 @@ def oracle_sql() -> dict[str, str]:
             AS alpha_micro
         FROM obs CROSS JOIN ctot
     """
-    oracles["cochran_q"] = """
+    oracles["cochran_q"] = f"""
         WITH cells AS MATERIALIZED (
           SELECT d.doc_id AS it, v.variant AS tr,
-            CASE WHEN ((((d.doc_id * 7 + v.variant * 13) % 1000003)
-                 * 2654435761) % 1000003) % 10 < 5 + v.variant
+            CASE WHEN ({_mix_sql("(d.doc_id * 7 + v.variant * 13)")}) % 10 < 5 + v.variant
               THEN 1 ELSE 0 END AS x
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 4)) AS variant) v
@@ -15452,11 +15004,10 @@ def oracle_sql() -> dict[str, str]:
             AS BIGINT) AS q_micro
         FROM rt CROSS JOIN ct
     """
-    oracles["kendall_w"] = """
+    oracles["kendall_w"] = f"""
         WITH scored AS (
           SELECT j.judge, i.doc_id AS it,
-            (((i.doc_id * 17 + j.judge * 29) % 1000003) * 2654435761)
-              % 1000003 AS s
+            {_mix_sql("(i.doc_id * 17 + j.judge * 29)")} AS s
           FROM (SELECT doc_id FROM documents WHERE doc_id < 20) i
           CROSS JOIN (SELECT unnest(range(0, 5)) AS judge) j
         ),
@@ -15485,11 +15036,11 @@ def oracle_sql() -> dict[str, str]:
             AS BIGINT) AS w_micro
         FROM dev GROUP BY 1, 2
     """
-    oracles["wilcoxon_signed"] = """
+    oracles["wilcoxon_signed"] = f"""
         WITH base AS (
-          SELECT CAST(((doc_id % 1000003) * 2654435761) % 1000003 % 50
+          SELECT CAST({_mix_sql("doc_id")} % 50
                  AS BIGINT)
-            - CAST((((doc_id + 13) % 1000003) * 2654435761) % 1000003 % 50
+            - CAST({_mix_sql("(doc_id + 13)")} % 50
                  AS BIGINT) AS d
           FROM documents
         ),
@@ -15521,11 +15072,10 @@ def oracle_sql() -> dict[str, str]:
               * 1000000.0) AS BIGINT) END AS z_micro
         FROM agg CROSS JOIN z
     """
-    oracles["friedman_test"] = """
+    oracles["friedman_test"] = f"""
         WITH cells AS (
           SELECT d.doc_id AS b, s.sys AS tr,
-            (((d.doc_id * 19 + s.sys * 23) % 1000003) * 2654435761)
-              % 1000003 % 1000 AS score
+            {_mix_sql("(d.doc_id * 19 + s.sys * 23)")} % 1000 AS score
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 4)) AS sys) s
         ),
@@ -15550,13 +15100,12 @@ def oracle_sql() -> dict[str, str]:
                       * (COUNT(*) + 1), 0) AS BIGINT) AS chi2_micro
         FROM rj
     """
-    oracles["item_analysis"] = """
+    oracles["item_analysis"] = f"""
         WITH cells AS MATERIALIZED (
           SELECT i.item AS item, d.doc_id AS s,
-            CASE WHEN ((((d.doc_id % 1000003) * 2654435761) % 1000003)
+            CASE WHEN (({_mix_sql("d.doc_id")})
                        % 10) * 2
-                   + (((((d.doc_id * 31 + i.item * 7) % 1000003)
-                       * 2654435761) % 1000003) % 10)
+                   + (({_mix_sql("(d.doc_id * 31 + i.item * 7)")}) % 10)
                  > i.item + 9 THEN 1 ELSE 0 END AS x
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 16)) AS item) i
@@ -15676,7 +15225,7 @@ def oracle_sql() -> dict[str, str]:
         WITH per AS MATERIALIZED (
           SELECT source AS domain, CAST(COUNT(*) AS BIGINT) AS n_docs,
             CAST(SUM(CAST(FLOOR(
-              ((((doc_id % 1000003) * 2654435761) % 1000003 % 1000)
+              (({_mix_sql("doc_id")} % 1000)
                / 1000.0)
               * 1000000.0) AS HUGEINT)) // COUNT(*) AS BIGINT)
               AS loss_micro
@@ -15744,13 +15293,12 @@ def oracle_sql() -> dict[str, str]:
         FROM per
     """
     # ---- round-12 batch 2 ----
-    oracles["weighted_kappa"] = """
+    oracles["weighted_kappa"] = f"""
         WITH pairs AS MATERIALIZED (
-          SELECT ((doc_id % 1000003) * 2654435761) % 1000003 % 4 AS a,
-            CASE WHEN (((doc_id * 3 + 1) % 1000003) * 2654435761)
-                     % 1000003 % 10 < 7
-              THEN ((doc_id % 1000003) * 2654435761) % 1000003 % 4
-              ELSE (((doc_id + 55) % 1000003) * 2654435761) % 1000003 % 4
+          SELECT {_mix_sql("doc_id")} % 4 AS a,
+            CASE WHEN {_mix_sql("(doc_id * 3 + 1)")} % 10 < 7
+              THEN {_mix_sql("doc_id")} % 4
+              ELSE {_mix_sql("(doc_id + 55)")} % 4
             END AS b
           FROM documents
         ),
@@ -15774,16 +15322,15 @@ def oracle_sql() -> dict[str, str]:
                // NULLIF(swe, 0) AS BIGINT) AS kappa_micro
         FROM obs CROSS JOIN exp
     """
-    oracles["mantel_haenszel"] = """
+    oracles["mantel_haenszel"] = f"""
         WITH src AS (
           SELECT c_nationkey AS s,
-            ((c_custkey % 1000003) * 2654435761) % 1000003 % 2 AS t
+            {_mix_sql("c_custkey")} % 2 AS t
           , c_custkey FROM customer
         ),
         labeled AS (
           SELECT s, t,
-            CASE WHEN (((c_custkey * 3 + t) % 1000003) * 2654435761)
-                     % 1000003 % 10 < 3 + t * 2 THEN 1 ELSE 0 END AS y
+            CASE WHEN {_mix_sql("(c_custkey * 3 + t)")} % 10 < 3 + t * 2 THEN 1 ELSE 0 END AS y
           FROM src
         ),
         cells AS (
@@ -15810,10 +15357,10 @@ def oracle_sql() -> dict[str, str]:
             AS or_crude_micro
         FROM cells
     """
-    oracles["conformal_calibration"] = """
+    oracles["conformal_calibration"] = f"""
         WITH scored AS (
           SELECT doc_id,
-            CAST(((doc_id % 1000003) * 2654435761) % 1000003 % 1000
+            CAST({_mix_sql("doc_id")} % 1000
                  AS BIGINT) AS v
           FROM documents
         ),
@@ -15846,11 +15393,11 @@ def oracle_sql() -> dict[str, str]:
         WHERE s.doc_id % 5 = 0
         GROUP BY 1, 2, 3
     """
-    oracles["pinball_loss"] = """
+    oracles["pinball_loss"] = f"""
         WITH d AS (
-          SELECT CAST(((doc_id % 1000003) * 2654435761) % 1000003 % 100
+          SELECT CAST({_mix_sql("doc_id")} % 100
                  AS BIGINT)
-            - CAST((((doc_id + 13) % 1000003) * 2654435761) % 1000003
+            - CAST({_mix_sql("(doc_id + 13)")}
                  % 100 AS BIGINT) AS d
           FROM documents
         ),
@@ -15875,13 +15422,12 @@ def oracle_sql() -> dict[str, str]:
           CAST(CAST(s9 AS HUGEINT) * 1000000 // NULLIF(n * 10, 0) AS BIGINT)
         FROM agg
     """
-    oracles["brier_decomposition"] = """
+    oracles["brier_decomposition"] = f"""
         WITH f AS (
-          SELECT ((doc_id % 1000003) * 2654435761) % 1000003 % 1000
+          SELECT {_mix_sql("doc_id")} % 1000
                  * 1000 + 500 AS p,
-            CASE WHEN (((doc_id * 7 + 1) % 1000003) * 2654435761)
-                 % 1000003 % 1000000
-                 < ((doc_id % 1000003) * 2654435761) % 1000003 % 1000
+            CASE WHEN {_mix_sql("(doc_id * 7 + 1)")} % 1000000
+                 < {_mix_sql("doc_id")} % 1000
                    * 1000 + 500 THEN 1 ELSE 0 END AS y
           FROM documents
         ),
@@ -15925,10 +15471,10 @@ def oracle_sql() -> dict[str, str]:
     oracles["sprt_eval"] = f"""
         WITH walk AS (
           SELECT doc_id,
-            CASE WHEN ((doc_id % 1000003) * 2654435761) % 1000003 % 10 < 6
+            CASE WHEN {_mix_sql("doc_id")} % 10 < 6
               THEN 1 ELSE 0 END AS y,
             CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS step,
-            SUM(CASE WHEN ((doc_id % 1000003) * 2654435761) % 1000003
+            SUM(CASE WHEN {_mix_sql("doc_id")}
                      % 10 < 6
                 THEN {_sprt_pos} ELSE {_sprt_neg} END)
               OVER (ORDER BY doc_id
@@ -15959,7 +15505,7 @@ def oracle_sql() -> dict[str, str]:
           SELECT c_custkey AS id, c_nationkey AS bn, c_mktsegment AS bs,
             CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000.0) AS BIGINT)
               AS band,
-            ((c_custkey * 7 % 1000003) * 2654435761) % 1000003 % 100 AS pre
+            {_mix_sql("c_custkey * 7")} % 100 AS pre
           FROM customer
         ),
         pairs AS (
@@ -15986,7 +15532,7 @@ def oracle_sql() -> dict[str, str]:
         WITH c AS MATERIALIZED (
           SELECT c_custkey AS id, c_nationkey AS bn,
             CAST(c_acctbal AS DOUBLE) AS bal, c_mktsegment AS seg,
-            ((c_custkey * 7 % 1000003) * 2654435761) % 1000003 % 100
+            {_mix_sql("c_custkey * 7")} % 100
               AS region_code,
             CAST(ROW_NUMBER() OVER (PARTITION BY c_nationkey
               ORDER BY CAST(c_acctbal AS DOUBLE), c_custkey) AS BIGINT)
@@ -16015,22 +15561,8 @@ def oracle_sql() -> dict[str, str]:
         FROM pairs GROUP BY pattern, weight_micro
     """
     # ---- round-13 additions ----
-    oracles["benjamini_hochberg"] = """
-        WITH hyp AS (
-          SELECT t.id AS hyp_id,
-            CAST(CASE WHEN t.id % 5 = 0
-              THEN (((t.id % 1000003) * 2654435761) % 1000003) % 20000 + 1
-              ELSE (((t.id % 1000003) * 2654435761) % 1000003) % 1000000 + 1
-            END AS BIGINT) AS p_micro
-          FROM (SELECT unnest(range(0, 200)) AS id) t
-        ),
-        ranked AS (
-          SELECT hyp_id, p_micro,
-            CAST(ROW_NUMBER() OVER (ORDER BY p_micro, hyp_id) AS BIGINT)
-              AS rank,
-            CAST(COUNT(*) OVER () AS BIGINT) AS m
-          FROM hyp
-        ),
+    oracles["benjamini_hochberg"] = f"""
+        WITH {_RANKED_HYPOTHESES},
         cut AS (
           SELECT MAX(rank) AS c FROM ranked
           WHERE p_micro * m <= rank * 50000
@@ -16039,14 +15571,12 @@ def oracle_sql() -> dict[str, str]:
           rank <= COALESCE((SELECT c FROM cut), 0) AS reject
         FROM ranked
     """
-    oracles["icc_oneway"] = """
+    oracles["icc_oneway"] = f"""
         WITH rated AS (
           SELECT d.doc_id AS item_id,
-            CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003) * 2654435761)
-                     % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003) * 2654435761)
-                   % 1000003) % 4
+            CASE WHEN {_mix_sql("(d.doc_id * 5 + r.rater)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % 4
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.rater + 101)")}) % 4
             END AS rating
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
@@ -16127,21 +15657,8 @@ def oracle_sql() -> dict[str, str]:
             * 1000000) AS BIGINT) AS mcc_micro
         FROM cells
     """
-    oracles["cusum_drift"] = """
-        WITH series AS (
-          SELECT user_id, event_id,
-            CAST(FLOOR(value * 100) AS BIGINT) AS cents
-          FROM events WHERE event_type = 'purchase'
-        ),
-        walk AS (
-          SELECT user_id,
-            SUM(cents - 5500) OVER w AS c,
-            CAST(ROW_NUMBER() OVER
-              (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS step
-          FROM series
-          WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ),
+    oracles["cusum_drift"] = f"""
+        WITH {_cusum_walk_sql("SUM(cents - 5500) OVER w AS c")},
         s AS (
           SELECT user_id, step,
             c - LEAST(CAST(0 AS BIGINT), MIN(c) OVER
@@ -16193,13 +15710,16 @@ def oracle_sql() -> dict[str, str]:
         " * LN(CAST({x} AS DOUBLE) * (CAST(t_a AS DOUBLE) + t_b)"
         " / (CAST({rt} AS DOUBLE) * {col})) END"
     )
-    oracles["g_test_keywords"] = f"""
-        WITH ta AS MATERIALIZED ({_gt_a}),
+    # Token counts of English (ta) vs other (tb) documents, and each
+    # side's total (tot).
+    _GT_TOTALS = f"""ta AS MATERIALIZED ({_gt_a}),
         tb AS MATERIALIZED ({_gt_b}),
         tot AS (
           SELECT (SELECT CAST(SUM(c) AS BIGINT) FROM ta) AS t_a,
                  (SELECT CAST(SUM(c) AS BIGINT) FROM tb) AS t_b
-        ),
+        )"""
+    oracles["g_test_keywords"] = f"""
+        WITH {_GT_TOTALS},
         j AS (
           SELECT COALESCE(ta.token, tb.token) AS token,
             CAST(COALESCE(ta.c, 0) AS BIGINT) AS cnt_a,
@@ -16226,12 +15746,7 @@ def oracle_sql() -> dict[str, str]:
         LIMIT 30
     """
     oracles["log_odds_dirichlet"] = f"""
-        WITH ta AS MATERIALIZED ({_gt_a}),
-        tb AS MATERIALIZED ({_gt_b}),
-        tot AS (
-          SELECT (SELECT CAST(SUM(c) AS BIGINT) FROM ta) AS t_a,
-                 (SELECT CAST(SUM(c) AS BIGINT) FROM tb) AS t_b
-        ),
+        WITH {_GT_TOTALS},
         j AS (
           SELECT COALESCE(ta.token, tb.token) AS token,
             CAST(COALESCE(ta.c, 0) AS BIGINT) AS cnt_a,
@@ -16566,12 +16081,7 @@ def oracle_sql() -> dict[str, str]:
         FROM cum GROUP BY 1
     """
     oracles["jsd_divergence"] = f"""
-        WITH ta AS MATERIALIZED ({_gt_a}),
-        tb AS MATERIALIZED ({_gt_b}),
-        tot AS (
-          SELECT (SELECT CAST(SUM(c) AS BIGINT) FROM ta) AS t_a,
-                 (SELECT CAST(SUM(c) AS BIGINT) FROM tb) AS t_b
-        ),
+        WITH {_GT_TOTALS},
         j AS (
           SELECT CAST(COALESCE(ta.c, 0) AS BIGINT) AS cnt_a,
             CAST(COALESCE(tb.c, 0) AS BIGINT) AS cnt_b, t_a, t_b
@@ -16598,14 +16108,12 @@ def oracle_sql() -> dict[str, str]:
             AS BIGINT) AS jsd_micro
         FROM terms
     """
-    oracles["cronbach_alpha"] = """
+    oracles["cronbach_alpha"] = f"""
         WITH rated AS (
           SELECT d.doc_id AS subject, r.item_id,
-            CASE WHEN (((d.doc_id * 5 + r.item_id) % 1000003) * 2654435761)
-                     % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE ((((d.doc_id * 5 + r.item_id + 101) % 1000003)
-                    * 2654435761) % 1000003) % 4
+            CASE WHEN {_mix_sql("(d.doc_id * 5 + r.item_id)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % 4
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.item_id + 101)")}) % 4
             END AS score
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS item_id) r
@@ -16638,28 +16146,8 @@ def oracle_sql() -> dict[str, str]:
             AS alpha_micro
         FROM item_tot CROSS JOIN subj_tot
     """
-    oracles["nelson_aalen"] = """
-        WITH h AS (SELECT MAX(o_orderdate) AS hz FROM orders),
-        base AS (
-          SELECT c.c_mktsegment AS segment, o.o_orderdate,
-            LEAD(o.o_orderdate) OVER (
-              PARTITION BY o.o_custkey
-              ORDER BY o.o_orderdate, o.o_orderkey) AS nxt
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        ),
-        r AS (
-          SELECT segment,
-            CAST(datediff('day', o_orderdate,
-              COALESCE(nxt, (SELECT hz FROM h))) AS BIGINT) AS t,
-            (nxt IS NOT NULL) AS e
-          FROM base
-        ),
-        per_t AS (
-          SELECT segment, t,
-            CAST(SUM(CASE WHEN e THEN 1 ELSE 0 END) AS BIGINT) AS d,
-            CAST(SUM(CASE WHEN e THEN 0 ELSE 1 END) AS BIGINT) AS c
-          FROM r GROUP BY 1, 2
-        ),
+    oracles["nelson_aalen"] = f"""
+        WITH {_REPURCHASE_PER_T},
         staged AS (
           SELECT segment, t, d,
             CAST(SUM(d + c) OVER (PARTITION BY segment)
@@ -16723,21 +16211,16 @@ def oracle_sql() -> dict[str, str]:
             ' ' ORDER BY idx) AS features
         FROM agg GROUP BY 1
     """
-    oracles["wasserstein_drift"] = """
-        WITH base AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        ),
-        vc AS (
-          SELECT v,
-            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-              AS na,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
-              AS nb
-          FROM base GROUP BY 1
-        ),
+    # The two segments' sizes n_a (BUILDING) and n_b (MACHINERY).
+    _SEGMENT_TOT = """tot AS (
+          SELECT CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_a,
+            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_b
+          FROM base
+        )"""
+    oracles["wasserstein_drift"] = f"""
+        WITH {_segment_value_counts_sql(a="na", b="nb")},
         cum AS (
           SELECT v,
             SUM(na) OVER (ORDER BY v
@@ -16747,13 +16230,7 @@ def oracle_sql() -> dict[str, str]:
             LEAD(v) OVER (ORDER BY v) AS vn
           FROM vc
         ),
-        tot AS (
-          SELECT CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_a,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_b
-          FROM base
-        )
+        {_SEGMENT_TOT}
         SELECT n_a, n_b,
           CAST(SUM(ABS(CAST(ca AS HUGEINT) * n_b
                 - CAST(cb AS HUGEINT) * n_a) * (vn - v)) * 1000000
@@ -17022,10 +16499,9 @@ def oracle_sql() -> dict[str, str]:
             * 1000000) AS BIGINT) END AS z_micro
         FROM tot
     """
-    oracles["post_stratified"] = """
+    oracles["post_stratified"] = f"""
         WITH frame AS (
-          SELECT CASE WHEN ((c_custkey % 1000003) * 2654435761)
-                   % 1000003 % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
+          SELECT CASE WHEN {_mix_sql("c_custkey")} % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
             c_nationkey AS s,
             CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS y
           FROM customer
@@ -17092,28 +16568,9 @@ def oracle_sql() -> dict[str, str]:
           CAST(500000 AS BIGINT) AS clip
         FROM noisy
     """
-    oracles["tv_drift"] = """
-        WITH base AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        ),
-        vc AS (
-          SELECT v,
-            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-              AS ca,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
-              AS cb
-          FROM base GROUP BY 1
-        ),
-        tot AS (
-          SELECT CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_a,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_b
-          FROM base
-        )
+    oracles["tv_drift"] = f"""
+        WITH {_segment_value_counts_sql()},
+        {_SEGMENT_TOT}
         SELECT n_a, n_b,
           CAST(SUM(ABS(CAST(ca AS HUGEINT) * n_b
                 - CAST(cb AS HUGEINT) * n_a)) * 1000000
@@ -17122,28 +16579,9 @@ def oracle_sql() -> dict[str, str]:
         FROM vc CROSS JOIN tot
         GROUP BY n_a, n_b
     """
-    oracles["hellinger_drift"] = """
-        WITH base AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        ),
-        vc AS (
-          SELECT v,
-            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-              AS ca,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
-              AS cb
-          FROM base GROUP BY 1
-        ),
-        tot AS (
-          SELECT CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_a,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_b
-          FROM base
-        )
+    oracles["hellinger_drift"] = f"""
+        WITH {_segment_value_counts_sql()},
+        {_SEGMENT_TOT}
         SELECT n_a, n_b,
           CAST(SUM(CAST(FLOOR(
             (SQRT(CAST(ca AS DOUBLE) / n_a) - SQRT(CAST(cb AS DOUBLE) / n_b))
@@ -17152,28 +16590,8 @@ def oracle_sql() -> dict[str, str]:
         FROM vc CROSS JOIN tot
         GROUP BY n_a, n_b
     """
-    oracles["krippendorff_ordinal"] = """
-        WITH rated AS MATERIALIZED (
-          SELECT d.doc_id AS it, r.rater AS r,
-            1 + CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003)
-                          * 2654435761) % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 5
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003)
-                   * 2654435761) % 1000003) % 5
-            END AS l
-          FROM documents d
-          CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
-          WHERE ((((d.doc_id * 11 + r.rater * 3) % 1000003) * 2654435761)
-                 % 1000003) % 10 < 6 + (r.rater % 3)
-        ),
-        nuc AS (SELECT it, l, CAST(COUNT(*) AS BIGINT) AS c
-                FROM rated GROUP BY 1, 2),
-        per AS MATERIALIZED (
-          SELECT it, CAST(SUM(c) AS BIGINT) AS m
-          FROM nuc GROUP BY 1 HAVING SUM(c) >= 2
-        ),
-        multi AS (SELECT nuc.* FROM nuc JOIN per ON nuc.it = per.it),
-        cat AS (SELECT l, CAST(SUM(c) AS BIGINT) AS cj FROM multi GROUP BY 1),
+    oracles["krippendorff_ordinal"] = f"""
+        WITH {_LIKERT_CATS},
         catc AS (
           SELECT l, cj,
             SUM(cj) OVER (ORDER BY l
@@ -17195,35 +16613,28 @@ def oracle_sql() -> dict[str, str]:
           JOIN wp ON wp.lc = a.l AND wp.lk = b.l
           GROUP BY 1
         ),
-        obs AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
-            SUM(COALESCE(pd, 0) * 1000000 // (m - 1)) AS do_scaled
-          FROM per LEFT JOIN ip USING (it)
-        )
-        SELECT n_items, n AS n_ratings,
-          CAST((do_scaled * (n - 1)) // NULLIF(de_num, 0) AS BIGINT)
-            AS disagreement_micro,
-          CAST(1000000 - (do_scaled * (n - 1)) // NULLIF(de_num, 0)
-            AS BIGINT) AS alpha_micro
-        FROM obs CROSS JOIN ctot CROSS JOIN de
+        {_LIKERT_ALPHA}
     """
-    oracles["pass_at_k_ci"] = """
-        WITH per AS (
-          SELECT l_orderkey,
-            CAST(COUNT(*) AS BIGINT) AS n_samples,
-            CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_correct
-          FROM lineitem GROUP BY 1
-        ),
+    # A 95% Wilson score interval bound (sign "-" lower, "+" upper) in
+    # micro for the mean pass@3 s_micro / (1e6 * n_problems).
+    def _wilson_micro(sign: str) -> str:
+        p = "CAST(s_micro AS DOUBLE) / (CAST(n_problems AS DOUBLE) * 1000000.0)"
+        n = "CAST(n_problems AS DOUBLE)"
+        return f"""CAST(floor((
+            ({p} + 1.96 * 1.96 / (2.0 * {n}))
+            / (1.0 + 1.96 * 1.96 / {n})
+            {sign} 1.96 * sqrt(
+                {p} * (1.0 - {p}) / {n}
+                + 1.96 * 1.96 / (4.0 * {n} * {n}))
+              / (1.0 + 1.96 * 1.96 / {n})
+          ) * 1000000.0) AS BIGINT)"""
+
+    oracles["pass_at_k_ci"] = f"""
+        WITH {_PASS_PER},
         prof AS (
           SELECT n_samples, n_correct,
             CAST(COUNT(*) AS BIGINT) AS n_problems,
-            CAST(1000000 - (CAST(1000000 AS HUGEINT)
-                * (n_samples - n_correct)
-                * (n_samples - n_correct - 1)
-                * (n_samples - n_correct - 2))
-              // (CAST(n_samples AS HUGEINT)
-                * (n_samples - 1) * (n_samples - 2)) AS BIGINT)
+            {_PASS_AT_3}
               AS pmic
           FROM per WHERE n_samples >= 3 GROUP BY 1, 2
         ),
@@ -17236,54 +16647,12 @@ def oracle_sql() -> dict[str, str]:
           CAST(floor(CAST(s_micro AS DOUBLE)
             / (CAST(n_problems AS DOUBLE) * 1000000.0)
             * 1000000.0) AS BIGINT) AS pass_at_k_mean_micro,
-          CAST(floor((
-            (CAST(s_micro AS DOUBLE)
-               / (CAST(n_problems AS DOUBLE) * 1000000.0)
-              + 1.96 * 1.96 / (2.0 * CAST(n_problems AS DOUBLE)))
-            / (1.0 + 1.96 * 1.96 / CAST(n_problems AS DOUBLE))
-            - 1.96 * sqrt(
-                CAST(s_micro AS DOUBLE)
-                  / (CAST(n_problems AS DOUBLE) * 1000000.0)
-                * (1.0 - CAST(s_micro AS DOUBLE)
-                  / (CAST(n_problems AS DOUBLE) * 1000000.0))
-                / CAST(n_problems AS DOUBLE)
-                + 1.96 * 1.96 / (4.0 * CAST(n_problems AS DOUBLE)
-                  * CAST(n_problems AS DOUBLE)))
-              / (1.0 + 1.96 * 1.96 / CAST(n_problems AS DOUBLE))
-          ) * 1000000.0) AS BIGINT) AS lo_micro,
-          CAST(floor((
-            (CAST(s_micro AS DOUBLE)
-               / (CAST(n_problems AS DOUBLE) * 1000000.0)
-              + 1.96 * 1.96 / (2.0 * CAST(n_problems AS DOUBLE)))
-            / (1.0 + 1.96 * 1.96 / CAST(n_problems AS DOUBLE))
-            + 1.96 * sqrt(
-                CAST(s_micro AS DOUBLE)
-                  / (CAST(n_problems AS DOUBLE) * 1000000.0)
-                * (1.0 - CAST(s_micro AS DOUBLE)
-                  / (CAST(n_problems AS DOUBLE) * 1000000.0))
-                / CAST(n_problems AS DOUBLE)
-                + 1.96 * 1.96 / (4.0 * CAST(n_problems AS DOUBLE)
-                  * CAST(n_problems AS DOUBLE)))
-              / (1.0 + 1.96 * 1.96 / CAST(n_problems AS DOUBLE))
-          ) * 1000000.0) AS BIGINT) AS hi_micro
+          {_wilson_micro('-')} AS lo_micro,
+          {_wilson_micro('+')} AS hi_micro
         FROM tot
     """
-    oracles["cusum_two_sided"] = """
-        WITH series AS (
-          SELECT user_id, event_id,
-            CAST(FLOOR(value * 100) AS BIGINT) AS cents
-          FROM events WHERE event_type = 'purchase'
-        ),
-        walk AS (
-          SELECT user_id,
-            SUM(cents - 5500) OVER w AS cu,
-            SUM(4500 - cents) OVER w AS cd,
-            CAST(ROW_NUMBER() OVER
-              (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS step
-          FROM series
-          WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ),
+    oracles["cusum_two_sided"] = f"""
+        WITH {_cusum_walk_sql("SUM(cents - 5500) OVER w AS cu, SUM(4500 - cents) OVER w AS cd")},
         s AS (
           SELECT user_id, step,
             cu - LEAST(CAST(0 AS BIGINT), MIN(cu) OVER wm) AS su,
@@ -17348,21 +16717,8 @@ def oracle_sql() -> dict[str, str]:
           CAST(500000 AS BIGINT) AS clip
         FROM rel
     """
-    oracles["cvm_drift"] = """
-        WITH sub AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        ),
-        vc AS (
-          SELECT v,
-            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
-              AS BIGINT) AS ca,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
-              AS BIGINT) AS cb
-          FROM sub GROUP BY 1
-        ),
+    oracles["cvm_drift"] = f"""
+        WITH {_segment_value_counts_sql("sub")},
         cum AS (
           SELECT ca, cb,
             SUM(ca) OVER w AS cuma, SUM(cb) OVER w AS cumb
@@ -17420,28 +16776,8 @@ def oracle_sql() -> dict[str, str]:
             // NULLIF(CAST(SUM(hx) AS BIGINT), 0) AS BIGINT) AS u_micro
         FROM per_x CROSS JOIN cc GROUP BY n_cells
     """
-    oracles["krippendorff_interval"] = """
-        WITH rated AS MATERIALIZED (
-          SELECT d.doc_id AS it, r.rater AS r,
-            1 + CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003)
-                          * 2654435761) % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 5
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003)
-                   * 2654435761) % 1000003) % 5
-            END AS l
-          FROM documents d
-          CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
-          WHERE ((((d.doc_id * 11 + r.rater * 3) % 1000003) * 2654435761)
-                 % 1000003) % 10 < 6 + (r.rater % 3)
-        ),
-        nuc AS (SELECT it, l, CAST(COUNT(*) AS BIGINT) AS c
-                FROM rated GROUP BY 1, 2),
-        per AS MATERIALIZED (
-          SELECT it, CAST(SUM(c) AS BIGINT) AS m
-          FROM nuc GROUP BY 1 HAVING SUM(c) >= 2
-        ),
-        multi AS (SELECT nuc.* FROM nuc JOIN per ON nuc.it = per.it),
-        cat AS (SELECT l, CAST(SUM(c) AS BIGINT) AS cj FROM multi GROUP BY 1),
+    oracles["krippendorff_interval"] = f"""
+        WITH {_LIKERT_CATS},
         ctot AS (SELECT CAST(SUM(cj) AS BIGINT) AS n FROM cat),
         de AS (
           SELECT SUM(CAST(a.cj AS HUGEINT) * b.cj
@@ -17454,17 +16790,7 @@ def oracle_sql() -> dict[str, str]:
           FROM multi a JOIN multi b ON a.it = b.it AND a.l < b.l
           GROUP BY 1
         ),
-        obs AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
-            SUM(COALESCE(pd, 0) * 1000000 // (m - 1)) AS do_scaled
-          FROM per LEFT JOIN ip USING (it)
-        )
-        SELECT n_items, n AS n_ratings,
-          CAST((do_scaled * (n - 1)) // NULLIF(de_num, 0) AS BIGINT)
-            AS disagreement_micro,
-          CAST(1000000 - (do_scaled * (n - 1)) // NULLIF(de_num, 0)
-            AS BIGINT) AS alpha_micro
-        FROM obs CROSS JOIN ctot CROSS JOIN de
+        {_LIKERT_ALPHA}
     """
     oracles["cochran_armitage"] = """
         WITH per AS (
@@ -17515,28 +16841,8 @@ def oracle_sql() -> dict[str, str]:
             * 1000000) AS BIGINT) AS guiraud_r_micro
         FROM counts GROUP BY 1
     """
-    oracles["kruskal_wallis"] = """
-        WITH sub AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IS NOT NULL AND c_acctbal IS NOT NULL
-        ),
-        gv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS n_gv
-               FROM sub GROUP BY 1, 2),
-        tv AS (SELECT v, CAST(SUM(n_gv) AS BIGINT) AS t FROM gv GROUP BY 1),
-        ranks AS (
-          SELECT v, t,
-            CAST(2 * COALESCE(SUM(t) OVER (ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              + t + 1 AS BIGINT) AS r2
-          FROM tv
-        ),
-        per_g AS (
-          SELECT gv.g, CAST(SUM(n_gv) AS BIGINT) AS n_g,
-            CAST(SUM(n_gv * r2) AS BIGINT) AS r2_g
-          FROM gv JOIN ranks USING (v) GROUP BY 1
-        ),
+    oracles["kruskal_wallis"] = f"""
+        WITH {_segment_rank_sums_sql("v, t")},
         terms AS (
           SELECT CAST(CAST(r2_g AS HUGEINT) * r2_g * 3000000 // n_g
             AS HUGEINT) AS tt
@@ -17557,21 +16863,8 @@ def oracle_sql() -> dict[str, str]:
               - MAX(n) - MAX(tie_num), 0) AS BIGINT) AS h_tie_micro
         FROM terms CROSS JOIN ties
     """
-    oracles["ad_drift"] = """
-        WITH sub AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        ),
-        vc AS (
-          SELECT v,
-            CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END)
-              AS BIGINT) AS ca,
-            CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END)
-              AS BIGINT) AS cb
-          FROM sub GROUP BY 1
-        ),
+    oracles["ad_drift"] = f"""
+        WITH {_segment_value_counts_sql("sub")},
         cum AS (
           SELECT ca + cb AS l,
             SUM(ca) OVER w AS cuma, SUM(ca + cb) OVER w AS bj
@@ -17699,20 +16992,17 @@ def oracle_sql() -> dict[str, str]:
             * 1000000) AS BIGINT) AS z_micro
         FROM jt CROSS JOIN moments
     """
-    oracles["gwet_ac1"] = """
+    oracles["gwet_ac1"] = f"""
         WITH rated AS MATERIALIZED (
           SELECT d.doc_id AS item, r.rater AS rater,
             'L' || CAST(CASE
-              WHEN (((d.doc_id * 3 + r.rater) % 1000003) * 2654435761)
-                   % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 4
-              ELSE (((d.doc_id * 3 + r.rater) % 1000003) * 2654435761)
-                   % 1000003 % 4
+              WHEN {_mix_sql("(d.doc_id * 3 + r.rater)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % 4
+              ELSE {_mix_sql("(d.doc_id * 3 + r.rater)")} % 4
             END AS VARCHAR) AS label
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r
-          WHERE ((((d.doc_id * 7 + r.rater) % 1000003) * 2654435761)
-                 % 1000003) % 10 < 6 + (r.rater % 3)
+          WHERE ({_mix_sql("(d.doc_id * 7 + r.rater)")}) % 10 < 6 + (r.rater % 3)
         ),
         cells0 AS (
           SELECT item, label, CAST(COUNT(*) AS BIGINT) AS r_ic
@@ -17832,27 +17122,7 @@ def oracle_sql() -> dict[str, str]:
         FROM g
     """
     oracles["ljung_box"] = f"""
-        WITH pts AS ({_MONTHLY_PTS}),
-        lagged AS (
-          SELECT nation, v, {_acf_lagcols}
-          FROM pts WINDOW w AS (PARTITION BY nation ORDER BY t)
-        ),
-        g AS (
-          SELECT nation, CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(v AS HUGEINT)) AS s,
-            SUM(CAST(v AS HUGEINT) * CAST(v AS HUGEINT)) AS q,
-            {_acf_aggs}
-          FROM lagged GROUP BY 1
-        ),
-        stacked AS ({_acf_stack}),
-        scored AS (
-          SELECT nation, lag, n, m AS n_used,
-            CAST(n AS HUGEINT) * CAST(n AS HUGEINT) * p
-              - CAST(n AS HUGEINT) * s * (tt + h)
-              + CAST(m AS HUGEINT) * s * s AS num,
-            CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * q - s * s) AS den
-          FROM stacked
-        ),
+        WITH {_ACF_SCORED},
         acf AS (
           SELECT nation, lag, n,
             CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
@@ -18174,7 +17444,7 @@ def oracle_sql() -> dict[str, str]:
             CAST(SUM(CASE WHEN arm = 1 AND NOT ok THEN 1 ELSE 0 END)
               AS BIGINT) AS fail_b
           FROM (
-            SELECT ((user_id % 1000003) * 2654435761) % 1000003 % 2 AS arm,
+            SELECT {_mix_sql("user_id")} % 2 AS arm,
               event_type = 'purchase' AS ok
             FROM events
           )
@@ -18251,11 +17521,11 @@ def oracle_sql() -> dict[str, str]:
             AS p_two_micro
         FROM scored
     """
-    oracles["capture_recapture"] = """
+    oracles["capture_recapture"] = f"""
         WITH flags AS (
           SELECT
-            (((doc_id % 1000003) * 2654435761) % 1000003) % 10 < 3 AS s1,
-            ((((doc_id * 13 + 7) % 1000003) * 2654435761) % 1000003) % 10 < 3
+            ({_mix_sql("doc_id")}) % 10 < 3 AS s1,
+            ({_mix_sql("(doc_id * 13 + 7)")}) % 10 < 3
               AS s2
           FROM documents
         ),
@@ -18374,7 +17644,7 @@ def oracle_sql() -> dict[str, str]:
               AS BIGINT) AS x_b,
             CAST(SUM(CASE WHEN slc = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t_b
           FROM (
-            SELECT ((user_id % 1000003) * 2654435761) % 1000003 % 2 AS slc,
+            SELECT {_mix_sql("user_id")} % 2 AS slc,
               event_type = 'error' AS is_err
             FROM events
           )
@@ -18444,22 +17714,8 @@ def oracle_sql() -> dict[str, str]:
                + 1.0) / 2.0 * 1000000) AS BIGINT) END AS beta_micro
         FROM agg
     """
-    oracles["benjamini_yekutieli"] = """
-        WITH hyp AS (
-          SELECT t.id AS hyp_id,
-            CAST(CASE WHEN t.id % 5 = 0
-              THEN (((t.id % 1000003) * 2654435761) % 1000003) % 20000 + 1
-              ELSE (((t.id % 1000003) * 2654435761) % 1000003) % 1000000 + 1
-            END AS BIGINT) AS p_micro
-          FROM (SELECT unnest(range(0, 200)) AS id) t
-        ),
-        ranked AS (
-          SELECT hyp_id, p_micro,
-            CAST(ROW_NUMBER() OVER (ORDER BY p_micro, hyp_id) AS BIGINT)
-              AS rank,
-            CAST(COUNT(*) OVER () AS BIGINT) AS m
-          FROM hyp
-        ),
+    oracles["benjamini_yekutieli"] = f"""
+        WITH {_RANKED_HYPOTHESES},
         harm AS (
           SELECT CAST(SUM(1000000000000 // rank) AS BIGINT) AS c_pico
           FROM ranked
@@ -18473,15 +17729,8 @@ def oracle_sql() -> dict[str, str]:
           rank <= COALESCE((SELECT c FROM cut), 0) AS reject
         FROM ranked
     """
-    oracles["seasonal_mann_kendall"] = """
-        WITH ser AS MATERIALIZED (
-          SELECT o_orderpriority AS priority,
-            CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
-                 AS BIGINT) AS m,
-            CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                 AS BIGINT) AS rev
-          FROM orders GROUP BY 1, 2
-        ),
+    oracles["seasonal_mann_kendall"] = f"""
+        WITH {_PRIORITY_SER},
         pts AS (SELECT priority, m, m % 12 AS season, rev FROM ser),
         s AS (
           SELECT a.priority,
@@ -18522,28 +17771,8 @@ def oracle_sql() -> dict[str, str]:
             ELSE 0.0 END * 1000000.0) AS BIGINT) AS z_micro
         FROM s JOIN tot USING (priority) WHERE tot.var18 > 0
     """
-    oracles["dunn_test"] = """
-        WITH sub AS (
-          SELECT c_mktsegment AS g,
-            CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS v
-          FROM customer
-          WHERE c_mktsegment IS NOT NULL AND c_acctbal IS NOT NULL
-        ),
-        gv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS n_gv
-               FROM sub GROUP BY 1, 2),
-        tv AS (SELECT v, CAST(SUM(n_gv) AS BIGINT) AS t FROM gv GROUP BY 1),
-        ranks AS (
-          SELECT v,
-            CAST(2 * COALESCE(SUM(t) OVER (ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              + t + 1 AS BIGINT) AS r2
-          FROM tv
-        ),
-        per_g AS (
-          SELECT gv.g, CAST(SUM(n_gv) AS BIGINT) AS n_g,
-            CAST(SUM(n_gv * r2) AS BIGINT) AS r2_g
-          FROM gv JOIN ranks USING (v) GROUP BY 1
-        ),
+    oracles["dunn_test"] = f"""
+        WITH {_segment_rank_sums_sql("v")},
         ties AS (
           SELECT SUM(CAST(t AS HUGEINT) * t * t - t) AS tie_num,
             CAST(SUM(t) AS BIGINT) AS n
@@ -18561,22 +17790,8 @@ def oracle_sql() -> dict[str, str]:
             * 1000000) AS BIGINT) END AS z_micro
         FROM per_g lo JOIN per_g hi ON lo.g < hi.g CROSS JOIN ties
     """
-    oracles["holm_bonferroni"] = """
-        WITH hyp AS (
-          SELECT t.id AS hyp_id,
-            CAST(CASE WHEN t.id % 5 = 0
-              THEN (((t.id % 1000003) * 2654435761) % 1000003) % 20000 + 1
-              ELSE (((t.id % 1000003) * 2654435761) % 1000003) % 1000000 + 1
-            END AS BIGINT) AS p_micro
-          FROM (SELECT unnest(range(0, 200)) AS id) t
-        ),
-        ranked AS (
-          SELECT hyp_id, p_micro,
-            CAST(ROW_NUMBER() OVER (ORDER BY p_micro, hyp_id) AS BIGINT)
-              AS rank,
-            CAST(COUNT(*) OVER () AS BIGINT) AS m
-          FROM hyp
-        ),
+    oracles["holm_bonferroni"] = f"""
+        WITH {_RANKED_HYPOTHESES},
         stop AS (
           SELECT MIN(rank) AS s FROM ranked
           WHERE p_micro * (m - rank + 1) > 50000
@@ -18586,14 +17801,12 @@ def oracle_sql() -> dict[str, str]:
                           (SELECT MAX(m) + 1 FROM ranked)) AS reject
         FROM ranked
     """
-    oracles["icc_twoway"] = """
+    oracles["icc_twoway"] = f"""
         WITH rated AS MATERIALIZED (
           SELECT d.doc_id AS i, r.rater AS r,
-            1 + CASE WHEN (((d.doc_id * 5 + r.rater) % 1000003)
-                     * 2654435761) % 1000003 % 4 < 3
-              THEN (((d.doc_id % 1000003) * 2654435761) % 1000003) % 5
-              ELSE ((((d.doc_id * 5 + r.rater + 101) % 1000003)
-                   * 2654435761) % 1000003) % 5
+            1 + CASE WHEN {_mix_sql("(d.doc_id * 5 + r.rater)")} % 4 < 3
+              THEN ({_mix_sql("d.doc_id")}) % 5
+              ELSE ({_mix_sql("(d.doc_id * 5 + r.rater + 101)")}) % 5
             END AS x
           FROM documents d
           CROSS JOIN (SELECT unnest(range(0, 5)) AS rater) r

@@ -446,21 +446,10 @@ def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
     structurally instead of as timing noise. At warehouse scale no fact-
     fact join is broadcastable — disabling the threshold here is what
     makes the sf0.1 bench a faithful miniature of the 100 TB case."""
-    import io
-    import time
-    from contextlib import redirect_stdout
-
     from pyspark.sql import functions as F
 
+    from hdinsight_pyspark_cntk_integration_spark.plans import count_shuffles
     from hdinsight_pyspark_cntk_integration_spark.sources.io import write_bucketed
-
-    def count_exchanges(df) -> int:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        # tree-line shuffle Exchange nodes only ("+- Exchange"/":- Exchange");
-        # "+- BroadcastExchange" does not match this substring
-        return buf.getvalue().count("- Exchange")
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -494,7 +483,7 @@ def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
     try:
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         times["unbucketed"] = _median3(lambda: revenue(orders, li, "l_orderkey"))
-        times["unbucketed_exchanges"] = count_exchanges(
+        times["unbucketed_exchanges"] = count_shuffles(
             revenue(orders, li, "l_orderkey")
         )
 
@@ -512,7 +501,7 @@ def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
         write_bucketed(orders, "bench_ord_bkt", buckets, "o_orderkey")
         lb, ob = spark.table("bench_li_bkt"), spark.table("bench_ord_bkt")
         times["bucketed"] = _median3(lambda: revenue(ob, lb, "l_orderkey"))
-        times["bucketed_exchanges"] = count_exchanges(revenue(ob, lb, "l_orderkey"))
+        times["bucketed_exchanges"] = count_shuffles(revenue(ob, lb, "l_orderkey"))
     finally:
         conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thr)
     return times

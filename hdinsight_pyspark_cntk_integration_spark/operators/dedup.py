@@ -70,19 +70,6 @@ def _bind_once(value: Column, build) -> Column:
     return F.transform(F.array(value), build)[0]
 
 
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """Distinct character k-shingles of normalized text, as array<string>.
-    Pure Catalyst: substring over a generated index sequence; the
-    normalized string is lambda-bound so it evaluates once, not per
-    shingle."""
-
-    def build(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(k - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, k)))
-
-    return _bind_once(normalized_text(text), build)
-
-
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """ALL word n-grams of normalized text in document order (duplicates
     kept), as array<string> — the counting form used by repetition
@@ -107,24 +94,17 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.array_distinct(word_ngrams(text, n))
 
 
-def hashed_shingles(text: Column | str, k: int = 3, mode: str = "word") -> Column:
-    """Distinct shingles reduced to the 31-bit hash field (one xxhash64
-    per shingle) — the input to all minhash/jaccard computations.
-    ``mode``: 'word' (n-gram of tokens, default) or 'char'."""
-    sh = word_shingles(text, k) if mode == "word" else char_shingles(text, k)
-    return F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-
-
 def _hashed_shingles_sql(
     text_col: str, k: int = 3, mode: str = "word", hash_family: str = "xxhash64"
 ) -> str:
-    """SQL-text form of ``hashed_shingles`` (same semantics).
+    """SQL text of a document's distinct shingles reduced to the 31-bit
+    hash field (one hash per shingle) — the input to all minhash/jaccard
+    computations. ``mode``: 'word' (n-gram of tokens, default) or 'char'.
 
     The wide dedup operators build hundreds of sub-expressions; composing
     them as SQL strings parsed JVM-side in ONE call is ~10× cheaper on
     the driver than building the equivalent pyspark Column tree lambda by
-    lambda over py4j. Hot paths below use these; the Column APIs above
-    remain for composition with arbitrary expressions.
+    lambda over py4j.
     """
     # The normalized/tokenized input is lambda-bound (transform over a
     # single-element array) so it evaluates ONCE per document — inlining
@@ -158,22 +138,6 @@ def _hashed_shingles_sql(
             f" pmod(cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint), {_P}L))"
         )
     raise ValueError(f"unknown hash_family {hash_family!r} (xxhash64|md5)")
-
-
-def minhash_cols(hashes: Column, num_hashes: int = 128) -> list[Column]:
-    """The ``num_hashes`` minhash expressions over a hashed-shingle array.
-
-    Returned as separate columns (not one array) so callers can consume
-    each expression exactly once — Catalyst's projection collapse
-    duplicates expression trees per use, and these are the expensive ones.
-    """
-
-    def affine(j: int):
-        a = F.lit((j * 2 + 1) * _A_MULT % _P)
-        b = F.lit((j + 1) * _B_MULT % _P)
-        return lambda h: F.pmod(a * h + b, F.lit(_P))
-
-    return [F.array_min(F.transform(hashes, affine(j))) for j in range(num_hashes)]
 
 
 def hashed_shingle_table(

@@ -161,6 +161,40 @@ def test_k_core_cascade_and_empty(spark):
     assert gr.k_core(df, k=1).count() == 7
 
 
+def _py_k_core(edges, k):
+    """k-core by repeated peeling in plain Python, over the undirected
+    simple graph of ``edges``: {node: degree in the core}."""
+    adj = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    alive = set(adj)
+    while True:
+        low = {n for n in alive if len(adj[n] & alive) < k}
+        if not low:
+            return {n: len(adj[n] & alive) for n in alive}
+        alive -= low
+
+
+def test_k_core_asymmetric_input_matches_python_peel(spark):
+    """k_core swaps s/d every round, which is sound only while the
+    surviving edge set is its own transpose. Feed input whose in- and
+    out-degrees differ: a 4-clique listed one way with a duplicate and a
+    reversed duplicate, a pendant path, an in-only hub (20), an out-only
+    node (30) and a self-loop. Every peel must match the Python one."""
+    clique = [(0, 1), (0, 2), (3, 0), (1, 2), (1, 3), (2, 3), (0, 1), (1, 0)]
+    path = [(3, 10), (10, 11)]
+    hub_in = [(0, 20), (1, 20), (2, 20)]
+    out_only = [(30, 0), (30, 1)]
+    edges = clique + path + hub_in + out_only + [(5, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    for k in (2, 3):
+        got = {r["node"]: r["degree"] for r in gr.k_core(df, k=k).collect()}
+        assert got == _py_k_core(edges, k), k
+    assert _py_k_core(edges, 3) == {0: 4, 1: 4, 2: 4, 3: 3, 20: 3}
+
+
 def _py_lpa(edges, rounds):
     """Synchronous LPA reference in plain Python: most frequent neighbor
     label, smallest label on ties, simultaneous updates."""

@@ -22,6 +22,36 @@ ENTRY = pathlib.Path(__file__).resolve().parent.parent / "__spark_entry__.py"
 ROWS_ONLY = {"compression_ratio", "multimodal_decode", "pca_top_component", "simhash"}
 
 
+# Shortest run of consecutive significant lines that counts as a pasted
+# block in test_no_repeated_blocks.
+_BLOCK_LINES = 8
+
+
+def test_no_repeated_blocks():
+    """No run of _BLOCK_LINES significant lines appears twice in the
+    entry file. Lines are compared with whitespace collapsed; blank and
+    ``#`` lines are skipped. A shared fixture, SQL fragment or unrolled
+    round belongs in one named helper that every site uses."""
+    lines = []
+    for no, raw in enumerate(ENTRY.read_text().splitlines(), 1):
+        text = " ".join(raw.split())
+        if text and not text.startswith("#"):
+            lines.append((no, text))
+    first: dict[tuple[str, ...], int] = {}
+    repeats = []
+    for i in range(len(lines) - _BLOCK_LINES + 1):
+        block = tuple(text for _, text in lines[i : i + _BLOCK_LINES])
+        no = lines[i][0]
+        if block in first:
+            repeats.append(f"line {no} repeats line {first[block]}: {block[0]}")
+        else:
+            first[block] = no
+    assert not repeats, (
+        f"{len(repeats)} repeated {_BLOCK_LINES}-line blocks in __spark_entry__.py:\n"
+        + "\n".join(repeats[:20])
+    )
+
+
 def test_no_duplicate_top_level_defs():
     tree = ast.parse(ENTRY.read_text())
     names = [

@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from hdinsight_pyspark_cntk_integration_spark import get_spark  # noqa: E402
+from hdinsight_pyspark_cntk_integration_spark.plans import formatted_plan  # noqa: E402
 
 
 def main() -> None:
@@ -25,9 +26,7 @@ def main() -> None:
     queries = entrymod.queries()
     for name in names:
         df = queries[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from hdinsight_pyspark_cntk_integration_spark import get_spark
+from hdinsight_pyspark_cntk_integration_spark.plans import formatted_plan
 
 HEADLINE = [
     "pricing_summary",
@@ -86,9 +87,7 @@ def main() -> None:
     ]
     for name in HEADLINE:
         df = queries[name](spark, sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         lines.append(f"## {name}")
         lines.append("")
         lines.append("```")
