@@ -2553,7 +2553,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 (ADVICE r12: all three hash sites, not just signature + band),
     so the replay is exact even under intra-document hash collisions. The production default stays the 2-3x-faster xxhash64
     family (operators.dedup.minhash_lsh_candidates default), pinned by
-    the planted-pair pytest (tests/test_dedup.py) and identical in plan
+    the planted-pair pytest (tests/test_dedup_text.py) and identical in plan
     shape. Differs from the minhash_provable twin in scope (unbounded)
     and banding (32/8 vs 16/4)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -7037,7 +7037,9 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # there are none: optimization round); slots 11-23 the remaining
 # round-2 cohort; slots 24-50 the next-oldest never-regated cohort
 # from CORRECTNESS_r3/r4 in registry order (27 of the 28; the 28th,
-# set_ops_all, heads the round-16 re-gate queue). Rotated-out
+# set_ops_all, heads the round-16 re-gate queue). Slot 24 holds
+# simhash_provable, the oracle-paired twin of the rows-only simhash
+# that the plan put there, so all 50 slots are hash-checked. Rotated-out
 # queries stay covered by the full-registry PARITY_r{N}.json run
 # every round.
 _GATE_WINDOW = [
@@ -7066,8 +7068,9 @@ _GATE_WINDOW = [
     "running_total",
     "scalar_functions",
     "semi_join",
-    # 27 next-oldest never-regated (CORRECTNESS_r3/r4), registry order
-    "simhash",
+    # 27 next-oldest never-regated (CORRECTNESS_r3/r4), registry order;
+    # simhash_provable stands in for the rows-only simhash
+    "simhash_provable",
     "asof_tolerance",
     "repeated_passages",
     "shard_manifest",

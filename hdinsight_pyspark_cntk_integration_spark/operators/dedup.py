@@ -4,7 +4,7 @@ No counterpart in the reference — these are the BASELINE.json scale-out
 additions. Five families:
 
 * exact          — fingerprint (md5 of normalized text) + keep-min-id
-* MinHash + LSH  — char-shingles → 128 minhashes → banded buckets → pair join
+* MinHash + LSH  — word-shingles → 128 minhashes → banded buckets → pair join
 * SimHash        — 64-bit token-hash sign aggregate, hamming-radius pairs
 * n-gram Jaccard — exact verify on candidate pairs (array_intersect/union)
 * embedding      — cosine near-dup via random-hyperplane sign buckets
@@ -95,11 +95,11 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 
 
 def _hashed_shingles_sql(
-    text_col: str, k: int = 3, mode: str = "word", hash_family: str = "xxhash64"
+    text_col: str, k: int = 3, hash_family: str = "xxhash64"
 ) -> str:
-    """SQL text of a document's distinct shingles reduced to the 31-bit
-    hash field (one hash per shingle) — the input to all minhash/jaccard
-    computations. ``mode``: 'word' (n-gram of tokens, default) or 'char'.
+    """SQL text of a document's distinct word ``k``-gram shingles
+    reduced to the 31-bit hash field (one hash per shingle) — the input
+    to all minhash/jaccard computations.
 
     The wide dedup operators build hundreds of sub-expressions; composing
     them as SQL strings parsed JVM-side in ONE call is ~10× cheaper on
@@ -112,18 +112,11 @@ def _hashed_shingles_sql(
     # element (interpreted HOF, no CSE; measured 8.7× slower at sf0.1).
     norm = f"trim(regexp_replace(lower({text_col}), '\\\\s+', ' '))"
     toks = f"split({norm}, '\\\\s+')"
-    if mode == "word":
-        sh = (
-            f"transform(array({toks}), t ->"
-            f" array_distinct(transform(sequence(0, greatest(size(t) - {k}, 0)),"
-            f" i -> array_join(slice(t, i + 1, {k}), ' '))))[0]"
-        )
-    else:
-        sh = (
-            f"transform(array({norm}), t ->"
-            f" array_distinct(transform(sequence(1, greatest(length(t) - {k - 1}, 1)),"
-            f" i -> substring(t, i, {k}))))[0]"
-        )
+    sh = (
+        f"transform(array({toks}), t ->"
+        f" array_distinct(transform(sequence(0, greatest(size(t) - {k}, 0)),"
+        f" i -> array_join(slice(t, i + 1, {k}), ' '))))[0]"
+    )
     if hash_family == "xxhash64":
         return f"transform({sh}, s -> pmod(xxhash64(s), {_P}L))"
     if hash_family == "md5":
@@ -145,7 +138,6 @@ def hashed_shingle_table(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Materialized (id, hs) hashed-shingle-set table (optimization
@@ -161,7 +153,7 @@ def hashed_shingle_table(
     return (
         src.selectExpr(
             id_col,
-            f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS hs",
+            f"{_hashed_shingles_sql(text_col, shingle_k, hash_family)} AS hs",
         )
         .repartition(n_parts, F.col(id_col))
         .localCheckpoint(eager=True)
@@ -175,7 +167,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 128,
     bands: int = 32,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     hash_family: str = "xxhash64",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -220,7 +211,7 @@ def minhash_lsh_candidates(
         src, n_parts = _spread(df)
         hashed = src.selectExpr(
             id_col,
-            f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS hs",
+            f"{_hashed_shingles_sql(text_col, shingle_k, hash_family)} AS hs",
         ).repartition(n_parts, F.col(id_col))
     mins = [
         f"array_min(transform(hs, h -> pmod({(j * 2 + 1) * _A_MULT % _P}L * h"
@@ -273,7 +264,6 @@ def jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    shingle_mode: str = "word",
     hash_family: str = "xxhash64",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -303,7 +293,7 @@ def jaccard_pairs(
         src, _ = _spread(df)
         sh = src.selectExpr(
             id_col,
-            f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh",
+            f"{_hashed_shingles_sql(text_col, shingle_k, hash_family)} AS sh",
         ).localCheckpoint(eager=True)
     out = (
         pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -328,7 +318,6 @@ def minhash_dedup(
     num_hashes: int = 128,
     bands: int = 32,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     transitive: bool = False,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -341,16 +330,14 @@ def minhash_dedup(
     (``connected_components``) and keeps exactly one representative (min
     id) per duplicate cluster.
     """
-    sh = hashed_shingle_table(
-        df, id_col, text_col, shingle_k, shingle_mode, hash_family
-    )
+    sh = hashed_shingle_table(df, id_col, text_col, shingle_k, hash_family)
     cands = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, shingle_k, shingle_mode,
-        hash_family, shingles=sh,
+        df, id_col, text_col, num_hashes, bands, shingle_k, hash_family,
+        shingles=sh,
     )
     confirmed = jaccard_pairs(
-        df, cands, id_col, text_col, shingle_k, threshold, shingle_mode,
-        hash_family, shingles=sh,
+        df, cands, id_col, text_col, shingle_k, threshold, hash_family,
+        shingles=sh,
     )
     if transitive:
         return dedup_by_components(df, confirmed, id_col)
@@ -404,7 +391,7 @@ def connected_components(
     # two-branch union — each union branch re-derived the full upstream
     # PAIR PLAN (for embedding_dedup: the candidate join + vector
     # fetches + cosine verify, twice); the explode emits both directed
-    # edges from a single evaluation (see graph.assortativity).
+    # edges from a single evaluation (see graph._both_directions).
     edges = (
         pairs.select(
             F.explode(
@@ -757,7 +744,6 @@ def repeated_passages(
     text_col: str = "text",
     n: int = 8,
     min_docs: int = 2,
-    via_hash: bool | None = None,
 ) -> DataFrame:
     """Substring-level duplication: word ``n``-gram passages that recur
     across at least ``min_docs`` DISTINCT documents, with corpus-wide
@@ -773,28 +759,9 @@ def repeated_passages(
     before any downstream join. Returns (passage, n_docs, n_occurrences,
     first_doc_id) — feed the survivors back through a broadcast semi-join
     to locate and strip the passages from the documents themselves.
-
-    Set ``via_hash=True`` for the shuffle-width scale path: group on
-    ``xxhash64(passage)`` (8-byte keys through the exchange instead of
-    ~n-word strings — roughly an order of magnitude less shuffle I/O on
-    prose), then recover the passage text for the few survivors with a
-    broadcast semi-join of the survivor hash set against a re-scan.
-    Counts merge on 64-bit hash collisions (~2⁻⁶⁴ per passage pair); a
-    twin test pins both modes equal on real text. ``via_hash=None``
-    (default) resolves to the exact single-scan string-key path:
-    MEASURED at sf0.1/local[32], the hash path is ~2× slower (bench r5:
-    1.2 s → 2.4 s) because its survivor-text recovery re-scans and
-    re-explodes the corpus, doubling the dominant n-gram-explode CPU,
-    while the narrower (8-byte vs ~50-byte key) exchange only pays when
-    the shuffle is network-bound. Opt in with ``via_hash=True`` on
-    clusters where exchange bytes, not scan CPU, are the constraint —
-    the count_distinct expand ships (key, doc_id) pairs, so key width
-    multiplies across the whole expanded stream there.
     """
     if n < 1 or min_docs < 1:
         raise ValueError(f"need n >= 1 and min_docs >= 1 (got n={n}, min_docs={min_docs})")
-    if via_hash is None:
-        via_hash = False
 
     # Optimization r14 (both aggregates below): mixing count_distinct
     # with plain aggregates plans as an Expand that DOUBLES the gram
@@ -816,85 +783,64 @@ def repeated_passages(
             .filter(F.col("n_docs") >= min_docs)
         )
 
-    if not via_hash:
-        # Two-pass hash-prefilter plan (optimization r14, guide §2.3/§8
-        # — same construction as repeated_passages_maximal, see the
-        # long comment there): tokenize ONCE into a materialized token
-        # table; pass 1 runs the min_docs cut on xxhash64(token-slice)
-        # 8-byte keys (no passage string is ever built, ~10× narrower
-        # exchange); pass 2 rebuilds slices from the token table,
-        # broadcast-semi-joins the survivor hash set, materializes
-        # strings for survivors only, and recounts EXACTLY on the
-        # string key (collisions only add pass-2 candidates — no false
-        # negatives, bit-identical output).
-        # _spread was tried here (r15) and REJECTED on a median-of-3
-        # wall A/B: 1.59 s without vs 1.87 s with — at n=8 the explode
-        # is light enough that the repartition round-trip costs more
-        # than the parallelism buys (unlike the multi-level maximal
-        # sweep, where the same A/B kept it).
-        toks = df.select(
+    # Two-pass hash-prefilter plan (optimization r14, guide §2.3/§8
+    # — same construction as repeated_passages_maximal, see the
+    # long comment there): tokenize ONCE into a materialized token
+    # table; pass 1 runs the min_docs cut on xxhash64(token-slice)
+    # 8-byte keys (no passage string is ever built, ~10× narrower
+    # exchange); pass 2 rebuilds slices from the token table,
+    # broadcast-semi-joins the survivor hash set, materializes
+    # strings for survivors only, and recounts EXACTLY on the
+    # string key (collisions only add pass-2 candidates — no false
+    # negatives, bit-identical output).
+    # _spread was tried here (r15) and REJECTED on a median-of-3
+    # wall A/B: 1.59 s without vs 1.87 s with — at n=8 the explode
+    # is light enough that the repartition round-trip costs more
+    # than the parallelism buys (unlike the multi-level maximal
+    # sweep, where the same A/B kept it).
+    toks = df.select(
+        F.col(id_col),
+        F.split(normalized_text(text_col), r"\s+").alias("__toks"),
+    ).localCheckpoint(eager=True)
+
+    def slices(as_hash: bool) -> Column:
+        t = F.col("__toks")
+        idx = F.sequence(
+            F.lit(0), F.greatest(F.size(t) - F.lit(n), F.lit(0))
+        )
+        if as_hash:
+            return F.transform(
+                idx, lambda i: F.xxhash64(F.slice(t, i + 1, n))
+            )
+        return F.transform(idx, lambda i: F.slice(t, i + 1, n))
+
+    # hsurv is consumed exactly once, as the broadcast build side of
+    # the pass-2 semi-join — left lazy (optimization r14 batch 3) so
+    # pass 1 runs inside the one job as the BroadcastExchange build
+    # instead of paying a separate blocking checkpoint job.
+    hsurv = survivors_over(
+        toks.select(
             F.col(id_col),
-            F.split(normalized_text(text_col), r"\s+").alias("__toks"),
-        ).localCheckpoint(eager=True)
-
-        def slices(as_hash: bool) -> Column:
-            t = F.col("__toks")
-            idx = F.sequence(
-                F.lit(0), F.greatest(F.size(t) - F.lit(n), F.lit(0))
-            )
-            if as_hash:
-                return F.transform(
-                    idx, lambda i: F.xxhash64(F.slice(t, i + 1, n))
-                )
-            return F.transform(idx, lambda i: F.slice(t, i + 1, n))
-
-        # hsurv is consumed exactly once, as the broadcast build side of
-        # the pass-2 semi-join — left lazy (optimization r14 batch 3) so
-        # pass 1 runs inside the one job as the BroadcastExchange build
-        # instead of paying a separate blocking checkpoint job.
-        hsurv = survivors_over(
-            toks.select(
-                F.col(id_col),
-                F.explode(slices(as_hash=True)).alias("__ph"),
-            ),
-            "__ph",
-        ).select("__ph")
-        exact = (
-            toks.select(
-                F.col(id_col), F.explode(slices(as_hash=False)).alias("__arr")
-            )
-            .select(
-                F.col(id_col),
-                F.xxhash64(F.col("__arr")).alias("__ph"),
-                F.col("__arr"),
-            )
-            .join(F.broadcast(hsurv), "__ph", "left_semi")
-            .select(
-                F.col(id_col), F.array_join("__arr", " ").alias("passage")
-            )
-            .filter(F.length("passage") > 0)
+            F.explode(slices(as_hash=True)).alias("__ph"),
+        ),
+        "__ph",
+    ).select("__ph")
+    exact = (
+        toks.select(
+            F.col(id_col), F.explode(slices(as_hash=False)).alias("__arr")
         )
-        return survivors_over(exact, "passage")
-
-    grams = df.select(
-        F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("passage")
-    ).filter(F.length("passage") > 0)
-
-    def survivors_by(key: Column, key_name: str) -> DataFrame:
-        return survivors_over(
-            grams.select(key.alias(key_name), F.col(id_col)), key_name
+        .select(
+            F.col(id_col),
+            F.xxhash64(F.col("__arr")).alias("__ph"),
+            F.col("__arr"),
         )
-
-    survivors = survivors_by(F.xxhash64("passage"), "__ph")
-    texts = (
-        grams.select(F.xxhash64("passage").alias("__ph"), "passage")
-        .join(F.broadcast(survivors.select("__ph")), "__ph", "left_semi")
-        .groupBy("__ph")
-        .agg(F.min("passage").alias("passage"))
+        .join(F.broadcast(hsurv), "__ph", "left_semi")
+        .select(
+            F.col(id_col), F.array_join("__arr", " ").alias("passage")
+        )
+        .filter(F.length("passage") > 0)
     )
-    return survivors.join(texts, "__ph").select(
-        "passage", "n_docs", "n_occurrences", "first_doc_id"
-    )
+    return survivors_over(exact, "passage")
 
 
 def edit_distance_verify(
@@ -1522,7 +1468,6 @@ def near_dup_against(
     num_hashes: int = 128,
     bands: int = 32,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Incremental CROSS-corpus near-dedup: which NEW documents are
@@ -1592,7 +1537,6 @@ def near_dup_against(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
         hash_family=hash_family,
     )
     # keep NEW×BASE collisions only (odd tid = new, even = base).
@@ -1615,11 +1559,11 @@ def near_dup_against(
     src_base, _ = _spread(base_df)
     sh_new = src_new.selectExpr(
         f"{id_col} AS id_a",
-        f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh_a",
+        f"{_hashed_shingles_sql(text_col, shingle_k, hash_family)} AS sh_a",
     )
     sh_base = src_base.selectExpr(
         f"{id_col} AS id_b",
-        f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh_b",
+        f"{_hashed_shingles_sql(text_col, shingle_k, hash_family)} AS sh_b",
     )
     out = (
         pairs.join(sh_new, "id_a")

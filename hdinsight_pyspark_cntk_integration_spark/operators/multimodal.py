@@ -162,50 +162,6 @@ def sample_frames(
     return df.withColumn(frames_col, F.transform(kept, lambda s: s["fr"]))
 
 
-def decode_to_tensor_arrow(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "path",
-    decoder: Decoder | None = None,
-) -> DataFrame:
-    """``decode_to_tensor``'s Arrow-native twin via ``mapInArrow``: the
-    batch arrives as a ``pyarrow.RecordBatch``, so the media BYTES are
-    never copied into pandas object cells (for pure-binary payloads the
-    pandas hop is the dominant per-batch cost — each cell becomes a
-    Python bytes object; Arrow buffers stay contiguous). The decoder
-    still sees ``bytes`` per item, but batch assembly/disassembly is
-    zero-copy columnar on both edges.
-
-    Same output contract as decode_to_tensor (flat float32 tensor +
-    explicit shape column); the pytest twin pins row-for-row equality of
-    the two paths, so either can serve as the production decode surface.
-    """
-    import pyarrow as pa
-
-    dec = decoder or _get_decoder()
-    schema = f"{id_col} string, shape array<int>, tensor array<float>"
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0)  # id_col (projected order below)
-            contents = batch.column(1)
-            shapes, tensors = [], []
-            for buf in contents:
-                arr = dec(buf.as_py())
-                shapes.append(list(arr.shape))
-                tensors.append(arr.astype(np.float32).ravel())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(shapes, type=pa.list_(pa.int32())),
-                    pa.array(tensors, type=pa.list_(pa.float32())),
-                ],
-                names=[id_col, "shape", "tensor"],
-            )
-
-    return df.select(id_col, content_col).mapInArrow(run, schema=schema)
-
-
 def perceptual_dhash(
     df: DataFrame,
     content_col: str = "content",

@@ -803,11 +803,14 @@ def _bpe_wrap(word: Column) -> Column:
     return F.concat(F.lit(" "), F.array_join(F.split(word, ""), "  "), F.lit(" "))
 
 
+# bpe_train materializes its word table every this many merge rounds
+_BPE_CHECKPOINT_EVERY = 8
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     num_merges: int = 24,
-    checkpoint_every: int = 8,
     score: str = "count",
     min_pair_count: int = 1,
 ) -> list[tuple[int, str, str, str]]:
@@ -835,8 +838,8 @@ def bpe_train(
     shuffle to the pair vocabulary), then a bounded 1-row action
     (orderBy+limit(1)) to pick the argmax, then a pure ``replace``
     projection applies the merge — no shuffle. Rounds are bounded by
-    ``num_merges``; ``localCheckpoint`` every ``checkpoint_every``
-    rounds truncates the growing replace-expression lineage. Ties break
+    ``num_merges``; ``localCheckpoint`` every ``_BPE_CHECKPOINT_EVERY``
+    (8) rounds truncates the growing replace-expression lineage. Ties break
     deterministically in binary collation, which DuckDB shares — the
     oracle unrolls the same rounds as chained CTEs and must reproduce
     the table exactly."""
@@ -903,7 +906,7 @@ def bpe_train(
             "w",
             F.replace(F.col("w"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")),
         )
-        if (k + 1) % checkpoint_every == 0:
+        if (k + 1) % _BPE_CHECKPOINT_EVERY == 0:
             work = work.localCheckpoint(eager=True)
     return merges
 
@@ -1229,7 +1232,6 @@ def negative_sampling(
     user_col: str = "user",
     item_col: str = "item",
     k: int = 4,
-    method: str = "knuth",
 ) -> DataFrame:
     """Deterministic uniform negative sampling for implicit-feedback
     training (word2vec/BPR/two-tower recommenders): for every positive
@@ -1257,8 +1259,6 @@ def negative_sampling(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1 (got {k})")
-    if method != "knuth":
-        raise ValueError(f"unknown hash method {method!r} (knuth)")
     from pyspark.sql import Window
 
     # dense catalog rank 0..n−1, deterministic by item id. Materialized

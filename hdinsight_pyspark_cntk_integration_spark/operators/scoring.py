@@ -175,67 +175,6 @@ def score(
     return narrow.mapInPandas(run_batches, schema=out_schema)
 
 
-# ---------------------------------------------------------------------------
-# Alternative scoring surfaces
-# ---------------------------------------------------------------------------
-def score_with_predict_batch_udf(
-    df: DataFrame,
-    model_loader: ModelLoader,
-    input_col: str,
-    n_features: int,
-    n_classes: int | None = None,
-    pass_through: Sequence[str] = (),
-    preprocess: Callable[[np.ndarray], np.ndarray] | None = None,
-    pred_col: str = "predicted_label",
-    batch_size: int = 1024,
-) -> DataFrame:
-    """M1/M2 via ``pyspark.ml.functions.predict_batch_udf`` (SURVEY §2.3's
-    alternative surface) — same semantics as ``score``: model loaded once
-    per task via ``make_predict_fn``, Arrow-batched inference, argmax
-    postprocess. Column-expression form, so it composes with arbitrary
-    projections; ``score``'s mapInPandas form remains the primary path
-    (it can emit multiple columns without re-invoking the model).
-
-    ``n_features`` is the fixed width of the ``array<float>`` input column:
-    predict_batch_udf treats array columns as tensor columns and requires
-    ``input_tensor_shapes``, so batches arrive as dense (batch, n_features)
-    ndarrays. ``n_classes``, when given, validates the model's score-vector
-    width on the first batch.
-    """
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    def make_predict_fn():
-        predict = model_loader()
-
-        def predict_fn(inputs: np.ndarray) -> np.ndarray:
-            x = np.stack(inputs) if inputs.dtype == object else inputs
-            if preprocess is not None:
-                x = preprocess(x)
-            scores = np.asarray(predict(x), dtype=np.float64)
-            if n_classes is not None and scores.shape[1] != n_classes:
-                raise ValueError(
-                    f"model emitted {scores.shape[1]} classes, expected {n_classes}"
-                )
-            return scores
-
-        return predict_fn
-
-    scores_udf = predict_batch_udf(
-        make_predict_fn,
-        return_type=ArrayType(DoubleType()),
-        batch_size=batch_size,
-        input_tensor_shapes=[[n_features]],
-    )
-    from hdinsight_pyspark_cntk_integration_spark.functions.vector import argmax_index
-
-    scored = df.select(*pass_through, scores_udf(F.col(input_col)).alias("_scores"))
-    return scored.select(
-        *pass_through, argmax_index(F.col("_scores")).cast("long").alias(pred_col)
-    )
-
-
 def make_onnx_loader(model_path: str, input_name: str | None = None) -> ModelLoader:
     """ModelLoader for an ONNX model via onnxruntime (the public-runtime
     stand-in for the reference's CNTK ``.dnn`` load, README.md:162-184).

@@ -79,7 +79,6 @@ def cosine_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
 
@@ -91,6 +90,7 @@ def cosine_topk(
     triples move, and no reducer holds more than max(split rows,
     partitions×k) structs.
 
+    A corpus row whose id equals the query id is never its own neighbor.
     Ties broken by smaller corpus id for determinism.
     Returns (query_id, vec_id, score) with k rows per query.
     """
@@ -99,8 +99,7 @@ def cosine_topk(
         F.col(corpus_id),
         cosine_similarity(corpus_vec, query_vec).alias("score"),
     )
-    if not include_self:
-        scored = scored.filter(F.col(corpus_id) != F.col(query_id))
+    scored = scored.filter(F.col(corpus_id) != F.col(query_id))
     # struct sorts lexicographically: (-score, id) ascending == score desc, id asc
     item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
     return (

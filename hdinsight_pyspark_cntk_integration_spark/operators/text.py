@@ -1643,7 +1643,6 @@ def dictionary_tag(
     terms: dict[str, int],
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_join: bool = False,
 ) -> DataFrame:
     """Weighted-lexicon tagging: score every document against a term
     dictionary (term → integer weight) — the workhorse behind topic
@@ -1651,19 +1650,12 @@ def dictionary_tag(
     Per document: token count, dictionary hits (with multiplicity),
     distinct terms matched, and the weight sum over matched tokens.
 
-    Two physical strategies, IDENTICAL results (twin-tested):
-
-    - ``use_join=False`` (default, small lexicons): the dictionary is a
-      LITERAL map baked into the plan — matching is a per-row
-      filter/aggregate over the lambda-bound token array, so the doc
-      stream is scanned ONCE with ZERO shuffles and ZERO joins (the
-      aggregation state is per-row, not per-key). The lexicon and the
-      token array are bound together in one struct (``_bind_once``) so
-      neither re-evaluates per element.
-    - ``use_join=True`` (lexicons too big for a plan literal): explode
-      tokens, broadcast-hash-join the term table, re-aggregate per doc
-      — one shuffle on the doc id, dictionary never leaves the
-      broadcast.
+    The dictionary is a LITERAL map baked into the plan — matching is a
+    per-row filter/aggregate over the lambda-bound token array, so the
+    doc stream is scanned ONCE with ZERO shuffles and ZERO joins (the
+    aggregation state is per-row, not per-key). The lexicon and the
+    token array are bound together in one struct (``_bind_once``) so
+    neither re-evaluates per element.
 
     All outputs are exact integers — no float anywhere.
 
@@ -1675,30 +1667,12 @@ def dictionary_tag(
     if not terms:
         raise ValueError("terms dictionary must be non-empty")
     items = sorted(terms.items())
-    # NULL text tags as an empty document (the join path's explode_outer
-    # gives the same) — without the coalesce every output would be NULL
+    # NULL text tags as an empty document — without the coalesce every
+    # output would be NULL
     toks = F.filter(
         F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
         lambda x: F.length(x) > 0,
     )
-    if use_join:
-        spark = df.sparkSession
-        dict_df = spark.createDataFrame(items, "__term string, __w long")
-        exploded = df.select(
-            F.col(id_col).alias("__id"), F.explode_outer(toks).alias("__term")
-        )
-        joined = exploded.join(F.broadcast(dict_df), "__term", "left")
-        hit = F.col("__w").isNotNull()
-        return (
-            joined.groupBy("__id")
-            .agg(
-                F.count("__term").cast("long").alias("n_tokens"),
-                F.sum(hit.cast("long")).cast("long").alias("n_hits"),
-                F.count_distinct(F.when(hit, F.col("__term"))).cast("long").alias("n_terms"),
-                F.sum(F.coalesce(F.col("__w"), F.lit(0))).cast("long").alias("score"),
-            )
-            .select(F.col("__id").alias(id_col), "n_tokens", "n_hits", "n_terms", "score")
-        )
     mp = F.map_from_arrays(
         F.array(*[F.lit(k) for k, _ in items]),
         F.array(*[F.lit(int(v)).cast("long") for _, v in items]),

@@ -254,7 +254,6 @@ def score_stream_foreach_batch(
     batch_scorer: Callable[[DataFrame], DataFrame],
     sink_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """foreachBatch scoring sink: apply a batch scoring pipeline (e.g.
     operators.scoring.score) to each micro-batch and append parquet —
@@ -264,10 +263,12 @@ def score_stream_foreach_batch(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_scorer(batch_df).write.mode("append").parquet(sink_path)
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def ingest_dedup_foreach_batch(
@@ -277,7 +278,6 @@ def ingest_dedup_foreach_batch(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
 ):
     """Incremental corpus ingest with exact dedup — the streaming form of
     ``dedup.dedup_against``: per micro-batch (1) in-batch exact dedup
@@ -318,12 +318,12 @@ def ingest_dedup_foreach_batch(
         fresh.drop("fingerprint").write.mode("append").parquet(corpus_path)
         fresh.select("fingerprint").write.mode("append").parquet(store_path)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_stateful_first_seen(

@@ -415,18 +415,45 @@ def test_tokenize_broadcast_twin_matches_join_form(spark):
     assert len(a) > 0 and a == b
 
 
-def test_repeated_passages_hash_mode_matches_exact(spark):
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    exact = (
-        dd.repeated_passages(docs, n=5, min_docs=2, via_hash=False)
-        .toPandas().sort_values("passage").reset_index(drop=True)
-    )
-    hashed = (
-        dd.repeated_passages(docs, n=5, min_docs=2, via_hash=True)
-        .toPandas().sort_values("passage").reset_index(drop=True)
-    )
-    assert len(exact) > 0
-    assert exact.equals(hashed)
+def test_repeated_passages_matches_python_count(spark):
+    """The two-pass hash-prefilter path against a pure-Python count of
+    word n-grams: one passage shared by exactly ``min_docs`` documents
+    (twice in one of them) survives the cut, one shared by
+    ``min_docs - 1`` does not, and every count is exact."""
+    n, min_docs = 4, 3
+    kept, dropped = "alpha beta gamma delta", "kilo lima mike november"
+
+    def filler(i: int) -> str:
+        return " ".join(f"u{i}x{j}" for j in range(3))
+
+    texts = {
+        1: f"{filler(1)} {kept} {filler(11)}",
+        2: f"{kept}  {filler(2)} {kept}",
+        3: f"{filler(3)} {kept} {dropped}",
+        4: f"{dropped} {filler(4)}",
+        5: f"Short {filler(5)}",
+    }
+    df = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+
+    occ: dict[str, list[int]] = {}
+    for doc_id, text in texts.items():
+        toks = text.lower().split()
+        for i in range(max(len(toks) - n, 0) + 1):
+            occ.setdefault(" ".join(toks[i : i + n]), []).append(doc_id)
+    assert len(set(occ[kept])) == min_docs
+    assert len(set(occ[dropped])) == min_docs - 1
+    want = {
+        (p, len(set(ids)), len(ids), min(ids))
+        for p, ids in occ.items()
+        if len(set(ids)) >= min_docs
+    }
+    assert want == {(kept, 3, 4, 1)}
+
+    got = {
+        (r["passage"], r["n_docs"], r["n_occurrences"], r["first_doc_id"])
+        for r in dd.repeated_passages(df, n=n, min_docs=min_docs).collect()
+    }
+    assert got == want
 
 
 def test_repeated_passages_maximal_reports_template_once(spark):
@@ -1198,7 +1225,7 @@ def test_minhash_md5_shingle_hash_matches_duckdb_recipe(spark):
     rows = [(1, "portable hashing contract check")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = df.selectExpr(
-        f"{_hashed_shingles_sql('text', 3, 'word', 'md5')} AS hs"
+        f"{_hashed_shingles_sql('text', 3, 'md5')} AS hs"
     ).collect()[0]["hs"]
     con = duckdb.connect()
     ref = con.sql(

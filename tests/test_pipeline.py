@@ -738,8 +738,6 @@ def test_negative_sampling_validation(spark):
     items = spark.createDataFrame([(1,)], "item long")
     with pytest.raises(ValueError):
         pl.negative_sampling(pos, items, k=0)
-    with pytest.raises(ValueError):
-        pl.negative_sampling(pos, items, method="xxhash64")
 
 
 # --- span_corruption_plan (round 10) ---

@@ -82,6 +82,37 @@ def test_gate_window_is_50_unique_registered():
     assert list(q)[:50] == win, "gate window must be the first 50 entries"
 
 
+def test_gate_window_is_oracle_paired():
+    """Every gate-window query is hash-checked against an oracle, so
+    the driver's 50-query gate can read 50/50."""
+    import __spark_entry__ as e
+
+    unpaired = [n for n in e._GATE_WINDOW if n not in e.oracle_sql()]
+    assert not unpaired, f"gate-window queries with no oracle: {unpaired}"
+
+
+def test_slow_list_names_existing_tests():
+    """Every ``file::test`` entry in tests/slow_tests.txt names a test
+    function that still exists, read with ``ast`` (no collection), so a
+    deleted or renamed test cannot leave a stale entry behind."""
+    root = ENTRY.parent
+    names: dict[str, set[str]] = {}
+    stale = []
+    for entry in (root / "tests" / "slow_tests.txt").read_text().split():
+        path, test = entry.split("::")
+        if path not in names:
+            file = root / path
+            body = ast.parse(file.read_text()).body if file.exists() else []
+            names[path] = {
+                n.name
+                for n in body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            }
+        if test not in names[path]:
+            stale.append(entry)
+    assert not stale, f"slow_tests.txt names tests that do not exist: {stale}"
+
+
 def test_oracle_keys_subset_of_registry():
     import __spark_entry__ as e
 

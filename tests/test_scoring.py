@@ -115,30 +115,6 @@ def test_scores_col_output(spark, images_df):
     assert int(np.argmax(row["scores"])) == row["predicted_label"]
 
 
-def test_predict_batch_udf_surface_matches_mapinpandas(spark, images_df, mean_image):
-    """The predict_batch_udf alternative surface (SURVEY §2.3) must agree
-    with the primary mapInPandas scorer prediction-for-prediction."""
-    primary = sc.score(
-        images_df,
-        sc.make_linear_stub_loader(DIM, N_CLASSES),
-        input_col="image",
-        pass_through=["filename"],
-        preprocess=lambda b: sc.cifar_preprocess(b, mean_image),
-    )
-    alt = sc.score_with_predict_batch_udf(
-        images_df,
-        sc.make_linear_stub_loader(DIM, N_CLASSES),
-        input_col="image",
-        n_features=DIM,
-        n_classes=N_CLASSES,
-        pass_through=["filename"],
-        preprocess=lambda b: sc.cifar_preprocess(b, mean_image),
-    )
-    p = {r["filename"]: r["predicted_label"] for r in primary.collect()}
-    a = {r["filename"]: r["predicted_label"] for r in alt.collect()}
-    assert a == p
-
-
 def test_onnx_loader_is_import_gated():
     """No onnxruntime in this container: the loader must fail fast with a
     clear message (not at first task on an executor)."""
