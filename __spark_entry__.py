@@ -5476,9 +5476,8 @@ def q_kmeans_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-PROVABLE Lloyd k-means (operators.similarity.
     kmeans_quantized, k=4, 2 rounds, micro-quantized integers,
     truncating-DIV centroid updates): the 12th oracle-provable
-    iterative algorithm; the production float path (similarity.
-    kmeans_summary) is pinned by its numpy-parity pytest. Constant slice
-    vec_id < 400 keeps the unrolled oracle cheap at every SF."""
+    iterative algorithm and the engine's one k-means path. Constant
+    slice vec_id < 400 keeps the unrolled oracle cheap at every SF."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
     return sim.kmeans_quantized(emb, k=4, iters=2)
 
@@ -5500,8 +5499,8 @@ def q_interpolate_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolate_segments): per-user 'view' value series interpolated at
     'click' timestamps — micro-quantized values at birth, integer
     segment arithmetic, truncating DIV (verified identical Spark<->
-    DuckDB including negatives). The production twin is relational.
-    interpolate_at (cogrouped-pandas np.interp), pinned by pytest."""
+    DuckDB including negatives); agreement with np.interp is pinned by
+    pytest."""
     ev = load_table(spark, sf_dir, "events")
     obs = ev.filter(F.col("event_type") == "view")
     qs = ev.filter(F.col("event_type") == "click")

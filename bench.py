@@ -291,6 +291,38 @@ PIPELINE = [
 N_BENCH_IMAGES = 10_000  # the reference's benchmark cardinality (README.md:194)
 
 
+def warm_up(spark) -> None:
+    """JVM/codegen + Python-worker-pool warm-up on trivial actions, so
+    per-query numbers measure the plan, not first-call initialization
+    (workers are reused across jobs; starting one per core is a fixed
+    ~2s cost that would otherwise land on the first pandas-UDF query)."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    par = spark.sparkContext.defaultParallelism
+
+    def _noop(batches):
+        yield from batches
+
+    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
+        "noop"
+    ).mode("overwrite").save()
+
+
+def _median3(make_df) -> tuple[float, list[float]]:
+    """Time ``make_df()`` forced into a noop sink: one unmeasured run
+    (first-touch parquet footer reads, codegen compilation), then the
+    MEDIAN of 3 steady-state executions. Single runs swing ±40% on GC
+    pauses (round-2 bench read +17% total vs round 1 on identical code),
+    so a robust estimator is required for round-over-round comparisons
+    to carry signal. Returns (median, the 3 samples) in seconds."""
+    make_df().write.format("noop").mode("overwrite").save()  # warm
+    samples = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        make_df().write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - t0)
+    return sorted(samples)[1], samples
+
+
 def inference_throughput(spark) -> float:
     """Reference-comparable inference bench: score 10k synthetic 3072-dim
     'images' (deterministic JVM-generated values) through the mapInPandas
@@ -359,8 +391,6 @@ def skew_join_bench(spark) -> dict[str, float]:
     (~1/8 of the hot partition, mirroring the 256 MB/multi-GB cluster
     ratio) and restores them after.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from hdinsight_pyspark_cntk_integration_spark.operators import relational as rel
@@ -386,13 +416,7 @@ def skew_join_bench(spark) -> dict[str, float]:
     times: dict[str, float] = {}
 
     def run(tag: str, make_df) -> None:
-        make_df().write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            make_df().write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        times[tag] = round(sorted(samples)[1], 3)
+        times[tag] = round(_median3(make_df)[0], 3)
 
     try:
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -468,21 +492,14 @@ def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
             )
         )
 
-    def _median3(make_df) -> float:
-        make_df().write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            make_df().write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        return round(sorted(samples)[1], 3)
-
     times: dict[str, float] = {}
     conf = spark.conf
     saved_thr = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        times["unbucketed"] = _median3(lambda: revenue(orders, li, "l_orderkey"))
+        times["unbucketed"] = round(
+            _median3(lambda: revenue(orders, li, "l_orderkey"))[0], 3
+        )
         times["unbucketed_exchanges"] = count_shuffles(
             revenue(orders, li, "l_orderkey")
         )
@@ -500,7 +517,7 @@ def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
         write_bucketed(li, "bench_li_bkt", buckets, "l_orderkey")
         write_bucketed(orders, "bench_ord_bkt", buckets, "o_orderkey")
         lb, ob = spark.table("bench_li_bkt"), spark.table("bench_ord_bkt")
-        times["bucketed"] = _median3(lambda: revenue(ob, lb, "l_orderkey"))
+        times["bucketed"] = round(_median3(lambda: revenue(ob, lb, "l_orderkey"))[0], 3)
         times["bucketed_exchanges"] = count_shuffles(revenue(ob, lb, "l_orderkey"))
     finally:
         conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thr)
@@ -598,19 +615,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()
-    # JVM/codegen + Python-worker-pool warmup on trivial actions so
-    # per-query numbers measure the plan, not first-call initialization
-    # (workers are reused across jobs; starting one per core is a fixed
-    # ~2s cost that would otherwise land on the first pandas-UDF query).
-    spark.range(1000).selectExpr("sum(id)").collect()
-    par = spark.sparkContext.defaultParallelism
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     # All three steady-state samples are recorded ("query_samples") so a
     # future ±10% median move is attributable at a glance: tight samples
@@ -627,18 +632,7 @@ def main() -> None:
     total = 0.0
     for name in HEADLINE:
         fn = queries[name]
-        # one unmeasured run per query (first-touch parquet footer reads,
-        # codegen compilation), then MEDIAN of 3 steady-state executions:
-        # single runs swing ±40% on GC pauses (round-2 bench read +17%
-        # total vs round 1 on identical code), so a robust estimator is
-        # required for round-over-round comparisons to carry signal.
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        dt = sorted(samples)[1]
+        dt, samples = _median3(lambda: fn(spark, sf_dir))
         per_query[name] = round(dt, 3)
         query_samples[name] = [round(s, 3) for s in samples]
         total += dt
@@ -646,13 +640,8 @@ def main() -> None:
     pipeline_q: dict[str, float] = {}
     for name in PIPELINE:
         fn = queries[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        pipeline_q[name] = round(sorted(samples)[1], 3)
+        med, samples = _median3(lambda: fn(spark, sf_dir))
+        pipeline_q[name] = round(med, 3)
         query_samples[name] = [round(s, 3) for s in samples]
 
     images_per_sec = inference_throughput(spark)

@@ -406,6 +406,34 @@ def label_propagation(
     return labels.select("node", F.col("label").cast("long").alias("label"))
 
 
+def _canonical_adjacency(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """``e`` (a, b): the distinct undirected edges with a < b, self-loops
+    and NULL endpoints dropped, materialized; ``adj`` (z, x): both
+    directions of every edge — the common-neighbor operators' input."""
+    lo = F.least(F.col(src), F.col(dst))
+    hi = F.greatest(F.col(src), F.col(dst))
+    # e is referenced FIVE times downstream in adamic_adar (both
+    # adjacency directions, through deg/apex twice each, and the
+    # anti-join) and each reference re-derives the whole upstream plan —
+    # for a gate graph built from a 4-table join that measured 441 s vs
+    # ~3 s materialized at sf0.1. The canonical edge set is the bounded
+    # intermediate; localCheckpoint collapses it to one derivation
+    # (the theil_sen / repeated_passages_maximal pattern).
+    e = (
+        edges.select(lo.alias("a"), hi.alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    adj = e.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
+        e.select(F.col("b").alias("z"), F.col("a").alias("x"))
+    )
+    return e, adj
+
+
 def adamic_adar(
     edges: DataFrame,
     src: str = "src",
@@ -443,25 +471,7 @@ def adamic_adar(
 
     Returns (a, b, n_common, aa_micro) with a < b.
     """
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    # e is referenced FIVE times downstream (both adjacency directions,
-    # through deg/apex twice each, and the anti-join) and each
-    # reference re-derives the whole upstream plan — for a gate graph
-    # built from a 4-table join that measured 441 s vs ~3 s
-    # materialized at sf0.1. The canonical edge set is the bounded
-    # intermediate; localCheckpoint collapses it to one derivation
-    # (the theil_sen / repeated_passages_maximal pattern).
-    e = (
-        edges.select(lo.alias("a"), hi.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = e.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
-        e.select(F.col("b").alias("z"), F.col("a").alias("x"))
-    )
+    e, adj = _canonical_adjacency(edges, src, dst)
     deg = adj.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("__deg"))
     if max_degree is not None:
         if max_degree < 2:
@@ -885,18 +895,7 @@ def jaccard_neighbors(
 
     Returns (a, b, n_common, deg_a, deg_b, jaccard_micro), a < b.
     """
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(lo.alias("a"), hi.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = e.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
-        e.select(F.col("b").alias("z"), F.col("a").alias("x"))
-    )
+    e, adj = _canonical_adjacency(edges, src, dst)
     # TRUE degrees for the union denominator — computed BEFORE any
     # apex cap, or the Jaccard denominator would silently shrink
     deg_all = adj.groupBy(F.col("z").alias("node")).agg(

@@ -357,6 +357,41 @@ def apply_changes(
     )
 
 
+def _slot_observations(
+    df: DataFrame, ts_col: str, key_col: str, value_col: str, step_seconds: int
+) -> DataFrame:
+    """(key, __slot, value): each key's observations bucketed into
+    ``step_seconds`` slots, the latest in a slot winning (value as
+    tiebreak), after ONE explicit repartition on the key that the
+    callers' key-partitioned windows reuse."""
+    if step_seconds < 1:
+        raise ValueError(f"step_seconds must be >= 1 (got {step_seconds})")
+    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    secs = F.unix_timestamp(F.col(ts_col))
+    obs = df.select(
+        F.col(key_col),
+        F.floor(secs / step_seconds).cast("long").alias("__slot"),
+        F.col(value_col),
+        secs.alias("__secs"),
+    ).repartition(n_shuffle, key_col)
+    w_slot = Window.partitionBy(key_col, "__slot").orderBy(
+        F.desc("__secs"), F.desc(value_col)
+    )
+    return (
+        obs.withColumn("__rn", F.row_number().over(w_slot))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__secs")
+    )
+
+
+def _fill_range() -> Column:
+    """The slots an observation covers: its own through the one before
+    the next observation's (``__next``, NULL for the last)."""
+    return F.sequence(
+        F.col("__slot"), F.coalesce(F.col("__next") - 1, F.col("__slot"))
+    )
+
+
 def resample_ffill(
     df: DataFrame,
     ts_col: str,
@@ -381,35 +416,15 @@ def resample_ffill(
 
     Returns (key, slot, grid_ts, value, is_observed).
     """
-    if step_seconds < 1:
-        raise ValueError(f"step_seconds must be >= 1 (got {step_seconds})")
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    secs = F.unix_timestamp(F.col(ts_col))
-    obs = df.select(
-        F.col(key_col),
-        F.floor(secs / step_seconds).cast("long").alias("__slot"),
-        F.col(value_col),
-        secs.alias("__secs"),
-    ).repartition(n_shuffle, key_col)
-    w_slot = Window.partitionBy(key_col, "__slot").orderBy(
-        F.desc("__secs"), F.desc(value_col)
-    )
-    last_obs = (
-        obs.withColumn("__rn", F.row_number().over(w_slot))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__secs")
-    )
+    last_obs = _slot_observations(df, ts_col, key_col, value_col, step_seconds)
     w_key = Window.partitionBy(key_col).orderBy("__slot")
     with_next = last_obs.withColumn("__next", F.lead("__slot").over(w_key))
-    fill_range = F.sequence(
-        F.col("__slot"), F.coalesce(F.col("__next") - 1, F.col("__slot"))
-    )
     return (
         with_next.select(
             F.col(key_col),
             F.col(value_col),
             F.col("__slot"),
-            F.explode(fill_range).alias("slot"),
+            F.explode(_fill_range()).alias("slot"),
         )
         .select(
             key_col,
@@ -580,24 +595,7 @@ def interpolate_linear(
 
     Returns (key, slot, grid_ts, value, is_observed).
     """
-    if step_seconds < 1:
-        raise ValueError(f"step_seconds must be >= 1 (got {step_seconds})")
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    secs = F.unix_timestamp(F.col(ts_col))
-    obs = df.select(
-        F.col(key_col),
-        F.floor(secs / step_seconds).cast("long").alias("__slot"),
-        F.col(value_col),
-        secs.alias("__secs"),
-    ).repartition(n_shuffle, key_col)
-    w_slot = Window.partitionBy(key_col, "__slot").orderBy(
-        F.desc("__secs"), F.desc(value_col)
-    )
-    last_obs = (
-        obs.withColumn("__rn", F.row_number().over(w_slot))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__secs")
-    )
+    last_obs = _slot_observations(df, ts_col, key_col, value_col, step_seconds)
     w_key = Window.partitionBy(key_col).orderBy("__slot")
     with_next = last_obs.select(
         F.col(key_col),
@@ -606,16 +604,13 @@ def interpolate_linear(
         F.lead("__slot").over(w_key).alias("__next"),
         F.lead(value_col).over(w_key).alias("__next_v"),
     )
-    fill_range = F.sequence(
-        F.col("__slot"), F.coalesce(F.col("__next") - 1, F.col("__slot"))
-    )
     exploded = with_next.select(
         F.col(key_col),
         F.col("__slot"),
         F.col(value_col),
         F.col("__next"),
         F.col("__next_v"),
-        F.explode(fill_range).alias("slot"),
+        F.explode(_fill_range()).alias("slot"),
     )
     lerp = F.col(value_col) + (F.col("__next_v") - F.col(value_col)) * (
         (F.col("slot") - F.col("__slot")).cast("double")
@@ -629,71 +624,6 @@ def interpolate_linear(
         .otherwise(lerp)
         .alias("value"),
         (F.col("slot") == F.col("__slot")).alias("is_observed"),
-    )
-
-
-def interpolate_at(
-    obs: DataFrame,
-    queries: DataFrame,
-    key_col: str,
-    obs_ts_col: str,
-    value_col: str,
-    query_ts_col: str,
-) -> DataFrame:
-    """Interpolated point lookup: for each (key, query_ts), the linearly
-    interpolated value between the two surrounding observations — the
-    continuous-measure cousin of ``asof_join`` (which carries the nearest
-    value instead of interpolating), e.g. sensor readings at event times.
-
-    Implemented with the cogrouped-pandas API
-    (``groupBy().cogroup().applyInPandas``): both inputs hash-shuffle
-    once on the key, and each key's observations + queries meet in one
-    Arrow batch where vectorized ``np.interp`` does the work — the
-    canonical Spark surface for per-key alignment of two frames whose
-    logic (here: interpolation search) has no relational form. State per
-    task is one key group's rows, never a whole partition's. Queries
-    outside the observed range return NULL (no extrapolation; np.interp
-    would clamp, so edges are masked explicitly).
-
-    Returns (key, query_ts, value).
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_key_type = obs.schema[key_col].dataType.simpleString()
-    schema = f"{key_col} {out_key_type}, {query_ts_col} timestamp, value double"
-
-    def interp(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            key_vals = left[key_col] if not left.empty else right[key_col]
-            return pd.DataFrame(
-                {
-                    key_col: key_vals.iloc[:0],
-                    query_ts_col: pd.Series([], dtype="datetime64[us]"),
-                    "value": pd.Series([], dtype="float64"),
-                }
-            )
-        o = left.sort_values(obs_ts_col).drop_duplicates(obs_ts_col, keep="last")
-        xs = o[obs_ts_col].astype("int64").to_numpy(dtype=np.float64)
-        ys = o[value_col].to_numpy(dtype=np.float64)
-        qt = right[query_ts_col]
-        xq = qt.astype("int64").to_numpy(dtype=np.float64)
-        vals = np.interp(xq, xs, ys)
-        outside = (xq < xs[0]) | (xq > xs[-1])
-        vals = np.where(outside, np.nan, vals)
-        return pd.DataFrame(
-            {
-                key_col: right[key_col],
-                query_ts_col: qt,
-                "value": vals,
-            }
-        )
-
-    return (
-        obs.select(key_col, obs_ts_col, value_col)
-        .groupBy(key_col)
-        .cogroup(queries.select(key_col, query_ts_col).groupBy(key_col))
-        .applyInPandas(interp, schema)
     )
 
 
@@ -1347,10 +1277,11 @@ def interpolate_segments(
     query_ts_col: str,
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Relational linear interpolation — the ORACLE-PROVABLE twin of
-    :func:`interpolate_at` (which runs vectorized ``np.interp`` inside a
-    cogrouped-pandas Arrow batch and is gated rows-only). This twin is
-    exact-integer end to end, so an ANSI oracle replays every cell:
+    """Relational linear interpolation: for each (key, query_ts), the
+    linearly interpolated value between the two surrounding
+    observations — the continuous-measure cousin of ``asof_join``
+    (which carries the nearest value instead). Exact-integer end to
+    end, so an ANSI oracle replays every cell:
 
     - observation values quantize AT BIRTH to ``floor(value * scale)``
       BIGINT micro-units; duplicate (key, ts) observations collapse to
@@ -1363,11 +1294,10 @@ def interpolate_segments(
       both truncate toward zero, verified including negatives);
     - a query exactly at a key's LAST observation gets that value
       (the half-open segments cover every earlier observation point);
-    - out-of-range queries are DROPPED (the float twin returns NULL —
-      documented semantic difference, keeps the output hash-stable).
+    - out-of-range queries are DROPPED (no extrapolation; keeps the
+      output hash-stable).
 
-    Scale shape: both sides shuffle once on the key (the same partial
-    requirement as the cogroup twin); the segment join is an equi-join
+    Scale shape: both sides shuffle once on the key; the segment join is an equi-join
     on the key with the range test as a residual filter, so Catalyst
     plans a plain shuffled hash/sort-merge join — no cartesian, no
     range explosion. Per-key observation counts bound the window state.

@@ -71,6 +71,22 @@ def _partial_topk(scored: DataFrame, group_col: str, item: Column, k: int) -> Da
     )
 
 
+def _score_topk(scored: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
+    """(query_id, corpus_id, score): the k highest-``score`` rows per
+    query through ``bounded_topk``, ties broken by smaller corpus id."""
+    # struct sorts lexicographically: (-score, id) ascending == score desc, id asc
+    item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
+    return (
+        bounded_topk(scored, query_id, item, k)
+        .select(query_id, F.explode("top").alias("t"))
+        .select(
+            query_id,
+            F.col("t.id").alias(corpus_id),
+            (-F.col("t.neg")).alias("score"),
+        )
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -100,17 +116,7 @@ def cosine_topk(
         cosine_similarity(corpus_vec, query_vec).alias("score"),
     )
     scored = scored.filter(F.col(corpus_id) != F.col(query_id))
-    # struct sorts lexicographically: (-score, id) ascending == score desc, id asc
-    item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
-    return (
-        bounded_topk(scored, query_id, item, k)
-        .select(query_id, F.explode("top").alias("t"))
-        .select(
-            query_id,
-            F.col("t.id").alias(corpus_id),
-            (-F.col("t.neg")).alias("score"),
-        )
-    )
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def self_queries(corpus: DataFrame, ids: list, corpus_id: str = "vec_id", corpus_vec: str = "embedding") -> DataFrame:
@@ -168,12 +174,7 @@ def ivf_topk(
         corpus_id,
         cosine_similarity(corpus_vec, query_vec).alias("score"),
     )
-    item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
-    return (
-        bounded_topk(candidates, query_id, item, k)
-        .select(query_id, F.explode("top").alias("t"))
-        .select(query_id, F.col("t.id").alias(corpus_id), (-F.col("t.neg")).alias("score"))
-    )
+    return _score_topk(candidates, query_id, corpus_id, k)
 
 
 def grid_centroids(corpus: DataFrame, num: int, corpus_id: str = "vec_id", corpus_vec: str = "embedding") -> DataFrame:
@@ -285,116 +286,7 @@ def quantized_rerank_topk(
         F.col(corpus_id),
         cosine_similarity(corpus_vec, query_vec).alias("score"),
     )
-    item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
-    return (
-        bounded_topk(scored, query_id, item, k)
-        .select(query_id, F.explode("top").alias("t"))
-        .select(
-            query_id,
-            F.col("t.id").alias(corpus_id),
-            (-F.col("t.neg")).alias("score"),
-        )
-    )
-
-
-def kmeans_lloyd(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[list[float]]]:
-    """Lloyd's k-means over an embedding column — the clustering step
-    behind IVF index building, semantic dedup bucketing, and topic-ish
-    corpus maps. Returns (assignments frame with a ``cluster`` column and
-    a ``dist_sq`` column to the final centroid, final centroid matrix).
-
-    Deterministic init: the ``k`` rows with the smallest ids (stable
-    across runs and engines; swap in k-means|| seeding when quality
-    matters more than reproducibility). Fixed ``iters`` sweeps — the
-    iterative-algorithm pattern (SURVEY.md §2.7): per sweep, ONE
-    Arrow-batched assignment pass (vectorized (B,d)×(d,k) distance
-    matrix per batch — no per-row Python) and ONE partial-agg shuffle of
-    (cluster, dim, sum, count) to re-estimate means. Driver state is the
-    k×d centroid matrix only (collected each sweep — bounded by model
-    size, like any iterative ML driver loop, NOT by corpus size); the
-    corpus itself is never collected or shuffled beyond the k×d
-    aggregate. Empty clusters keep their previous centroid.
-
-    Float caveat: mean re-estimation sums floats in partition order, so
-    centroids can differ in the last ulp across runs; boundary points
-    could then flip clusters. The gate query for this is therefore
-    rows-only, and pytest checks numpy parity on inertia (rtol), plus
-    the Lloyd invariant that inertia is non-increasing per sweep.
-    """
-    if k < 1 or iters < 1:
-        raise ValueError(f"need k >= 1 and iters >= 1 (got k={k}, iters={iters})")
-    spark = corpus.sparkSession
-    base = corpus.select(F.col(id_col), F.col(vec_col))
-    seed_rows = base.orderBy(id_col).limit(k).collect()
-    centroids = np.array([list(r[vec_col]) for r in seed_rows], dtype=np.float64)
-
-    def assign_with(cmat: np.ndarray):
-        c_sq = (cmat * cmat).sum(axis=1)  # (k,)
-        bc = spark.sparkContext.broadcast((cmat, c_sq))
-
-        @F.pandas_udf("struct<cluster:int, dist_sq:double>")
-        def nearest(vecs: pd.Series) -> pd.DataFrame:
-            cm, csq = bc.value
-            x = np.array(vecs.tolist(), dtype=np.float64)  # (B, d)
-            # ||x-c||^2 = ||x||^2 - 2 x·c + ||c||^2, argmin over c
-            d2 = (x * x).sum(axis=1, keepdims=True) - 2.0 * (x @ cm.T) + csq
-            cl = d2.argmin(axis=1)
-            return pd.DataFrame(
-                {"cluster": cl.astype("int32"), "dist_sq": d2[np.arange(len(cl)), cl]}
-            )
-
-        return base.select(
-            F.col(id_col), F.col(vec_col), nearest(F.col(vec_col)).alias("__a")
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("__a.cluster").alias("cluster"),
-            F.col("__a.dist_sq").alias("dist_sq"),
-        )
-
-    for _ in range(iters):
-        assigned = assign_with(centroids)
-        sums = (
-            assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new_c = centroids.copy()
-        acc = np.zeros_like(centroids)
-        cnt = np.zeros(k, dtype=np.int64)
-        for r in sums:
-            acc[r["cluster"], r["pos"]] = r["s"]
-            cnt[r["cluster"]] = r["n"]
-        nonempty = cnt > 0
-        new_c[nonempty] = acc[nonempty] / cnt[nonempty, None]
-        centroids = new_c
-    final = assign_with(centroids)
-    return final, centroids.tolist()
-
-
-def kmeans_summary(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cluster-size/inertia summary of ``kmeans_lloyd`` — gate-shaped
-    (scalar cells; rows-only, see the float caveat on kmeans_lloyd)."""
-    assigned, _ = kmeans_lloyd(corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    # no orderBy: a global sort (even over k rows) trips the registry-wide
-    # plan lint, and the gate canonicalizer sorts rows itself.
-    return assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("dist_sq").alias("inertia"),
-    )
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def power_iteration_top_component(
@@ -414,9 +306,9 @@ def power_iteration_top_component(
     vectorized Arrow batch computes y = (x−μ)·v) followed by a
     posexplode + groupBy(dim) partial-agg sum of y·(x−μ) — the shuffle
     carries d rows per partition, never the corpus. Driver state is the
-    d-vector and μ only (like kmeans_lloyd's k×d — bounded by model
-    size). Deterministic init e₀; returns (unit eigvec, eigenvalue
-    estimate λ = ‖C·v‖ of the final sweep).
+    d-vector and μ only (bounded by model size). Deterministic init e₀;
+    returns (unit eigvec, eigenvalue estimate λ = ‖C·v‖ of the final
+    sweep).
 
     Float caveat: the dimension sums run in partition order, so the
     result is reproducible only to float tolerance — numpy-parity pytest
@@ -471,6 +363,42 @@ def power_iteration_top_component(
 # --------------------------------------------------------------------------
 # product quantization (PQ) — codebook compression + ADC scan
 # --------------------------------------------------------------------------
+def _kmeans_np(X, k, iters, rng):
+    """Tiny driver-side Lloyd k-means for sample-trained quantizers."""
+    import numpy as np
+
+    cent = X[rng.choice(len(X), size=k, replace=False)].copy()
+    for _ in range(iters):
+        d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
+        for c in range(k):
+            mask = assign == c
+            if mask.any():
+                cent[c] = X[mask].mean(axis=0)
+    return cent
+
+
+def _pq_sample(
+    corpus: DataFrame, vec_col: str, sample_n: int, seed: int, m_subvectors: int
+):
+    """The bounded deterministic training sample: ``sample_n`` vectors
+    by a seeded hash order, as a float64 matrix X, and the subvector
+    width d / ``m_subvectors`` (which must divide d)."""
+    import numpy as np
+
+    sample = (
+        corpus.select(F.col(vec_col).alias("v"))
+        .orderBy(F.xxhash64(F.col("v").cast("string"), F.lit(seed)))
+        .limit(sample_n)
+        .collect()
+    )
+    X = np.asarray([r["v"] for r in sample], dtype=np.float64)
+    _, d = X.shape
+    if d % m_subvectors:
+        raise ValueError(f"dim {d} not divisible by m_subvectors={m_subvectors}")
+    return X, d // m_subvectors
+
+
 def pq_train_codebooks(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -492,30 +420,11 @@ def pq_train_codebooks(
     """
     import numpy as np
 
-    sample = (
-        corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("v").cast("string"), F.lit(seed)))
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.asarray([r["v"] for r in sample], dtype=np.float64)
-    n, d = X.shape
-    if d % m_subvectors:
-        raise ValueError(f"dim {d} not divisible by m_subvectors={m_subvectors}")
-    sub = d // m_subvectors
+    X, sub = _pq_sample(corpus, vec_col, sample_n, seed, m_subvectors)
     rng = np.random.default_rng(seed)
     books = np.empty((m_subvectors, k_codes, sub), dtype=np.float64)
     for m in range(m_subvectors):
-        Xm = X[:, m * sub : (m + 1) * sub]
-        cent = Xm[rng.choice(n, size=k_codes, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((Xm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k_codes):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = Xm[mask].mean(axis=0)
-        books[m] = cent
+        books[m] = _kmeans_np(X[:, m * sub : (m + 1) * sub], k_codes, iters, rng)
     return books
 
 
@@ -658,21 +567,6 @@ def pq_load_index(spark, path: str):
 # --------------------------------------------------------------------------
 # IVFADC: coarse inverted file + PQ-coded residuals (IVF ∘ PQ capstone)
 # --------------------------------------------------------------------------
-def _kmeans_np(X, k, iters, rng):
-    """Tiny driver-side Lloyd k-means for sample-trained quantizers."""
-    import numpy as np
-
-    cent = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(k):
-            mask = assign == c
-            if mask.any():
-                cent[c] = X[mask].mean(axis=0)
-    return cent
-
-
 def ivfpq_build(
     corpus: DataFrame,
     n_cells: int = 16,
@@ -702,17 +596,7 @@ def ivfpq_build(
     """
     import numpy as np
 
-    sample = (
-        corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("v").cast("string"), F.lit(seed)))
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.asarray([r["v"] for r in sample], dtype=np.float64)
-    n, d = X.shape
-    if d % m_subvectors:
-        raise ValueError(f"dim {d} not divisible by m_subvectors={m_subvectors}")
-    sub = d // m_subvectors
+    X, sub = _pq_sample(corpus, vec_col, sample_n, seed, m_subvectors)
     rng = np.random.default_rng(seed)
     cents = _kmeans_np(X, n_cells, iters, rng)
     resid = X - cents[((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)]
@@ -883,16 +767,7 @@ def hard_negatives(
         & (F.col("score") >= float(lo))
         & (F.col("score") < float(hi))
     )
-    item = F.struct((-F.col("score")).alias("neg"), F.col(corpus_id).alias("id"))
-    return (
-        bounded_topk(scored, query_id, item, k)
-        .select(query_id, F.explode("top").alias("t"))
-        .select(
-            query_id,
-            F.col("t.id").alias(corpus_id),
-            (-F.col("t.neg")).alias("score"),
-        )
-    )
+    return _score_topk(scored, query_id, corpus_id, k)
 
 
 def _achlioptas_sign(i: int, j: int) -> int:
@@ -1459,9 +1334,9 @@ def kmeans_quantized(
     vec_col: str = "embedding",
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Lloyd k-means on micro-quantized integers — the ORACLE-PROVABLE
-    twin of ``kmeans_lloyd`` (the minhash_provable precedent applied to
-    clustering): components are quantized AT BIRTH
+    """Lloyd k-means on micro-quantized integers — the engine's ONE
+    distributed k-means, oracle-provable (the minhash_provable
+    precedent applied to clustering): components are quantized AT BIRTH
     (``floor(v_i * scale)``), distances are exact integer squared-L2,
     assignment argmin ties break on the smaller centroid id, and the
     centroid update is the truncating integer division ``SUM DIV n``

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def _two_group_value_counts(
@@ -275,6 +276,26 @@ def mad_outliers(
     )
 
 
+def _xy_cells(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """(x, y, n_xy) contingency cells of two categorical columns, NULL
+    x or y rows excluded (MI semantics)."""
+    return (
+        df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
+        .groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
+    )
+
+
+def _cell_margins() -> list[Column]:
+    """n_x, n_y and n as windows over the ``_xy_cells`` frame — fine
+    because the cells are category-domain bounded."""
+    return [
+        F.sum("n_xy").over(Window.partitionBy("x")).cast("long").alias("n_x"),
+        F.sum("n_xy").over(Window.partitionBy("y")).cast("long").alias("n_y"),
+        F.sum("n_xy").over(Window.partitionBy()).cast("long").alias("n"),
+    ]
+
+
 def mutual_information(
     df: DataFrame,
     x_col: str,
@@ -307,20 +328,7 @@ def mutual_information(
     y, and one unpartitioned total): fine precisely because cells are
     domain-bounded; this operator is for categorical columns, not keys.
     """
-    cells = (
-        df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-        .groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
-    )
-    n_x = F.sum("n_xy").over(Window.partitionBy("x"))
-    n_y = F.sum("n_xy").over(Window.partitionBy("y"))
-    n = F.sum("n_xy").over(Window.partitionBy())
-    out = cells.select(
-        "x", "y", "n_xy",
-        n_x.cast("long").alias("n_x"),
-        n_y.cast("long").alias("n_y"),
-        n.cast("long").alias("n"),
-    )
+    out = _xy_cells(df, x_col, y_col).select("x", "y", "n_xy", *_cell_margins())
     ratio = (
         F.col("n_xy").cast("double") / F.col("n_x").cast("double")
     ) * (F.col("n").cast("double") / F.col("n_y").cast("double"))
@@ -357,21 +365,8 @@ def theil_u(
 
     Returns one row (n, n_cells, mi_micro, hx_micro, u_micro).
     """
-    cells = (
-        df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-        .groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
-    )
-    n_x = F.sum("n_xy").over(Window.partitionBy("x"))
-    n_y = F.sum("n_xy").over(Window.partitionBy("y"))
-    n = F.sum("n_xy").over(Window.partitionBy())
-    staged = cells.select(
-        "x",
-        "n_xy",
-        n_x.cast("long").alias("n_x"),
-        n_y.cast("long").alias("n_y"),
-        n.cast("long").alias("n"),
-    ).select(
+    cells = _xy_cells(df, x_col, y_col)
+    staged = cells.select("x", "n_xy", *_cell_margins()).select(
         "x",
         "n_x",
         "n",
@@ -801,6 +796,24 @@ def seasonal_decompose(
     )
 
 
+def _ordered_series(
+    df: DataFrame, key_col: str, order_col: str, value_col: str
+) -> DataFrame:
+    """(__k, __arr, n): each key's (t, x) pairs sorted by order, one
+    partial-agg groupBy — the input of the per-row smoothing folds."""
+    return df.groupBy(F.col(key_col).alias("__k")).agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col(order_col).alias("t"),
+                    F.col(value_col).cast("double").alias("x"),
+                )
+            )
+        ).alias("__arr"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )
+
+
 def holt_linear(
     df: DataFrame,
     key_col: str,
@@ -844,17 +857,9 @@ def holt_linear(
         raise ValueError(f"beta must be in (0, 1] (got {beta})")
     a, b_ = F.lit(float(alpha)), F.lit(float(beta))
     one_a, one_b = F.lit(1.0 - alpha), F.lit(1.0 - beta)
-    series = df.groupBy(F.col(key_col).alias("__k")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("t"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("__arr"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).filter(F.col("n") >= 2)
+    series = _ordered_series(df, key_col, order_col, value_col).filter(
+        F.col("n") >= 2
+    )
     xs = F.transform(F.col("__arr"), lambda p: p["x"])
 
     def fold(arr: Column) -> Column:
@@ -891,6 +896,32 @@ def holt_linear(
     )
 
 
+def _two_group_moments(
+    df: DataFrame, group_col: str, value_col: str, group_a, group_b
+) -> tuple[DataFrame, tuple[Column, ...]]:
+    """One row (n_a, n_b, __sa, __sb, __qa, __qb): each group's count,
+    Σx and Σx² over integer cents in DECIMAL(38,0); empty unless both
+    groups have n >= 2. Also returns those six columns cast to double,
+    in that order, for the fp64 close."""
+    dec = "decimal(38,0)"
+    cents = F.round(F.col(value_col) * 100).cast("long")
+    sub = df.filter(F.col(group_col).isin([group_a, group_b])).select(
+        (F.col(group_col) == F.lit(group_a)).alias("__is_a"),
+        cents.alias("__c"),
+    )
+    cd = F.col("__c").cast(dec)
+    m = sub.groupBy().agg(
+        F.sum(F.when(F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_a"),
+        F.sum(F.when(~F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_b"),
+        F.sum(F.when(F.col("__is_a"), cd)).cast(dec).alias("__sa"),
+        F.sum(F.when(~F.col("__is_a"), cd)).cast(dec).alias("__sb"),
+        F.sum(F.when(F.col("__is_a"), cd * cd)).cast(dec).alias("__qa"),
+        F.sum(F.when(~F.col("__is_a"), cd * cd)).cast(dec).alias("__qb"),
+    ).filter((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
+    cols = ("n_a", "n_b", "__sa", "__sb", "__qa", "__qb")
+    return m, tuple(F.col(c).cast("double") for c in cols)
+
+
 def welch_ttest(
     df: DataFrame,
     group_col: str,
@@ -924,24 +955,9 @@ def welch_ttest(
     Returns one row (n_a, n_b, mean_a_micro, mean_b_micro, t_micro,
     df_micro).
     """
-    dec = "decimal(38,0)"
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    sub = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        (F.col(group_col) == F.lit(group_a)).alias("__is_a"),
-        cents.alias("__c"),
+    m, (na, nb, sa, sb, qa, qb) = _two_group_moments(
+        df, group_col, value_col, group_a, group_b
     )
-    cd = F.col("__c").cast(dec)
-    m = sub.groupBy().agg(
-        F.sum(F.when(F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_a"),
-        F.sum(F.when(~F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_b"),
-        F.sum(F.when(F.col("__is_a"), cd)).cast(dec).alias("__sa"),
-        F.sum(F.when(~F.col("__is_a"), cd)).cast(dec).alias("__sb"),
-        F.sum(F.when(F.col("__is_a"), cd * cd)).cast(dec).alias("__qa"),
-        F.sum(F.when(~F.col("__is_a"), cd * cd)).cast(dec).alias("__qb"),
-    ).filter((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    sa, sb = F.col("__sa").cast("double"), F.col("__sb").cast("double")
-    qa, qb = F.col("__qa").cast("double"), F.col("__qb").cast("double")
     ma, mb = sa / na, sb / nb
     # unbiased sample variance from raw moments: (Σx² − (Σx)²/n)/(n−1)
     va = (qa - sa * sa / na) / (na - F.lit(1.0))
@@ -1670,17 +1686,9 @@ def holt_winters(
     m = period
     a_, b_, g_ = F.lit(float(alpha)), F.lit(float(beta)), F.lit(float(gamma))
     oa, ob, og = F.lit(1.0 - alpha), F.lit(1.0 - beta), F.lit(1.0 - gamma)
-    series = df.groupBy(F.col(key_col).alias("__k")).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("t"),
-                    F.col(value_col).cast("double").alias("x"),
-                )
-            )
-        ).alias("__arr"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).filter(F.col("n") >= 2 * m)
+    series = _ordered_series(df, key_col, order_col, value_col).filter(
+        F.col("n") >= 2 * m
+    )
     xs = F.transform(F.col("__arr"), lambda p: p["x"])
 
     def fsum(arr: Column) -> Column:
@@ -2210,24 +2218,9 @@ def cohens_d(
 
     Returns one row (n_a, n_b, diff_micro, pooled_sd_micro, d_micro).
     """
-    dec = "decimal(38,0)"
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    sub = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        (F.col(group_col) == F.lit(group_a)).alias("__is_a"),
-        cents.alias("__c"),
+    m, (na, nb, sa, sb, qa, qb) = _two_group_moments(
+        df, group_col, value_col, group_a, group_b
     )
-    cd = F.col("__c").cast(dec)
-    m = sub.groupBy().agg(
-        F.sum(F.when(F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_a"),
-        F.sum(F.when(~F.col("__is_a"), 1).otherwise(0)).cast("long").alias("n_b"),
-        F.sum(F.when(F.col("__is_a"), cd)).cast(dec).alias("__sa"),
-        F.sum(F.when(~F.col("__is_a"), cd)).cast(dec).alias("__sb"),
-        F.sum(F.when(F.col("__is_a"), cd * cd)).cast(dec).alias("__qa"),
-        F.sum(F.when(~F.col("__is_a"), cd * cd)).cast(dec).alias("__qb"),
-    ).filter((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    sa, sb = F.col("__sa").cast("double"), F.col("__sb").cast("double")
-    qa, qb = F.col("__qa").cast("double"), F.col("__qb").cast("double")
     ma, mb = sa / na, sb / nb
     ssa = qa - sa * sa / na  # (n−1)·s² — centered sum of squares
     ssb = qb - sb * sb / nb
@@ -2602,6 +2595,29 @@ def lorenz_points(
     return out.select("bucket", "n_keys", "bucket_cents", share.alias("cum_share_micro"))
 
 
+def _group_cent_cells(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """(__g, __v, __c): the row stream collapsed to (group, value in
+    integer cents) cells — bounded by each group's value domain."""
+    cents = F.round(F.col(value_col) * 100).cast("long")
+    return (
+        df.select(F.col(group_col).alias("__g"), cents.alias("__v"))
+        .groupBy("__g", "__v")
+        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+    )
+
+
+def _cell_cum_and_total() -> list[Column]:
+    """__cum (running count through the cell, by value) and __n (the
+    group's count) as group-partitioned windows over the cells."""
+    w_cum = Window.partitionBy("__g").orderBy("__v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return [
+        F.sum("__c").over(w_cum).alias("__cum"),
+        F.sum("__c").over(Window.partitionBy("__g")).alias("__n"),
+    ]
+
+
 def exact_group_quantiles(
     df: DataFrame,
     group_col: str,
@@ -2628,20 +2644,8 @@ def exact_group_quantiles(
     qs = quantiles_ppm if quantiles_ppm is not None else [250_000, 500_000, 750_000, 950_000]
     if not qs or any(not 0 < q <= 1_000_000 for q in qs):
         raise ValueError(f"quantiles_ppm must be in (0, 1e6] (got {qs})")
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    cells = (
-        df.select(F.col(group_col).alias("__g"), cents.alias("__v"))
-        .groupBy("__g", "__v")
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
-    w_cum = Window.partitionBy("__g").orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy("__g")
-    marked = cells.select(
-        "__g", "__v",
-        F.sum("__c").over(w_cum).alias("__cum"),
-        F.sum("__c").over(w_all).alias("__n"),
+    marked = _group_cent_cells(df, group_col, value_col).select(
+        "__g", "__v", *_cell_cum_and_total()
     )
     q_lit = F.explode(
         F.array(*[F.lit(int(q)).cast("long") for q in qs])
@@ -2907,20 +2911,8 @@ def trimmed_mean(
     if not 0 <= trim_ppm < 500_000:
         raise ValueError(f"trim_ppm must be in [0, 500000) (got {trim_ppm})")
     dec = "decimal(38,0)"
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    cells = (
-        df.select(F.col(group_col).alias("__g"), cents.alias("__v"))
-        .groupBy("__g", "__v")
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
-    w_cum = Window.partitionBy("__g").orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy("__g")
-    marked = cells.select(
-        "__g", "__v", "__c",
-        F.sum("__c").over(w_cum).alias("__cum"),
-        F.sum("__c").over(w_all).alias("__n"),
+    marked = _group_cent_cells(df, group_col, value_col).select(
+        "__g", "__v", "__c", *_cell_cum_and_total()
     )
     lo = F.expr(f"(__n * {int(trim_ppm)}) div 1000000")
     kept = F.greatest(
@@ -3462,6 +3454,21 @@ def mcnemar_test(
     )
 
 
+def _rater_accuracy(votes: DataFrame, labels: DataFrame) -> DataFrame:
+    """(__r, n_votes, n_agree, accuracy_micro): each rater's agreement
+    with the current consensus labels (__it, __c)."""
+    return votes.join(labels, "__it").groupBy("__r").agg(
+        F.count(F.lit(1)).cast("long").alias("n_votes"),
+        F.sum((F.col("__l") == F.col("__c")).cast("long"))
+        .cast("long")
+        .alias("n_agree"),
+        F.expr(
+            "CAST(CAST(SUM(CASE WHEN __l = __c THEN 1 ELSE 0 END)"
+            " AS DECIMAL(38,0)) * 1000000 DIV COUNT(*) AS BIGINT)"
+        ).alias("accuracy_micro"),
+    )
+
+
 def dawid_skene_hard(
     df: DataFrame,
     item_col: str = "item_id",
@@ -3534,17 +3541,7 @@ def dawid_skene_hard(
     labels = argmax_label(counts, "__n").localCheckpoint(eager=True)
     acc = None
     for _ in range(iters):
-        joined = votes.join(labels, "__it")
-        acc = joined.groupBy("__r").agg(
-            F.count(F.lit(1)).cast("long").alias("n_votes"),
-            F.sum((F.col("__l") == F.col("__c")).cast("long"))
-            .cast("long")
-            .alias("n_agree"),
-            F.expr(
-                "CAST(CAST(SUM(CASE WHEN __l = __c THEN 1 ELSE 0 END)"
-                " AS DECIMAL(38,0)) * 1000000 DIV COUNT(*) AS BIGINT)"
-            ).alias("accuracy_micro"),
-        )
+        acc = _rater_accuracy(votes, labels)
         # acc is consumed exactly once (the weighted re-vote below) and
         # both of its inputs are already materialized — checkpointing it
         # only added a blocking job per round (optimization r14).
@@ -3554,17 +3551,7 @@ def dawid_skene_hard(
             .agg(F.sum("accuracy_micro").cast("long").alias("__w"))
         )
         labels = argmax_label(weighted, "__w").localCheckpoint(eager=True)
-    final = votes.join(labels, "__it").groupBy("__r").agg(
-        F.count(F.lit(1)).cast("long").alias("n_votes"),
-        F.sum((F.col("__l") == F.col("__c")).cast("long"))
-        .cast("long")
-        .alias("n_agree"),
-        F.expr(
-            "CAST(CAST(SUM(CASE WHEN __l = __c THEN 1 ELSE 0 END)"
-            " AS DECIMAL(38,0)) * 1000000 DIV COUNT(*) AS BIGINT)"
-        ).alias("accuracy_micro"),
-    )
-    return final.select(
+    return _rater_accuracy(votes, labels).select(
         F.col("__r").alias("rater"), "n_votes", "n_agree", "accuracy_micro"
     )
 
@@ -3646,6 +3633,74 @@ def krippendorff_alpha(
     )
 
 
+def _multi_rated_cells(
+    df: DataFrame, item_col: str, label_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The weighted-alpha front end: ``per_item`` (__it, m) over items
+    with m >= 2 ratings, ``multi`` (__it, __l, c, m) — their (item,
+    label) cells — and ``cat`` (__l, cj), the pooled label margins.
+    Single-rating items carry no agreement information."""
+    nuc = df.groupBy(
+        F.col(item_col).alias("__it"), F.col(label_col).cast("long").alias("__l")
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    per_item = (
+        nuc.groupBy("__it")
+        .agg(F.sum("c").cast("long").alias("m"))
+        .filter(F.col("m") >= 2)
+    )
+    multi = nuc.join(per_item, "__it")
+    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
+    return per_item, multi, cat
+
+
+def _item_label_pairs(multi: DataFrame) -> DataFrame:
+    """Every item's label-cell pairs lc < lk with their counts ca, cb —
+    a contingency-cell self-join (≤ |labels|² per item), never a
+    row-pair join."""
+    a = multi.select("__it", F.col("__l").alias("lc"), F.col("c").alias("ca"))
+    b = multi.select(
+        F.col("__it").alias("__itb"), F.col("__l").alias("lk"),
+        F.col("c").alias("cb"),
+    )
+    return a.join(b, (F.col("__it") == F.col("__itb")) & (F.col("lc") < F.col("lk")))
+
+
+def _alpha_from_disagreements(
+    per_item: DataFrame, item_pairs: DataFrame, cat: DataFrame, de: DataFrame
+) -> DataFrame:
+    """The weighted-alpha close: per-item weighted disagreement ``pd``
+    (from ``item_pairs``) micro-scaled by 1/(m−1), summed, and set
+    against the expected disagreement ``de_num`` — one truncating DIV
+    each for disagreement_micro and alpha_micro (NULL when every rating
+    is one category)."""
+    cat_tot = cat.groupBy().agg(F.sum("cj").cast("long").alias("n"))
+    obs = (
+        per_item.join(item_pairs, "__it", "left")
+        .select(
+            "m",
+            F.coalesce(F.col("pd"), F.lit(0).cast("decimal(38,0)")).alias("pd"),
+        )
+        .groupBy()
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+            F.sum(
+                F.expr("CAST(pd * 1000000 DIV (m - 1) AS DECIMAL(38,0))")
+            ).alias("do_scaled"),
+        )
+    )
+    return obs.crossJoin(cat_tot).crossJoin(de).select(
+        "n_items",
+        F.col("n").alias("n_ratings"),
+        F.expr(
+            "CAST((do_scaled * (n - 1)) DIV NULLIF(de_num, 0) AS BIGINT)"
+        ).alias("disagreement_micro"),
+        F.expr(
+            "CAST(1000000 - (do_scaled * (n - 1))"
+            " DIV NULLIF(de_num, 0) AS BIGINT)"
+        ).alias("alpha_micro"),
+    )
+
+
 def krippendorff_ordinal(
     df: DataFrame,
     item_col: str = "item_id",
@@ -3689,16 +3744,7 @@ def krippendorff_ordinal(
     emitted (``alpha_micro = 1e6 − disagreement_micro``); the internal
     arithmetic is DECIMAL(38,0)-exact throughout.
     """
-    nuc = df.groupBy(
-        F.col(item_col).alias("__it"), F.col(label_col).cast("long").alias("__l")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per_item = (
-        nuc.groupBy("__it")
-        .agg(F.sum("c").cast("long").alias("m"))
-        .filter(F.col("m") >= 2)
-    )
-    multi = nuc.join(per_item, "__it")
-    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
+    per_item, multi, cat = _multi_rated_cells(df, item_col, label_col)
     wcum = Window.orderBy("__l").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3727,23 +3773,17 @@ def krippendorff_ordinal(
             ).alias("w"),
         )
     )
-    cat_tot = cat.groupBy().agg(F.sum("cj").cast("long").alias("n"))
     de = wpairs.groupBy().agg(
         F.sum(
             F.expr("CAST(cjc AS DECIMAL(38,0)) * cjk") * F.col("w")
         ).alias("de_num")
-    )
-    a = multi.select("__it", F.col("__l").alias("lc"), F.col("c").alias("ca"))
-    b = multi.select(
-        F.col("__it").alias("__itb"), F.col("__l").alias("lk"),
-        F.col("c").alias("cb"),
     )
     # no broadcast hint on wpairs: it is label-domain-bounded (≤
     # |scale|²/2 rows) but DERIVED from the input table, and the repo
     # convention (test-enforced) never force-broadcasts anything rooted
     # at an SF table — AQE broadcasts it at runtime when it is small.
     item_pairs = (
-        a.join(b, (F.col("__it") == F.col("__itb")) & (F.col("lc") < F.col("lk")))
+        _item_label_pairs(multi)
         .join(wpairs.select("lc", "lk", "w"), ["lc", "lk"])
         .groupBy("__it")
         .agg(
@@ -3752,31 +3792,7 @@ def krippendorff_ordinal(
             ).alias("pd")
         )
     )
-    obs = (
-        per_item.join(item_pairs, "__it", "left")
-        .select(
-            "m",
-            F.coalesce(F.col("pd"), F.lit(0).cast("decimal(38,0)")).alias("pd"),
-        )
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(
-                F.expr("CAST(pd * 1000000 DIV (m - 1) AS DECIMAL(38,0))")
-            ).alias("do_scaled"),
-        )
-    )
-    return obs.crossJoin(cat_tot).crossJoin(de).select(
-        "n_items",
-        F.col("n").alias("n_ratings"),
-        F.expr(
-            "CAST((do_scaled * (n - 1)) DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("disagreement_micro"),
-        F.expr(
-            "CAST(1000000 - (do_scaled * (n - 1))"
-            " DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("alpha_micro"),
-    )
+    return _alpha_from_disagreements(per_item, item_pairs, cat, de)
 
 
 def cochran_armitage(
@@ -3870,16 +3886,7 @@ def krippendorff_interval(
     Returns one row (n_items, n_ratings, disagreement_micro,
     alpha_micro).
     """
-    nuc = df.groupBy(
-        F.col(item_col).alias("__it"), F.col(label_col).cast("long").alias("__l")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per_item = (
-        nuc.groupBy("__it")
-        .agg(F.sum("c").cast("long").alias("m"))
-        .filter(F.col("m") >= 2)
-    )
-    multi = nuc.join(per_item, "__it")
-    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
+    per_item, multi, cat = _multi_rated_cells(df, item_col, label_col)
     lo = cat.select(F.col("__l").alias("lc"), F.col("cj").alias("cjc"))
     hi = cat.select(F.col("__l").alias("lk"), F.col("cj").alias("cjk"))
     de = (
@@ -3894,14 +3901,8 @@ def krippendorff_interval(
             ).alias("de_num")
         )
     )
-    cat_tot = cat.groupBy().agg(F.sum("cj").cast("long").alias("n"))
-    a = multi.select("__it", F.col("__l").alias("lc"), F.col("c").alias("ca"))
-    b = multi.select(
-        F.col("__it").alias("__itb"), F.col("__l").alias("lk"),
-        F.col("c").alias("cb"),
-    )
     item_pairs = (
-        a.join(b, (F.col("__it") == F.col("__itb")) & (F.col("lc") < F.col("lk")))
+        _item_label_pairs(multi)
         .groupBy("__it")
         .agg(
             F.sum(
@@ -3912,31 +3913,7 @@ def krippendorff_interval(
             ).alias("pd")
         )
     )
-    obs = (
-        per_item.join(item_pairs, "__it", "left")
-        .select(
-            "m",
-            F.coalesce(F.col("pd"), F.lit(0).cast("decimal(38,0)")).alias("pd"),
-        )
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(
-                F.expr("CAST(pd * 1000000 DIV (m - 1) AS DECIMAL(38,0))")
-            ).alias("do_scaled"),
-        )
-    )
-    return obs.crossJoin(cat_tot).crossJoin(de).select(
-        "n_items",
-        F.col("n").alias("n_ratings"),
-        F.expr(
-            "CAST((do_scaled * (n - 1)) DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("disagreement_micro"),
-        F.expr(
-            "CAST(1000000 - (do_scaled * (n - 1))"
-            " DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("alpha_micro"),
-    )
+    return _alpha_from_disagreements(per_item, item_pairs, cat, de)
 
 
 def cochran_q(
@@ -4758,6 +4735,43 @@ def sprt_eval(
     )
 
 
+def _ranked_p_values(
+    df: DataFrame, id_col: str, p_micro_col: str, alpha_micro: int
+) -> DataFrame:
+    """(id, p_micro, rank): the multiple-testing front end — NULL
+    p-values dropped, then one window over the p-value order with ties
+    broken by id (see ``benjamini_hochberg`` for both conventions)."""
+    if not (0 < alpha_micro < 1_000_000):
+        raise ValueError(f"alpha_micro must be in (0, 1e6) (got {alpha_micro})")
+    df = df.filter(F.col(p_micro_col).isNotNull())
+    w = Window.orderBy(F.col(p_micro_col), F.col(id_col))
+    return df.select(
+        F.col(id_col),
+        F.col(p_micro_col).cast("long").alias("p_micro"),
+        F.row_number().over(w).cast("long").alias("rank"),
+    )
+
+
+def _step_rejects(
+    ranked: DataFrame,
+    m: DataFrame,
+    id_col: str,
+    hit: Column,
+    cutoff: Column,
+    reject: Column,
+) -> DataFrame:
+    """(id, p_micro, rank, m, reject) — the family schema. ``cutoff``
+    aggregates the ranks of the rows where ``hit`` holds into one
+    scalar (the step-up cut or the step-down stop), and ``reject``
+    compares each rank with it; ``m`` is the 1-row hypothesis count."""
+    cut = ranked.join(F.broadcast(m)).filter(hit).groupBy().agg(cutoff)
+    return (
+        ranked.join(F.broadcast(m))
+        .join(F.broadcast(cut))
+        .select(id_col, "p_micro", "rank", "m", reject.alias("reject"))
+    )
+
+
 def benjamini_hochberg(
     df: DataFrame,
     id_col: str = "hyp_id",
@@ -4795,32 +4809,15 @@ def benjamini_hochberg(
 
     Returns (id, p_micro, rank, m, reject) ordered by rank.
     """
-    if not (0 < alpha_micro < 1_000_000):
-        raise ValueError(f"alpha_micro must be in (0, 1e6) (got {alpha_micro})")
-    df = df.filter(F.col(p_micro_col).isNotNull())
-    w = Window.orderBy(F.col(p_micro_col), F.col(id_col))
-    ranked = df.select(
-        F.col(id_col),
-        F.col(p_micro_col).cast("long").alias("p_micro"),
-        F.row_number().over(w).cast("long").alias("rank"),
-    )
+    ranked = _ranked_p_values(df, id_col, p_micro_col, alpha_micro)
     m = ranked.groupBy().agg(F.count(F.lit(1)).cast("long").alias("m"))
-    cut = (
-        ranked.join(F.broadcast(m))
-        .filter(F.col("p_micro") * F.col("m") <= F.col("rank") * F.lit(alpha_micro))
-        .groupBy()
-        .agg(F.max("rank").alias("__cut"))
-    )
-    return (
-        ranked.join(F.broadcast(m))
-        .join(F.broadcast(cut))
-        .select(
-            id_col,
-            "p_micro",
-            "rank",
-            "m",
-            (F.col("rank") <= F.coalesce(F.col("__cut"), F.lit(0))).alias("reject"),
-        )
+    return _step_rejects(
+        ranked,
+        m,
+        id_col,
+        F.col("p_micro") * F.col("m") <= F.col("rank") * F.lit(alpha_micro),
+        F.max("rank").alias("__cut"),
+        F.col("rank") <= F.coalesce(F.col("__cut"), F.lit(0)),
     )
 
 
@@ -4991,6 +4988,25 @@ def mcc_binary(
     )
 
 
+def _running_frame(group_col: str, order_col: str) -> WindowSpec:
+    """Each series' prefix frame: partitioned by group, ordered by
+    ``order_col``, unbounded preceding through the current row."""
+    return (
+        Window.partitionBy(group_col)
+        .orderBy(F.col(order_col))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _clamped_walk(c: str, order: str) -> Column:
+    """Page's clamped CUSUM ``S_t = max(0, S_{t−1} + d_t)`` in closed
+    prefix form ``S_t = c_t − min(0, min_{≤t} c)``, from the running
+    deviation sum column ``c`` of each ``group`` ordered by ``order``."""
+    return F.col(c) - F.least(
+        F.lit(0).cast("long"), F.min(c).over(_running_frame("group", order))
+    )
+
+
 def cusum_detect(
     df: DataFrame,
     group_col: str,
@@ -5022,11 +5038,7 @@ def cusum_detect(
     Returns (group, n, max_cusum, first_alarm_step) — first_alarm_step
     NULL when the series never alarms.
     """
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _running_frame(group_col, order_col)
     d = F.col(value_col).cast("long") - F.lit(int(target)) - F.lit(int(slack))
     walk = df.select(
         F.col(group_col).alias("group"),
@@ -5035,17 +5047,7 @@ def cusum_detect(
     ).select(
         "group",
         "__o",
-        (
-            F.col("__c")
-            - F.least(
-                F.lit(0).cast("long"),
-                F.min("__c").over(
-                    Window.partitionBy("group")
-                    .orderBy(F.col("__o"))
-                    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                ),
-            )
-        ).alias("__s"),
+        _clamped_walk("__c", "__o").alias("__s"),
         F.row_number()
         .over(Window.partitionBy("group").orderBy(F.col("__o")))
         .cast("long")
@@ -5065,9 +5067,7 @@ def cusum_two_sided(
     group_col: str,
     order_col: str,
     value_col: str,
-    target: int,
-    slack: int,
-    threshold: int,
+    target: int, slack: int, threshold: int,
 ) -> DataFrame:
     """Two-sided CUSUM change detection (Page 1954) per series — the
     symmetric completion of ``cusum_detect`` (VERDICT r13 #6): the
@@ -5090,11 +5090,7 @@ def cusum_two_sided(
     by which walk breached at the first alarm step, NULL when the
     series never alarms.
     """
-    wcum = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    wcum = _running_frame(group_col, order_col)
     wo = Window.partitionBy(group_col).orderBy(F.col(order_col))
     dup = F.col(value_col).cast("long") - F.lit(int(target)) - F.lit(int(slack))
     ddn = F.lit(int(target)) - F.lit(int(slack)) - F.col(value_col).cast("long")
@@ -5110,28 +5106,8 @@ def cusum_two_sided(
         .select(
             "group",
             "__step",
-            (
-                F.col("__cu")
-                - F.least(
-                    F.lit(0).cast("long"),
-                    F.min("__cu").over(
-                        Window.partitionBy("group")
-                        .orderBy(F.col("__step"))
-                        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    ),
-                )
-            ).alias("__su"),
-            (
-                F.col("__cd")
-                - F.least(
-                    F.lit(0).cast("long"),
-                    F.min("__cd").over(
-                        Window.partitionBy("group")
-                        .orderBy(F.col("__step"))
-                        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    ),
-                )
-            ).alias("__sd"),
+            _clamped_walk("__cu", "__step").alias("__su"),
+            _clamped_walk("__cd", "__step").alias("__sd"),
         )
     )
     agg = walk.groupBy("group").agg(
@@ -5503,6 +5479,22 @@ def winsorized_mean(
     )
 
 
+def _score_counts(
+    df: DataFrame, score_col: str, label_col: str
+) -> tuple[DataFrame, WindowSpec]:
+    """(s, c, p): rows and positives per distinct score, plus the
+    descending-score running frame the cumulative curves sum over."""
+    y = F.col(label_col).cast("long")
+    vc = df.groupBy(F.col(score_col).alias("s")).agg(
+        F.count(F.lit(1)).cast("long").alias("c"),
+        F.sum(y).cast("long").alias("p"),
+    )
+    w = Window.orderBy(F.col("s").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return vc, w
+
+
 def gains_table(
     df: DataFrame,
     score_col: str,
@@ -5530,14 +5522,7 @@ def gains_table(
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1 (got {n_buckets})")
-    y = F.col(label_col).cast("long")
-    vc = df.groupBy(F.col(score_col).alias("s")).agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum(y).cast("long").alias("p"),
-    )
-    w = Window.orderBy(F.col("s").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    vc, w = _score_counts(df, score_col, label_col)
     wall = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -5848,14 +5833,7 @@ def average_precision(
 
     Returns one row (n, n_pos, ap_micro).
     """
-    y = F.col(label_col).cast("long")
-    vc = df.groupBy(F.col(score_col).alias("s")).agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum(y).cast("long").alias("p"),
-    )
-    w = Window.orderBy(F.col("s").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    vc, w = _score_counts(df, score_col, label_col)
     cum = vc.select(
         "p",
         F.sum("c").over(w).cast("long").alias("cum"),
@@ -6252,6 +6230,27 @@ def post_stratified_mean(
     )
 
 
+def _two_group_totals(df: DataFrame, group_col: str, group_a, group_b) -> DataFrame:
+    """One row (n_a, n_b): the two groups' row counts."""
+    return df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
+        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
+        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
+    )
+
+
+def _value_counts_with_totals(
+    df: DataFrame, group_col: str, value_col: str, group_a, group_b
+) -> DataFrame:
+    """(ca, cb, n_a, n_b): each distinct value's count in both groups
+    next to the two group totals (a broadcast 1-row frame)."""
+    vc = _two_group_value_counts(
+        df, group_col, value_col, group_a, group_b
+    ).select(
+        F.col("n_a").alias("ca"), F.col("n_b").alias("cb")
+    )
+    return vc.join(F.broadcast(_two_group_totals(df, group_col, group_a, group_b)))
+
+
 def tv_distance(
     df: DataFrame,
     group_col: str,
@@ -6273,16 +6272,9 @@ def tv_distance(
 
     Returns one row (n_a, n_b, tv_micro).
     """
-    vc = _two_group_value_counts(
+    terms = _value_counts_with_totals(
         df, group_col, value_col, group_a, group_b
     ).select(
-        F.col("n_a").alias("ca"), F.col("n_b").alias("cb")
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
-    terms = vc.join(F.broadcast(tot)).select(
         "n_a",
         "n_b",
         F.expr(
@@ -6324,16 +6316,9 @@ def hellinger_distance(
 
     Returns one row (n_a, n_b, h2_micro).
     """
-    vc = _two_group_value_counts(
+    terms = _value_counts_with_totals(
         df, group_col, value_col, group_a, group_b
     ).select(
-        F.col("n_a").alias("ca"), F.col("n_b").alias("cb")
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
-    terms = vc.join(F.broadcast(tot)).select(
         "n_a",
         "n_b",
         F.expr(
@@ -6390,10 +6375,7 @@ def cvm_distance(
         F.sum("n_a").over(w).cast("long").alias("cuma"),
         F.sum("n_b").over(w).cast("long").alias("cumb"),
     )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
+    tot = _two_group_totals(df, group_col, group_a, group_b)
     terms = cum.join(F.broadcast(tot)).select(
         "n_a",
         "n_b",
@@ -6459,10 +6441,7 @@ def ad_distance(
         F.sum("n_a").over(w).cast("long").alias("cuma"),
         F.sum(F.col("n_a") + F.col("n_b")).over(w).cast("long").alias("bj"),
     )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
+    tot = _two_group_totals(df, group_col, group_a, group_b)
     # the bj = N block contributes 0 by definition and is zeroed in
     # the term (not filtered out): an all-tied pooled sample must
     # yield ad_micro = 0, not an empty frame aggregating to NULL
@@ -6506,6 +6485,53 @@ def ad_distance(
     )
 
 
+def _group_value_cells(
+    df: DataFrame, group_col: str, value_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``gv`` (g, v, n_gv): the (group, value) cell counts, NULL group
+    or value rows dropped; ``tv`` (v, t): the pooled count per distinct
+    value — both bounded by the value domain, never the row count."""
+    sub = df.filter(
+        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
+    )
+    gv = sub.groupBy(
+        F.col(group_col).alias("g"), F.col(value_col).alias("v")
+    ).agg(F.count("*").cast("long").alias("n_gv"))
+    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
+    return gv, tv
+
+
+def _doubled_rank() -> Column:
+    """r2(v) = 2·cum_before(v) + t(v) + 1 over the ``tv`` frame: twice
+    the average rank of value v, so tied ranks stay integral."""
+    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
+        + F.col("t")
+        + F.lit(1)
+    ).cast("long").alias("r2")
+
+
+def _group_rank_sums(gv: DataFrame, ranks: DataFrame) -> DataFrame:
+    """(g, n_g, r2_g): each group's size and doubled rank sum."""
+    return (
+        gv.join(ranks, "v")
+        .groupBy("g")
+        .agg(
+            F.sum("n_gv").cast("long").alias("n_g"),
+            F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
+        )
+    )
+
+
+def _tie_totals(tv: DataFrame) -> DataFrame:
+    """One row (tie_num, n): Σ_v (t_v³ − t_v) in DECIMAL and N."""
+    return tv.groupBy().agg(
+        F.sum(F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")).alias("tie_num"),
+        F.sum("t").cast("long").alias("n"),
+    )
+
+
 def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Kruskal-Wallis H: the k-group generalization of the rank-sum
     test (one-way ANOVA on ranks) — the missing member between
@@ -6529,30 +6555,10 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     Returns one row (n, k, h_micro, h_tie_micro); under H0 compare
     against chi-square(k-1).
     """
-    sub = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    )
-    gv = sub.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranks = tv.select(
-        "v",
-        "t",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t")
-            + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
+    gv, tv = _group_value_cells(df, group_col, value_col)
+    ranks = tv.select("v", "t", _doubled_rank())
     per_g = (
-        gv.join(ranks, "v")
-        .groupBy("g")
-        .agg(
-            F.sum("n_gv").cast("long").alias("n_g"),
-            F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
-        )
+        _group_rank_sums(gv, ranks)
         .select(
             "n_g",
             # pmod identity, not DIV: the per-group quotient
@@ -6566,12 +6572,7 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
             ).alias("__t"),
         )
     )
-    ties = tv.groupBy().agg(
-        F.sum(
-            F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")
-        ).alias("tie_num"),
-        F.sum("t").cast("long").alias("n"),
-    )
+    ties = _tie_totals(tv)
     return per_g.join(F.broadcast(ties)).groupBy().agg(
         F.max("n").alias("n"),
         F.count("*").cast("long").alias("k"),
@@ -6605,13 +6606,7 @@ def mood_median(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     DECIMAL-safe to N ~ 1e8).  Returns one row
     (n, k, median_v, chi2_micro); under H0 compare chi-square(k-1).
     """
-    sub = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    )
-    gv = sub.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
+    gv, tv = _group_value_cells(df, group_col, value_col)
     w = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -6989,6 +6984,33 @@ def grubbs_test(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
+def _group_sums(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """(g, n_g, s_g, q_g): each group's count, Σx and Σx² in
+    DECIMAL(38,0) over an integer-quantized value column, NULL group or
+    value rows dropped."""
+    v = F.col(value_col).cast("long")
+    return (
+        df.filter(F.col(group_col).isNotNull() & v.isNotNull())
+        .groupBy(F.col(group_col).alias("g"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_g"),
+            F.sum(v.cast("decimal(38,0)")).alias("s_g"),
+            F.sum(v.cast("decimal(38,0)") * v).alias("q_g"),
+        )
+    )
+
+
+# A group's within sum of squares times 1e6, Σx²·1e6 − (Σx)²·1e6 / n,
+# truncated. NOT `DIV`: Spark's DIV always narrows to BIGINT and the
+# quotient (~S^2 1e6 / n) exceeds int64 well before the DECIMAL bound —
+# the pmod identity keeps the exact truncating quotient in DECIMAL(38,0).
+_SSW_MICRO_SQL = (
+    "CAST(q_g * 1000000"
+    " - (s_g * s_g * 1000000 - pmod(s_g * s_g * 1000000, n_g)) / n_g"
+    " AS DECIMAL(38,0))"
+)
+
+
 def bartlett_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Bartlett's test for homogeneity of variances across k groups —
     the parametric (normal-theory) companion to levene_bf: sharper
@@ -7010,28 +7032,10 @@ def bartlett_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     integer-quantized.  Returns one row (n, k, bartlett_micro);
     under H0 compare chi-square(k-1).
     """
-    v = F.col(value_col).cast("long")
-    per_g = (
-        df.filter(F.col(group_col).isNotNull() & v.isNotNull())
-        .groupBy(F.col(group_col).alias("g"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum(v.cast("decimal(38,0)")).alias("s_g"),
-            F.sum(v.cast("decimal(38,0)") * v).alias("q_g"),
-        )
-        .filter(F.col("n_g") >= 2)
-    )
+    per_g = _group_sums(df, group_col, value_col).filter(F.col("n_g") >= 2)
     staged = per_g.select(
         "n_g",
-        # NOT `DIV`: Spark's DIV always narrows to BIGINT and the
-        # quotient here (~S^2 1e6 / n) exceeds int64 well before the
-        # DECIMAL bound — the pmod identity keeps the exact truncating
-        # quotient in DECIMAL(38,0)
-        F.expr(
-            "CAST(q_g * 1000000"
-            " - (s_g * s_g * 1000000 - pmod(s_g * s_g * 1000000, n_g)) / n_g"
-            " AS DECIMAL(38,0))"
-        ).alias("w_micro"),
+        F.expr(_SSW_MICRO_SQL).alias("w_micro"),
         F.expr(
             """CAST(FLOOR(
               (n_g - 1) * LN((CAST(q_g AS DOUBLE) * n_g
@@ -7413,6 +7417,25 @@ def _lngamma_sql(z: str) -> str:
     )
 
 
+def _lnc_sql(n: str, k: str) -> str:
+    """ln C(n, k) as SQL text over integer expressions n, k."""
+    return (
+        f"({_lngamma_sql(f'({n}) + 1')} - {_lngamma_sql(f'({k}) + 1')}"
+        f" - {_lngamma_sql(f'({n}) - ({k}) + 1')})"
+    )
+
+
+# An exact two-sided test's summand: the pico-floored mass of every
+# table no more likely than the observed one, with the standard 1e-7
+# relative tolerance (both engines compute identical doubles, so the
+# comparison set is identical).
+_SMALL_P_TERM_SQL = (
+    "CASE WHEN EXP(__lnp) <= EXP(__lnp_obs) * (1.0 + 1e-7)"
+    " THEN CAST(FLOOR(EXP(__lnp) * 1000000000000) AS BIGINT)"
+    " ELSE CAST(0 AS BIGINT) END"
+)
+
+
 def bayes_ab_prob(
     df: DataFrame,
     arm_col: str,
@@ -7552,21 +7575,18 @@ def fisher_exact(
             .alias("nn"),
         )
     )
-    lnc = lambda n, k: (
-        f"({_lngamma_sql(f'({n}) + 1')} - {_lngamma_sql(f'({k}) + 1')}"
-        f" - {_lngamma_sql(f'({n}) - ({k}) + 1')})"
-    )
     # the row-constant pieces (observed-table mass, the lnC(N,c1)
     # normalizer) are computed ONCE on the 1-row cells frame before
     # the spine join, and the per-row mass once per row — the naive
     # inline form re-expands the Stirling text 4x per row and its
     # codegen compile alone dominated the wall time
     cells = cells.withColumn(
-        "__lnc_norm", F.expr(lnc("nn", "c1"))
+        "__lnc_norm", F.expr(_lnc_sql("nn", "c1"))
     ).withColumn(
         "__lnp_obs",
         F.expr(
-            f"{lnc('r1', 'n11')} + {lnc('r2', 'c1 - n11')} - __lnc_norm"
+            f"{_lnc_sql('r1', 'n11')} + {_lnc_sql('r2', 'c1 - n11')}"
+            " - __lnc_norm"
         ),
     )
     spine = spark.range(int(max_terms)).select(F.col("id").alias("__i"))
@@ -7576,16 +7596,11 @@ def fisher_exact(
         .filter(F.col("k") <= F.least(F.col("r1"), F.col("c1")))
         .withColumn(
             "__lnp",
-            F.expr(f"{lnc('r1', 'k')} + {lnc('r2', 'c1 - k')} - __lnc_norm"),
-        )
-        .withColumn(
-            "__t",
             F.expr(
-                "CASE WHEN EXP(__lnp) <= EXP(__lnp_obs) * (1.0 + 1e-7)"
-                " THEN CAST(FLOOR(EXP(__lnp) * 1000000000000) AS BIGINT)"
-                " ELSE CAST(0 AS BIGINT) END"
+                f"{_lnc_sql('r1', 'k')} + {_lnc_sql('r2', 'c1 - k')} - __lnc_norm"
             ),
         )
+        .withColumn("__t", F.expr(_SMALL_P_TERM_SQL))
     )
     return terms.groupBy().agg(
         F.max("n11").alias("n11"),
@@ -7670,28 +7685,11 @@ def welch_anova(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     Groups with n_g < 2 or zero variance are excluded (documented).
     Returns one row (n, k, f_micro, df2_micro).
     """
-    v = F.col(value_col).cast("long")
-    per_g = (
-        df.filter(F.col(group_col).isNotNull() & v.isNotNull())
-        .groupBy(F.col(group_col).alias("g"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum(v.cast("decimal(38,0)")).alias("s_g"),
-            F.sum(v.cast("decimal(38,0)") * v).alias("q_g"),
-        )
-        .filter(
-            (F.col("n_g") >= 2)
-            & (F.col("q_g") * F.col("n_g") > F.col("s_g") * F.col("s_g"))
-        )
+    per_g = _group_sums(df, group_col, value_col).filter(
+        (F.col("n_g") >= 2)
+        & (F.col("q_g") * F.col("n_g") > F.col("s_g") * F.col("s_g"))
     )
-    per_g = per_g.withColumn(
-        "w_ssw",
-        F.expr(
-            "CAST(q_g * 1000000"
-            " - (s_g * s_g * 1000000 - pmod(s_g * s_g * 1000000, n_g)) / n_g"
-            " AS DECIMAL(38,0))"
-        ),
-    )
+    per_g = per_g.withColumn("w_ssw", F.expr(_SSW_MICRO_SQL))
     tot0 = per_g.groupBy().agg(
         F.sum("n_g").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
@@ -7814,13 +7812,9 @@ def poisson_two_rate(
             )
         )
     )
-    lnc = lambda n, k: (
-        f"({_lngamma_sql(f'({n}) + 1')} - {_lngamma_sql(f'({k}) + 1')}"
-        f" - {_lngamma_sql(f'({n}) - ({k}) + 1')})"
-    )
     cells = cells.withColumn(
         "__lnp_obs",
-        F.expr(f"{lnc('nn', 'x_a')} + x_a * lnp0 + (nn - x_a) * lnq0"),
+        F.expr(f"{_lnc_sql('nn', 'x_a')} + x_a * lnp0 + (nn - x_a) * lnq0"),
     )
     spine = spark.range(int(max_terms)).select(F.col("id").alias("k"))
     terms = (
@@ -7828,16 +7822,9 @@ def poisson_two_rate(
         .filter(F.col("k") <= F.col("nn"))
         .withColumn(
             "__lnp",
-            F.expr(f"{lnc('nn', 'k')} + k * lnp0 + (nn - k) * lnq0"),
+            F.expr(f"{_lnc_sql('nn', 'k')} + k * lnp0 + (nn - k) * lnq0"),
         )
-        .withColumn(
-            "__t",
-            F.expr(
-                "CASE WHEN EXP(__lnp) <= EXP(__lnp_obs) * (1.0 + 1e-7)"
-                " THEN CAST(FLOOR(EXP(__lnp) * 1000000000000) AS BIGINT)"
-                " ELSE CAST(0 AS BIGINT) END"
-            ),
-        )
+        .withColumn("__t", F.expr(_SMALL_P_TERM_SQL))
     )
     return terms.groupBy().agg(
         F.max("x_a").alias("x_a"),
@@ -7945,43 +7932,22 @@ def benjamini_yekutieli(
     already-aggregated hypothesis table).
     Returns (id, p_micro, rank, m, reject) — BH's schema.
     """
-    if not (0 < alpha_micro < 1_000_000):
-        raise ValueError(f"alpha_micro must be in (0, 1e6) (got {alpha_micro})")
-    df = df.filter(F.col(p_micro_col).isNotNull())
-    w = Window.orderBy(F.col(p_micro_col), F.col(id_col))
-    ranked = df.select(
-        F.col(id_col),
-        F.col(p_micro_col).cast("long").alias("p_micro"),
-        F.row_number().over(w).cast("long").alias("rank"),
-    )
+    ranked = _ranked_p_values(df, id_col, p_micro_col, alpha_micro)
     m = ranked.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("m"),
         F.sum(F.expr("1000000000000 DIV rank")).cast("long").alias("c_pico"),
     )
-    cut = (
-        ranked.join(F.broadcast(m))
-        .filter(
-            F.expr(
-                f"CAST(p_micro AS DECIMAL(38,0)) * m * c_pico"
-                f" <= CAST(rank AS DECIMAL(38,0)) * {int(alpha_micro)}"
-                " * 1000000000000"
-            )
-        )
-        .groupBy()
-        .agg(F.max("rank").alias("__cut"))
-    )
-    return (
-        ranked.join(F.broadcast(m))
-        .join(F.broadcast(cut))
-        .select(
-            id_col,
-            "p_micro",
-            "rank",
-            "m",
-            (F.col("rank") <= F.coalesce(F.col("__cut"), F.lit(0))).alias(
-                "reject"
-            ),
-        )
+    return _step_rejects(
+        ranked,
+        m,
+        id_col,
+        F.expr(
+            f"CAST(p_micro AS DECIMAL(38,0)) * m * c_pico"
+            f" <= CAST(rank AS DECIMAL(38,0)) * {int(alpha_micro)}"
+            " * 1000000000000"
+        ),
+        F.max("rank").alias("__cut"),
+        F.col("rank") <= F.coalesce(F.col("__cut"), F.lit(0)),
     )
 
 
@@ -8088,34 +8054,9 @@ def dunn_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     multiplicity correction.  Returns (g_i, g_j, z_micro) for every
     i < j by group name order.
     """
-    sub = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    )
-    gv = sub.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranks = tv.select(
-        "v",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t")
-            + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
-    per_g = (
-        gv.join(ranks, "v")
-        .groupBy("g")
-        .agg(
-            F.sum("n_gv").cast("long").alias("n_g"),
-            F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
-        )
-    )
-    ties = tv.groupBy().agg(
-        F.sum(F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")).alias("tie_num"),
-        F.sum("t").cast("long").alias("n"),
-    )
+    gv, tv = _group_value_cells(df, group_col, value_col)
+    per_g = _group_rank_sums(gv, tv.select("v", _doubled_rank()))
+    ties = _tie_totals(tv)
     lo = per_g.select(
         F.col("g").alias("g_i"),
         F.col("n_g").alias("n_i"),
@@ -8167,38 +8108,15 @@ def holm_bonferroni(
     schema, so the three gates are directly comparable on identical
     input (Holm ⊆ ... ⊆ BH is pytest-pinned).
     """
-    if not (0 < alpha_micro < 1_000_000):
-        raise ValueError(f"alpha_micro must be in (0, 1e6) (got {alpha_micro})")
-    df = df.filter(F.col(p_micro_col).isNotNull())
-    w = Window.orderBy(F.col(p_micro_col), F.col(id_col))
-    ranked = df.select(
-        F.col(id_col),
-        F.col(p_micro_col).cast("long").alias("p_micro"),
-        F.row_number().over(w).cast("long").alias("rank"),
-    )
+    ranked = _ranked_p_values(df, id_col, p_micro_col, alpha_micro)
     m = ranked.groupBy().agg(F.count(F.lit(1)).cast("long").alias("m"))
-    stop = (
-        ranked.join(F.broadcast(m))
-        .filter(
-            F.col("p_micro") * (F.col("m") - F.col("rank") + 1)
-            > F.lit(int(alpha_micro))
-        )
-        .groupBy()
-        .agg(F.min("rank").alias("__stop"))
-    )
-    return (
-        ranked.join(F.broadcast(m))
-        .join(F.broadcast(stop))
-        .select(
-            id_col,
-            "p_micro",
-            "rank",
-            "m",
-            (
-                F.col("rank")
-                < F.coalesce(F.col("__stop"), F.col("m") + 1)
-            ).alias("reject"),
-        )
+    return _step_rejects(
+        ranked,
+        m,
+        id_col,
+        F.col("p_micro") * (F.col("m") - F.col("rank") + 1) > F.lit(int(alpha_micro)),
+        F.min("rank").alias("__stop"),
+        F.col("rank") < F.coalesce(F.col("__stop"), F.col("m") + 1),
     )
 
 

@@ -351,6 +351,21 @@ def redact_pii(
     return out.withColumn(text_col, red)
 
 
+def _token_stream(df: DataFrame, id_col: str, text_col: str, keep: Column) -> DataFrame:
+    """(id, token): the lower-cased whitespace tokens of ``text_col``
+    that pass ``keep``, repartitioned on token — the one exchange the
+    callers' per-(doc, token) and per-token aggregates share."""
+    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return (
+        df.select(
+            F.col(id_col),
+            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        )
+        .filter(keep)
+        .repartition(n_shuffle, "token")
+    )
+
+
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -477,15 +492,7 @@ def bm25_scores(
     # scan or a tf-vs-df self-join.
     from pyspark.sql.window import Window
 
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
-        .filter(F.col("token").isin(terms))
-        .repartition(n_shuffle, "token")
-    )
+    toks = _token_stream(df, id_col, text_col, F.col("token").isin(terms))
     tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).cast("long").alias("tf"))
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("token")).cast("long")
     scored = tf.withColumn("__df", dfreq)
@@ -569,15 +576,7 @@ def unigram_logprob(
     exchange (hash join, no stream sort); the per-doc total is a BIGINT
     partial-agg sum. No self-joins, no float accumulation anywhere.
     """
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .repartition(n_shuffle, "token")
-    )
+    toks = _token_stream(df, id_col, text_col, F.length("token") > 0)
     tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).cast("long").alias("tf"))
     # Optimization r14: the corpus total used to be a driver-blocking
     # .collect() at DataFrame-BUILD time — a full second derivation of
@@ -678,15 +677,7 @@ def build_inverted_index(
     aggregates share that exchange); sort_array bounds the sample
     deterministically.
     """
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .repartition(n_shuffle, "token")
-    )
+    toks = _token_stream(df, id_col, text_col, F.length("token") > 0)
     tf = toks.groupBy("token", id_col).agg(F.count(F.lit(1)).cast("long").alias("tf"))
     return (
         tf.groupBy("token")
@@ -908,6 +899,32 @@ def token_entropy(
     return agg.select(group_col, "n_tokens", entropy.alias("entropy_nats"))
 
 
+def _doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, w1, w2): one row per adjacent token pair of each document's
+    lower-cased, whitespace-collapsed text; docs with < 2 tokens emit
+    nothing."""
+    toks = df.select(
+        F.col(id_col),
+        F.split(
+            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
+        ).alias("t"),
+    )
+    return (
+        toks.select(
+            F.col(id_col),
+            F.explode(
+                F.zip_with(
+                    F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
+                    F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))),
+                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+                )
+            ).alias("bg"),
+        )
+        .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        .filter((F.col("w1") != "") & (F.col("w2") != ""))
+    )
+
+
 def bigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -931,24 +948,7 @@ def bigram_logprob(
     (w₁,w₂). Docs with <2 tokens have no bigrams and drop out — same
     semantics both engines.
     """
-    toks = df.select(
-        F.col(id_col),
-        F.split(
-            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-        ).alias("t"),
-    )
-    pairs = toks.select(
-        F.col(id_col),
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-                F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")).filter(
-        (F.col("w1") != "") & (F.col("w2") != "")
-    )
+    pairs = _doc_bigrams(df, id_col, text_col)
     tf = pairs.groupBy(id_col, "w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -2171,30 +2171,7 @@ def bigram_crossentropy(
     n_seen/n_bigrams is the overlap rate, mean_xent_micro the
     contamination score (LOW = likely contaminated).
     """
-
-    def _pairs(df: DataFrame) -> DataFrame:
-        toks = df.select(
-            F.col(id_col),
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-            ).alias("t"),
-        )
-        return (
-            toks.select(
-                F.col(id_col),
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-                        F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))),
-                        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                    )
-                ).alias("bg"),
-            )
-            .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-            .filter((F.col("w1") != "") & (F.col("w2") != ""))
-        )
-
-    tp = _pairs(train)
+    tp = _doc_bigrams(train, id_col, text_col)
     # The |bigram-types|-row LM table is the thing a real pipeline
     # persists: materialize it once. It feeds the marginal c1, the
     # scoring join AND the V_train vocabulary — as lazy references the
@@ -2217,7 +2194,7 @@ def bigram_crossentropy(
         .distinct()
         .agg(F.count(F.lit(1)).cast("long").alias("__vt"))
     )
-    ep = _pairs(eval_df)
+    ep = _doc_bigrams(eval_df, id_col, text_col)
     etf = ep.groupBy(id_col, "w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -2825,6 +2802,28 @@ def two_corpus_vocab_tagged(
     return vocab.localCheckpoint(eager=True)
 
 
+def _frequent_tokens_with_totals(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    text_col: str,
+    vocab: DataFrame | None,
+    min_count: int,
+) -> DataFrame:
+    """(token, cnt_a, cnt_b, t_a, t_b): the two-corpus vocab rows with
+    cnt_a + cnt_b >= ``min_count``, next to the corpus totals (a 1-row
+    broadcast taken over the WHOLE vocab). ``vocab`` defaults to
+    ``_two_corpus_vocab(df_a, df_b, text_col)``."""
+    if vocab is None:
+        vocab = _two_corpus_vocab(df_a, df_b, text_col)
+    tot = vocab.groupBy().agg(
+        F.sum("cnt_a").cast("long").alias("t_a"),
+        F.sum("cnt_b").cast("long").alias("t_b"),
+    )
+    return vocab.filter(F.col("cnt_a") + F.col("cnt_b") >= min_count).join(
+        F.broadcast(tot)
+    )
+
+
 def g_test_keywords(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -2860,15 +2859,7 @@ def g_test_keywords(
     Returns top_k rows (token, cnt_a, cnt_b, sign, g2_micro) by
     g2_micro desc, token tie-break.
     """
-    if vocab is None:
-        vocab = _two_corpus_vocab(df_a, df_b, text_col)
-    tot = vocab.groupBy().agg(
-        F.sum("cnt_a").cast("long").alias("t_a"),
-        F.sum("cnt_b").cast("long").alias("t_b"),
-    )
-    j = vocab.filter(F.col("cnt_a") + F.col("cnt_b") >= min_count).join(
-        F.broadcast(tot)
-    )
+    j = _frequent_tokens_with_totals(df_a, df_b, text_col, vocab, min_count)
     # term(x, e_num, e_den) = x * ln(x * e_den / e_num), 0 when x = 0;
     # expectations: E_a = T_A*(a+b)/T, E_a' = T_A*(T-a-b)/T (T = T_A+T_B)
     def term(x: str, row_total: str) -> str:
@@ -2943,15 +2934,7 @@ def log_odds_dirichlet(
     Returns top_k rows (token, cnt_a, cnt_b, z_micro) by |z| desc,
     token tie-break.
     """
-    if vocab is None:
-        vocab = _two_corpus_vocab(df_a, df_b, text_col)
-    tot = vocab.groupBy().agg(
-        F.sum("cnt_a").cast("long").alias("t_a"),
-        F.sum("cnt_b").cast("long").alias("t_b"),
-    )
-    j = vocab.filter(F.col("cnt_a") + F.col("cnt_b") >= min_count).join(
-        F.broadcast(tot)
-    )
+    j = _frequent_tokens_with_totals(df_a, df_b, text_col, vocab, min_count)
     expr = f"""
       CAST(FLOOR((
         LN((cnt_a + __alpha) / (CAST(t_a AS DOUBLE) + {alpha0} - cnt_a - __alpha))

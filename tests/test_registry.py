@@ -15,7 +15,9 @@ import ast
 import collections
 import pathlib
 
-ENTRY = pathlib.Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+ENTRY = ROOT / "__spark_entry__.py"
+PACKAGE = ROOT / "hdinsight_pyspark_cntk_integration_spark"
 
 # Queries checked on row count and schema only: no oracle can replay
 # them bit-for-bit (float/sketch/LSH/decoder paths).
@@ -27,29 +29,40 @@ ROWS_ONLY = {"compression_ratio", "multimodal_decode", "pca_top_component", "sim
 _BLOCK_LINES = 8
 
 
-def test_no_repeated_blocks():
-    """No run of _BLOCK_LINES significant lines appears twice in the
-    entry file. Lines are compared with whitespace collapsed; blank and
-    ``#`` lines are skipped. A shared fixture, SQL fragment or unrolled
-    round belongs in one named helper that every site uses."""
+def _repeated_blocks(files: list[pathlib.Path]) -> list[str]:
+    """Every run of _BLOCK_LINES significant lines that appears twice in
+    ``files`` read as one stream, so a block pasted into two of them
+    counts too. Lines are compared with whitespace collapsed; blank and
+    ``#`` lines are skipped."""
     lines = []
-    for no, raw in enumerate(ENTRY.read_text().splitlines(), 1):
-        text = " ".join(raw.split())
-        if text and not text.startswith("#"):
-            lines.append((no, text))
-    first: dict[tuple[str, ...], int] = {}
+    for path in files:
+        name = path.relative_to(ROOT)
+        for no, raw in enumerate(path.read_text().splitlines(), 1):
+            text = " ".join(raw.split())
+            if text and not text.startswith("#"):
+                lines.append((f"{name}:{no}", text))
+    first: dict[tuple[str, ...], str] = {}
     repeats = []
     for i in range(len(lines) - _BLOCK_LINES + 1):
         block = tuple(text for _, text in lines[i : i + _BLOCK_LINES])
-        no = lines[i][0]
+        where = lines[i][0]
         if block in first:
-            repeats.append(f"line {no} repeats line {first[block]}: {block[0]}")
+            repeats.append(f"{where} repeats {first[block]}: {block[0]}")
         else:
-            first[block] = no
-    assert not repeats, (
-        f"{len(repeats)} repeated {_BLOCK_LINES}-line blocks in __spark_entry__.py:\n"
-        + "\n".join(repeats[:20])
-    )
+            first[block] = where
+    return repeats
+
+
+def test_no_repeated_blocks():
+    """No block is pasted twice in the entry file or in the operator
+    package. A shared fixture, SQL fragment, unrolled round or operator
+    building block belongs in one named helper that every site uses."""
+    for files in ([ENTRY], sorted(PACKAGE.rglob("*.py"))):
+        repeats = _repeated_blocks(files)
+        assert not repeats, (
+            f"{len(repeats)} repeated {_BLOCK_LINES}-line blocks:\n"
+            + "\n".join(repeats[:20])
+        )
 
 
 def test_no_duplicate_top_level_defs():

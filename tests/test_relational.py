@@ -395,33 +395,6 @@ def test_interpolate_linear_hand_computed(spark):
         rel.interpolate_linear(df, "ts", "user_id", "value", step_seconds=0)
 
 
-def test_interpolate_at_matches_window_form_on_grid(spark):
-    """Cogrouped np.interp twin: querying exactly the grid timestamps
-    reproduces interpolate_linear's values (for in-range queries);
-    out-of-range queries return NULL (no extrapolation)."""
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (u, t0 + dt.timedelta(hours=h), float(v))
-        for u, h, v in [(1, 0, 10), (1, 3, 40), (1, 7, 12), (2, 1, 5), (2, 2, 7)]
-    ]
-    obs = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    grid = rel.interpolate_linear(obs, "ts", "user_id", "value")
-    queries = grid.select("user_id", F.col("grid_ts").alias("qts"))
-    got = {
-        (r["user_id"], r["qts"]): r["value"]
-        for r in rel.interpolate_at(obs, queries, "user_id", "ts", "value", "qts").collect()
-    }
-    for r in grid.collect():
-        assert got[(r["user_id"], r["grid_ts"])] == pytest.approx(r["value"], abs=1e-9)
-    # out-of-range -> NULL
-    far = spark.createDataFrame(
-        [(1, t0 + dt.timedelta(hours=100)), (1, t0 - dt.timedelta(hours=1))],
-        "user_id long, qts timestamp",
-    )
-    vals = [r["value"] for r in rel.interpolate_at(obs, far, "user_id", "ts", "value", "qts").collect()]
-    assert vals == [None, None]
-
-
 def test_cohort_retention_hand_computed(spark):
     t0 = dt.datetime(2024, 1, 1)  # Monday
     week = dt.timedelta(days=7)
@@ -793,9 +766,10 @@ def test_interpolate_segments_planted(spark):
 
 
 def test_interpolate_segments_matches_float_twin(spark, sf_dir):
-    """On the gate slice, the provable twin agrees with interpolate_at
-    (np.interp) to within 1 micro-unit on every in-range point."""
-    from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
+    """On the gate slice, interpolate_segments answers exactly the
+    clicks inside their user's observed view range, each within 1
+    micro-unit of np.interp over that user's views."""
+    import numpy as np
 
     ev = load_table(spark, sf_dir, "events")
     obs = ev.filter(F.col("event_type") == "view")
@@ -804,14 +778,24 @@ def test_interpolate_segments_matches_float_twin(spark, sf_dir):
         (r["user_id"], r["ts"]): r["value_micro"]
         for r in rel.interpolate_segments(obs, qs, "user_id", "ts", "value", "ts").collect()
     }
-    ref = {
-        (r["user_id"], r["ts"]): r["value"]
-        for r in rel.interpolate_at(obs, qs, "user_id", "ts", "value", "ts").collect()
-        # drop out-of-range points (surface as NULL or NaN)
-        if r["value"] is not None and r["value"] == r["value"]
-    }
-    # the float twin keeps duplicate-ts obs differently (keep=last vs max)
-    # only where duplicates exist; fixture event ts are unique per user.
+
+    def micros(ts):
+        return (ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+    # duplicate (user, ts) views collapse to their max value, the
+    # operator's documented tie rule
+    views: dict = {}
+    for r in obs.select("user_id", "ts", "value").collect():
+        pts = views.setdefault(r["user_id"], {})
+        pts[micros(r["ts"])] = max(pts.get(micros(r["ts"]), r["value"]), r["value"])
+    ref = {}
+    for r in qs.select("user_id", "ts").collect():
+        pts = sorted(views.get(r["user_id"], {}).items())
+        q = micros(r["ts"])
+        if pts and pts[0][0] <= q <= pts[-1][0]:
+            xs = np.array([x for x, _ in pts], dtype=np.float64)
+            ys = np.array([y for _, y in pts], dtype=np.float64)
+            ref[(r["user_id"], r["ts"])] = float(np.interp(q, xs, ys))
     assert set(prov) == set(ref)
     for k, vm in prov.items():
         assert abs(vm - ref[k] * 1_000_000) <= 1.0, (k, vm, ref[k])
@@ -829,22 +813,3 @@ def test_interpolate_segments_duplicate_ts_takes_max(spark):
     qs = spark.createDataFrame([(1, t0)], "user_id long, ts timestamp")
     out = rel.interpolate_segments(obs, qs, "user_id", "ts", "value", "ts").collect()
     assert len(out) == 1 and out[0]["value_micro"] == 3_000_000
-
-
-def test_interpolate_at_production_wrapper_smoke(spark, sf_dir):
-    """The production cogrouped-pandas interpolated point lookup end-to-
-    end at fixture scale: each event's value re-estimated 30 minutes
-    later. np.interp's slope evaluation order is not reproducible as a
-    SQL operation tree, so it is not a registry query; the oracle-green
-    gate form is interpolate_provable (integer segment arithmetic)."""
-    ev = load_table(spark, sf_dir, "events")
-    queries = ev.select(
-        "user_id", (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("qts")
-    )
-    df = rel.interpolate_at(
-        ev, queries, key_col="user_id", obs_ts_col="ts",
-        value_col="value", query_ts_col="qts",
-    )
-    rows = df.limit(50).collect()
-    assert len(rows) > 0
-    assert {"user_id", "qts", "value"} <= set(df.columns)

@@ -140,46 +140,6 @@ def test_quantized_rerank_matches_exact_topk(spark, sf_dir):
         )
 
 
-def test_kmeans_numpy_parity_and_lloyd_invariant(spark, sf_dir):
-    """kmeans_lloyd vs a straight numpy Lloyd's with the identical
-    smallest-id init: inertia matches to float tolerance, and inertia is
-    non-increasing as sweeps are added (the Lloyd invariant)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
-    X = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    k = 4
-
-    def np_lloyd(iters):
-        C = X[:k].copy()
-        for _ in range(iters):
-            d2 = (X * X).sum(1, keepdims=True) - 2.0 * X @ C.T + (C * C).sum(1)
-            a = d2.argmin(1)
-            for j in range(k):
-                if (a == j).any():
-                    C[j] = X[a == j].mean(0)
-        d2 = (X * X).sum(1, keepdims=True) - 2.0 * X @ C.T + (C * C).sum(1)
-        return d2.min(1).sum()
-
-    inertias = []
-    for iters in (1, 2, 3):
-        assigned, cents = sim.kmeans_lloyd(emb, k=k, iters=iters)
-        inertia = assigned.agg(F.sum("dist_sq").alias("i")).collect()[0]["i"]
-        assert inertia == pytest.approx(np_lloyd(iters), rel=1e-6), iters
-        assert len(cents) == k and len(cents[0]) == len(X[0])
-        inertias.append(inertia)
-    assert inertias[0] >= inertias[1] - 1e-6 >= inertias[2] - 2e-6
-
-    with pytest.raises(ValueError, match="k >= 1"):
-        sim.kmeans_lloyd(emb, k=0)
-
-
-def test_kmeans_summary_partitions_corpus(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    summ = sim.kmeans_summary(emb, k=4, iters=2).collect()
-    assert sum(r["n"] for r in summ) == emb.count()
-    assert all(r["inertia"] >= 0 for r in summ)
-
-
 def test_power_iteration_matches_numpy(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     v, lam = sim.power_iteration_top_component(emb, iters=8)
@@ -772,14 +732,3 @@ def test_ndcg_all_zero_rel_query_dropped(spark):
     [r] = sim.ndcg_at_k(df, k=2).collect()
     assert r["n_queries"] == 1  # query 1 has idcg 0 -> excluded
     assert r["mean_ndcg_micro"] == 1_000_000
-
-
-def test_kmeans_clusters_production_wrapper_smoke(emb):
-    """The production float Lloyd path (k=8, 3 sweeps) end-to-end at
-    fixture scale. Its centroid means are float sums in partition
-    order, so it is not a registry query; the oracle-green gate form is
-    kmeans_provable (micro-quantized integer Lloyd)."""
-    df = sim.kmeans_summary(emb, k=8, iters=3)
-    rows = df.collect()
-    assert 0 < len(rows) <= 8
-    assert sum(r["n"] for r in rows) > 0

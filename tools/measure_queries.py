@@ -1,6 +1,6 @@
 """Isolated per-query measurement (guide §1): median-of-3 noop-sink
-timing plus .explain("formatted") capture, mirroring bench.py's
-methodology exactly (one unmeasured warm run, then 3 timed runs).
+timing plus .explain("formatted") capture, through bench.py's own
+warm-up and timing helper (one unmeasured warm run, then 3 timed runs).
 
 Usage:
   python tools/measure_queries.py q1 q2 ...            # time + plan
@@ -15,13 +15,13 @@ from __future__ import annotations
 import io
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import _median3, warm_up  # noqa: E402
 from hdinsight_pyspark_cntk_integration_spark import get_spark  # noqa: E402
 
 
@@ -56,16 +56,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
 
-    # Same warmup as bench.py: JVM codegen + Python worker pool.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    par = spark.sparkContext.defaultParallelism
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     for name in names:
         fn = queries[name]
@@ -94,13 +85,7 @@ def main() -> None:
             print(f"{name}  (plan captured){extra}", flush=True)
             spark.sparkContext.setJobDescription(None)
             continue
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        med = sorted(samples)[1]
+        med, samples = _median3(lambda: fn(spark, sf_dir))
         print(
             f"{name}  {med:.3f}s  [{', '.join(f'{s:.3f}' for s in samples)}]{extra}",
             flush=True,

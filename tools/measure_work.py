@@ -25,6 +25,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import warm_up  # noqa: E402
 from hdinsight_pyspark_cntk_integration_spark import get_spark  # noqa: E402
 
 
@@ -53,15 +54,7 @@ def main() -> None:
     app_id = spark.sparkContext.applicationId
     queries = entrymod.queries()
 
-    spark.range(1000).selectExpr("sum(id)").collect()
-    par = spark.sparkContext.defaultParallelism
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     for name in names:
         fn = queries[name]
